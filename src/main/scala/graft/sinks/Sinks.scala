@@ -54,6 +54,11 @@ object TelegramAlerter {
 
 /** Mart output sink (K1). Implementations: batched JDBC append (the
   * production target `tops_yg.cdm_tasks`) and parquet (tests/lake).
+  *
+  * Contract: `write` must execute the frame it is given before it
+  * returns. `Pipeline.run` reads the run's row and data-loss counters
+  * from that execution; a sink that keeps the frame without running it
+  * makes the run fail.
   */
 trait MartSink {
   def write(df: DataFrame): Unit

@@ -1,24 +1,40 @@
 package graft.yougile
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.storage.StorageLevel
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit, when}
 import graft.sinks.{Alerter, MartSink}
-import graft.yougile.Model._
 
 /** The whole reference DAG as one driver program (O1/O2): extract →
-  * assemble → DQ probe → mart → sink, a single lazy plan with lineage
-  * replacing XCom. The run timestamp is a parameter (O4, the reference's
+  * assemble → mart → sink, a single lazy plan with lineage replacing
+  * XCom. The run timestamp is a parameter (O4, the reference's
   * `{{data_interval_end}}` template, `:362`); alerts fire on data loss
   * (F4, `:241-244`) exactly like the reference's Telegram alarm.
   *
-  * The assembled frame feeds two actions (the DQ existence probe and the
-  * mart write), so it is persisted across them and released after — the
-  * only materialization in the pipeline, and a per-stage checkpoint seam
-  * if resumability is ever needed.
+  * The sink's write is the run's only action over the mart plan: the
+  * row count and the data-loss count ride on it as an [[Observation]],
+  * so nothing is persisted and adaptive execution sizes every stage of
+  * the plan (joins, dedup exchange and write) to the data. The lost-lot
+  * count on the mart equals [[Transform.lostSubtasks]] on the assembly:
+  * the mart's left broadcast joins drop no assembled row, and the
+  * full-row dedup keeps at least one copy of each.
+  *
+  * Because the counters come from the write, the data-loss alert fires
+  * after the write, not before it. A write that throws sends no
+  * data-loss alert for that attempt; `app.Main`'s failure alert still
+  * fires once the retries are spent.
   */
 object Pipeline {
 
   val DataLossAlert = "❌ some data is lost in uploading from YouGile!"
+
+  /** How long to wait for the write's observed counters to arrive after
+    * the write returns. They are posted on the listener bus, so they can
+    * trail a write by a few milliseconds; a sink that never executed the
+    * frame leaves them empty forever.
+    */
+  private val ObservationWait: FiniteDuration = 10.seconds
 
   def run(
       spark: SparkSession,
@@ -34,22 +50,18 @@ object Pipeline {
     val assembled = Transform.taskAssembly(
       Transform.contractsPrepared(src.contracts(columnIds)),
       Transform.subtasksPrepared(src.subtaskObjects()))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // F4: existence probe (limit-1), not a full count
-      if (!Transform.lostSubtasks(assembled).isEmpty) alerter.alert(DataLossAlert)
-      val mart = Transform.mart(assembled, bc, Transform.stickerStates(src.stickers()), runTs)
-        .persist(StorageLevel.MEMORY_AND_DISK) // two actions: write + count
-      try {
-        sink.write(mart)
-        mart.count()
-      } finally {
-        mart.unpersist()
-        ()
+    val obs = Observation()
+    val mart = Transform.mart(assembled, bc, Transform.stickerStates(src.stickers()), runTs)
+      .observe(obs, count(lit(1)).as("rows"), count(when(Transform.lostLot, 1)).as("lost"))
+
+    sink.write(mart)
+    val metrics =
+      try Await.result(obs.future, ObservationWait)
+      catch {
+        case _: TimeoutException =>
+          throw new IllegalStateException("MartSink.write did not execute the mart")
       }
-    } finally {
-      assembled.unpersist()
-      ()
-    }
+    if (metrics.getAs[Long]("lost") > 0) alerter.alert(DataLossAlert)
+    metrics.getAs[Long]("rows")
   }
 }

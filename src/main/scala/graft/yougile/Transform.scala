@@ -114,11 +114,14 @@ object Transform {
       .join(subtasksPrep, Seq("subtask_id"), "left")
       .filter(!(col("deleted") <=> lit(true)))
 
-  /** F4 data-loss probe (ref `:241-244`): a lot referenced by a contract
-    * but absent from the global fetch. Callers alert when nonempty.
+  /** F4 data-loss predicate (ref `:241-244`): a lot referenced by a
+    * contract but absent from the global fetch. Holds on assembled and
+    * on mart rows alike; `Pipeline.run` alerts when any mart row matches.
     */
-  def lostSubtasks(assembled: DataFrame): DataFrame =
-    assembled.filter(col("subtask_id").isNotNull && col("subtask_name").isNull)
+  val lostLot: Column = col("subtask_id").isNotNull && col("subtask_name").isNull
+
+  /** The F4 probe's rows (the `yg_dq_lost` gate entry). */
+  def lostSubtasks(assembled: DataFrame): DataFrame = assembled.filter(lostLot)
 
   /** Mart build (ref `prepare_result_df_for_insert`, `:249-322`): 7
     * chained broadcast left joins (brd_clmn + six hubs), the run-timestamp

@@ -19,6 +19,14 @@ class SinksOpsSpec extends AnyFunSuite {
     override def alert(text: String): Unit = alerts ::= text
   }
 
+  /** Runs the frame, as the MartSink contract requires, then hands it to `keep`. */
+  private def capturing(keep: DataFrame => Unit): MartSink = new MartSink {
+    override def write(df: DataFrame): Unit = {
+      df.write.format("noop").mode("overwrite").save()
+      keep(df)
+    }
+  }
+
   test("Retry: recovers after transient failures, reports each attempt") {
     var calls = 0
     var reported = List.empty[Int]
@@ -49,7 +57,7 @@ class SinksOpsSpec extends AnyFunSuite {
   test("Pipeline.run on fixtures: fires the data-loss alert, sinks 240 rows, stamps run-ts") {
     val alerter = new RecordingAlerter
     var written: Option[DataFrame] = None
-    val sink = new MartSink { override def write(df: DataFrame): Unit = written = Some(df) }
+    val sink = capturing(df => written = Some(df))
     val rows = Pipeline.run(spark, new JsonFixtureClient(Fixtures.jsonDir),
       YouGileConfig.fixture, Fixtures.runTs, sink, alerter)
     assert(rows == 240L)
@@ -260,7 +268,7 @@ class SinksOpsSpec extends AnyFunSuite {
   test("JdbcSink round-trips the 22-column mart through a real embedded-Derby database") {
     import org.apache.spark.sql.functions.col
     var captured: Option[DataFrame] = None
-    val capture = new MartSink { override def write(df: DataFrame): Unit = captured = Some(df) }
+    val capture = capturing(df => captured = Some(df))
     Pipeline.run(spark, new JsonFixtureClient(Fixtures.jsonDir),
       YouGileConfig.fixture, Fixtures.runTs, capture, graft.sinks.NoopAlerter)
     val mart = captured.get
