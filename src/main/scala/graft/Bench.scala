@@ -1,7 +1,8 @@
 package graft
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
@@ -59,17 +60,35 @@ object Bench {
       .foreach(_.unpersist(blocking = true))
   }
 
+  /** Absorbs session warmup (codegen compiler, noop sink classloading,
+    * parquet footer caches) so it isn't billed to the first query. */
+  private[graft] def warmUp(spark: SparkSession): Unit =
+    noopWrite(spark.range(100000).select(org.apache.spark.sql.functions.sum("id")))
+
+  /** The measured action (see the object scaladoc), oracle-only top-level sort stripped. */
+  private[graft] def noopWrite(df: DataFrame): Unit =
+    org.apache.spark.sql.GraftShims.dropTopLevelSort(df)
+      .write.format("noop").mode("overwrite").save()
+
   /** Fresh-JVM mover re-run (the SPARK_GRAFT_ADJUDICATE_FORK path):
-    * spawns ONE child JVM running [[TimeQuery]] over all names —
-    * same classpath and the Spark-on-JDK17 add-opens set build.sbt
-    * forks with — and returns each name's median-of-3 (run 1 absorbs
-    * session warmup and memo builds, the median discards it). stdout
-    * is drained BEFORE waitFor (pipe-buffer deadlock otherwise).
+    * spawns ONE child JVM running `graft.Dev time` over all names —
+    * same classpath and JVM flags as this one (build.sbt's add-opens,
+    * `-D` and `-Xmx`) — and returns each name's median-of-3 (run 1
+    * absorbs session warmup and memo builds, the median discards it).
+    * stdout is drained BEFORE waitFor (pipe-buffer deadlock otherwise).
     * Package-visible so BenchAdjudicationSpec can pin the round trip.
     */
   private[graft] def forkAdjudicate(names: Seq[String], sfDir: String)
       : Map[String, Either[String, Double]] =
-    forkRuns(names, sfDir).map { case (n, e) => n -> e.map(ts => ts(ts.size / 2)) }
+    forkRuns(names, sfDir).map { case (n, e) => n -> e.map(median) }
+
+  private def median(ts: Seq[Double]): Double = ts(ts.size / 2) // sorted; upper on even n
+
+  private def f3(d: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
+
+  /** `"name":[median,lo,hi]` of sorted run times: a `"spread"`/`"fork"` entry. */
+  private def spreadEntry(name: String, ts: Seq[Double]): String =
+    s""""$name":[${f3(median(ts))},${f3(ts.head)},${f3(ts.last)}]"""
 
   /** Like [[forkAdjudicate]] but returns the SORTED per-entry run times,
     * so a recording can persist a fresh-JVM [median, lo, hi] spread
@@ -78,27 +97,17 @@ object Bench {
     */
   private[graft] def forkRuns(names: Seq[String], sfDir: String)
       : Map[String, Either[String, Seq[Double]]] = {
-    val javaBin = new java.io.File(
-      new java.io.File(sys.props("java.home"), "bin"), "java").getAbsolutePath
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
-      "-cp", sys.props("java.class.path"), "graft.TimeQuery") ++ names
+    val javaBin = new java.io.File(sys.props("java.home"), "bin/java").getAbsolutePath
+    val jvmFlags = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq
+    val cmd = Seq(javaBin) ++ jvmFlags ++
+      Seq("-cp", sys.props("java.class.path"), "graft.Dev", "time") ++ names
     val pb = new ProcessBuilder(cmd: _*)
     pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
     pb.environment().put("SPARK_GRAFT_CPUS", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     pb.environment().put("SPARK_GRAFT_RUNS", "3")
     pb.redirectErrorStream(true)
-    val medians = try {
+    try {
       val proc = pb.start()
       // drain stdout on a daemon thread so the TIMED waitFor below can
       // kill a hung child without deadlocking on a full pipe buffer
@@ -134,8 +143,30 @@ object Bench {
       case e: Exception =>
         names.map(_ -> (Left(s"fork: ${e.getClass.getSimpleName}"): Either[String, Seq[Double]])).toMap
     }
-    medians
   }
+
+  /** The committed recording at `path` as a JSON tree. A missing file
+    * is None quietly (a first recording has no baseline); a file that
+    * is not valid JSON is None with a loud warning naming `consequence`.
+    */
+  private def readRecording(path: String, consequence: String): Option[JsonNode] = {
+    val file = new java.io.File(path)
+    if (!file.isFile) None
+    else try Some(new ObjectMapper().readTree(file))
+    catch { case e: java.io.IOException =>
+      System.err.println(s"[bench] WARNING: baseline $path is not valid JSON " +
+        s"(${e.getClass.getSimpleName}) — $consequence")
+      None
+    }
+  }
+
+  /** name → hi of each `[median, lo, hi]` triple in object `field`. */
+  private def spreadHis(rec: JsonNode, field: String): Map[String, Double] =
+    rec.path(field).properties.asScala.collect {
+      case e if e.getValue.isArray && e.getValue.size == 3 &&
+          e.getValue.elements.asScala.forall(_.isNumber) =>
+        e.getKey -> e.getValue.get(2).asDouble
+    }.toMap
 
   /** Committed per-entry baseline (the recording this sweep is graded
     * against), read from the artifact path BEFORE this run overwrites
@@ -153,76 +184,25 @@ object Bench {
     * sweep to a genuine 5× regression on that entry (r16 review #1) —
     * the clamp keeps VERDICT #7's fix without importing the outlier.
     */
-  /** Body of the JSON object block whose '{' sits at `open`, matched to
-    * its BALANCED closing brace — the first-'}' scan it replaces only
-    * worked while every value was a flat array, and an `"err:..."`
-    * string containing a brace would unbalance even that (ADVICE r17).
-    * Strings are skipped so braces inside keys/values don't count.
-    * None = truncated/corrupt (no balanced close before EOF).
-    */
-  private def balancedBody(t: String, open: Int): Option[String] = {
-    var i = open; var depth = 0; var inStr = false
-    while (i < t.length) {
-      val c = t.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1
-        else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '{' => depth += 1
-        case '}' =>
-          depth -= 1
-          if (depth == 0) return Some(t.substring(open + 1, i))
-        case _ =>
-      }
-      i += 1
-    }
-    None
-  }
-
-  private[graft] def readBaseline(path: String): Map[String, (Double, Double)] = {
-    val parsed = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      // minimal parse of {"queries":{"name":sec,...}} — values are plain
-      // doubles or "err:..." strings; skip the strings.
-      val qStart = txt.indexOf("\"queries\":{")
-      val medians = if (qStart < 0) Map.empty[String, Double]
-      else {
-        val body = balancedBody(txt, qStart + 10).getOrElse("")
-        body.split(',').flatMap { kv =>
-          kv.split(':') match {
-            case Array(k, v) if !v.startsWith("\"") =>
-              try Some(k.trim.stripPrefix("\"").stripSuffix("\"") -> v.trim.toDouble)
-              catch { case _: NumberFormatException => None }
-            case _ => None
-          }
-        }.toMap
-      }
-      // {"spread":{"name":[median,lo,hi],...}} — array values, so the
-      // split-by-',' trick above can't parse it; regex per entry instead.
-      val sStart = txt.indexOf("\"spread\":{")
-      val his: Map[String, Double] = if (sStart < 0) Map.empty
-      else {
-        val body = balancedBody(txt, sStart + 9).getOrElse("")
-        val re = """"([^"]+)":\[([0-9.eE+-]+),([0-9.eE+-]+),([0-9.eE+-]+)\]""".r
-        re.findAllMatchIn(body).flatMap { m =>
-          try Some(m.group(1) -> m.group(4).toDouble)
-          catch { case _: NumberFormatException => None }
-        }.toMap
-      }
-      medians.map { case (k, med) =>
+  private[graft] def readBaseline(path: String): Map[String, (Double, Double)] =
+    readRecording(path, "self-adjudication is OFF this sweep").fold(
+      Map.empty[String, (Double, Double)]) { rec =>
+      // {"queries":{"name":sec,...}} — "err:..." string values carry no
+      // baseline; {"spread":{"name":[median,lo,hi],...}} supplies hi
+      val medians = rec.path("queries").properties.asScala
+        .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }.toMap
+      val his = spreadHis(rec, "spread")
+      val parsed = medians.map { case (k, med) =>
         k -> (med, his.getOrElse(k, med).max(med).min(2 * med))
       }
-    } catch { case _: Throwable => Map.empty[String, (Double, Double)] }
-    // A format drift or parse hiccup silently disabling self-adjudication
-    // for the whole sweep is exactly the failure mode the adjudication
-    // exists to catch — make it loud (r14 ADVICE).
-    if (parsed.isEmpty && java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
-      System.err.println(
-        s"[bench] WARNING: baseline $path exists but yielded 0 entries — self-adjudication is OFF this sweep")
-    parsed
-  }
+      // A format drift silently disabling self-adjudication for the
+      // whole sweep is exactly the failure mode the adjudication exists
+      // to catch — make it loud (r14 ADVICE).
+      if (parsed.isEmpty)
+        System.err.println(
+          s"[bench] WARNING: baseline $path exists but yielded 0 entries — self-adjudication is OFF this sweep")
+      parsed
+    }
 
   /** Adjudication trigger (r16 VERDICT #2): ratio gate OR absolute
     * excess. The ratio-only trigger (`> 2×hi`, hi clamped to 2×median)
@@ -263,52 +243,21 @@ object Bench {
     * block / entry → None upstream (the +0.5 s allowance path).
     */
   private[graft] def readForkSpread(path: String): Map[String, Double] = {
-    // missing file: readBaseline's story, silent here
-    val txt = try {
-      Some(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-        java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => None }
-    txt match {
-      case None => Map.empty // missing file: readBaseline's story, silent here
-      case Some(t) =>
-        val fStart = t.indexOf("\"fork\":{")
-        if (fStart < 0) Map.empty // legitimately absent (pre-fork recording)
-        else balancedBody(t, fStart + 7) match {
-          case Some(body) if body.trim.isEmpty =>
-            // an all-Left recording pass writes "fork":{} — well-formed
-            // and empty is NOT a corruption, just nothing recorded
-            // (ADVICE r17); verdicts fall back to the allowance quietly.
-            Map.empty
-          case Some(body) =>
-            val re = """"([^"]+)":\[([0-9.eE+-]+),([0-9.eE+-]+),([0-9.eE+-]+)\]""".r
-            val m = re.findAllMatchIn(body).flatMap { g =>
-              try Some(g.group(1) -> g.group(4).toDouble)
-              catch { case _: NumberFormatException => None }
-            }.toMap
-            // A NON-empty fork block that parses to nothing means the
-            // like-for-like verdict reference was silently lost — the
-            // same silent-disable failure mode readBaseline warns about
-            // (r17 review #2): make it loud.
-            if (m.isEmpty) forkSpreadWarn(path,
-              "its entries match no [lo,med,hi] triple (format drift?)")
-            m
-          case None =>
-            // truncated mid-block (no balanced close): corrupt, loud
-            forkSpreadWarn(path, "it is truncated before its closing brace")
-            Map.empty
-        }
+    val consequence = "adjudication verdicts fall back to the fresh-JVM allowance this sweep"
+    readRecording(path, consequence).fold(Map.empty[String, Double]) { rec =>
+      val his = spreadHis(rec, "fork")
+      // An absent block is a pre-fork recording, and an all-Left
+      // recording pass writes "fork":{} (ADVICE r17): nothing recorded,
+      // verdicts fall back to the allowance quietly. A NON-empty block
+      // that yields nothing means the like-for-like verdict reference
+      // was silently lost — the silent-disable failure mode readBaseline
+      // warns about (r17 review #2): make it loud.
+      if (his.isEmpty && rec.path("fork").size > 0)
+        System.err.println(s"[bench] WARNING: baseline $path has a fork block but its " +
+          s"entries match no [lo,med,hi] triple (format drift?) — $consequence")
+      his
     }
   }
-
-  /** One voice for the two distinct fork-block failure modes (review
-    * r18: both branches printed the same "yielded 0 entries" text, so
-    * a truncated recording pointed its operator at a format-drift
-    * hunt); the consequence line stays shared.
-    */
-  private def forkSpreadWarn(path: String, reason: String): Unit =
-    System.err.println(
-      s"[bench] WARNING: baseline $path has a fork block but $reason — " +
-        "adjudication verdicts fall back to the fresh-JVM allowance this sweep")
 
   /** Load-canary verdict for the self-adjudication isolated pass. The
     * isolated re-run happens inside the same wall-clock window as the
@@ -349,22 +298,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") // brief: local[32], 32 shuffle partitions
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt // brief: local[32], 32 shuffle partitions
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
     // Optional entry filter for targeted adjudication runs (comma list).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // absorb session warmup (codegen compiler, noop sink classloading,
-    // parquet footer caches) so it isn't billed to the first query
-    import spark.implicits._
-    spark.range(100000).select(org.apache.spark.sql.functions.sum($"id"))
-      .write.format("noop").mode("overwrite").save()
+    val spark = LocalSession(cpus)
+    warmUp(spark)
     var failed = List.empty[String]
     // trackFailure=false for adjudication/sentinel re-runs: a failed
     // RE-run must not bump the recording's failed count while the
@@ -372,13 +312,12 @@ object Bench {
     // failed-count vs per-entry-map consistency is graded (r14 ADVICE).
     // The error still surfaces as "err:..." inside the adjudication
     // block itself.
-    def timeEntry(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+    def timeEntry(name: String, fn: (SparkSession, String) => DataFrame,
         trackFailure: Boolean = true): Either[String, Seq[Double]] =
       try {
         val times = (1 to runs).map { _ =>
           val t0 = System.nanoTime()
-          org.apache.spark.sql.GraftShims.dropTopLevelSort(fn(spark, sfDir))
-            .write.format("noop").mode("overwrite").save()
+          noopWrite(fn(spark, sfDir))
           val sec = (System.nanoTime() - t0) / 1e9
           // drop caches the run registered so the next run (and the
           // next query) measures the full plan under its own memory
@@ -408,7 +347,6 @@ object Bench {
       if (SharedFrames.accesses > a0) sharedViewConsumers += name
       r
     }
-    def median(ts: Seq[Double]): Double = ts(ts.size / 2) // sorted; upper on even n
     val results: Seq[(String, Either[String, Double])] =
       rawResults.map { case (n, e) => n -> e.map(median) }
     // Self-adjudication (VERDICT r13 #1): any entry that measured >2x its
@@ -437,7 +375,7 @@ object Bench {
     // no sentinel is in both the map and the baseline.
     //
     // Forked adjudication is the DEFAULT (r15 VERDICT #1): the isolated
-    // pass runs in a FRESH forked JVM (graft.TimeQuery, median-of-3)
+    // pass runs in a FRESH forked JVM (graft.Dev time, median-of-3)
     // rather than this one. Two rounds in a row the same-JVM isolated
     // pass forged the "real regression" signature (isolated ≈ sweep)
     // on entries a fresh JVM cleared — r15's tx10 did it past a CLEAN
@@ -456,23 +394,16 @@ object Bench {
       else {
         val sentName = SentinelCandidates
           .find(s => SparkEntry.queries.contains(s) && baseline.contains(s))
-        if (forkMode) {
-          val forked = forkAdjudicate(sentName.toSeq ++ movers, sfDir)
-          sentinel = sentName.map(s => (s, forked(s), baseline(s)._1))
-          movers.map { name =>
-            val sweep = results.toMap.apply(name).toOption.get
-            name -> (sweep -> forked(name))
+        val names = sentName.toSeq ++ movers
+        val isolated =
+          if (forkMode) forkAdjudicate(names, sfDir)
+          else {
+            System.gc() // settle before the isolated pass
+            names.map(n => n -> timeEntry(n, SparkEntry.queries(n), trackFailure = false)
+              .map(median)).toMap
           }
-        } else {
-          System.gc() // settle before the isolated pass
-          sentinel = sentName
-            .map(s => (s, timeEntry(s, SparkEntry.queries(s), trackFailure = false).map(median),
-              baseline(s)._1))
-          movers.map { name =>
-            val sweep = results.toMap.apply(name).toOption.get
-            name -> (sweep -> timeEntry(name, SparkEntry.queries(name), trackFailure = false).map(median))
-          }
-        }
+        sentinel = sentName.map(s => (s, isolated(s), baseline(s)._1))
+        movers.map(name => name -> (results.toMap.apply(name).toOption.get -> isolated(name)))
       }
     // Fail-safe: when movers were adjudicated but NO canary could run
     // (no candidate present in both the query map and the baseline),
@@ -489,7 +420,6 @@ object Bench {
       case (k, Left(err))  => s"\"$k\":\"err:$err\""
     }.mkString("{", ",", "}")
     val total = results.collect { case (_, Right(sec)) => sec }.sum
-    def f3v(d: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
     // {"entries":{name:[sweep,isolated,committed]},"sentinel":[name,sec,
     // committed],"load_tainted":bool} — isolated/sentinel sec may be
     // "err:..." if the re-run failed. load_tainted=true means the
@@ -497,16 +427,16 @@ object Bench {
     // isolated≈sweep signature in this block is forged by ambient load
     // and must not be read as a code regression.
     val adjEntries = adjudication.map { case (name, (sweep, iso)) =>
-      val isoS = iso.fold(e => s""""err:$e"""", f3v)
+      val isoS = iso.fold(e => s""""err:$e"""", f3)
       // 4th element: the explicit verdict against the like-for-like
       // reference (committed fork hi when recorded, else hi + the
       // fresh-JVM allowance) — "err" if the isolated re-run failed
       val verdict = iso.fold(_ => "err",
         sec => adjudicationVerdict(sec, baseline(name)._2, forkBaseline.get(name), forkMode))
-      s""""$name":[${f3v(sweep)},$isoS,${f3v(baseline(name)._1)},"$verdict"]"""
+      s""""$name":[${f3(sweep)},$isoS,${f3(baseline(name)._1)},"$verdict"]"""
     }.mkString("{", ",", "}")
     val sentJson = sentinel.map { case (name, sec, committed) =>
-      s""""$name",${sec.fold(e => s""""err:$e"""", f3v)},${f3v(committed)}"""
+      s""""$name",${sec.fold(e => s""""err:$e"""", f3)},${f3(committed)}"""
     }.fold("null")(s => s"[$s]")
     val adjJson =
       s"""{"entries":$adjEntries,"sentinel":$sentJson,"load_tainted":$tainted,"forked":$forkMode}"""
@@ -515,9 +445,8 @@ object Bench {
     // median-only queries map (which stays scalar — it is the driver's
     // documented stdout contract). readBaseline feeds `hi` to the next
     // sweep's >2x trigger so quiet-window medians stop re-flagging.
-    val spreadJson = rawResults.collect {
-      case (k, Right(ts)) => s""""$k":[${f3v(median(ts))},${f3v(ts.head)},${f3v(ts.last)}]"""
-    }.mkString("{", ",", "}")
+    val spreadJson = rawResults.collect { case (k, Right(ts)) => spreadEntry(k, ts) }
+      .mkString("{", ",", "}")
     // Fresh-JVM recording spread (r16 VERDICT #3): with
     // SPARK_GRAFT_RECORD_FORKED=1, re-time the whole battery once in a
     // forked child JVM — the adjudicator's exact measurement protocol —
@@ -531,9 +460,8 @@ object Bench {
       if (only.isEmpty && sys.env.get("SPARK_GRAFT_RECORD_FORKED")
           .exists(v => v == "1" || v.equalsIgnoreCase("true"))) {
         val all = forkRuns(entries.map(_._1), sfDir)
-        Some(all.toSeq.sortBy(_._1).collect {
-          case (k, Right(ts)) => s""""$k":[${f3v(ts(ts.size / 2))},${f3v(ts.head)},${f3v(ts.last)}]"""
-        }.mkString("{", ",", "}"))
+        Some(all.toSeq.sortBy(_._1).collect { case (k, Right(ts)) => spreadEntry(k, ts) }
+          .mkString("{", ",", "}"))
       } else None
     val forkField = forkJson.fold("")(f => s""","fork":$f""")
     val sharedViewJson = sharedViewConsumers.map(n => s""""$n"""").mkString("[", ",", "]")
@@ -555,7 +483,6 @@ object Bench {
       "pr1_pagerank", "g5_kcore", "mm12_jpeg_decode", "cdc4_scd2_merge",
       "dq12_join_cardinality")
     val byName = results.toMap
-    def f3(d: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
     val headQs = headline.flatMap(k => byName.get(k).map {
       case Right(sec) => s""""$k":${f3(sec)}"""
       case Left(err)  => s""""$k":"err:$err""""

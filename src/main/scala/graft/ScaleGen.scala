@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One-off 10×+ scale-up of an existing testdata dir for pressure
@@ -33,10 +33,7 @@ object ScaleGen {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val dest = args.lift(1).getOrElse("/tmp/sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(32)
     def id(df: DataFrame, i: Int): DataFrame = df
 
     val plans: Seq[(String, Seq[String], (DataFrame, Int) => DataFrame)] = Seq(

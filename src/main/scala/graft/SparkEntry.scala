@@ -25,39 +25,7 @@ object SparkEntry {
     * DQ counters, not exceptions, surface bad input.
     */
   def configure(spark: SparkSession): SparkSession = {
-    // first-row-per-key window dedups plan as min_by hash aggregates
-    // (graft.plans.RowNumberDedupRewrite; extensions route in
-    // GraftExtensions, runtime route here for sessions we did not build)
-    graft.plans.RowNumberDedupRewrite.install(spark)
-    // naive point-in-interval joins plan as binned equi-joins when a
-    // session opts in via spark.graft.rangeJoin.binUs (see RangeBinJoin)
-    graft.plans.RangeBinJoinRewrite.install(spark)
-    // large literal IN-lists plan as broadcast semi joins (opt-in conf;
-    // the gate sessions opt in so opt3 exercises the rewrite — no other
-    // entry carries a 256+-element literal list)
-    graft.plans.InListToJoinRewrite.install(spark)
-    // COUNT(DISTINCT) plans as the KMV sketch aggregate when a session
-    // opts in via spark.graft.approxDistinct (see ApproxDistinctRewrite;
-    // exact below k, so the opt4 gate entry hash-matches the exact oracle)
-    graft.plans.ApproxDistinctRewrite.install(spark)
-    // aggregates over a registered base table re-plan as roll-ups of its
-    // materialized summary when spark.graft.mv.enabled is set (opt5)
-    graft.plans.MaterializedViewRewrite.install(spark)
-    // left joins to a VERIFIED-unique key with no right-column references
-    // drop entirely when spark.graft.joinElim.enabled is set (opt7)
-    graft.plans.JoinEliminationRewrite.install(spark)
-    // fact-side aggregates push below a verified-unique dimension join
-    // when spark.graft.eagerAgg.enabled is set (opt8)
-    graft.plans.EagerAggregationRewrite.install(spark)
-    // dedups whose keys include a verified primary key drop to a
-    // projection when spark.graft.distinctElim.enabled is set (opt14)
-    graft.plans.DistinctEliminationRewrite.install(spark)
-    // unfiltered global count/min/max over a parquet scan answer from
-    // the file footers when spark.graft.footerAgg.enabled is set (opt16)
-    graft.plans.FooterAggregateRewrite.install(spark)
-    // bounded edit-distance predicates plan as the banded thresholded
-    // levenshtein — always on, strictly semantics-preserving (opt17)
-    graft.plans.LevenshteinThresholdRewrite.install(spark)
+    graft.plans.GraftRules.install(spark)
     // set-if-missing: a session (or spec) that pinned its own threshold
     // — including 0 = off — keeps it across re-configure
     if (spark.conf.getOption(graft.plans.InListToJoinRewrite.ThresholdConfKey).isEmpty)
@@ -90,7 +58,10 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.flatMap(_.defs).toMap.map { case (name, fn) =>
+    configured(modules.flatMap(_.defs))
+
+  private def configured(defs: Seq[(String, (SparkSession, String) => DataFrame)]) =
+    defs.toMap.map { case (name, fn) =>
       name -> ((s: SparkSession, dir: String) => fn(configure(s), dir))
     }
 
@@ -103,12 +74,10 @@ object SparkEntry {
     * NOT part of the gate battery — resolvable by the dev mains only.
     */
   def probeQueries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.flatMap(_.probes).toMap.map { case (name, fn) =>
-      name -> ((s: SparkSession, dir: String) => fn(configure(s), dir))
-    }
+    configured(modules.flatMap(_.probes))
 
   /** Gate entries + ladder probes under one name resolution — the dev
-    * mains' (Explain/ShowQuery/TimeQuery/StreamBreakdown) lookup map,
+    * tools' (`graft.Dev` explain/show/time/stream) lookup map,
     * built once per call site instead of re-spelled at each (review
     * r18). A probe silently shadowing a gate entry would make the dev
     * loop measure a different plan than the gate ships — fail instead.

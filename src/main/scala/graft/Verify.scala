@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -12,14 +14,8 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") // brief: local[32], 32 shuffle partitions
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt // brief: local[32], 32 shuffle partitions
+    val spark = LocalSession(cpus)
     new java.io.File(outDir).mkdirs()
     // Dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the dump (and the oracle
     // json) to the named entries. The driver never sets it, so the gate
@@ -52,25 +48,13 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // caches registered by a query (e.g. LSH signature frames) must not
-      // occupy executor memory for the rest of the suite
-      spark.sharedState.cacheManager.clearCache()
+      // release everything the entry registered (SQL caches such as the
+      // LSH signature frames, localCheckpoint blocks, streaming state) so
+      // it does not occupy executor memory for the rest of the dump
+      Bench.sweepState(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(e => selected(e._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    new ObjectMapper().writeValue(new java.io.File(s"$outDir/oracle_sql.json"),
+      SparkEntry.oracleSql.filter(e => selected(e._1)).asJava)
     spark.stop()
   }
 }

@@ -1,5 +1,7 @@
 package graft.functions
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -88,16 +90,24 @@ object VectorFunctions {
     bos.toByteArray
   }
 
-  private val registry: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "long_dot" -> (es => LongDot(es(0), es(1))),
-    "long_sq_l2" -> (es => LongSquaredL2(es(0), es(1))),
-    "simhash64" -> (es => SimHash64(es(0))),
-    "minhash_sigs" -> (es => MinHashSigs(es(0), foldableK(es(1), "minhash_sigs"))),
-    "ngram_md5" -> (es => NgramMd5(es(0), foldableK(es(1), "ngram_md5"))),
-    "cdc_segments" -> (es => CdcSegments(es(0), foldableK(es(1), "cdc_segments"))),
-    "unicode_normalize" -> (es => UnicodeNormalize(es(0), foldableForm(es(1), "unicode_normalize"))),
-    "deflated_len" -> (es => org.apache.spark.sql.graft.DeflatedLen(es(0))),
-    "luhn_scan" -> (es => org.apache.spark.sql.graft.LuhnScan(es(0),
+  /** Name, `DESCRIBE FUNCTION` info naming the expression class, builder. */
+  private def fn[E <: Expression](name: String)(build: Seq[Expression] => E)(
+      implicit ct: ClassTag[E]): SparkSessionExtensions#FunctionDescription =
+    (FunctionIdentifier(name), new ExpressionInfo(ct.runtimeClass.getName, name), build)
+
+  /** The SQL-name surface, read by both registration routes:
+    * [[register]] and [[GraftExtensions]].
+    */
+  val registry: Seq[SparkSessionExtensions#FunctionDescription] = Seq(
+    fn("long_dot")(es => LongDot(es(0), es(1))),
+    fn("long_sq_l2")(es => LongSquaredL2(es(0), es(1))),
+    fn("simhash64")(es => SimHash64(es(0))),
+    fn("minhash_sigs")(es => MinHashSigs(es(0), foldableK(es(1), "minhash_sigs"))),
+    fn("ngram_md5")(es => NgramMd5(es(0), foldableK(es(1), "ngram_md5"))),
+    fn("cdc_segments")(es => CdcSegments(es(0), foldableK(es(1), "cdc_segments"))),
+    fn("unicode_normalize")(es => UnicodeNormalize(es(0), foldableForm(es(1), "unicode_normalize"))),
+    fn("deflated_len")(es => org.apache.spark.sql.graft.DeflatedLen(es(0))),
+    fn("luhn_scan")(es => org.apache.spark.sql.graft.LuhnScan(es(0),
       foldableK(es(1), "luhn_scan"), foldableK(es(2), "luhn_scan"),
       foldableStr(es(3), "luhn_scan"))))
 
@@ -110,8 +120,6 @@ object VectorFunctions {
     case other => throw new IllegalArgumentException(
       s"$fn: the k/n argument must be an integer literal (it sizes the kernel at plan time), got $other")
   }
-
-  private[functions] def foldableKPublic(e: Expression, fn: String): Int = foldableK(e, fn)
 
   /** String-literal sibling of [[foldableK]]: any plan-time string
     * constant (a normalization form, luhn_scan's mask token); `what`
@@ -127,72 +135,24 @@ object VectorFunctions {
   private def foldableForm(e: Expression, fn: String): String =
     foldableStr(e, fn, "form argument (NFC/NFD/NFKC/NFKD)")
 
-  private[functions] def foldableFormPublic(e: Expression, fn: String): String = foldableForm(e, fn)
-
-  private[functions] def foldableStrPublic(e: Expression, fn: String): String = foldableStr(e, fn)
-
   /** Runtime registration (for sessions we did not build, e.g. the
     * driver's): makes the kernels callable from SQL text.
     */
   def register(spark: SparkSession): Unit =
-    registry.foreach { case (name, builder) =>
-      GraftShims.registerFunction(spark, name, builder)
+    registry.foreach { case (id, _, builder) =>
+      GraftShims.registerFunction(spark, id.funcName, builder)
     }
 }
 
 /** `spark.sql.extensions=graft.functions.GraftExtensions` — the
-  * production injection route for sessions built by spark-submit.
+  * production injection route for sessions built by spark-submit:
+  * every [[graft.plans.GraftRules]] rule and strategy and every
+  * [[VectorFunctions.registry]] function.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => graft.plans.RowNumberDedupRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.RangeBinJoinRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.InListToJoinRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.ApproxDistinctRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.MaterializedViewRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.JoinEliminationRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.EagerAggregationRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.DistinctEliminationRewrite)
-    ext.injectOptimizerRule(_ => graft.plans.LevenshteinThresholdRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("long_dot"),
-      new ExpressionInfo(classOf[LongDot].getName, "long_dot"),
-      (es: Seq[Expression]) => LongDot(es(0), es(1))))
-    ext.injectFunction((
-      FunctionIdentifier("long_sq_l2"),
-      new ExpressionInfo(classOf[LongSquaredL2].getName, "long_sq_l2"),
-      (es: Seq[Expression]) => LongSquaredL2(es(0), es(1))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (es: Seq[Expression]) => SimHash64(es(0))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sigs"),
-      new ExpressionInfo(classOf[MinHashSigs].getName, "minhash_sigs"),
-      (es: Seq[Expression]) => MinHashSigs(es(0),
-        VectorFunctions.foldableKPublic(es(1), "minhash_sigs"))))
-    ext.injectFunction((
-      FunctionIdentifier("ngram_md5"),
-      new ExpressionInfo(classOf[NgramMd5].getName, "ngram_md5"),
-      (es: Seq[Expression]) => NgramMd5(es(0),
-        VectorFunctions.foldableKPublic(es(1), "ngram_md5"))))
-    ext.injectFunction((
-      FunctionIdentifier("cdc_segments"),
-      new ExpressionInfo(classOf[CdcSegments].getName, "cdc_segments"),
-      (es: Seq[Expression]) => CdcSegments(es(0),
-        VectorFunctions.foldableKPublic(es(1), "cdc_segments"))))
-    ext.injectFunction((
-      FunctionIdentifier("unicode_normalize"),
-      new ExpressionInfo(classOf[UnicodeNormalize].getName, "unicode_normalize"),
-      (es: Seq[Expression]) => UnicodeNormalize(es(0),
-        VectorFunctions.foldableFormPublic(es(1), "unicode_normalize"))))
-    ext.injectFunction((
-      FunctionIdentifier("luhn_scan"),
-      new ExpressionInfo(classOf[org.apache.spark.sql.graft.LuhnScan].getName, "luhn_scan"),
-      (es: Seq[Expression]) => org.apache.spark.sql.graft.LuhnScan(es(0),
-        VectorFunctions.foldableKPublic(es(1), "luhn_scan"),
-        VectorFunctions.foldableKPublic(es(2), "luhn_scan"),
-        VectorFunctions.foldableStrPublic(es(3), "luhn_scan"))))
+    graft.plans.GraftRules.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
+    graft.plans.GraftRules.strategies.foreach(st => ext.injectPlannerStrategy(_ => st))
+    VectorFunctions.registry.foreach(ext.injectFunction)
   }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
@@ -94,14 +93,4 @@ object ApproxDistinctRewrite extends Rule[LogicalPlan] {
 
   private def hashable(children: Seq[Expression]): Boolean =
     new XxHash64(children).checkInputDataTypes().isSuccess
-
-  /** Idempotent runtime registration (sessions the library did not
-    * build); the rule is still inert until the session opts in via
-    * [[ConfKey]].
-    */
-  def install(spark: SparkSession): Unit = {
-    val current = spark.experimental.extraOptimizations
-    if (!current.contains(ApproxDistinctRewrite))
-      spark.experimental.extraOptimizations = current :+ ApproxDistinctRewrite
-  }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -170,17 +170,10 @@ case class AsOfMergeJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** DataFrame-level builder + runtime strategy installation (the
-  * `experimental.extraStrategies` route for sessions we did not build;
-  * `GraftExtensions` injects the same strategy for spark-submit
-  * sessions).
+/** DataFrame-level builder; installs [[AsOfJoinStrategy]] on the
+  * session through [[GraftRules.install]] (strategies only).
   */
 object AsOfMerge {
-
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
 
   /** Backward as-of through the custom operator — same signature and
     * semantics as [[graft.operators.AsOfJoin.leftAsOf]]; payload columns
@@ -196,7 +189,7 @@ object AsOfMerge {
       tieBreak: String,
       payload: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    install(spark)
+    GraftRules.install(spark, rules = Nil)
     val lTsType = left.schema(leftTs).dataType
     require(lTsType == TimestampType || lTsType == LongType,
       s"leftTs must be timestamp/long-backed, got $lTsType")

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.MinBy
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -71,12 +70,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * original attribute's — benign for every sink (parquet/noop/JDBC write
   * nullable schemas).
   *
-  * Registered two ways: [[graft.functions.GraftExtensions]] (the
-  * `spark.sql.extensions` route for sessions built by spark-submit) and
-  * `SparkEntry.configure` (runtime `experimental.extraOptimizations`, the
-  * only injection point for sessions the library did not build, e.g. the
-  * gate driver's). OptimizerRuleSpec proves plan shape (no Window/Sort
-  * left) and row equality with the un-rewritten form.
+  * Listed in [[GraftRules]], like every graft rule. OptimizerRuleSpec
+  * proves plan shape (no Window/Sort left) and row equality with the
+  * un-rewritten form.
   */
 object RowNumberDedupRewrite extends Rule[LogicalPlan] {
 
@@ -144,14 +140,4 @@ object RowNumberDedupRewrite extends Rule[LogicalPlan] {
       case GreaterThanOrEqual(IntegerLiteral(1), a: Attribute) => a.semanticEquals(rn)
       case _ => false
     }
-
-  /** Idempotent runtime registration on a session the library did not
-    * build (`experimental.extraOptimizations` is the one user-accessible
-    * optimizer hook that needs no session rebuild).
-    */
-  def install(spark: SparkSession): Unit = {
-    val current = spark.experimental.extraOptimizations
-    if (!current.contains(RowNumberDedupRewrite))
-      spark.experimental.extraOptimizations = current :+ RowNumberDedupRewrite
-  }
 }

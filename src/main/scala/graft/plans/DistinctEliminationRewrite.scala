@@ -52,12 +52,6 @@ object DistinctEliminationRewrite extends Rule[LogicalPlan] {
 
   val ConfKey = "spark.graft.distinctElim.enabled"
 
-  def install(spark: SparkSession): Unit = {
-    val current = spark.experimental.extraOptimizations
-    if (!current.contains(DistinctEliminationRewrite))
-      spark.experimental.extraOptimizations = current :+ DistinctEliminationRewrite
-  }
-
   /** SINGLETON-GROUP COLLAPSE of one aggregate output (opt15 widened
     * this from opt14's `first(attr)`-only shape): over a group proven
     * to hold exactly one row, each standard aggregate has a closed

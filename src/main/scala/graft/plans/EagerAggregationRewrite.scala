@@ -43,12 +43,6 @@ object EagerAggregationRewrite extends Rule[LogicalPlan] {
 
   val ConfKey = "spark.graft.eagerAgg.enabled"
 
-  def install(spark: SparkSession): Unit = {
-    val current = spark.experimental.extraOptimizations
-    if (!current.contains(EagerAggregationRewrite))
-      spark.experimental.extraOptimizations = current :+ EagerAggregationRewrite
-  }
-
   // right-side scan extraction: filters are sound here (an inner join's
   // right predicate only decides WHICH groups survive, never how they
   // aggregate); multi-path scans refuse — see [[PlanScans]].

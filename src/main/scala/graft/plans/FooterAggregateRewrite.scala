@@ -2,7 +2,6 @@ package graft.plans
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
@@ -53,12 +52,6 @@ import org.apache.spark.sql.types._
 object FooterAggregateRewrite extends Rule[LogicalPlan] {
 
   val ConfKey = "spark.graft.footerAgg.enabled"
-
-  def install(spark: SparkSession): Unit = {
-    val current = spark.experimental.extraOptimizations
-    if (!current.contains(FooterAggregateRewrite))
-      spark.experimental.extraOptimizations = current :+ FooterAggregateRewrite
-  }
 
   /** Per-column footer stats.
     *  - `covered`: Σ row counts of the blocks that CARRY the column —

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.LeftSemi
@@ -37,10 +36,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * attributes are the child's — untouched — so parent plans never see
   * the rewrite.
   *
-  * Registered like the other graft rules: [[graft.functions.GraftExtensions]]
-  * at session build, `install` for sessions the library did not build;
-  * both routes are inert until the session opts in by setting the
-  * threshold conf. OptimizerInRuleSpec proves plan shape (semi join, no
+  * Listed in [[GraftRules]] like the other graft rules, and inert until
+  * the session opts in by setting the threshold conf. OptimizerInRuleSpec proves plan shape (semi join, no
   * giant In/InSet), row equality with the un-rewritten form, and every
   * guard; the opt3 gate entry hash-proves the rewrite cross-engine
   * against an oracle that executes the literal IN-list SQL.
@@ -79,12 +76,5 @@ object InListToJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       val rest = conjuncts.filterNot(_ eq original)
       if (rest.isEmpty) join else Filter(rest.reduce(And), join)
     }
-  }
-
-  /** Idempotent runtime registration (see RowNumberDedupRewrite.install). */
-  def install(spark: SparkSession): Unit = {
-    val current = spark.experimental.extraOptimizations
-    if (!current.contains(InListToJoinRewrite))
-      spark.experimental.extraOptimizations = current :+ InListToJoinRewrite
   }
 }

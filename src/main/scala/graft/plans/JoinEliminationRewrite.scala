@@ -43,12 +43,6 @@ object JoinEliminationRewrite extends Rule[LogicalPlan] {
 
   val ConfKey = "spark.graft.joinElim.enabled"
 
-  def install(spark: SparkSession): Unit = {
-    val current = spark.experimental.extraOptimizations
-    if (!current.contains(JoinEliminationRewrite))
-      spark.experimental.extraOptimizations = current :+ JoinEliminationRewrite
-  }
-
   /** The right side qualifies iff it is a (possibly filtered) bare
     * SINGLE-ROOT scan of a path whose (path, keyCol) uniqueness was
     * verified-and-registered. Filters are sound here — they only

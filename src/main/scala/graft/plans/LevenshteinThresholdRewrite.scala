@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -73,11 +72,5 @@ object LevenshteinThresholdRewrite extends Rule[LogicalPlan] {
     case LessThan(Lev(l), IntLit(t)) if t >= 1 => within(l, t - 1)
     case GreaterThanOrEqual(IntLit(t), Lev(l)) if t >= 0 => within(l, t)
     case GreaterThan(IntLit(t), Lev(l)) if t >= 1 => within(l, t - 1)
-  }
-
-  def install(spark: SparkSession): Unit = {
-    val current = spark.experimental.extraOptimizations
-    if (!current.contains(LevenshteinThresholdRewrite))
-      spark.experimental.extraOptimizations = current :+ LevenshteinThresholdRewrite
   }
 }

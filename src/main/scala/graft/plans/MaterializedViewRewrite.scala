@@ -192,12 +192,6 @@ object MaterializedViewRewrite extends Rule[LogicalPlan] {
     ()
   }
 
-  def install(spark: SparkSession): Unit = {
-    val current = spark.experimental.extraOptimizations
-    if (!current.contains(MaterializedViewRewrite))
-      spark.experimental.extraOptimizations = current :+ MaterializedViewRewrite
-  }
-
   // ------------------------------------------------------ star-schema MVs
 
   /** One dimension leg of a star MV: the dim's scan (path +

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -73,8 +72,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, T
   * hash-matches DuckDB executing the same naive SQL; RangeBinRewriteSpec
   * pins plan shape (no nested-loop/cartesian), rule-off equivalence,
   * bound inclusivity, orientation, nulls, and the equi/no-conf guards.
-  * Registered like [[RowNumberDedupRewrite]]: GraftExtensions +
-  * `SparkEntry.configure`.
+  * Listed in [[GraftRules]].
   */
 object RangeBinJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -164,12 +162,5 @@ object RangeBinJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
         Some(And(cond, EqualTo(pBin.toAttribute, iBin))), j.hint)
       Project(j.output, newJoin)
     }
-  }
-
-  /** Idempotent runtime registration (same route as RowNumberDedupRewrite). */
-  def install(spark: SparkSession): Unit = {
-    val current = spark.experimental.extraOptimizations
-    if (!current.contains(RangeBinJoinRewrite))
-      spark.experimental.extraOptimizations = current :+ RangeBinJoinRewrite
   }
 }

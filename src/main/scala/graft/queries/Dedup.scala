@@ -2101,7 +2101,7 @@ object Dedup extends QueryModule {
   override val probes: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dd6_ngram_jaccard" -> (ngramJaccard _),
     "dd12_containment" -> (containmentPairs _),
-    // dd19 stage decomposition (r18 opt round, TimeQuery-only): where
+    // dd19 stage decomposition (r18 opt round, `graft.Dev time` only): where
     // does the capped pipeline's time go — shingling, anchoring, or
     // candidate+verify? Each probe is the gate pipeline truncated.
     "dd19_probe_shingles" -> ((s: SparkSession, dir: String) =>

@@ -16,7 +16,7 @@ object Graph extends QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String) = Tables.wide(s, dir, n)
 
-  /** Plan-only mode (`spark.graft.planOnly=true`, set by [[graft.Explain]]):
+  /** Plan-only mode (`spark.graft.planOnly=true`, set by `graft.Dev explain`):
     * skip the measured probe/materialization jobs that normally run at
     * PLAN CONSTRUCTION time (set-size probe, edge-count gates) and take
     * each entry's primary path, so `explain` is execution-free. Never set
@@ -192,7 +192,7 @@ object Graph extends QueryModule {
 
   /** NOTE: CONSTRUCTING this plan runs a Spark job — the size gate
     * counts the persisted edge frame before choosing the probe
-    * strategy, so plan-only tools (graft.Explain, map iteration) pay
+    * strategy, so plan-only tools (`graft.Dev explain`, map iteration) pay
     * the edge build here. Inherent to a measured pre-AQE strategy
     * choice; the count doubles as the n_edges output column and the
     * built edges stay persisted for the probes that follow.
@@ -1127,7 +1127,7 @@ object Graph extends QueryModule {
     "g8_modularity" -> (modularityScore _),
     "g3_degree_census" -> (degreeCensus _))
 
-  /** g5 stage decomposition (r19 opt round, TimeQuery-only): the peel
+  /** g5 stage decomposition (r19 opt round, `graft.Dev time` only): the peel
     * loop's convergence early-exit cannot fire at sf0.1 (the repeat
     * graph still shrinks at every sweep: 7146 → 726 → 110 → 20 edges),
     * so the gate number is bounded below by the sparsified-edge BUILD +

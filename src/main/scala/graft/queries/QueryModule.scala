@@ -17,7 +17,7 @@ trait QueryModule {
     * disk-death at the 100× rung (dd6's hot-anchor fan-out, dd12's
     * true-output explosion) — superseded for production by shipped
     * capped levers (dd19, dd17/dd18). Kept runnable for the dev mains
-    * (TimeQuery/Explain/ShowQuery) and the scale ladder, EXCLUDED from
+    * (`graft.Dev` time/explain/show) and the scale ladder, EXCLUDED from
     * the Verify/Bench battery a user would run as-shipped.
     */
   def probes: Map[String, (SparkSession, String) => DataFrame] = Map.empty

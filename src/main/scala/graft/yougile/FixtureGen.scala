@@ -4,7 +4,6 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.SparkSession
 import graft.yougile.Model._
 
 /** Deterministic YouGile API fixture generator (FIXTURES.md §A).
@@ -277,12 +276,7 @@ object FixtureGen {
 
   // --------------------------------------------------------- parquet out
   def writeParquet(u: Universe, dir: String): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession(4)
     import spark.implicits._
     def save(df: org.apache.spark.sql.DataFrame, name: String): Unit =
       df.repartition(1).write.mode("overwrite").parquet(s"$dir/$name")

@@ -1,0 +1,37 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.plans._
+
+/** `SparkEntry.configure` is the one setup call on sessions the library
+  * did not build (e.g. the benchmark's). Re-running it must neither
+  * duplicate a rule nor reset a setting a session pinned.
+  */
+class GraftRulesSpec extends AnyFunSuite {
+
+  test("configure twice installs each rule once, in order, and keeps a pinned threshold") {
+    val s = SharedSpark.spark.newSession()
+    SparkEntry.configure(s)
+    assert(s.conf.get(InListToJoinRewrite.ThresholdConfKey) == "256")
+    s.conf.set(InListToJoinRewrite.ThresholdConfKey, "0")
+    SparkEntry.configure(s)
+    assert(s.experimental.extraOptimizations == Seq(
+      RowNumberDedupRewrite, RangeBinJoinRewrite, InListToJoinRewrite,
+      ApproxDistinctRewrite, MaterializedViewRewrite, JoinEliminationRewrite,
+      EagerAggregationRewrite, DistinctEliminationRewrite, FooterAggregateRewrite,
+      LevenshteinThresholdRewrite))
+    assert(s.experimental.extraOptimizations == GraftRules.optimizerRules)
+    assert(s.experimental.extraStrategies == Seq(AsOfJoinStrategy))
+    assert(s.conf.get(InListToJoinRewrite.ThresholdConfKey) == "0")
+  }
+
+  test("install appends only what is missing, after what the session already carries") {
+    val s = SharedSpark.spark.newSession()
+    GraftRules.install(s, Seq(FooterAggregateRewrite), strategies = Nil)
+    GraftRules.install(s)
+    assert(s.experimental.extraOptimizations ==
+      FooterAggregateRewrite +: GraftRules.optimizerRules.filterNot(_ == FooterAggregateRewrite))
+    assert(s.experimental.extraStrategies == GraftRules.strategies)
+  }
+}

@@ -12,14 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class SharedFramesSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
 
-  private def sweepLikeBench(): Unit = {
-    spark.sharedState.cacheManager.clearCache()
-    val keep = SharedFrames.protectedRddIds
-    spark.sparkContext.getPersistentRDDs.values
-      .filterNot(r => keep.contains(Int.box(r.id)))
-      .foreach(_.unpersist(blocking = true))
-  }
-
   test("memoize builds once, returns readable frames across Bench-style sweeps") {
     var builds = 0
     def get() = SharedFrames.memoize(spark, "spec.once") {
@@ -29,7 +21,7 @@ class SharedFramesSpec extends AnyFunSuite {
     val a = get()
     assert(builds == 1)
     assert(a.count() == 100)
-    sweepLikeBench() // must NOT drop the shared blocks
+    Bench.sweepState(spark) // must NOT drop the shared blocks
     val b = get()
     assert(builds == 1, "sweep dropped the shared frame — exemption broken")
     assert(b.count() == 100, "frame unreadable after sweep")

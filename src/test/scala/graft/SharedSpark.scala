@@ -7,11 +7,5 @@ import org.apache.spark.sql.SparkSession
   * stop it — JVM exit cleans up.
   */
 object SharedSpark {
-  lazy val spark: SparkSession = SparkEntry.configure(
-    SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-tests")
-      .getOrCreate())
+  lazy val spark: SparkSession = SparkEntry.configure(LocalSession(2))
 }
