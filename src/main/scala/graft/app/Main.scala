@@ -12,15 +12,34 @@ import graft.yougile._
   *
   * Usage:
   *   spark-submit --class graft.app.Main … \
-  *     --run-ts "2026-01-01 00:00:00" [--out parquet:/path | jdbc]
+  *     [--run-ts "2026-01-01 00:00:00"] [--out parquet:/path | jdbc]
+  *
+  * Any other argument prints the usage to stderr and exits 2 before a
+  * session starts or a request is sent.
   *
   * Env: YG_BASE_URL, YG_TOKEN, YG_ACTUAL_BOARDS (JSON list or CSV),
   *      PG_URL, PG_TABLE, PG_USER, PG_PASSWORD,
   *      TG_BOT_TOKEN, TG_CHAT_ID (alerter optional — noop without them).
   */
 object Main {
+  val Usage = "usage: graft.app.Main [--run-ts <yyyy-MM-dd HH:mm:ss>] [--out parquet:<path>|jdbc]"
+
+  /** The flags `main` honours, by name: `--run-ts <ts>` and
+    * `--out parquet:<path>|jdbc`. Any other argument is refused with why.
+    */
+  def parseArgs(args: List[String]): Either[String, Map[String, String]] = args match {
+    case Nil => Right(Map.empty)
+    case "--run-ts" :: ts :: rest => parseArgs(rest).map(_ + ("--run-ts" -> ts))
+    case "--out" :: out :: rest if out == "jdbc" || out.matches("parquet:.+") =>
+      parseArgs(rest).map(_ + ("--out" -> out))
+    case "--out" :: out :: _ => Left(s"--out takes parquet:<path> or jdbc, not '$out'")
+    case (flag @ ("--run-ts" | "--out")) :: Nil => Left(s"$flag needs a value")
+    case other :: _ => Left(s"unknown argument '$other'")
+  }
+
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val opts = parseArgs(args.toList)
+      .fold(err => { System.err.println(s"$err\n$Usage"); sys.exit(2) }, identity)
     val runTs = opts.getOrElse("--run-ts",
       java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
         .truncatedTo(java.time.temporal.ChronoUnit.SECONDS)

@@ -7,7 +7,8 @@ import graft.yougile.Model._
 
 /** Gate entries for the real YouGile pipeline: JSON fixture pages →
   * paginated client → explicit-schema ingestion → transform → the exact
-  * 22-column `cdm_tasks` mart of `sql/ddl.sql`.
+  * 22-column `cdm_tasks` mart of `sql/ddl.sql`, built with [[Pipeline]]'s
+  * own builders.
   *
   * These queries run on the committed fixture set (Fixtures.jsonDir), not
   * the TESTDATA star schema — the `sfDir` argument is unused: the YouGile
@@ -28,20 +29,23 @@ object YouGileQueries extends QueryModule {
     """unnest(CASE WHEN t.subtasks IS NULL OR len(t.subtasks) = 0
       |                THEN [CAST(NULL AS VARCHAR)] ELSE t.subtasks END) AS subtask_id""".stripMargin
   private def sticker(key: String) = s"map_extract(o.stickers, '$key')[1]"
+  private val allowedBoardsSql =
+    Fixtures.allowedBoards.map(b => "'" + b.replace("'", "''") + "'").mkString(",")
 
-  private def source(s: SparkSession): YouGileSource =
-    new YouGileSource(s, new JsonFixtureClient(Fixtures.jsonDir), YouGileConfig.fixture)
+  private val cfg = YouGileConfig.fixture
+  private def client = new JsonFixtureClient(Fixtures.jsonDir)
+  private def source(s: SparkSession) = new YouGileSource(s, client, cfg)
 
   // ------------------------------------------------------------ entries
   private def ygBrdClmn(s: SparkSession, dir: String): DataFrame =
-    withPipeline(s)((_, bc) => bc).orderBy(col("column_id").asc_nulls_first)
+    Pipeline.brdClmn(source(s), cfg).orderBy(col("column_id").asc_nulls_first)
 
   private val ygBrdClmnSql =
     s"""SELECT c.boardId AS board_id, c.title AS column_name, c.id AS column_id,
        |  b.title AS board_name, b.projectId AS project_id
        |FROM read_parquet('${pq("columns")}') c
        |LEFT JOIN read_parquet('${pq("boards")}') b ON c.boardId = b.id
-       |WHERE b.title IN ('Доска Трейдинг А','Доска Трейдинг Б','Spot deals')
+       |WHERE b.title IN ($allowedBoardsSql)
        |ORDER BY column_id NULLS FIRST""".stripMargin
 
   private def ygHubStates(s: SparkSession, dir: String): DataFrame =
@@ -59,27 +63,15 @@ object YouGileQueries extends QueryModule {
        |  FROM read_parquet('${pq("stickers")}'))
        |ORDER BY str_sticker_id NULLS FIRST, str_sticker_state_id NULLS FIRST""".stripMargin
 
-  /** One source + one brd_clmn shared by every consumer of a run —
-    * against the real paginated API, re-creating them would repeat the
-    * boards/columns fetches per consumer.
-    */
-  private def assembledDf(src: YouGileSource, bc: DataFrame): DataFrame = {
-    // driver-side column-id loop = the per-column fetch workaround (S3);
-    // brd_clmn is bounded dimensional data, so the collect is safe at any SF
-    val columnIds = bc.select("column_id").collect().map(_.getString(0)).toSeq
-    Transform.taskAssembly(
-      Transform.contractsPrepared(src.contracts(columnIds)),
-      Transform.subtasksPrepared(src.subtaskObjects()))
-  }
-
-  private def withPipeline[A](s: SparkSession)(f: (YouGileSource, DataFrame) => A): A = {
+  /** `Pipeline.assembled` over the fixtures' brd_clmn. */
+  private def assembled(s: SparkSession): DataFrame = {
     val src = source(s)
-    f(src, Transform.brdClmn(src.boards(), src.columns(), Fixtures.allowedBoards))
+    Pipeline.assembled(src, Pipeline.brdClmn(src, cfg))
   }
 
   /** The contract×lot grain before hub enrichment (§3.2's output). */
   private def ygAssembly(s: SparkSession, dir: String): DataFrame =
-    withPipeline(s)((src, bc) => assembledDf(src, bc))
+    assembled(s)
       .select("task_id", "subtask_id", "subtask_name", "deleted", "quantity_plan", "loading_dates")
       .orderBy(Seq("task_id", "subtask_id", "subtask_name", "deleted", "quantity_plan", "loading_dates")
         .map(col(_).asc_nulls_first): _*)
@@ -105,7 +97,7 @@ object YouGileQueries extends QueryModule {
 
   /** F4 on the real pipeline: rows whose lot was never fetched. */
   private def ygDqLost(s: SparkSession, dir: String): DataFrame =
-    withPipeline(s)((src, bc) => Transform.lostSubtasks(assembledDf(src, bc)))
+    Transform.lostSubtasks(assembled(s))
       .agg(count(lit(1)).as("lost_rows"))
 
   private val ygDqLostSql = {
@@ -124,10 +116,8 @@ object YouGileQueries extends QueryModule {
 
   /** The flagship: full extract+transform to the 22-column mart. */
   private def ygMart(s: SparkSession, dir: String): DataFrame =
-    withPipeline(s) { (src, bc) =>
-      Transform.mart(assembledDf(src, bc), bc,
-        Transform.stickerStates(src.stickers()), Fixtures.runTs)
-    }.orderBy(martColumns.map(col(_).asc_nulls_first): _*)
+    Pipeline.mart(source(s), cfg, Fixtures.runTs)
+      .orderBy(martColumns.map(col(_).asc_nulls_first): _*)
 
   private val ygMartSql = {
     val St = Stickers
@@ -135,7 +125,7 @@ object YouGileQueries extends QueryModule {
        |  SELECT c.id AS column_id, c.title AS column_name, b.title AS board_name
        |  FROM read_parquet('${pq("columns")}') c
        |  LEFT JOIN read_parquet('${pq("boards")}') b ON c.boardId = b.id
-       |  WHERE b.title IN ('Доска Трейдинг А','Доска Трейдинг Б','Spot deals')),
+       |  WHERE b.title IN ($allowedBoardsSql)),
        |states AS (
        |  SELECT name AS hub_name, st.id AS state_id, st.name AS state_name
        |  FROM (SELECT name, unnest(states) AS st FROM read_parquet('${pq("stickers")}'))),
@@ -203,24 +193,27 @@ object YouGileQueries extends QueryModule {
   }
 
   // --------------------------------------------------------- yg_dsv2
-  /** The DataSource V2 route into the same API surface
-    * ([[graft.sources.YouGileTableProvider]]): `spark.read.format
-    * ("yougile")` plans one InputPartition per board column (the S3
-    * per-column workaround as genuine source parallelism) and parses
-    * the pages on the EXECUTORS through Catalyst's JacksonParser with
-    * column-pruning pushdown. Tracked-board filtering stays a left-semi
-    * join against brd_clmn — the allow-list is deploy config, not a
-    * source property. The oracle reads the committed parquet mirror of
-    * the per-column contract fetch, so the hash proves the connector's
-    * pagination, partitioning, and JSON decode end-to-end.
-    */
-  private def ygDsv2Tasks(s: SparkSession, dir: String): DataFrame = {
-    val tasks = s.read.format("yougile")
+  /** The connector's per-column contract read over the fixture pages. */
+  private def dsv2Tasks(s: SparkSession): DataFrame =
+    s.read.format("yougile")
       .option("entity", "tasks")
       .option("fixtureDir", Fixtures.jsonDir)
-      .option("limit", YouGileConfig.fixture.contractPageLimit.toString)
       .load()
-    val bc = withPipeline(s)((_, b) => b).select(col("column_id"))
+
+  /** The DataSource V2 route into the same API surface
+    * ([[graft.sources.YouGileTableProvider]]): `spark.read.format
+    * ("yougile")` fetches the pages on the driver through the pipeline's
+    * page walk, plans one InputPartition per board column (the S3
+    * workaround), and decodes on the EXECUTORS through Catalyst's
+    * JacksonParser with column-pruning pushdown. Tracked-board filtering
+    * stays a left-semi join against brd_clmn — the allow-list is deploy
+    * config, not a source property. The oracle reads the committed
+    * parquet mirror of the per-column contract fetch, so the hash proves
+    * the connector's pagination, partitioning, and JSON decode.
+    */
+  private def ygDsv2Tasks(s: SparkSession, dir: String): DataFrame = {
+    val tasks = dsv2Tasks(s)
+    val bc = Pipeline.brdClmn(source(s), cfg).select(col("column_id"))
     tasks.join(bc, tasks("columnId") === bc("column_id"), "left_semi")
       .select(col("id"), col("title"), col("timestamp"), col("columnId"),
         // coalesce: a NULL count reaches pandas as float64 and breaks
@@ -248,11 +241,7 @@ object YouGileQueries extends QueryModule {
     * parquet mirror of the same fixture universe.
     */
   private def ygDsv2Census(s: SparkSession, dir: String): DataFrame = {
-    s.read.format("yougile")
-      .option("entity", "tasks")
-      .option("fixtureDir", Fixtures.jsonDir)
-      .option("limit", YouGileConfig.fixture.contractPageLimit.toString)
-      .load()
+    dsv2Tasks(s)
       .groupBy("columnId")
       .agg(count(lit(1)).as("n_tasks"), count(col("subtasks")).as("n_with_subtasks"))
       .orderBy(col("columnId").asc_nulls_first)
@@ -273,11 +262,7 @@ object YouGileQueries extends QueryModule {
     * restates the stats over the committed parquet mirror.
     */
   private def ygDsv2Stats(s: SparkSession, dir: String): DataFrame = {
-    s.read.format("yougile")
-      .option("entity", "tasks")
-      .option("fixtureDir", Fixtures.jsonDir)
-      .option("limit", YouGileConfig.fixture.contractPageLimit.toString)
-      .load()
+    dsv2Tasks(s)
       .groupBy("columnId")
       .agg(min(col("timestamp")).as("min_ts"), max(col("timestamp")).as("max_ts"),
         sum(col("timestamp")).as("sum_ts"), count(lit(1)).as("n_tasks"))
@@ -293,14 +278,15 @@ object YouGileQueries extends QueryModule {
 
   // --------------------------------------------------------- yg_jdbc
   /** K1 under the ORACLE, not just the Derby spec (r17 VERDICT #7):
-    * build the 22-column mart, write it through the production
+    * load the fixtures with `Pipeline.run` through the production
     * [[graft.sinks.JdbcSink]] (batched `df.write.jdbc` append — the
     * reference's `insert_rows` replacement, `dags/yougile_etl_dag.py:
     * 325-333`) into a REAL embedded-Derby database, read it back over
     * JDBC, and hash the round-tripped rows against the same DuckDB
     * oracle as `yg_mart`. A silent type-mapping loss anywhere on the
     * write path (string→CLOB, date/timestamp/double DDL, null
-    * handling, batching) breaks the hash.
+    * handling, batching) breaks the hash; a read-back whose row count
+    * differs from the count `Pipeline.run` returns fails the entry.
     *
     * The read-back is pinned with an eager localCheckpoint so the
     * in-memory database can be dropped before the frame is consumed —
@@ -321,10 +307,6 @@ object YouGileQueries extends QueryModule {
   private val jdbcShellDb = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def ygJdbcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val mart = withPipeline(s) { (src, bc) =>
-      Transform.mart(assembledDf(src, bc), bc,
-        Transform.stickerStates(src.stickers()), Fixtures.runTs)
-    }
     val db = jdbcShellDb.computeIfAbsent(s.sparkContext.applicationId,
       _ => s"memory:graftgate${java.util.UUID.randomUUID().toString.replace("-", "")}")
     val url = s"jdbc:derby:$db;create=true"
@@ -334,10 +316,10 @@ object YouGileQueries extends QueryModule {
     // NEUTRAL-to-worse at fixture grain (repartition(1) ~1.39 s,
     // coalesce(1) ~1.45 s vs ~1.25 s partition-parallel), so neither
     // this entry nor JdbcSink forces a partition count. AQE picks it:
-    // `Pipeline.run` persists nothing, so the production write, like
-    // this one, runs over a dedup exchange that AQE has coalesced to a
-    // few partitions at hourly scale.
-    new graft.sinks.JdbcSink(url, table, "app", "app").write(mart)
+    // `Pipeline.run` persists nothing, so its write runs over a dedup
+    // exchange that AQE has coalesced to a few partitions at hourly scale.
+    val rows = Pipeline.run(s, client, cfg, Fixtures.runTs,
+      new graft.sinks.JdbcSink(url, table, "app", "app"), graft.sinks.NoopAlerter)
     val back = s.read.format("jdbc")
       .option("url", url).option("dbtable", table).load()
       .localCheckpoint()
@@ -353,6 +335,9 @@ object YouGileQueries extends QueryModule {
       case e: java.sql.SQLException =>
         System.err.println(s"[yg_jdbc_roundtrip] DROP TABLE $table failed, continuing: ${e.getMessage}")
     }
+    val readBack = back.count()
+    require(readBack == rows,
+      s"yg_jdbc_roundtrip: Pipeline.run loaded $rows rows, $readBack read back")
     back.orderBy(martColumns.map(col(_).asc_nulls_first): _*)
   }
 

@@ -15,35 +15,35 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.yougile.{JsonFixtureClient, Model, Paginator, YouGileClient}
+import graft.yougile.{HttpYouGileClient, JsonFixtureClient, RateLimiter, YouGileClient, YouGileConfig, YouGileSource}
+import graft.yougile.YouGileSource.View
 
 /** DataSource V2 connector for the YouGile REST API — the reference's S1–S3
-  * extract (ref `dags/yougile_etl_dag.py:48-76,200-217`) re-expressed as a
-  * first-class Spark SOURCE instead of a driver-side fetch:
+  * extract (ref `dags/yougile_etl_dag.py:48-76,200-217`) as a Spark source:
   * `spark.read.format("yougile").option("entity", "tasks").load()`.
   *
-  * Design (tier-"custom source" of the build plan):
+  * The pages are fetched on the DRIVER by the pipeline's own page walk
+  * ([[graft.yougile.YouGileSource.entities]]) over one client, so a scan
+  * spends one 50 req/min budget however many partitions it plans, like
+  * the reference's `get_yg_data` (`:48-76`); the executors only decode.
   *  - **Partitioning**: the reference fetches tasks column-by-column to dodge
-  *    a pagination bug (S3). Here that per-column loop becomes genuine source
-  *    parallelism — `planInputPartitions` lists the board columns once on the
-  *    driver (one tiny request) and emits ONE InputPartition PER COLUMN, so
-  *    executors fetch columns concurrently. Other entities are single-page
+  *    a pagination bug (S3). Here each board column is ONE InputPartition
+  *    carrying that column's entities; other entities are single-page
   *    catalogs → one partition.
   *  - **Column pruning pushdown** (`SupportsPushDownRequiredColumns`): the
   *    pruned schema reaches the per-partition [[JacksonParser]], which
   *    materializes ONLY the required fields from the JSON — the same partial
   *    parse Spark's own json source does. A `select(id)` over a source with
   *    heavy sticker maps never builds the maps.
-  *  - **Parsing**: each page's `content` elements go through Catalyst's
-  *    JacksonParser against the explicit entity schema (Model §1.4 —
-  *    add-missing-as-null, no inference), producing InternalRows directly;
-  *    no driver round-trip, no Dataset[String] staging.
-  *  - **Rate limiting at scale**: the 50 req/min budget is per-API-token,
-  *    so a real deployment divides it across partitions (each reader
-  *    gets budget/numPartitions — the client seam takes any
-  *    [[YouGileClient]]); the fixture client used by gates/specs needs
-  *    none. Options: `entity` (boards|columns|string-stickers|tasks),
-  *    `fixtureDir` (JSON fixture root; absent → HTTP client from env).
+  *  - **Parsing**: each entity goes through Catalyst's JacksonParser against
+  *    the explicit entity schema (Model §1.4 — add-missing-as-null, no
+  *    inference), producing InternalRows directly.
+  *
+  * Options: `entity` (boards|columns|string-stickers|tasks), `fixtureDir`
+  * (JSON fixture root read with [[YouGileConfig.fixture]]; absent → HTTP
+  * client and config from the environment), and `columnsPerBatch` for the
+  * streaming leg. Page sizes and `includeDeleted` come from the entity's
+  * [[YouGileSource.View]].
   *
   * Registered as `yougile` via DataSourceRegister (META-INF/services).
   */
@@ -52,7 +52,7 @@ class YouGileTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "yougile"
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    YouGileTableProvider.schemaFor(options.getOrDefault("entity", "tasks"))
+    YouGileTableProvider.viewFor(options.getOrDefault("entity", "tasks")).schema
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
@@ -62,23 +62,43 @@ class YouGileTableProvider extends TableProvider with DataSourceRegister {
 }
 
 object YouGileTableProvider {
-  def schemaFor(entity: String): StructType = entity match {
-    case "boards"          => Model.boardSchema
-    case "columns"         => Model.columnSchema
-    case "string-stickers" => Model.stickerSchema
-    case "tasks"           => Model.contractSchema
+  /** The view each entity reads; `tasks` is the per-column contracts. */
+  private[sources] def viewFor(entity: String): View = entity match {
+    case "boards"          => View.Boards
+    case "columns"         => View.Columns
+    case "string-stickers" => View.StringStickers
+    case "tasks"           => View.Contracts
     case other => throw new IllegalArgumentException(
       s"unknown entity '$other' (boards|columns|string-stickers|tasks)")
   }
 
-  private[sources] def clientFor(opts: Map[String, String]): YouGileClient =
+  /** The client and its config; one per scan or stream, so its limiter
+    * is the read's whole budget.
+    */
+  private[sources] def clientFor(opts: Map[String, String]): (YouGileClient, YouGileConfig) =
     opts.get("fixturedir") match {
-      case Some(dir) => new JsonFixtureClient(dir)
+      case Some(dir) => (new JsonFixtureClient(dir), YouGileConfig.fixture)
       case None =>
-        val cfg = graft.yougile.YouGileConfig.fromEnv(sys.env)
-        new graft.yougile.HttpYouGileClient(cfg,
-          new graft.yougile.RateLimiter(cfg.minRequestIntervalMs))
+        val cfg = YouGileConfig.fromEnv(sys.env)
+        (new HttpYouGileClient(cfg, new RateLimiter(cfg.minRequestIntervalMs)), cfg)
     }
+
+  /** Distinct board column ids, in listing order. */
+  private[sources] def columnIds(client: YouGileClient, cfg: YouGileConfig): Seq[String] = {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    YouGileSource.entities(client, cfg, View.Columns)
+      .map(j => om.readTree(j).path("id").asText())
+      .filter(_.nonEmpty).toSeq.distinct
+  }
+
+  /** One column's (or catalog's) partition, fetched now; a row limit
+    * stops the page walk after ⌈n/pageSize⌉ pages.
+    */
+  private[sources] def partition(client: YouGileClient, cfg: YouGileConfig,
+      entity: String, columnId: Option[String], rowLimit: Option[Int] = None): YouGilePartition = {
+    val all = YouGileSource.entities(client, cfg, viewFor(entity), columnId)
+    YouGilePartition(entity, columnId, rowLimit.fold(all)(all.take).toVector)
+  }
 }
 
 private[sources] class YouGileTable(schema: StructType, opts: Map[String, String])
@@ -129,7 +149,7 @@ private[sources] class YouGileScanBuilder(full: StructType, opts: Map[String, St
 
   /** LIMIT pushdown (`SupportsPushDownLimit`): on a PAGINATED
     * rate-limited API this is the pushdown that saves wall-clock, not
-    * just bytes — each partition reader stops the HTTP page loop after
+    * just bytes — each partition's fetch stops the HTTP page loop after
     * ⌈limit/pageSize⌉ pages ([[graft.yougile.Paginator.fetchLazy]])
     * instead of draining its column's full listing. PARTIAL semantics
     * (`isPartiallyPushed` stays true): each of the N per-column
@@ -145,7 +165,7 @@ private[sources] class YouGileScanBuilder(full: StructType, opts: Map[String, St
   /** Aggregate pushdown (`SupportsPushDownAggregates`): COUNT(*) /
     * null-skipping COUNT(col) / MIN / MAX / SUM over top-level source
     * fields, grouped by top-level fields, is answered INSIDE the
-    * partition reader — the HTTP fetch still happens (the API has no
+    * partition reader — every page is still fetched (the API has no
     * aggregate endpoints), but each per-column partition ships ONE
     * census row per group across the source boundary instead of every
     * task row. PARTIAL pushdown (supportCompletePushDown stays
@@ -251,30 +271,32 @@ private[sources] class YouGileScan(schema: StructType, opts: Map[String, String]
     s"YouGileScan(entity=$entity$aggDesc$limitDesc)"
   }
 
-  override def planInputPartitions(): Array[InputPartition] = entity match {
-    case "tasks" =>
-      // one tiny driver-side catalog request lists the columns; each
-      // column becomes an InputPartition (the S3 workaround as source
-      // parallelism)
-      val client = YouGileTableProvider.clientFor(opts)
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      Paginator.fetchAll(client, "columns", 1000, includeDeleted = false, None)
-        .map(j => om.readTree(j).path("id").asText())
-        .filter(_.nonEmpty).distinct
-        .filter(cid => allowedColumns.forall(_.contains(cid)))
-        .map(cid => YouGilePartition(entity, Some(cid)): InputPartition)
-        .toArray
-    case _ => Array(YouGilePartition(entity, None))
+  // once per scan: Spark calls planInputPartitions on every copy of
+  // the physical scan node
+  private lazy val partitions: Array[InputPartition] = {
+    val (client, cfg) = YouGileTableProvider.clientFor(opts)
+    val columns = entity match {
+      case "tasks" =>
+        YouGileTableProvider.columnIds(client, cfg)
+          .filter(cid => allowedColumns.forall(_.contains(cid))).map(Some(_))
+      case _ => Seq(None)
+    }
+    columns.map(c =>
+      YouGileTableProvider.partition(client, cfg, entity, c, rowLimit): InputPartition).toArray
   }
 
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new YouGileReaderFactory(schema, opts, agg, rowLimit)
+    new YouGileReaderFactory(schema, agg)
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new YouGileMicroBatchStream(schema, opts)
 }
 
-private[sources] case class YouGilePartition(entity: String, columnId: Option[String])
+/** One column's (or one catalog's) entities, one raw JSON string each. */
+private[sources] case class YouGilePartition(entity: String, columnId: Option[String],
+    entities: Seq[String])
     extends InputPartition
 
 /** Streaming leg of the connector: an incremental BACKFILL stream over
@@ -315,13 +337,11 @@ private[sources] class YouGileMicroBatchStream(schema: StructType, opts: Map[Str
   // sentinel id, so there is exactly one offset/reconciliation codepath
   private val SingletonId = "*"
 
+  // one client, so the listing and every batch share one budget
+  private lazy val (client, cfg) = YouGileTableProvider.clientFor(opts)
+
   private lazy val columns: Seq[String] = entity match {
-    case "tasks" =>
-      val client = YouGileTableProvider.clientFor(opts)
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      Paginator.fetchAll(client, "columns", 1000, includeDeleted = false, None)
-        .map(j => om.readTree(j).path("id").asText())
-        .filter(_.nonEmpty).distinct.sorted
+    case "tasks" => YouGileTableProvider.columnIds(client, cfg).sorted
     case _ => Seq(SingletonId)
   }
 
@@ -370,16 +390,26 @@ private[sources] class YouGileMicroBatchStream(schema: StructType, opts: Map[Str
     }
   }
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val batch = doneOf(end) -- doneOf(start)
-    // listing order (sorted) for deterministic partition indexing
-    columns.filter(batch)
-      .map(c => YouGilePartition(entity, Some(c).filter(_ != SingletonId)): InputPartition)
-      .toArray
-  }
+  // Spark plans a batch once per copy of its physical scan node, so the
+  // last batch's partitions are kept: each batch fetches once
+  private var lastBatch: Option[(Set[String], Array[InputPartition])] = None
+
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    synchronized {
+      val batch = doneOf(end) -- doneOf(start)
+      lastBatch.collect { case (`batch`, parts) => parts }.getOrElse {
+        // listing order (sorted) for deterministic partition indexing
+        val parts = columns.filter(batch)
+          .map(c => YouGileTableProvider.partition(client, cfg, entity,
+            Some(c).filter(_ != SingletonId)): InputPartition)
+          .toArray
+        lastBatch = Some(batch -> parts)
+        parts
+      }
+    }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new YouGileReaderFactory(schema, opts)
+    new YouGileReaderFactory(schema)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -401,150 +431,72 @@ private[sources] case class YouGileOffset(done: Set[String]) extends Offset {
   }
 }
 
-private[sources] class YouGileReaderFactory(schema: StructType, opts: Map[String, String],
-    agg: Option[YouGileAggSpec] = None, rowLimit: Option[Int] = None)
+private[sources] class YouGileReaderFactory(schema: StructType,
+    agg: Option[YouGileAggSpec] = None)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[YouGilePartition]
-    agg match {
-      case Some(spec) => new YouGileAggPartitionReader(schema, opts, p, spec)
-      case None => new YouGilePartitionReader(schema, opts, p, rowLimit)
+    val rows = agg.fold(YouGileReaderFactory.decode(schema, p))(YouGileReaderFactory.census(p, _))
+    new PartitionReader[InternalRow] {
+      private var current: InternalRow = _
+      override def next(): Boolean = { val has = rows.hasNext; if (has) current = rows.next(); has }
+      override def get(): InternalRow = current
+      override def close(): Unit = ()
     }
   }
 }
 
-/** Aggregate-pushdown reader: runs the SAME per-partition row fetch
-  * as [[YouGilePartitionReader]] but against a schema narrowed to the
-  * referenced fields, folds the rows into per-group accumulators, and
-  * emits one census row per group — group values followed by partials
-  * in the positional order `SupportsPushDownAggregates` specifies.
-  * COUNT(col)/MIN/MAX/SUM skip nulls exactly like the SQL semantics
-  * (an all-null group yields a null MIN/MAX/SUM partial). State is
-  * O(groups) per partition; the task-row stream is never
-  * materialized.
-  */
-private[sources] class YouGileAggPartitionReader(
-    outSchema: StructType, opts: Map[String, String], p: YouGilePartition,
-    spec: YouGileAggSpec)
-    extends PartitionReader[InternalRow] {
+private[sources] object YouGileReaderFactory {
 
-  // one mutable cell per (group, agg): count, or seen-flagged extremum/sum
-  private final class Cell {
-    var cnt = 0L
-    var seen = false
-    var l = 0L
-    var d = 0.0
-  }
-
-  private val rows: Iterator[InternalRow] = {
-    val fetchFields = (spec.groupCols ++ spec.aggs.flatMap(_.col)).distinct
-    val fetchSchema = StructType(
-      YouGileTableProvider.schemaFor(p.entity).fields.filter(f =>
-        fetchFields.contains(f.name)))
-    val base = new YouGilePartitionReader(fetchSchema, opts, p)
-    val groupOrd = spec.groupCols.map(fetchSchema.fieldIndex)
-    val groupTypes = spec.groupCols.map(c => fetchSchema(c).dataType)
-    import org.apache.spark.sql.types.{DoubleType, IntegerType}
-    val aggOrd = spec.aggs.map(_.col.map(fetchSchema.fieldIndex))
-    val aggType = spec.aggs.map(_.col.map(c => fetchSchema(c).dataType))
-    // numeric read as Long unless the column is Double
-    def numOf(r: InternalRow, i: Int): (Boolean, Long, Double) = aggType(i).get match {
-      case DoubleType => val v = r.getDouble(aggOrd(i).get); (true, 0L, v)
-      case IntegerType => (false, r.getInt(aggOrd(i).get).toLong, 0.0)
-      case _ => (false, r.getLong(aggOrd(i).get), 0.0)
-    }
-    val acc = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Array[Cell]]
-    try {
-      while (base.next()) {
-        val r = base.get()
-        val key = groupOrd.zip(groupTypes).map { case (i, dt) =>
-          val v = r.get(i, dt)
-          v match { case u: UTF8String => u.copy(); case other => other }
-        }
-        val cs = acc.getOrElseUpdate(key, Array.fill(spec.aggs.size)(new Cell))
-        var i = 0
-        while (i < spec.aggs.size) {
-          val cell = cs(i)
-          spec.aggs(i) match {
-            case YgCountStar => cell.cnt += 1
-            case YgCount(_) => if (!r.isNullAt(aggOrd(i).get)) cell.cnt += 1
-            case YgMin(_) => if (!r.isNullAt(aggOrd(i).get)) {
-              val (isD, l, d) = numOf(r, i)
-              if (!cell.seen || (if (isD) d < cell.d else l < cell.l)) {
-                cell.l = l; cell.d = d
-              }
-              cell.seen = true
-            }
-            case YgMax(_) => if (!r.isNullAt(aggOrd(i).get)) {
-              val (isD, l, d) = numOf(r, i)
-              if (!cell.seen || (if (isD) d > cell.d else l > cell.l)) {
-                cell.l = l; cell.d = d
-              }
-              cell.seen = true
-            }
-            case YgSum(_) => if (!r.isNullAt(aggOrd(i).get)) {
-              val (isD, l, d) = numOf(r, i)
-              if (isD) cell.d += d else cell.l += l
-              cell.seen = true
-            }
-          }
-          i += 1
-        }
-      }
-    } finally base.close()
-    acc.iterator.map { case (key, cs) =>
-      // explicit boxing: bare Double/Int/Long match branches would
-      // unify to Double via Scala's numeric weak conformance, silently
-      // widening the Long partials into the wrong runtime type
-      val vals: Seq[Any] = spec.aggs.zipWithIndex.map {
-        case (YgCountStar | YgCount(_), i) => java.lang.Long.valueOf(cs(i).cnt)
-        case (_, i) =>
-          if (!cs(i).seen) null
-          else aggType(i).get match {
-            case DoubleType => java.lang.Double.valueOf(cs(i).d)
-            case IntegerType => java.lang.Integer.valueOf(cs(i).l.toInt)
-            case _ => java.lang.Long.valueOf(cs(i).l)
-          }
-      }
-      org.apache.spark.sql.catalyst.InternalRow.fromSeq(key ++ vals)
-    }
-  }
-
-  private var current: InternalRow = _
-  override def next(): Boolean = { val has = rows.hasNext; if (has) current = rows.next(); has }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}
-
-private[sources] class YouGilePartitionReader(
-    schema: StructType, opts: Map[String, String], p: YouGilePartition,
-    rowLimit: Option[Int] = None)
-    extends PartitionReader[InternalRow] {
-
-  // per-entity fetch parameters mirror YouGileSource (limit 1000;
-  // subtask fetches elsewhere use includeDeleted=true, but this source's
-  // task view is the per-column contract fetch: includeDeleted=false)
-  private val limit = opts.getOrElse("limit", "1000").toInt
-  private val includeDeleted = opts.getOrElse("includedeleted", "false").toBoolean
-
-  private val rows: Iterator[InternalRow] = {
-    val client = YouGileTableProvider.clientFor(opts)
-    val method = if (p.entity == "tasks") "tasks" else p.entity
-    // lazy page walk: under a pushed LIMIT the take(n) below stops the
-    // HTTP loop after the page that satisfies it — later pages of this
-    // column are never requested
-    val jsons = Paginator.fetchLazy(client, method, limit, includeDeleted, p.columnId)
+  /** Decodes a partition's entities with Catalyst's JacksonParser. */
+  def decode(schema: StructType, p: YouGilePartition): Iterator[InternalRow] = {
     val parser = new JacksonParser(
       schema, new JSONOptions(Map.empty, "UTC"), allowArrayAsStructs = false, Nil)
-    val all = jsons.flatMap { j =>
+    p.entities.iterator.flatMap { j =>
       parser.parse(j, CreateJacksonParser.string, UTF8String.fromString)
         .map(_.copy())
     }
-    rowLimit.fold(all)(all.take)
   }
 
-  private var current: InternalRow = _
-  override def next(): Boolean = { val has = rows.hasNext; if (has) current = rows.next(); has }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
+  /** Aggregate pushdown: decodes against a schema narrowed to the
+    * referenced fields, folds the rows into per-group partials, and
+    * emits one census row per group — group values followed by partials
+    * in the positional order `SupportsPushDownAggregates` specifies.
+    * COUNT(col)/MIN/MAX/SUM skip nulls exactly like the SQL semantics
+    * (an all-null group yields a null MIN/MAX/SUM partial). State is
+    * O(groups) per partition; the task-row stream is never
+    * materialized.
+    */
+  def census(p: YouGilePartition, spec: YouGileAggSpec): Iterator[InternalRow] = {
+    val fields = (spec.groupCols ++ spec.aggs.flatMap(_.col)).distinct
+    val schema = StructType(
+      YouGileTableProvider.viewFor(p.entity).schema.fields.filter(f => fields.contains(f.name)))
+    def field(c: String): InternalRow => Any = _.get(schema.fieldIndex(c), schema(c).dataType)
+    val keys = spec.groupCols.map(field)
+    // COUNT(*) counts every row: its value is never null
+    val values = spec.aggs.map(_.col.fold[InternalRow => Any](_ => 1)(field))
+    // partials are boxed as the column's own type (Long, Integer or
+    // Double): a COUNT starts at 0, the others at null until a value
+    def fold(a: YouGileAgg, acc: Any, v: Any): Any =
+      if (v == null) acc
+      else a match {
+        case YgCountStar | YgCount(_) => acc.asInstanceOf[java.lang.Long] + 1L
+        case _ if acc == null => v
+        case YgMin(_) => if (v.asInstanceOf[Comparable[Any]].compareTo(acc) < 0) v else acc
+        case YgMax(_) => if (v.asInstanceOf[Comparable[Any]].compareTo(acc) > 0) v else acc
+        case YgSum(_) => acc match {
+          case s: java.lang.Long => s + v.asInstanceOf[java.lang.Long]
+          case s: java.lang.Double => s + v.asInstanceOf[java.lang.Double]
+        }
+      }
+    val acc = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Array[Any]]
+    decode(schema, p).foreach { r =>
+      val parts = acc.getOrElseUpdate(keys.map(_(r)), spec.aggs.map {
+        case YgCountStar | YgCount(_) => java.lang.Long.valueOf(0L): Any
+        case _ => null
+      }.toArray)
+      spec.aggs.indices.foreach(i => parts(i) = fold(spec.aggs(i), parts(i), values(i)(r)))
+    }
+    acc.iterator.map { case (key, parts) => InternalRow.fromSeq(key ++ parts) }
+  }
 }

@@ -36,29 +36,28 @@ object EventStream {
     * partitions starved compute parallelism (sw5 27.4 s vs 8.6 s at
     * 32). The rule — one partition per [[StateTargetBytes]] of source,
     * clamped to [8, cores] — reproduces the measured optimum at both
-    * ends; SPARK_GRAFT_STREAM_STATE_PARTITIONS overrides for probes.
+    * ends.
     */
   private val StateTargetBytes = 4L << 20
 
   def statePartitionsFor(s: org.apache.spark.sql.SparkSession, dir: String,
-      table: String = "events"): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS").map(_.toInt).getOrElse {
-      val f = new java.io.File(dir, table + ".parquet")
-      val bytes =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(_.length()).sum
-        else f.length()
-      val cores = s.sparkContext.defaultParallelism
-      if (bytes <= 0L) {
-        // java.io.File can only size LOCAL paths; a remote (hdfs://,
-        // s3a://) or missing source reads 0 here, which would silently
-        // pin every stream to the 8-partition floor — the sf10-starving
-        // direction (ADVICE r17). Unknown volume → core count, the
-        // setting a production deployment starts from before tuning down.
-        System.err.println(s"[stream] WARNING: cannot size $f locally " +
-          s"(missing or non-local path) — defaulting state partitions to $cores")
-        cores
-      } else math.max(8, math.min(cores, (bytes / StateTargetBytes).toInt + 1))
-    }
+      table: String = "events"): Int = {
+    val f = new java.io.File(dir, table + ".parquet")
+    val bytes =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(_.length()).sum
+      else f.length()
+    val cores = s.sparkContext.defaultParallelism
+    if (bytes <= 0L) {
+      // java.io.File can only size LOCAL paths; a remote (hdfs://,
+      // s3a://) or missing source reads 0 here, which would silently
+      // pin every stream to the 8-partition floor — the sf10-starving
+      // direction (ADVICE r17). Unknown volume → core count, the
+      // setting a production deployment starts from before tuning down.
+      System.err.println(s"[stream] WARNING: cannot size $f locally " +
+        s"(missing or non-local path) — defaulting state partitions to $cores")
+      cores
+    } else math.max(8, math.min(cores, (bytes / StateTargetBytes).toInt + 1))
+  }
 
   /** Run `body` (which starts and drains a streaming query) under an
     * explicit state-partition count, restoring the session setting

@@ -2,7 +2,7 @@ package graft.yougile
 
 import scala.concurrent.{Await, TimeoutException}
 import scala.concurrent.duration._
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit, when}
 import graft.sinks.{Alerter, MartSink}
 
@@ -36,6 +36,26 @@ object Pipeline {
     */
   private val ObservationWait: FiniteDuration = 10.seconds
 
+  /** brd_clmn: the columns of the boards on `cfg`'s allow-list. */
+  def brdClmn(src: YouGileSource, cfg: YouGileConfig): DataFrame =
+    Transform.brdClmn(src.boards(), src.columns(), cfg.allowedBoards)
+
+  /** The contract×lot grain before hub enrichment (§3.2's output). The
+    * column-id collect is safe: brd_clmn is bounded dimensional data.
+    */
+  def assembled(src: YouGileSource, brdClmn: DataFrame): DataFrame = {
+    val columnIds = brdClmn.select("column_id").collect().map(_.getString(0)).toSeq
+    Transform.taskAssembly(
+      Transform.contractsPrepared(src.contracts(columnIds)),
+      Transform.subtasksPrepared(src.subtaskObjects()))
+  }
+
+  /** The 22-column `cdm_tasks` mart stamped with `runTs`. */
+  def mart(src: YouGileSource, cfg: YouGileConfig, runTs: String): DataFrame = {
+    val bc = brdClmn(src, cfg)
+    Transform.mart(assembled(src, bc), bc, Transform.stickerStates(src.stickers()), runTs)
+  }
+
   def run(
       spark: SparkSession,
       client: YouGileClient,
@@ -43,18 +63,9 @@ object Pipeline {
       runTs: String,
       sink: MartSink,
       alerter: Alerter): Long = {
-    val src = new YouGileSource(spark, client, cfg)
-    val bc = Transform.brdClmn(src.boards(), src.columns(), cfg.allowedBoards)
-    val columnIds = bc.select("column_id").collect().map(_.getString(0)).toSeq
-
-    val assembled = Transform.taskAssembly(
-      Transform.contractsPrepared(src.contracts(columnIds)),
-      Transform.subtasksPrepared(src.subtaskObjects()))
     val obs = Observation()
-    val mart = Transform.mart(assembled, bc, Transform.stickerStates(src.stickers()), runTs)
-      .observe(obs, count(lit(1)).as("rows"), count(when(Transform.lostLot, 1)).as("lost"))
-
-    sink.write(mart)
+    sink.write(mart(new YouGileSource(spark, client, cfg), cfg, runTs)
+      .observe(obs, count(lit(1)).as("rows"), count(when(Transform.lostLot, 1)).as("lost")))
     val metrics =
       try Await.result(obs.future, ObservationWait)
       catch {

@@ -83,11 +83,16 @@ object Paginator {
       private var more = true
       private def advance(): Unit =
         while (!buf.hasNext && more) {
-          val root = om.readTree(
-            client.fetchPage(method, offset, limit, includeDeleted, columnId))
+          val body = client.fetchPage(method, offset, limit, includeDeleted, columnId)
+          val root = om.readTree(body)
           val content = root.path("content")
+          // an error body (401/429/5xx): fail rather than load a short mart
+          if (!content.isArray)
+            throw new IllegalStateException(s"YouGile $method page (columnId=" +
+              s"${columnId.getOrElse("all")}, offset=$offset) has no content array: " +
+              body.take(200))
           val items = new java.util.ArrayList[String]()
-          if (content.isArray) content.forEach(n => { items.add(n.toString); () })
+          content.forEach(n => { items.add(n.toString); () })
           buf = items.iterator()
           more = root.path("paging").path("next").asBoolean(false)
           offset += limit

@@ -12,22 +12,24 @@ import graft.yougile.Model._
   * the honest design is a tiny driver fetch feeding a distributed parse.
   * At 100 TB the inputs of this engine are files/tables (Tables.scala),
   * not this API; the YouGile source is inherently small.
+  *
+  * [[YouGileSource.entities]] is the one page walk: these readers and the
+  * `yougile` connector (graft.sources) both fetch through it.
   */
 class YouGileSource(spark: SparkSession, client: YouGileClient, cfg: YouGileConfig) {
+  import YouGileSource.{View, entities}
 
-  private def read(schema: StructType, rows: Seq[String]): DataFrame = {
+  private def read(view: View, columnIds: Seq[Option[String]] = Seq(None)): DataFrame = {
     import spark.implicits._
-    spark.read.schema(schema).json(spark.createDataset(rows))
+    spark.read.schema(view.schema)
+      .json(spark.createDataset(columnIds.flatMap(c => entities(client, cfg, view, c))))
   }
 
-  def boards(): DataFrame =
-    read(boardSchema, Paginator.fetchAll(client, "boards", cfg.dictPageLimit, includeDeleted = false, None))
+  def boards(): DataFrame = read(View.Boards)
 
-  def columns(): DataFrame =
-    read(columnSchema, Paginator.fetchAll(client, "columns", cfg.dictPageLimit, includeDeleted = false, None))
+  def columns(): DataFrame = read(View.Columns)
 
-  def stickers(): DataFrame =
-    read(stickerSchema, Paginator.fetchAll(client, "string-stickers", cfg.dictPageLimit, includeDeleted = false, None))
+  def stickers(): DataFrame = read(View.StringStickers)
 
   /** S3: contracts fetched column-by-column — the reference's workaround
     * for a YouGile offset-pagination bug that can drop rows (`:200-217`).
@@ -37,14 +39,38 @@ class YouGileSource(spark: SparkSession, client: YouGileClient, cfg: YouGileConf
     * every portion to the same columns (S5, `:90-94`).
     */
   def contracts(columnIds: Seq[String]): DataFrame =
-    read(
-      contractSchema,
-      columnIds.flatMap(c =>
-        Paginator.fetchAll(client, "tasks", cfg.contractPageLimit, includeDeleted = false, Some(c))))
+    read(View.Contracts, columnIds.map(Some(_)))
 
   /** The global includeDeleted=true fetch whose rows serve as subtasks
     * (lots), ref `:225`.
     */
-  def subtaskObjects(): DataFrame =
-    read(subtaskSchema, Paginator.fetchAll(client, "tasks", cfg.objectPageLimit, includeDeleted = true, None))
+  def subtaskObjects(): DataFrame = read(View.SubtaskObjects)
+}
+
+object YouGileSource {
+
+  /** One API listing the system reads, with the schema its entities
+    * decode with and the config field that sets its page size.
+    */
+  final case class View(
+      method: String,
+      schema: StructType,
+      includeDeleted: Boolean,
+      pageSize: YouGileConfig => Int)
+
+  /** The five views (ref `:110-147`, `:208`, `:225`). */
+  object View {
+    val Boards = View("boards", boardSchema, includeDeleted = false, _.dictPageLimit)
+    val Columns = View("columns", columnSchema, includeDeleted = false, _.dictPageLimit)
+    val StringStickers = View("string-stickers", stickerSchema, includeDeleted = false, _.dictPageLimit)
+    val Contracts = View("tasks", contractSchema, includeDeleted = false, _.contractPageLimit)
+    val SubtaskObjects = View("tasks", subtaskSchema, includeDeleted = true, _.objectPageLimit)
+  }
+
+  /** One raw JSON string per entity of `view` (of one board column when
+    * `columnId` is set), fetched page by page as the consumer drains them.
+    */
+  def entities(client: YouGileClient, cfg: YouGileConfig, view: View,
+      columnId: Option[String] = None): Iterator[String] =
+    Paginator.fetchLazy(client, view.method, view.pageSize(cfg), view.includeDeleted, columnId)
 }

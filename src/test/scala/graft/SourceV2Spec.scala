@@ -14,11 +14,10 @@ import graft.yougile.{Fixtures, JsonFixtureClient, YouGileConfig, YouGileSource}
 class SourceV2Spec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
 
-  private def read(entity: String, limit: Int = 1000): DataFrame =
+  private def read(entity: String): DataFrame =
     SparkEntry.configure(spark).read.format("yougile")
       .option("entity", entity)
       .option("fixtureDir", Fixtures.jsonDir)
-      .option("limit", limit.toString)
       .load()
 
   private def scanOf(df: DataFrame): BatchScanExec = {
@@ -33,17 +32,17 @@ class SourceV2Spec extends AnyFunSuite {
   }
 
   test("tasks scan plans one InputPartition per board column") {
-    val df = read("tasks", YouGileConfig.fixture.contractPageLimit)
+    val df = read("tasks")
     // 8 columns in the fixture universe → 8 source partitions
     assert(df.rdd.getNumPartitions == 8)
     assert(df.count() > 0)
   }
 
   test("column pruning reaches the source: select(id) scans a 1-field schema") {
-    val pruned = scanOf(read("tasks", YouGileConfig.fixture.contractPageLimit).select("id"))
+    val pruned = scanOf(read("tasks").select("id"))
     assert(pruned.scan.readSchema().fieldNames.toSeq == Seq("id"),
       s"pushdown missed: ${pruned.scan.readSchema()}")
-    val full = scanOf(read("tasks", YouGileConfig.fixture.contractPageLimit))
+    val full = scanOf(read("tasks"))
     assert(full.scan.readSchema().fieldNames.length == 6)
   }
 
@@ -57,14 +56,37 @@ class SourceV2Spec extends AnyFunSuite {
     // tasks: the v2 union over ALL columns equals the per-column driver
     // fetch over the same column list
     val allCols = src.columns().select("id").collect().map(_.getString(0)).toSeq
-    val v2 = sorted(read("tasks", YouGileConfig.fixture.contractPageLimit)
+    val v2 = sorted(read("tasks")
       .select("id", "title", "timestamp", "columnId"))
     val drv = sorted(src.contracts(allCols).select("id", "title", "timestamp", "columnId"))
     assert(v2 == drv)
   }
 
+  test("the scan fetches every page while it plans; the executors only decode") {
+    import java.nio.file.{Files, Paths}
+    val s = SparkEntry.configure(spark)
+    val dir = Files.createTempDirectory("yg_driver_fetch")
+    Files.list(Paths.get(Fixtures.jsonDir)).forEach(f => { Files.copy(f, dir.resolve(f.getFileName)); () })
+    val prev = s.conf.get("spark.sql.adaptive.enabled")
+    val rdd =
+      try {
+        s.conf.set("spark.sql.adaptive.enabled", "false")
+        s.read.format("yougile").option("entity", "tasks")
+          .option("fixtureDir", dir.toString).load().rdd
+      } finally s.conf.set("spark.sql.adaptive.enabled", prev)
+    // the pages are gone before any task runs: a reader that fetched
+    // them itself would fail here
+    Files.list(dir).forEach(f => Files.delete(f))
+    Files.delete(dir)
+    val got = rdd.collect().toSeq.sortBy(_.getAs[String]("id"))
+    val src = new YouGileSource(s, new JsonFixtureClient(Fixtures.jsonDir), YouGileConfig.fixture)
+    val allCols = src.columns().select("id").collect().map(_.getString(0)).toSeq
+    val want = src.contracts(allCols).collect().toSeq.sortBy(_.getAs[String]("id"))
+    assert(got.nonEmpty && got == want)
+  }
+
   test("aggregate pushdown: COUNT(*) per columnId is answered by the source") {
-    val df = read("tasks", YouGileConfig.fixture.contractPageLimit)
+    val df = read("tasks")
       .groupBy("columnId").agg(count(lit(1)).as("n"))
     val scan = scanOf(df)
     assert(scan.scan.description().contains("PushedAggregates: [COUNT(*)]"),
@@ -74,7 +96,7 @@ class SourceV2Spec extends AnyFunSuite {
     assert(scan.scan.readSchema().fieldNames.toSeq == Seq("columnId", "count_star_0"))
     // and the merged result equals the un-pushed census (computed over a
     // different shape the rule cannot push: count over a distinct grain)
-    val expected = read("tasks", YouGileConfig.fixture.contractPageLimit)
+    val expected = read("tasks")
       .select("columnId", "id").collect()
       .groupBy(_.getString(0)).view.mapValues(_.length.toLong).toMap
     val got = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -83,14 +105,14 @@ class SourceV2Spec extends AnyFunSuite {
 
   test("aggregate pushdown: COUNT(col) skips nulls; global count has no group columns") {
     // subtasks is null on some fixture tasks — COUNT(subtasks) < COUNT(*)
-    val df = read("tasks", YouGileConfig.fixture.contractPageLimit)
+    val df = read("tasks")
       .agg(count(lit(1)).as("n_all"), count(col("subtasks")).as("n_subtasks"))
     val scan = scanOf(df)
     assert(scan.scan.description().contains(
       "PushedAggregates: [COUNT(*), COUNT(subtasks)]"), scan.scan.description())
     assert(scan.scan.description().contains("PushedGroupBy: []"))
     val row = df.collect().head
-    val raw = read("tasks", YouGileConfig.fixture.contractPageLimit).select("subtasks").collect()
+    val raw = read("tasks").select("subtasks").collect()
     assert(row.getLong(0) == raw.length.toLong)
     assert(row.getLong(1) == raw.count(!_.isNullAt(0)).toLong)
     assert(row.getLong(1) < row.getLong(0),
@@ -116,7 +138,7 @@ class SourceV2Spec extends AnyFunSuite {
         |{"id":"t2","title":"y","timestamp":2,"columnId":"colA"}]}""".stripMargin)
     val s = SparkEntry.configure(spark)
     def frame = s.read.format("yougile").option("entity", "tasks")
-      .option("fixtureDir", dir.getAbsolutePath).option("limit", "2").load()
+      .option("fixtureDir", dir.getAbsolutePath).load()
     intercept[Exception](frame.collect())
     val limited = frame.limit(2)
     assert(scanOf(limited).scan.description().contains("PushedLimit: 2"),
@@ -125,7 +147,7 @@ class SourceV2Spec extends AnyFunSuite {
   }
 
   test("aggregate pushdown: MIN/MAX/SUM(timestamp) fold inside the readers") {
-    val df = read("tasks", YouGileConfig.fixture.contractPageLimit)
+    val df = read("tasks")
       .groupBy("columnId")
       .agg(min(col("timestamp")).as("mn"), max(col("timestamp")).as("mx"),
         sum(col("timestamp")).as("sm"))
@@ -134,7 +156,7 @@ class SourceV2Spec extends AnyFunSuite {
       "PushedAggregates: [MIN(timestamp), MAX(timestamp), SUM(timestamp)]"),
       scan.scan.description())
     // merged result equals the un-pushed computation over raw rows
-    val raw = read("tasks", YouGileConfig.fixture.contractPageLimit)
+    val raw = read("tasks")
       .select("columnId", "timestamp").collect()
       .groupBy(_.getString(0)).view.mapValues { rs =>
         val ts = rs.map(_.getLong(1))
@@ -147,24 +169,24 @@ class SourceV2Spec extends AnyFunSuite {
 
   test("aggregate pushdown falls back cleanly on shapes the source refuses") {
     // distinct counts, non-numeric extrema, and avg stay with Spark
-    val df = read("tasks", YouGileConfig.fixture.contractPageLimit)
+    val df = read("tasks")
       .groupBy("columnId").agg(countDistinct(col("id")).as("n"))
     val scan = scanOf(df)
     assert(!scan.scan.description().contains("PushedAggregates"),
       s"distinct count must not push: ${scan.scan.description()}")
     assert(df.collect().forall(_.getLong(1) > 0))
-    val mx = read("tasks", YouGileConfig.fixture.contractPageLimit)
+    val mx = read("tasks")
       .agg(max(col("title")).as("m")) // string extremum: refused
     assert(!scanOf(mx).scan.description().contains("PushedAggregates"))
     assert(!mx.collect().head.isNullAt(0))
     // AVG is not pushed as itself — Spark decomposes it into
     // SUM + COUNT partials, both of which the source answers
-    val av = read("tasks", YouGileConfig.fixture.contractPageLimit)
+    val av = read("tasks")
       .agg(avg(col("timestamp")).as("a"))
     assert(scanOf(av).scan.description().contains(
       "PushedAggregates: [SUM(timestamp), COUNT(timestamp)]"),
       scanOf(av).scan.description())
-    val ts = read("tasks", YouGileConfig.fixture.contractPageLimit)
+    val ts = read("tasks")
       .select("timestamp").collect().map(_.getLong(0))
     assert(av.collect().head.getDouble(0) == ts.sum.toDouble / ts.length)
   }
@@ -180,7 +202,6 @@ class SourceV2Spec extends AnyFunSuite {
     val stream = s.readStream.format("yougile")
       .option("entity", "tasks")
       .option("fixtureDir", Fixtures.jsonDir)
-      .option("limit", YouGileConfig.fixture.contractPageLimit.toString)
       .option("columnsPerBatch", "2")
       .load()
     val q = stream.writeStream.format("memory").queryName("yg_stream_mem")
@@ -188,7 +209,7 @@ class SourceV2Spec extends AnyFunSuite {
     q.awaitTermination()
     val got = s.table("yg_stream_mem")
       .orderBy(col("id").asc_nulls_first).collect().toSeq
-    val want = read("tasks", YouGileConfig.fixture.contractPageLimit)
+    val want = read("tasks")
       .orderBy(col("id").asc_nulls_first).collect().toSeq
     assert(got == want, s"stream drained ${got.size} rows, batch has ${want.size}")
     // admission control really paced: 8 columns at 2/batch => >= 4
@@ -199,18 +220,18 @@ class SourceV2Spec extends AnyFunSuite {
 
   test("columnId filters prune PARTITIONS: one fetch for an equality, zero for a miss") {
     val cols = read("columns").select("id").collect().map(_.getString(0)).sorted
-    val one = read("tasks", YouGileConfig.fixture.contractPageLimit)
+    val one = read("tasks")
       .filter(col("columnId") === cols.head)
     assert(one.rdd.getNumPartitions == 1, "equality filter did not prune to one partition")
     assert(one.collect().forall(_.getAs[String]("columnId") == cols.head))
-    val two = read("tasks", YouGileConfig.fixture.contractPageLimit)
+    val two = read("tasks")
       .filter(col("columnId").isin(cols.head, cols.last))
     assert(two.rdd.getNumPartitions == 2, "IN filter did not prune to two partitions")
-    val none = read("tasks", YouGileConfig.fixture.contractPageLimit)
+    val none = read("tasks")
       .filter(col("columnId") === "no-such-column")
     assert(none.rdd.getNumPartitions <= 1 && none.count() == 0)
     // conjunction: only the columnId leg is consumed; the rest stays
-    val conj = read("tasks", YouGileConfig.fixture.contractPageLimit)
+    val conj = read("tasks")
       .filter(col("columnId") === cols.head && col("title").isNotNull)
     assert(conj.rdd.getNumPartitions == 1)
     assert(conj.count() == one.filter(col("title").isNotNull).count())

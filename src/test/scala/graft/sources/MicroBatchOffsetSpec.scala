@@ -65,6 +65,23 @@ class MicroBatchOffsetSpec extends AnyFunSuite {
     assert(planned == all.toSet - all.head)
   }
 
+  test("a batch planned again is not fetched again") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("yg_stream_fetch")
+    Files.list(Paths.get(Fixtures.jsonDir)).forEach(f => { Files.copy(f, dir.resolve(f.getFileName)); () })
+    val st = new YouGileMicroBatchStream(new StructType(),
+      Map("entity" -> "tasks", "fixturedir" -> dir.toString, "columnsperbatch" -> "2"))
+    val start = st.initialOffset()
+    val end = st.latestOffset(start, st.getDefaultReadLimit)
+    val first = st.planInputPartitions(start, end).toSeq
+    // Spark re-plans a batch on every copy of its scan node; with the
+    // pages gone, only the kept partitions can answer
+    Files.list(dir).forEach(f => Files.delete(f))
+    Files.delete(dir)
+    assert(st.planInputPartitions(start, end).toSeq == first)
+    assert(first.size == 2)
+  }
+
   test("offset JSON is a canonical sorted id array and round-trips; legacy positional decodes") {
     val st = stream()
     val o = YouGileOffset(Set("b", "a"))

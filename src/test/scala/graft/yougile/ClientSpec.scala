@@ -47,6 +47,16 @@ class ClientSpec extends AnyFunSuite {
     assert(Paginator.fetchAll(c, "tasks", 100, includeDeleted = false, Some("col1")).isEmpty)
   }
 
+  test("a page with no content array (an HTTP error body) fails the walk instead of reading as empty") {
+    val rl = new RateLimiter(0)
+    val cfg = YouGileConfig(baseUrl = "https://api.example.test/", token = "T0K", allowedBoards = Nil)
+    val client = new HttpYouGileClient(cfg, rl, transport = (_, _) => """{"error":"Unauthorized"}""")
+    val e = intercept[IllegalStateException](
+      Paginator.fetchAll(client, "tasks", 50, includeDeleted = false, Some("c9")))
+    assert(e.getMessage.contains("tasks") && e.getMessage.contains("columnId=c9") &&
+      e.getMessage.contains("offset=0"), e.getMessage)
+  }
+
   test("RateLimiter's first acquire never sleeps under a realistic epoch clock (overflow regression)") {
     var slept = List.empty[Long]
     val rl = new RateLimiter(1500, nowMs = () => 1754980000000L, sleep = ms => slept ::= ms)

@@ -91,4 +91,14 @@ class PipelineRunSpec extends AnyFunSuite {
     assert(waitedS < 60, s"took $waitedS s")
     assert(alerter.alerts.isEmpty)
   }
+
+  test("an HTTP error body fails the run before the sink writes") {
+    var written = false
+    val sink = new MartSink { override def write(df: DataFrame): Unit = written = true }
+    val client = new HttpYouGileClient(YouGileConfig.fixture, new RateLimiter(0),
+      transport = (_, _) => """{"error":"Unauthorized"}""")
+    intercept[IllegalStateException](Pipeline.run(spark, client, YouGileConfig.fixture,
+      Fixtures.runTs, sink, NoopAlerter))
+    assert(!written)
+  }
 }

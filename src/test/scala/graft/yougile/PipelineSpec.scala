@@ -15,15 +15,9 @@ class PipelineSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val src = new YouGileSource(spark, new JsonFixtureClient(Fixtures.jsonDir), YouGileConfig.fixture)
-  private lazy val bc = Transform.brdClmn(src.boards(), src.columns(), Fixtures.allowedBoards)
-  private lazy val assembled = {
-    val columnIds = bc.select("column_id").as[String].collect().toSeq
-    Transform.taskAssembly(
-      Transform.contractsPrepared(src.contracts(columnIds)),
-      Transform.subtasksPrepared(src.subtaskObjects()))
-  }
-  private lazy val mart = Transform.mart(assembled, bc,
-    Transform.stickerStates(src.stickers()), Fixtures.runTs)
+  private lazy val bc = Pipeline.brdClmn(src, YouGileConfig.fixture)
+  private lazy val assembled = Pipeline.assembled(src, bc)
+  private lazy val mart = Pipeline.mart(src, YouGileConfig.fixture, Fixtures.runTs)
 
   test("entity readers see the full universe through pagination") {
     assert(src.boards().count() == 4)
