@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Bucketed-table layout for co-located joins (the brief's "bucketing for
   * co-located joins" lever).
@@ -35,9 +35,4 @@ object Bucketing {
     f.delete()
     ()
   }
-
-  /** Join two same-bucketed tables on their bucket key — shuffle-free. */
-  def bucketedJoin(spark: SparkSession, leftTable: String, rightTable: String,
-      key: String, joinType: String = "inner"): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), Seq(key), joinType)
 }

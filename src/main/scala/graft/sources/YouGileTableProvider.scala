@@ -9,8 +9,7 @@ import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions, Jac
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -35,15 +34,18 @@ import graft.yougile.YouGileSource.View
   *    materializes ONLY the required fields from the JSON — the same partial
   *    parse Spark's own json source does. A `select(id)` over a source with
   *    heavy sticker maps never builds the maps.
+  *  - **Aggregate pushdown** (`SupportsPushDownAggregates`): COUNT / MIN /
+  *    MAX / SUM per group fold inside the readers; see
+  *    [[YouGileScanBuilder.pushAggregation]].
   *  - **Parsing**: each entity goes through Catalyst's JacksonParser against
   *    the explicit entity schema (Model §1.4 — add-missing-as-null, no
   *    inference), producing InternalRows directly.
   *
-  * Options: `entity` (boards|columns|string-stickers|tasks), `fixtureDir`
+  * A batch source only: Spark applies LIMIT and filters above the scan.
+  * Options: `entity` (boards|columns|string-stickers|tasks) and `fixtureDir`
   * (JSON fixture root read with [[YouGileConfig.fixture]]; absent → HTTP
-  * client and config from the environment), and `columnsPerBatch` for the
-  * streaming leg. Page sizes and `includeDeleted` come from the entity's
-  * [[YouGileSource.View]].
+  * client and config from the environment). Page sizes and
+  * `includeDeleted` come from the entity's [[YouGileSource.View]].
   *
   * Registered as `yougile` via DataSourceRegister (META-INF/services).
   */
@@ -72,8 +74,8 @@ object YouGileTableProvider {
       s"unknown entity '$other' (boards|columns|string-stickers|tasks)")
   }
 
-  /** The client and its config; one per scan or stream, so its limiter
-    * is the read's whole budget.
+  /** The client and its config; one per scan, so its limiter is the
+    * scan's whole budget.
     */
   private[sources] def clientFor(opts: Map[String, String]): (YouGileClient, YouGileConfig) =
     opts.get("fixturedir") match {
@@ -88,16 +90,7 @@ object YouGileTableProvider {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     YouGileSource.entities(client, cfg, View.Columns)
       .map(j => om.readTree(j).path("id").asText())
-      .filter(_.nonEmpty).toSeq.distinct
-  }
-
-  /** One column's (or catalog's) partition, fetched now; a row limit
-    * stops the page walk after ⌈n/pageSize⌉ pages.
-    */
-  private[sources] def partition(client: YouGileClient, cfg: YouGileConfig,
-      entity: String, columnId: Option[String], rowLimit: Option[Int] = None): YouGilePartition = {
-    val all = YouGileSource.entities(client, cfg, viewFor(entity), columnId)
-    YouGilePartition(entity, columnId, rowLimit.fold(all)(all.take).toVector)
+      .filter(_.nonEmpty).distinct
   }
 }
 
@@ -106,7 +99,7 @@ private[sources] class YouGileTable(schema: StructType, opts: Map[String, String
   override def name(): String = s"yougile:${opts.getOrElse("entity", "tasks")}"
   override def schema(): StructType = schema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
+    util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new YouGileScanBuilder(schema, opts ++ options.asScala)
 }
@@ -140,27 +133,9 @@ private[sources] case class YouGileAggSpec(groupCols: Seq[String], aggs: Seq[You
 }
 
 private[sources] class YouGileScanBuilder(full: StructType, opts: Map[String, String])
-    extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters
-    with SupportsPushDownAggregates with SupportsPushDownLimit {
+    extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownAggregates {
   private var required: StructType = full
-  private var pushed: Array[Filter] = Array.empty
   private var agg: Option[YouGileAggSpec] = None
-  private var rowLimit: Option[Int] = None
-
-  /** LIMIT pushdown (`SupportsPushDownLimit`): on a PAGINATED
-    * rate-limited API this is the pushdown that saves wall-clock, not
-    * just bytes — each partition's fetch stops the HTTP page loop after
-    * ⌈limit/pageSize⌉ pages ([[graft.yougile.Paginator.fetchLazy]])
-    * instead of draining its column's full listing. PARTIAL semantics
-    * (`isPartiallyPushed` stays true): each of the N per-column
-    * partitions may emit up to `limit` rows and Spark's own
-    * GlobalLimit trims the union — always correct, including limits
-    * spanning partitions. Refused under aggregate pushdown (a limit
-    * above a grouped census must not truncate the census's input).
-    */
-  override def pushLimit(limit: Int): Boolean =
-    if (agg.isDefined || limit < 0) false
-    else { rowLimit = Some(limit); true }
 
   /** Aggregate pushdown (`SupportsPushDownAggregates`): COUNT(*) /
     * null-skipping COUNT(col) / MIN / MAX / SUM over top-level source
@@ -216,41 +191,12 @@ private[sources] class YouGileScanBuilder(full: StructType, opts: Map[String, St
     required = StructType(full.fields.filter(f =>
       requiredSchema.fieldNames.contains(f.name)))
 
-  /** columnId predicates become PARTITION PRUNING: the tasks scan plans
-    * one InputPartition per board column, so an equality/IN filter on
-    * columnId drops whole partitions — whole API fetches — before any
-    * request is made. Fully applied at the source (a per-column fetch
-    * returns only that column's rows), so no residual re-evaluation is
-    * needed; every other predicate stays with Spark.
-    */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val isTasks = opts.getOrElse("entity", "tasks") == "tasks"
-    val (ours, rest) = filters.partition {
-      case EqualTo("columnId", _: String) => isTasks
-      case In("columnId", vs) => isTasks && vs.forall(_.isInstanceOf[String])
-      case _ => false
-    }
-    pushed = ours
-    rest
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def build(): Scan = {
-    // AND semantics: a row must satisfy every pushed filter, so the
-    // allowed set is the intersection of the per-filter sets
-    val allowed = pushed.map {
-      case EqualTo(_, v: String) => Set(v)
-      case In(_, vs) => vs.map(_.asInstanceOf[String]).toSet
-    }.reduceOption(_ intersect _)
-    new YouGileScan(agg.map(_.schema(full)).getOrElse(required), opts, allowed, agg, rowLimit)
-  }
+  override def build(): Scan =
+    new YouGileScan(agg.map(_.schema(full)).getOrElse(required), opts, agg)
 }
 
 private[sources] class YouGileScan(schema: StructType, opts: Map[String, String],
-    allowedColumns: Option[Set[String]] = None,
-    agg: Option[YouGileAggSpec] = None,
-    rowLimit: Option[Int] = None)
+    agg: Option[YouGileAggSpec])
     extends Scan with Batch {
   private val entity = opts.getOrElse("entity", "tasks")
 
@@ -267,8 +213,7 @@ private[sources] class YouGileScan(schema: StructType, opts: Map[String, String]
         case YgSum(c) => s"SUM($c)"
       }.mkString(", ")}]" +
         s", PushedGroupBy: [${a.groupCols.mkString(", ")}]")
-    val limitDesc = rowLimit.fold("")(n => s", PushedLimit: $n")
-    s"YouGileScan(entity=$entity$aggDesc$limitDesc)"
+    s"YouGileScan(entity=$entity$aggDesc)"
   }
 
   // once per scan: Spark calls planInputPartitions on every copy of
@@ -276,163 +221,25 @@ private[sources] class YouGileScan(schema: StructType, opts: Map[String, String]
   private lazy val partitions: Array[InputPartition] = {
     val (client, cfg) = YouGileTableProvider.clientFor(opts)
     val columns = entity match {
-      case "tasks" =>
-        YouGileTableProvider.columnIds(client, cfg)
-          .filter(cid => allowedColumns.forall(_.contains(cid))).map(Some(_))
+      case "tasks" => YouGileTableProvider.columnIds(client, cfg).map(Some(_))
       case _ => Seq(None)
     }
+    val view = YouGileTableProvider.viewFor(entity)
     columns.map(c =>
-      YouGileTableProvider.partition(client, cfg, entity, c, rowLimit): InputPartition).toArray
+      YouGilePartition(entity, YouGileSource.entities(client, cfg, view, c)): InputPartition).toArray
   }
 
   override def planInputPartitions(): Array[InputPartition] = partitions
 
   override def createReaderFactory(): PartitionReaderFactory =
     new YouGileReaderFactory(schema, agg)
-
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new YouGileMicroBatchStream(schema, opts)
 }
 
 /** One column's (or one catalog's) entities, one raw JSON string each. */
-private[sources] case class YouGilePartition(entity: String, columnId: Option[String],
-    entities: Seq[String])
+private[sources] case class YouGilePartition(entity: String, entities: Seq[String])
     extends InputPartition
 
-/** Streaming leg of the connector: an incremental BACKFILL stream over
-  * the per-column task partitions — each micro-batch ingests the next
-  * `columnsPerBatch` board columns, the shape of a rate-limited API
-  * drain. Admission control paces batches, so `Trigger.AvailableNow`
-  * processes the whole catalog in several bounded batches and stops; a
-  * checkpoint restart resumes without re-fetching finished columns.
-  *
-  * The offset is the SET of processed column ids (sorted, in the
-  * checkpoint JSON), not a position: the HTTP API guarantees neither
-  * listing order nor membership stability, so a positional offset
-  * against a re-fetched listing would silently skip or re-ingest
-  * columns after a restart when the listing reorders or changes.
-  * Restart reconciliation is set-difference against the fresh listing —
-  * ids already committed are never re-fetched even if they moved, ids
-  * that vanished from the listing are simply done, and NEW ids that
-  * appeared since the checkpoint are ingested (membership, not
-  * position, is the contract). The listing itself is pinned per stream
-  * instance and sorted, so batch boundaries are deterministic within a
-  * run.
-  */
-private[sources] class YouGileMicroBatchStream(schema: StructType, opts: Map[String, String])
-    extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
-
-  // SupportsTriggerAvailableNow: implemented DIRECTLY so AvailableNow
-  // honors the per-batch budget — the engine's wrapper for plain
-  // sources replaces any admission-control limit with allAvailable()
-  // (one giant batch), which is exactly wrong for a rate-limited API
-  // drain. The universe is pinned per run, so preparing = forcing the
-  // column listing.
-  override def prepareForTriggerAvailableNow(): Unit = { columns; () }
-
-  private val entity = opts.getOrElse("entity", "tasks")
-  private val perBatch = opts.getOrElse("columnsperbatch", "2").toInt
-
-  // the single-partition entities ride the same id-set machinery under a
-  // sentinel id, so there is exactly one offset/reconciliation codepath
-  private val SingletonId = "*"
-
-  // one client, so the listing and every batch share one budget
-  private lazy val (client, cfg) = YouGileTableProvider.clientFor(opts)
-
-  private lazy val columns: Seq[String] = entity match {
-    case "tasks" => YouGileTableProvider.columnIds(client, cfg).sorted
-    case _ => Seq(SingletonId)
-  }
-
-  private def off(ids: Set[String]): Offset = YouGileOffset(ids)
-  private def doneOf(o: Offset): Set[String] = o.asInstanceOf[YouGileOffset].done
-
-  /** Columns the fresh listing has that `done` does not — the only
-    * resume arithmetic; positions never enter it. Listing is sorted, so
-    * the batch slicing below is deterministic per run.
-    */
-  private def remaining(done: Set[String]): Seq[String] =
-    columns.filterNot(done)
-
-  override def initialOffset(): Offset = off(Set.empty)
-
-  override def latestOffset(): Offset = off(columns.toSet)
-
-  // pacing rides the admission-control contract: the source declares a
-  // default per-batch budget (maxRows, read as COLUMNS here) and honors
-  // whatever limit the engine passes — AvailableNow captures its end
-  // with ReadLimit.allAvailable(), then paces each batch with the
-  // default limit, so the drain is several bounded batches
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(perBatch.toLong)
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val done = doneOf(start)
-    limit match {
-      case rows: ReadMaxRows =>
-        off(done ++ remaining(done).take(rows.maxRows().toInt))
-      case _ => off(done ++ remaining(done))
-    }
-  }
-
-  override def reportLatestOffset(): Offset = off(columns.toSet)
-
-  override def deserializeOffset(json: String): Offset = {
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json).path("done")
-    if (node.isArray) {
-      val ids = (0 until node.size()).map(node.get(_).asText()).toSet
-      off(ids)
-    } else {
-      // legacy positional checkpoint ({"done":N}): best-effort mapping —
-      // the first N ids of the SORTED fresh listing. Documented lossy;
-      // new checkpoints are always id-sets.
-      off(columns.take(node.asInt()).toSet)
-    }
-  }
-
-  // Spark plans a batch once per copy of its physical scan node, so the
-  // last batch's partitions are kept: each batch fetches once
-  private var lastBatch: Option[(Set[String], Array[InputPartition])] = None
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    synchronized {
-      val batch = doneOf(end) -- doneOf(start)
-      lastBatch.collect { case (`batch`, parts) => parts }.getOrElse {
-        // listing order (sorted) for deterministic partition indexing
-        val parts = columns.filter(batch)
-          .map(c => YouGileTableProvider.partition(client, cfg, entity,
-            Some(c).filter(_ != SingletonId)): InputPartition)
-          .toArray
-        lastBatch = Some(batch -> parts)
-        parts
-      }
-    }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new YouGileReaderFactory(schema)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-private[sources] case class YouGileOffset(done: Set[String]) extends Offset {
-  // sorted so the checkpoint JSON (and offset equality via json) is
-  // canonical regardless of set iteration order. Serialized via Jackson
-  // (the same mapper deserializeOffset reads with): column ids come from
-  // the untrusted HTTP API, and hand-concatenated string literals would
-  // emit a malformed checkpoint for an id containing a quote or
-  // backslash — wedging every stream restart.
-  override def json: String = {
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = m.createObjectNode()
-    val arr = root.putArray("done")
-    done.toSeq.sorted.foreach(arr.add)
-    m.writeValueAsString(root)
-  }
-}
-
-private[sources] class YouGileReaderFactory(schema: StructType,
-    agg: Option[YouGileAggSpec] = None)
+private[sources] class YouGileReaderFactory(schema: StructType, agg: Option[YouGileAggSpec])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[YouGilePartition]

@@ -68,9 +68,9 @@ object YouGileSource {
   }
 
   /** One raw JSON string per entity of `view` (of one board column when
-    * `columnId` is set), fetched page by page as the consumer drains them.
+    * `columnId` is set), every page fetched before it returns.
     */
   def entities(client: YouGileClient, cfg: YouGileConfig, view: View,
-      columnId: Option[String] = None): Iterator[String] =
-    Paginator.fetchLazy(client, view.method, view.pageSize(cfg), view.includeDeleted, columnId)
+      columnId: Option[String] = None): Seq[String] =
+    Paginator.fetchAll(client, view.method, view.pageSize(cfg), view.includeDeleted, columnId)
 }

@@ -1,22 +1,11 @@
 package graft
 
-import java.sql.Timestamp
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.SaltedJoin
-import graft.streaming.EventStream
 
-/** Salted-join equivalence under skew and streaming dedup-within-
-  * watermark semantics.
+/** Join, layout and pushdown operators: salted-join equivalence under
+  * skew, bucketed and range joins, and their plan shapes.
   */
-/** Top-level, not nested in the suite: a case class inside a spec class
-  * captures the outer `this`, which Spark's Encoder codegen cannot
-  * compile — every use fell back to the interpreter and polluted test
-  * logs with codegen warnings (VERDICT r05 cosmetic).
-  */
-case class EvId(event_id: Long, ts: Timestamp, user_id: Long)
-
 class OperatorsSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
   import spark.implicits._
@@ -108,7 +97,7 @@ class OperatorsSpec extends AnyFunSuite {
     val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      val joined = graft.operators.Bucketing.bucketedJoin(spark, "orders_b", "lineitem_b", "o_orderkey")
+      val joined = spark.table("orders_b").join(spark.table("lineitem_b"), Seq("o_orderkey"))
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"))
       assert(!plan.contains("Exchange"), s"bucketed join must not shuffle:\n$plan")
@@ -284,21 +273,5 @@ class OperatorsSpec extends AnyFunSuite {
       s"sj4's adaptive plan did not skew-split:\n$plan")
     assert(spark.conf.getOption("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
       == before, "sj4's tuned confs leaked into the parent session")
-  }
-
-  test("streaming dedup drops duplicate event ids within the watermark") {
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[EvId]
-    val q = EventStream.startMemorySink(
-      EventStream.dedupedEvents(stream.toDF()), "dedup_events", OutputMode.Append())
-    try {
-      val t0 = Timestamp.valueOf("2024-01-01 10:00:00")
-      stream.addData(EvId(1, t0, 5), EvId(1, t0, 5), EvId(2, t0, 6))
-      q.processAllAvailable()
-      stream.addData(EvId(2, t0, 6), EvId(3, t0, 7)) // dup of 2 across batches
-      q.processAllAvailable()
-      val ids = spark.table("dedup_events").select("event_id").as[Long].collect().sorted
-      assert(ids.toSeq == Seq(1L, 2L, 3L))
-    } finally q.stop()
   }
 }

@@ -65,17 +65,6 @@ class SinksOpsSpec extends AnyFunSuite {
     assert(written.get.columns.length == 22)
   }
 
-  test("PartitionedParquetSink lays out hive dirs and filters prune partitions") {
-    val dir = Files.createTempDirectory("graft-part").toString + "/docs"
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    new graft.sinks.PartitionedParquetSink(dir, Seq("lang")).write(docs)
-    assert(new java.io.File(dir).list().count(_.startsWith("lang=")) >= 4)
-    val pruned = spark.read.parquet(dir).filter(org.apache.spark.sql.functions.col("lang") === "de")
-    val scan = pruned.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-    assert(scan.contains("PartitionFilters") && scan.contains("lang"))
-    assert(pruned.count() == docs.filter(org.apache.spark.sql.functions.col("lang") === "de").count())
-  }
-
   test("dynamic partition overwrite replaces only the written partitions") {
     import org.apache.spark.sql.functions.{col, lit}
     val dir = Files.createTempDirectory("graft-dyn").toString + "/docs"
@@ -101,43 +90,24 @@ class SinksOpsSpec extends AnyFunSuite {
 
   test("Compactor: merges a 64-file table to the byte-derived count, content identical") {
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-compact").toString + "/docs"
+    import graft.sinks.{Compactor, VersionedTable}
+    val root = Files.createTempDirectory("graft-compact").toString + "/docs"
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    docs.repartition(64).write.parquet(dir)
+    val v1 = VersionedTable.publish(spark, root, docs.repartition(64))
     val before = docs.orderBy(col("doc_id")).collect().toSeq
-    val (nBefore, bytes) = graft.sinks.Compactor.layout(spark, dir)
+    val (nBefore, bytes) = Compactor.layout(spark, VersionedTable.dataPath(root, v1))
     assert(nBefore == 64)
     // target a third of the table per file -> ceil = 3 output files
     val target = bytes / 3 + 1
     val expected = ((bytes + target - 1) / target).toInt
-    val (b, a) = graft.sinks.Compactor.compact(spark, dir, target)
+    val (b, a) = Compactor.compactVersioned(spark, root, target)
     assert(b == 64 && a == expected && a <= 3, s"before=$b after=$a expected=$expected")
-    assert(spark.read.parquet(dir).orderBy(col("doc_id")).collect().toSeq == before)
+    assert(VersionedTable.read(spark, root).orderBy(col("doc_id")).collect().toSeq == before)
     // a huge target floors at one file; an absurdly small one never
     // SPLITS (compaction only merges)
-    assert(graft.sinks.Compactor.compact(spark, dir, Long.MaxValue)._2 == 1)
-    assert(graft.sinks.Compactor.compact(spark, dir, 1L)._2 == 1)
+    assert(Compactor.compactVersioned(spark, root, Long.MaxValue)._2 == 1)
+    assert(Compactor.compactVersioned(spark, root, 1L)._2 == 1)
   }
-
-  test("Compactor: partitioned compaction lands one file per dir and keeps pruning") {
-    import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft-compact-p").toString + "/docs"
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    docs.repartition(16).write.partitionBy("lang").parquet(dir)
-    val langs = new java.io.File(dir).list().count(_.startsWith("lang="))
-    val nBefore = graft.sinks.Compactor.layout(spark, dir)._1
-    assert(nBefore > langs, "fixture table must start fragmented")
-    val before = docs.orderBy(col("doc_id")).collect().toSeq
-    val (b, a) = graft.sinks.Compactor.compactPartitioned(spark, dir, Seq("lang"))
-    assert(b == nBefore && a == langs, s"want one file per $langs dirs, got $a")
-    val back = spark.read.parquet(dir)
-    assert(back.select(docs.columns.map(col): _*).orderBy(col("doc_id")).collect().toSeq
-      == before)
-    val scan = back.filter(col("lang") === "de").queryExecution
-      .explainString(org.apache.spark.sql.execution.FormattedMode)
-    assert(scan.contains("PartitionFilters") && scan.contains("lang"))
-  }
-
   test("VersionedTable: two-phase commit — readers never see a partial table") {
     import org.apache.spark.sql.functions.col
     import graft.sinks.{Compactor, VersionedTable}

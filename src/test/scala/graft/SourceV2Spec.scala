@@ -119,33 +119,6 @@ class SourceV2Spec extends AnyFunSuite {
       "no null subtasks in the fixtures — the null-skip path is vacuous")
   }
 
-  test("limit pushdown stops the HTTP page loop: pages past the limit are never fetched") {
-    val dir = java.nio.file.Files.createTempDirectory("yg_limit").toFile
-    def write(name: String, body: String): Unit = {
-      val w = new java.io.PrintWriter(new java.io.File(dir, name), "UTF-8")
-      try w.write(body) finally w.close()
-    }
-    write("columns__all__0.json",
-      """{"paging":{"next":false},"content":[{"id":"colA","title":"A","boardId":"b1"}]}""")
-    // page 0 claims a next page that DOES NOT EXIST on disk: a reader
-    // that walks past the pushed limit throws on the missing file, so a
-    // green limited read proves the page loop stopped early (and the
-    // unbounded read below proves the fixture really demands page 2 —
-    // the pin is non-vacuous)
-    write("tasks__colA__0.json",
-      """{"paging":{"next":true},"content":[
-        |{"id":"t1","title":"x","timestamp":1,"columnId":"colA"},
-        |{"id":"t2","title":"y","timestamp":2,"columnId":"colA"}]}""".stripMargin)
-    val s = SparkEntry.configure(spark)
-    def frame = s.read.format("yougile").option("entity", "tasks")
-      .option("fixtureDir", dir.getAbsolutePath).load()
-    intercept[Exception](frame.collect())
-    val limited = frame.limit(2)
-    assert(scanOf(limited).scan.description().contains("PushedLimit: 2"),
-      s"limit not pushed: ${scanOf(limited).scan.description()}")
-    assert(limited.collect().map(_.getAs[String]("id")).toSet == Set("t1", "t2"))
-  }
-
   test("aggregate pushdown: MIN/MAX/SUM(timestamp) fold inside the readers") {
     val df = read("tasks")
       .groupBy("columnId")
@@ -194,46 +167,5 @@ class SourceV2Spec extends AnyFunSuite {
   test("unknown entity fails fast with the supported list") {
     val e = intercept[Exception](read("nope").collect())
     assert(e.getMessage.contains("boards|columns|string-stickers|tasks"))
-  }
-
-  test("micro-batch stream: paced column backfill equals the batch read") {
-    import org.apache.spark.sql.streaming.Trigger
-    val s = SparkEntry.configure(spark)
-    val stream = s.readStream.format("yougile")
-      .option("entity", "tasks")
-      .option("fixtureDir", Fixtures.jsonDir)
-      .option("columnsPerBatch", "2")
-      .load()
-    val q = stream.writeStream.format("memory").queryName("yg_stream_mem")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = s.table("yg_stream_mem")
-      .orderBy(col("id").asc_nulls_first).collect().toSeq
-    val want = read("tasks")
-      .orderBy(col("id").asc_nulls_first).collect().toSeq
-    assert(got == want, s"stream drained ${got.size} rows, batch has ${want.size}")
-    // admission control really paced: 8 columns at 2/batch => >= 4
-    // batches (trailing columns may be empty — count batches, not rows)
-    assert(q.recentProgress.length >= 4,
-      s"expected paced batches, saw ${q.recentProgress.map(_.numInputRows).mkString(",")}")
-  }
-
-  test("columnId filters prune PARTITIONS: one fetch for an equality, zero for a miss") {
-    val cols = read("columns").select("id").collect().map(_.getString(0)).sorted
-    val one = read("tasks")
-      .filter(col("columnId") === cols.head)
-    assert(one.rdd.getNumPartitions == 1, "equality filter did not prune to one partition")
-    assert(one.collect().forall(_.getAs[String]("columnId") == cols.head))
-    val two = read("tasks")
-      .filter(col("columnId").isin(cols.head, cols.last))
-    assert(two.rdd.getNumPartitions == 2, "IN filter did not prune to two partitions")
-    val none = read("tasks")
-      .filter(col("columnId") === "no-such-column")
-    assert(none.rdd.getNumPartitions <= 1 && none.count() == 0)
-    // conjunction: only the columnId leg is consumed; the rest stays
-    val conj = read("tasks")
-      .filter(col("columnId") === cols.head && col("title").isNotNull)
-    assert(conj.rdd.getNumPartitions == 1)
-    assert(conj.count() == one.filter(col("title").isNotNull).count())
   }
 }

@@ -5,11 +5,12 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.EventStream
-import graft.streaming.EventStream.{Ev, UserTotals}
+import graft.streaming.StreamTestKit.{Ev, startMemorySink}
 
-/** Streaming semantics over MemoryStream micro-batches: the windowed
-  * aggregation must match its batch twin on the same rows, and
-  * mapGroupsWithState must carry state across batches.
+/** Streaming semantics: the gate's streaming entries must equal their
+  * batch spellings, the stream-static and stateful operators must carry
+  * state across micro-batches, and the shared file source must pick up
+  * new drops and resume from its checkpoint.
   */
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
@@ -25,133 +26,6 @@ class StreamingSpec extends AnyFunSuite {
     Ev(ts("2024-01-01 11:10:00"), 1, "click", 5.0),
     Ev(ts("2024-01-01 11:30:00"), 2, "view", 7.0))
 
-  test("windowed counts on a stream equal the batch run of the same operator") {
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[Ev]
-    val q = EventStream.startMemorySink(
-      EventStream.windowedCounts(stream.toDF()), "win_counts", OutputMode.Complete())
-    try {
-      stream.addData(batch1: _*)
-      q.processAllAvailable()
-      stream.addData(batch2: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("win_counts").orderBy("bucket_hour", "event_type").collect()
-      val batched = EventStream.windowedCounts((batch1 ++ batch2).toDF())
-        .orderBy("bucket_hour", "event_type").collect()
-      assert(streamed.toSeq == batched.toSeq)
-      assert(streamed.length == 4) // (10h,click) (10h,view) (11h,click) (11h,view)
-    } finally q.stop()
-  }
-
-  test("streaming plan carries the event-time watermark") {
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[Ev]
-    val df = EventStream.windowedCounts(stream.toDF())
-    assert(df.isStreaming)
-    assert(df.queryExecution.analyzed.toString.contains("EventTimeWatermark"))
-  }
-
-  test("session_window stream matches the batch run and the ev3 gap semantics") {
-    implicit val sq = spark.sqlContext
-    // two users, sessions split by >30min gaps (the ev3 gate's gap)
-    val evs = Seq(
-      Ev(ts("2024-01-01 10:00:00"), 1, "click", 1.0),
-      Ev(ts("2024-01-01 10:10:00"), 1, "click", 1.0), // same session (10 min gap)
-      Ev(ts("2024-01-01 11:00:00"), 1, "click", 1.0), // 50 min gap → new session
-      Ev(ts("2024-01-01 11:20:00"), 1, "click", 1.0),
-      Ev(ts("2024-01-01 10:05:00"), 2, "view", 1.0),
-      Ev(ts("2024-01-01 12:00:00"), 2, "view", 1.0))
-    val stream = MemoryStream[Ev]
-    // session windows stream in Append mode: a session row is emitted
-    // once, when the watermark proves no in-gap event can still arrive
-    val q = EventStream.startMemorySink(
-      EventStream.sessionized(stream.toDF()), "sessions", OutputMode.Append())
-    try {
-      stream.addData(evs: _*)
-      q.processAllAvailable()
-      // push the watermark past every session's close; the sentinel's own
-      // session stays open and must NOT be emitted
-      stream.addData(Ev(ts("2024-01-02 00:00:00"), 99, "click", 0.0))
-      q.processAllAvailable()
-      def canon(rows: Seq[org.apache.spark.sql.Row]) = rows
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Timestamp]("session_start").toString,
-          r.getAs[Long]("n_events"), r.getAs[Long]("duration_us")))
-        .toSet
-      val streamed = canon(spark.table("sessions").collect().toSeq)
-      val batched = canon(EventStream.sessionized(evs.toDF()).collect().toSeq)
-      assert(streamed == batched)
-      // the ev3 lag-based expectation, stated by hand
-      assert(streamed == Set(
-        (1L, "2024-01-01 10:00:00.0", 2L, 600000000L),
-        (1L, "2024-01-01 11:00:00.0", 2L, 1200000000L),
-        (2L, "2024-01-01 10:05:00.0", 1L, 0L),
-        (2L, "2024-01-01 12:00:00.0", 1L, 0L)))
-    } finally q.stop()
-  }
-
-  test("chained window-mix aggregation: closed-window ppm shares equal the batch run") {
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[Ev]
-    // append mode: a window's mix is emitted once, when the watermark
-    // closes it — the second (rollup) aggregation must therefore also
-    // be event-time windowed (the chained-stateful-aggregation rule)
-    val q = EventStream.startMemorySink(
-      EventStream.windowTypeMix(stream.toDF()), "mix", OutputMode.Append())
-    try {
-      stream.addData(batch1: _*)
-      q.processAllAvailable()
-      stream.addData(batch2: _*)
-      q.processAllAvailable()
-      // close the 10h and 11h windows; the sentinel's own window stays open
-      stream.addData(Ev(ts("2024-01-02 00:00:00"), 99, "click", 0.0))
-      q.processAllAvailable()
-      def canon(rows: Seq[org.apache.spark.sql.Row]) = rows
-        .map(r => (r.getAs[Timestamp]("bucket_hour").toString,
-          r.getAs[String]("event_type"), r.getAs[Long]("n"), r.getAs[Long]("share_ppm")))
-        .toSet
-      val streamed = canon(spark.table("mix").collect().toSeq)
-      val batched = canon(EventStream.windowTypeMix((batch1 ++ batch2).toDF())
-        .collect().toSeq)
-      assert(streamed == batched)
-      // hand-stated: 10h = 2 clicks + 1 view, 11h = 1 click + 1 view
-      assert(streamed == Set(
-        ("2024-01-01 10:00:00.0", "click", 2L, 666666L),
-        ("2024-01-01 10:00:00.0", "view", 1L, 333333L),
-        ("2024-01-01 11:00:00.0", "click", 1L, 500000L),
-        ("2024-01-01 11:00:00.0", "view", 1L, 500000L)))
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join emits the same pairs as its batch run") {
-    implicit val sq = spark.sqlContext
-    val evs = Seq(
-      Ev(ts("2024-01-01 10:00:00"), 1, "click", 1.0),
-      Ev(ts("2024-01-01 10:05:00"), 1, "view", 1.0), // within 10 min → pair
-      Ev(ts("2024-01-01 10:20:00"), 1, "view", 1.0), // outside → no pair
-      Ev(ts("2024-01-01 10:00:00"), 2, "click", 1.0),
-      Ev(ts("2024-01-01 10:08:00"), 2, "view", 1.0)) // pair
-      .zipWithIndex.map { case (e, i) => e.copy(value = i.toDouble) }
-    // Ev has no event_id: give the operator a frame with one derived
-    val withId = (df: org.apache.spark.sql.DataFrame) =>
-      df.withColumn("event_id", (org.apache.spark.sql.functions.col("value") * 1).cast("long"))
-    val stream = MemoryStream[Ev]
-    val q = EventStream.startMemorySink(
-      EventStream.followedWithin(withId(stream.toDF()), "click", "view"),
-      "pairs", OutputMode.Append())
-    try {
-      stream.addData(evs: _*)
-      q.processAllAvailable()
-      def canon(rows: Seq[org.apache.spark.sql.Row]) = rows
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("first_id"), r.getAs[Long]("second_id")))
-        .toSet
-      val streamed = canon(spark.table("pairs").collect().toSeq)
-      val batched = canon(EventStream.followedWithin(withId(evs.toDF()), "click", "view")
-        .collect().toSeq)
-      assert(streamed == batched)
-      assert(streamed == Set((1L, 0L, 1L), (2L, 3L, 4L)))
-    } finally q.stop()
-  }
-
   test("stream-static decontamination flags the same docs as the batch pass") {
     implicit val sq = spark.sqlContext
     val s = SparkEntry.configure(spark)
@@ -162,7 +36,7 @@ class StreamingSpec extends AnyFunSuite {
     val docs = Tables(s, dir, "documents")
       .select("doc_id", "text").as[(Long, String)].collect()
     val stream = MemoryStream[(Long, String)]
-    val q = EventStream.startMemorySink(
+    val q = startMemorySink(
       graft.queries.Dedup.contaminationCounts(
         stream.toDF().toDF("doc_id", "text"), bench),
       "contam", OutputMode.Complete())
@@ -321,7 +195,7 @@ class StreamingSpec extends AnyFunSuite {
     val batchDocs = graft.queries.Dedup.plantedBatch(s, dir)
       .as[(Long, String)].collect()
     val stream = MemoryStream[(Long, String)]
-    val q = EventStream.startMemorySink(
+    val q = startMemorySink(
       graft.queries.Dedup.incrementalMatches(
         stream.toDF().toDF("doc_id", "text"), corpusBands),
       "inc_dedup", OutputMode.Append())
@@ -345,80 +219,58 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("foreachBatch routes a deduped stream through the batch JDBC sink (Derby)") {
-    implicit val sq = spark.sqlContext
-    // drive with the typed Ev stream; the fixture's value column is
-    // unique per event, so it doubles as the dedup key
-    val tstream = MemoryStream[Ev]
-    val withId = tstream.toDF()
-      .withColumn("event_id",
-        org.apache.spark.sql.functions.col("value").cast("long"))
-    val url = s"jdbc:derby:memory:graftstream${System.nanoTime()};create=true"
-    val q = EventStream.startSink(
-      EventStream.dedupedEvents(withId),
-      new graft.sinks.JdbcSink(url, "stream_events", "app", "app"),
-      OutputMode.Append())
-    try {
-      tstream.addData(batch1: _*)
-      q.processAllAvailable()
-      tstream.addData(batch1.head) // duplicate within the watermark → dropped
-      tstream.addData(batch2: _*)
-      q.processAllAvailable()
-      val back = spark.read.format("jdbc")
-        .option("url", url).option("dbtable", "stream_events").load()
-      assert(back.count() == (batch1 ++ batch2).length)
-      assert(back.select("event_type").distinct().count() == 2)
-    } finally q.stop()
-  }
-
   test("file-source stream picks up parquet drops incrementally") {
+    // a Spark-written DIRECTORY table: the layout streamSource must glob
+    // inside rather than beside
     val dir = java.nio.file.Files.createTempDirectory("graft-stream-src").toString
-    def drop(name: String, evs: Seq[Ev]): Unit =
-      evs.toDF("ts", "user_id", "event_type", "value")
-        .withColumn("event_id", org.apache.spark.sql.functions.col("value").cast("long"))
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(1).write.mode("append").parquet(dir)
-    drop("b1", batch1.zipWithIndex.map { case (e, i) => e.copy(value = i.toDouble) })
-    val q = EventStream.startMemorySink(
-      EventStream.readEventStream(spark, dir), "file_events", OutputMode.Append())
-    try {
-      q.processAllAvailable()
-      assert(spark.table("file_events").count() == batch1.length)
-      // a later file drop is discovered as a new micro-batch
-      drop("b2", batch2.zipWithIndex.map { case (e, i) => e.copy(value = (10 + i).toDouble) })
-      q.processAllAvailable()
-      assert(spark.table("file_events").count() == (batch1 ++ batch2).length)
-    } finally q.stop()
-  }
-
-  test("checkpointed restart recovers aggregation state without reprocessing") {
-    val src = java.nio.file.Files.createTempDirectory("graft-ckpt-src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     def drop(evs: Seq[Ev]): Unit =
       evs.toDF("ts", "user_id", "event_type", "value")
         .withColumn("event_id", org.apache.spark.sql.functions.col("value").cast("long"))
         .select("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(1).write.mode("append").parquet(src)
+        .coalesce(1).write.mode("append").parquet(s"$dir/events.parquet")
+    drop(batch1.zipWithIndex.map { case (e, i) => e.copy(value = i.toDouble) })
+    val q = startMemorySink(
+      EventStream.streamSource(spark, dir, "events"), "file_events", OutputMode.Append())
+    try {
+      q.processAllAvailable()
+      assert(spark.table("file_events").count() == batch1.length)
+      // a later file drop is discovered as a new micro-batch
+      drop(batch2.zipWithIndex.map { case (e, i) => e.copy(value = (10 + i).toDouble) })
+      q.processAllAvailable()
+      assert(spark.table("file_events").count() == (batch1 ++ batch2).length)
+    } finally q.stop()
+  }
+  test("checkpointed restart recovers aggregation state without reprocessing") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-src").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    def drop(evs: Seq[Ev]): Unit =
+      evs.toDF("ts", "user_id", "event_type", "value")
+        .withColumn("event_id", col("value").cast("long"))
+        .select("event_id", "ts", "user_id", "event_type", "value")
+        .coalesce(1).write.mode("append").parquet(s"$dir/events.parquet")
+    def hourly(events: org.apache.spark.sql.DataFrame) = events
+      .withWatermark("ts", "10 minutes")
+      .groupBy(window(col("ts"), "1 hour")("start").as("bucket_hour"), col("event_type"))
+      .agg(count(lit(1)).as("n_events"))
     // the drop helper derives event_id from value, so the batch twin must
     // see the SAME re-valued rows the files carry
     val b1 = batch1.zipWithIndex.map { case (e, i) => e.copy(value = i.toDouble) }
     val b2 = batch2.zipWithIndex.map { case (e, i) => e.copy(value = (10 + i).toDouble) }
     drop(b1)
-    val q1 = EventStream.startMemorySink(
-      EventStream.windowedCounts(EventStream.readEventStream(spark, src)),
+    val q1 = startMemorySink(hourly(EventStream.streamSource(spark, dir, "events")),
       "ckpt_counts", OutputMode.Complete(), Some(ckpt))
     q1.processAllAvailable()
     q1.stop() // simulate a crash/deploy between file drops
     drop(b2)
-    val q2 = EventStream.startMemorySink(
-      EventStream.windowedCounts(EventStream.readEventStream(spark, src)),
+    val q2 = startMemorySink(hourly(EventStream.streamSource(spark, dir, "events")),
       "ckpt_counts", OutputMode.Complete(), Some(ckpt))
     try {
       q2.processAllAvailable()
       // output covers BOTH drops — the window counts over batch1 can only
       // come from the recovered state store...
       val streamed = spark.table("ckpt_counts").orderBy("bucket_hour", "event_type").collect()
-      val batched = EventStream.windowedCounts((b1 ++ b2).toDF())
+      val batched = hourly((b1 ++ b2).toDF())
         .orderBy("bucket_hour", "event_type").collect()
       assert(streamed.toSeq == batched.toSeq)
       // ...because the restarted query read ONLY the new file (the offset
@@ -429,26 +281,6 @@ class StreamingSpec extends AnyFunSuite {
         s"restarted query read $rowsRead rows, expected only ${batch2.length}")
     } finally q2.stop()
   }
-
-  test("mapGroupsWithState accumulates per-user state across micro-batches") {
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[Ev]
-    val q = EventStream.startMemorySink(
-      EventStream.runningUserTotals(stream.toDS()).toDF(), "user_totals", OutputMode.Update())
-    try {
-      stream.addData(batch1: _*)
-      q.processAllAvailable()
-      stream.addData(batch2: _*)
-      q.processAllAvailable()
-      // Update mode: last emitted row per user reflects cumulative state
-      val last = spark.table("user_totals").collect()
-        .map(r => UserTotals(r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .groupBy(_.user_id).map { case (u, rows) => u -> rows.maxBy(_.n_events) }
-      assert(last(1L) == UserTotals(1L, 3L, 10.0))
-      assert(last(2L) == UserTotals(2L, 2L, 8.0))
-    } finally q.stop()
-  }
-
   test("StreamingGate entries: streaming execution equals the batch spelling of the watermark contract") {
     // The gate's DuckDB oracle proves this cross-engine at sf0.01; this
     // spec pins the same batch-equivalence inside CI at fixture scale:
@@ -694,7 +526,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = MemoryStream[(Long, Timestamp, Long, String, Double)]
     val out = StreamingGate.scd2Stream(s,
       stream.toDF().toDF("event_id", "ts", "user_id", "event_type", "value"))
-    val q = EventStream.startMemorySink(out, "sw15_pin", OutputMode.Append())
+    val q = startMemorySink(out, "sw15_pin", OutputMode.Append())
     def emitted() = s.table("sw15_pin").collect().map(r =>
       (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getLong(5), r.getLong(6))).toSet

@@ -28,19 +28,6 @@ class ClientSpec extends AnyFunSuite {
     assert(c.calls.reverse.map(_._2) == List(0, 2, 4)) // offsets advance by limit
   }
 
-  test("Paginator.fetchLazy requests a page only when the previous one is drained") {
-    val c = new FakeClient(Map(
-      ("tasks", None, 0) -> """{"paging":{"next":true},"content":[{"id":"a"},{"id":"b"}]}""",
-      ("tasks", None, 2) -> """{"paging":{"next":true},"content":[{"id":"c"}]}""",
-      ("tasks", None, 4) -> """{"paging":{"next":false},"content":[{"id":"d"}]}"""))
-    val it = Paginator.fetchLazy(c, "tasks", limit = 2, includeDeleted = true, columnId = None)
-    assert(c.calls.isEmpty) // construction fetches nothing
-    assert(it.take(2).toList.size == 2)
-    assert(c.calls.map(_._2) == List(0), "a bounded consumer must cost exactly one page")
-    // the unbounded walk still sees everything (fetchAll delegates here)
-    assert(Paginator.fetchAll(c, "tasks", 2, includeDeleted = true, None).size == 4)
-  }
-
   test("Paginator handles an empty content page (empty-portion guard F5)") {
     val c = new FakeClient(Map(
       ("tasks", Some("col1"), 0) -> """{"paging":{"next":false},"content":[]}"""))
@@ -55,6 +42,30 @@ class ClientSpec extends AnyFunSuite {
       Paginator.fetchAll(client, "tasks", 50, includeDeleted = false, Some("c9")))
     assert(e.getMessage.contains("tasks") && e.getMessage.contains("columnId=c9") &&
       e.getMessage.contains("offset=0"), e.getMessage)
+  }
+
+  test("a non-2xx response fails the walk even when its body carries a content array") {
+    import com.sun.net.httpserver.HttpServer
+    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val status = new java.util.concurrent.atomic.AtomicInteger(503)
+    server.createContext("/", ex => {
+      val body = """{"paging":{"next":false},"content":[]}""".getBytes("UTF-8")
+      ex.sendResponseHeaders(status.get, body.length.toLong)
+      ex.getResponseBody.write(body)
+      ex.close()
+    })
+    server.start()
+    try {
+      val cfg = YouGileConfig(baseUrl = s"http://127.0.0.1:${server.getAddress.getPort}/",
+        token = "T0K", allowedBoards = Nil)
+      val client = new HttpYouGileClient(cfg, new RateLimiter(0))
+      val e = intercept[java.io.IOException](
+        Paginator.fetchAll(client, "tasks", 50, includeDeleted = false, Some("c9")))
+      assert(e.getMessage.contains("503") && e.getMessage.contains("/tasks?offset=0") &&
+        !e.getMessage.contains("T0K"), e.getMessage)
+      status.set(200)
+      assert(Paginator.fetchAll(client, "tasks", 50, includeDeleted = false, Some("c9")).isEmpty)
+    } finally server.stop(0)
   }
 
   test("RateLimiter's first acquire never sleeps under a realistic epoch clock (overflow regression)") {
