@@ -1,10 +1,10 @@
 package graft.sinks
 
-import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.URLEncoder
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.ops.Http
 
 /** Side-channel alert sink (K2): the reference posts to the Telegram Bot
   * API on DAG failure (`dags/yougile_etl_dag.py:34-45`) and on the
@@ -22,33 +22,42 @@ object NoopAlerter extends Alerter {
 /** POST `https://api.telegram.org/bot<token>/sendMessage` with
   * form-encoded chat_id/text (ref `send_message_tg`, `:41-45`). The
   * transport is injectable for offline tests.
+  *
+  * A failed alert prints one stderr line, with the bot token masked, and
+  * does not throw: `Pipeline.run` alerts after the write, so a throw there
+  * would make `app.Main`'s retry append the whole run a second time.
   */
 class TelegramAlerter(
     botToken: String,
     chatId: String,
     transport: (String, Map[String, String]) => String = TelegramAlerter.defaultTransport)
     extends Alerter {
-  override def alert(text: String): Unit = {
-    transport(
-      s"https://api.telegram.org/bot$botToken/sendMessage",
-      Map("chat_id" -> chatId, "text" -> text))
-    ()
-  }
+  override def alert(text: String): Unit =
+    try {
+      transport(
+        s"https://api.telegram.org/bot$botToken/sendMessage",
+        Map("chat_id" -> chatId, "text" -> text))
+      ()
+    } catch {
+      case NonFatal(e) =>
+        val why = s"${e.getClass.getSimpleName}: ${e.getMessage}"
+        System.err.println("[alert] Telegram alert not sent: " +
+          (if (botToken.isEmpty) why else why.replace(botToken, "<token>")))
+    }
 }
 
 object TelegramAlerter {
+  /** POST the form through [[graft.ops.Http.send]]; a non-2xx answer
+    * (401 bad token, 429 throttled) throws, naming the status but not the
+    * URL, whose path carries the token.
+    */
   val defaultTransport: (String, Map[String, String]) => String = { (url, form) =>
     val body = form
       .map { case (k, v) => s"${URLEncoder.encode(k, UTF_8)}=${URLEncoder.encode(v, UTF_8)}" }
       .mkString("&")
-    HttpClient.newHttpClient()
-      .send(
-        HttpRequest.newBuilder(URI.create(url))
-          .header("Content-Type", "application/x-www-form-urlencoded")
-          .POST(HttpRequest.BodyPublishers.ofString(body))
-          .build(),
-        HttpResponse.BodyHandlers.ofString())
-      .body()
+    Http.send("Telegram sendMessage", url,
+      Map("Content-Type" -> "application/x-www-form-urlencoded"),
+      Some(body.getBytes(UTF_8)), Http.ReadTimeoutMs)
   }
 }
 

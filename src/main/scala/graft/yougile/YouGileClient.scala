@@ -1,10 +1,9 @@
 package graft.yougile
 
-import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.ops.Http
 
 /** Typed extraction config (S6) — the reference pulls these from Airflow
   * Variables (`dags/yougile_etl_dag.py:17-22`); here they are a plain case
@@ -135,18 +134,13 @@ class HttpYouGileClient(
 }
 
 object HttpYouGileClient {
-  /** GET `url`; only a 2xx body is data. Any other status throws, naming
-    * the status and the URL (the token travels in a header, not the URL).
+  /** GET `url` through [[graft.ops.Http.send]]: one connection per page,
+    * fixed connect and read timeouts, no redirects. Only a 2xx body is
+    * data; any other status throws, naming the status and the URL (the
+    * token travels in a header, not the URL).
     */
-  val defaultTransport: (String, Map[String, String]) => String = { (url, headers) =>
-    val builder = HttpRequest.newBuilder(URI.create(url))
-    headers.foreach { case (k, v) => builder.header(k, v) }
-    val resp = HttpClient.newHttpClient()
-      .send(builder.GET().build(), HttpResponse.BodyHandlers.ofString())
-    if (resp.statusCode / 100 != 2)
-      throw new java.io.IOException(s"YouGile GET $url returned HTTP ${resp.statusCode}")
-    resp.body()
-  }
+  val defaultTransport: (String, Map[String, String]) => String =
+    (url, headers) => Http.send(s"YouGile GET $url", url, headers, None, Http.ReadTimeoutMs)
 }
 
 /** Gate/test client: serves committed JSON pages written by FixtureGen,

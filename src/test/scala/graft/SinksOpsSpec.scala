@@ -54,6 +54,27 @@ class SinksOpsSpec extends AnyFunSuite {
     assert(form == Map("chat_id" -> "42", "text" -> "hello"))
   }
 
+  test("a refused Telegram alert returns and prints the status to stderr, not the bot token") {
+    import com.sun.net.httpserver.HttpServer
+    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", ex => { ex.sendResponseHeaders(401, -1); ex.close() })
+    server.start()
+    val err = new java.io.ByteArrayOutputStream
+    val stderr = System.err
+    try {
+      val loopback = s"http://127.0.0.1:${server.getAddress.getPort}"
+      val alerter = new TelegramAlerter("123:S3CRET", "42", (url, form) =>
+        TelegramAlerter.defaultTransport(url.replace("https://api.telegram.org", loopback), form))
+      System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+      alerter.alert("hello")
+    } finally {
+      System.setErr(stderr)
+      server.stop(0)
+    }
+    val line = err.toString("UTF-8")
+    assert(line.contains("401") && !line.contains("S3CRET"), line)
+  }
+
   test("Pipeline.run on fixtures: fires the data-loss alert, sinks 240 rows, stamps run-ts") {
     val alerter = new RecordingAlerter
     var written: Option[DataFrame] = None

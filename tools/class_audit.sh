@@ -36,7 +36,7 @@ logged() {
 
 logged verify sbt --batch -Dsbt.log.noformat=true \
   "runMain graft.Verify $DATA/sf0.01 $AUDIT_DIR/verify_out"
-# SPARK_GRAFT_BENCH_OUT keeps Bench off the committed bench_full_sf0.001.json
+# SPARK_GRAFT_BENCH_OUT keeps Bench's recording in the audit directory, out of the checkout
 SPARK_GRAFT_SF_DIR="$DATA/sf0.001" SPARK_GRAFT_BENCH_OUT="$AUDIT_DIR/bench_full.json" \
   logged bench sbt --batch -Dsbt.log.noformat=true "runMain graft.Bench"
 logged product sh -c 'for w in hourly_jdbc column_fanout; do
