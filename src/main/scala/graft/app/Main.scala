@@ -1,5 +1,10 @@
 package graft.app
 
+import java.time.{LocalDateTime, ZoneOffset}
+import java.time.format.{DateTimeFormatter, ResolverStyle}
+
+import scala.util.Try
+
 import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 import graft.ops.Retry
@@ -24,12 +29,22 @@ import graft.yougile._
 object Main {
   val Usage = "usage: graft.app.Main [--run-ts <yyyy-MM-dd HH:mm:ss>] [--out parquet:<path>|jdbc]"
 
+  /** The one `--run-ts` spelling, parsed STRICTly (no 2026-02-30, no
+    * 24:00:00). Spark's lenient `to_timestamp` would load anything else
+    * as a NULL or clock-relative `loaded_ts`.
+    */
+  val RunTsFormat: DateTimeFormatter =
+    DateTimeFormatter.ofPattern("uuuu-MM-dd HH:mm:ss").withResolverStyle(ResolverStyle.STRICT)
+
   /** The flags `main` honours, by name: `--run-ts <ts>` and
     * `--out parquet:<path>|jdbc`. Any other argument is refused with why.
     */
   def parseArgs(args: List[String]): Either[String, Map[String, String]] = args match {
     case Nil => Right(Map.empty)
-    case "--run-ts" :: ts :: rest => parseArgs(rest).map(_ + ("--run-ts" -> ts))
+    case "--run-ts" :: ts :: rest =>
+      if (Try(LocalDateTime.parse(ts, RunTsFormat)).isFailure)
+        Left(s"--run-ts takes yyyy-MM-dd HH:mm:ss, not '$ts'")
+      else parseArgs(rest).map(_ + ("--run-ts" -> ts))
     case "--out" :: out :: rest if out == "jdbc" || out.matches("parquet:.+") =>
       parseArgs(rest).map(_ + ("--out" -> out))
     case "--out" :: out :: _ => Left(s"--out takes parquet:<path> or jdbc, not '$out'")
@@ -40,10 +55,7 @@ object Main {
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args.toList)
       .fold(err => { System.err.println(s"$err\n$Usage"); sys.exit(2) }, identity)
-    val runTs = opts.getOrElse("--run-ts",
-      java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
-        .truncatedTo(java.time.temporal.ChronoUnit.SECONDS)
-        .toString.replace('T', ' '))
+    val runTs = opts.getOrElse("--run-ts", LocalDateTime.now(ZoneOffset.UTC).format(RunTsFormat))
     val env = sys.env
     val cfg = YouGileConfig.fromEnv(env)
 

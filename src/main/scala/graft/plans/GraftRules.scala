@@ -38,9 +38,6 @@ object GraftRules {
     // dedups whose keys include a verified primary key drop to a
     // projection when spark.graft.distinctElim.enabled is set (opt14)
     DistinctEliminationRewrite,
-    // unfiltered global count/min/max over a parquet scan answer from
-    // the file footers when spark.graft.footerAgg.enabled is set (opt16)
-    FooterAggregateRewrite,
     // bounded edit-distance predicates plan as the banded thresholded
     // levenshtein — always on, strictly semantics-preserving (opt17)
     LevenshteinThresholdRewrite)

@@ -83,32 +83,6 @@ object PlanScans {
     case _ => None
   }
 
-  /** [[bareScanRef]]'s walk, yielding the RELATION itself — for
-    * consumers that must touch the files (FooterAggregateRewrite reads
-    * footers). Same single implementation of the walk: this delegates
-    * to [[bareScanRef]] for admissibility and only then re-extracts,
-    * so a refusal added there binds here automatically.
-    */
-  def bareScanRelation(plan: LogicalPlan): Option[HadoopFsRelation] =
-    if (bareScanRef(plan).isEmpty) None
-    else {
-      def rel(p: LogicalPlan): Option[HadoopFsRelation] = p match {
-        case lr: LogicalRelation => lr.relation match {
-          case h: HadoopFsRelation => Some(h)
-          case _ => None
-        }
-        case Project(_, child) => rel(child)
-        case _ => None
-      }
-      rel(plan)
-    }
-
-  /** The listing fingerprint of a relation the caller already holds —
-    * [[ScanFingerprint]]'s one computation site, shared with the
-    * footer-stats cache key.
-    */
-  def fingerprint(h: HadoopFsRelation): Option[ScanFingerprint] = fingerprintOf(h)
-
   /** Bare scan, additionally looking through Filters. Sound ONLY where
     * the caller's algebra tolerates an arbitrary right-side predicate:
     * join elimination (a filtered match set null-extends rows the

@@ -2101,43 +2101,9 @@ object Dedup extends QueryModule {
   override val probes: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dd6_ngram_jaccard" -> (ngramJaccard _),
     "dd12_containment" -> (containmentPairs _),
-    // dd19 stage decomposition (r18 opt round, `graft.Dev time` only): where
-    // does the capped pipeline's time go — shingling, anchoring, or
-    // candidate+verify? Each probe is the gate pipeline truncated.
+    // dd19 stage probes (`graft.Dev time` only): the shipped shingling and
+    // corpus stages of the capped pipeline, timed on their own.
     "dd19_probe_shingles" -> ((s: SparkSession, dir: String) =>
       sortedShingled(corpus19(s, dir))),
-    "dd19_probe_corpus" -> ((s: SparkSession, dir: String) => corpus19(s, dir)),
-    "dd19_probe_anchors" -> ((s: SparkSession, dir: String) => {
-      val c = corpus19(s, dir)
-      val sh = sortedShingled(c)
-      val words = split(col("text"), " ")
-      c.filter(size(words) >= 3)
-        .select(col("doc_id"), md5(array_join(slice(words, 1, 3), " ")).as("anchor"))
-        .unionByName(sh.select(col("doc_id"),
-          array_min(transform(col("shingles"), g => md5(concat(lit("b:"), g)))).as("anchor")))
-    }),
-    // candidate stage in the SHIPPED spelling (ADVICE r18: the probes
-    // still spelled the pre-r18 census + semi-join + self-join, so the
-    // stage timings no longer decomposed the gate pipeline) — one
-    // merged groupBy: collect the member set, cap on its size, explode
-    // ordered pairs, DISTINCT (r19 gate spelling).
-    "dd19_probe_cand" -> ((s: SparkSession, dir: String) => {
-      val c = corpus19(s, dir)
-      val sh = sortedShingled(c).persist(StorageLevel.MEMORY_AND_DISK)
-      val words = split(col("text"), " ")
-      c.filter(size(words) >= 3)
-        .select(col("doc_id"), md5(array_join(slice(words, 1, 3), " ")).as("anchor"))
-        .unionByName(sh.select(col("doc_id"),
-          array_min(transform(col("shingles"), g => md5(concat(lit("b:"), g)))).as("anchor")))
-        .filter(col("anchor").isNotNull)
-        .groupBy("anchor")
-        .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
-        .filter(size(col("ds")) <= AnchorDfCap)
-        .select(explode(expr(
-          "flatten(transform(ds, (x, i) -> " +
-            "transform(slice(ds, i + 2, size(ds)), y -> struct(x AS doc_a, y AS doc_b))))"))
-          .as("p"))
-        .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-        .distinct()
-    }))
+    "dd19_probe_corpus" -> ((s: SparkSession, dir: String) => corpus19(s, dir)))
 }

@@ -2122,20 +2122,12 @@ object Extras extends QueryModule {
       |ORDER BY o_orderpriority NULLS FIRST""".stripMargin
 
   // --------------------------------------------------------------- opt16
-  /** FOOTER-STATISTICS aggregate answering under the oracle
-    * ([[graft.plans.FooterAggregateRewrite]] has the soundness
-    * boundaries): the warehouse-catalog classic — `SELECT count(*),
-    * count(col), min(k), max(k) FROM t` with no filter — answered
-    * entirely from parquet footers at plan time; the optimized plan is
-    * a one-row LocalRelation, NO scan at all (FooterAggSpec pins
-    * that, plus the filter/grouping/float refusals and the staleness
-    * fingerprint). The DuckDB oracle executes the real aggregation, so
-    * the hash proves the footer arithmetic (Σ row counts, Σ null
-    * counts, min/max merge across row groups) equals scanning.
+  /** An unfiltered global aggregate — `SELECT count(*), count(col),
+    * min(k), max(k) FROM lineitem` — answered by a scan and Spark's
+    * partial/final hash aggregate. No rule rewrites it; the DuckDB oracle
+    * executes the same aggregation.
     */
-  private def footerAggGate(s0: SparkSession, dir: String): DataFrame = {
-    val s = graft.SparkEntry.configure(s0.newSession()) // sj4 conf hygiene
-    s.conf.set(graft.plans.FooterAggregateRewrite.ConfKey, "true")
+  private def footerAggGate(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "lineitem")
       .agg(
         count(lit(1)).as("n_rows"),
@@ -2144,7 +2136,6 @@ object Extras extends QueryModule {
         max(col("l_orderkey")).as("max_okey"),
         min(col("l_partkey")).as("min_pkey"),
         max(col("l_suppkey")).as("max_skey"))
-  }
 
   private val footerAggGateSql =
     """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,

@@ -230,15 +230,12 @@ object YouGileQueries extends QueryModule {
        |FROM read_parquet('${pq("contracts")}')
        |ORDER BY id NULLS FIRST""".stripMargin
 
-  /** Per-column task census through the connector's AGGREGATE PUSHDOWN
-    * (`SupportsPushDownAggregates`): COUNT(*) and null-skipping
-    * COUNT(subtasks) per board column are folded INSIDE each per-column
-    * partition reader — one census row per column crosses the source
-    * boundary instead of every task row (SourceV2Spec pins the pushed
-    * scan description and schema; a silent fallback to row-grain scans
-    * would still hash-match, so the spec's plan pin is the
-    * non-vacuity). The oracle restates the census over the committed
-    * parquet mirror of the same fixture universe.
+  /** Per-column task census over the connector: COUNT(*) and
+    * null-skipping COUNT(subtasks) per board column, planned as Spark's
+    * partial/final hash aggregate above a scan pruned to `columnId,
+    * subtasks` (SourceV2Spec pins that schema). The oracle restates the
+    * census over the committed parquet mirror of the same fixture
+    * universe.
     */
   private def ygDsv2Census(s: SparkSession, dir: String): DataFrame = {
     dsv2Tasks(s)
@@ -254,12 +251,11 @@ object YouGileQueries extends QueryModule {
        |GROUP BY columnId
        |ORDER BY columnId NULLS FIRST""".stripMargin
 
-  /** Per-column timestamp statistics through the connector's widened
-    * aggregate pushdown: MIN/MAX/SUM(timestamp) and COUNT(*) fold
-    * inside the per-column partition readers (SourceV2Spec pins the
-    * pushed description — [MIN(timestamp), MAX(timestamp),
-    * SUM(timestamp), COUNT(*)] — and the partial schema). The oracle
-    * restates the stats over the committed parquet mirror.
+  /** Per-column timestamp statistics over the connector:
+    * MIN/MAX/SUM(timestamp) and COUNT(*) per board column, planned as
+    * Spark's partial/final hash aggregate above a scan pruned to
+    * `columnId, timestamp`. The oracle restates the stats over the
+    * committed parquet mirror.
     */
   private def ygDsv2Stats(s: SparkSession, dir: String): DataFrame = {
     dsv2Tasks(s)

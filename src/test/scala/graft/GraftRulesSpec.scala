@@ -19,8 +19,7 @@ class GraftRulesSpec extends AnyFunSuite {
     assert(s.experimental.extraOptimizations == Seq(
       RowNumberDedupRewrite, RangeBinJoinRewrite, InListToJoinRewrite,
       ApproxDistinctRewrite, MaterializedViewRewrite, JoinEliminationRewrite,
-      EagerAggregationRewrite, DistinctEliminationRewrite, FooterAggregateRewrite,
-      LevenshteinThresholdRewrite))
+      EagerAggregationRewrite, DistinctEliminationRewrite, LevenshteinThresholdRewrite))
     assert(s.experimental.extraOptimizations == GraftRules.optimizerRules)
     assert(s.experimental.extraStrategies == Seq(AsOfJoinStrategy))
     assert(s.conf.get(InListToJoinRewrite.ThresholdConfKey) == "0")
@@ -28,10 +27,10 @@ class GraftRulesSpec extends AnyFunSuite {
 
   test("install appends only what is missing, after what the session already carries") {
     val s = SharedSpark.spark.newSession()
-    GraftRules.install(s, Seq(FooterAggregateRewrite), strategies = Nil)
+    GraftRules.install(s, Seq(LevenshteinThresholdRewrite), strategies = Nil)
     GraftRules.install(s)
-    assert(s.experimental.extraOptimizations ==
-      FooterAggregateRewrite +: GraftRules.optimizerRules.filterNot(_ == FooterAggregateRewrite))
+    assert(s.experimental.extraOptimizations == LevenshteinThresholdRewrite +:
+      GraftRules.optimizerRules.filterNot(_ == LevenshteinThresholdRewrite))
     assert(s.experimental.extraStrategies == GraftRules.strategies)
   }
 }

@@ -2,8 +2,9 @@ package graft.app
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `app.Main` honours exactly `--run-ts <ts>` and `--out parquet:<path>|jdbc`;
-  * anything else is refused before a session starts.
+/** `app.Main` honours exactly `--run-ts <yyyy-MM-dd HH:mm:ss>` and
+  * `--out parquet:<path>|jdbc`; anything else is refused before a session
+  * starts.
   */
 class MainArgsSpec extends AnyFunSuite {
   import Main.parseArgs
@@ -25,5 +26,20 @@ class MainArgsSpec extends AnyFunSuite {
     assert(parseArgs(List("--run-ts")) == Left("--run-ts needs a value"))
     assert(parseArgs(List("--run-ts", "2026-01-01 00:00:00", "--out")) == Left("--out needs a value"))
     assert(parseArgs(List("--runts", "x")).isLeft)
+  }
+
+  test("a --run-ts that is not a real yyyy-MM-dd HH:mm:ss is refused") {
+    for (ts <- Seq("2026-13-01 00:00:00", "2026-02-30 00:00:00", "01.01.2026 00:00",
+        "now", "yesterday", "2026-01-01 00:00", "2026-01-01T00:00:00", "2026-01-01 24:00:00")) {
+      val e = parseArgs(List("--run-ts", ts))
+      assert(e.isLeft && e.swap.exists(_.contains(ts)), ts)
+    }
+    assert(parseArgs(List("--run-ts", "2024-02-29 23:59:59")).isRight)
+  }
+
+  test("the default run timestamp keeps its seconds at the top of a minute") {
+    val ts = java.time.LocalDateTime.of(2026, 1, 1, 10, 0).format(Main.RunTsFormat)
+    assert(ts == "2026-01-01 10:00:00")
+    assert(parseArgs(List("--run-ts", ts)).isRight)
   }
 }
