@@ -20,7 +20,8 @@ import graft.yougile._
   *     [--run-ts "2026-01-01 00:00:00"] [--out parquet:/path | jdbc]
   *
   * Any other argument prints the usage to stderr and exits 2 before a
-  * session starts or a request is sent.
+  * session starts or a request is sent; so does a YouGile config
+  * [[checkConfig]] refuses.
   *
   * Env: YG_BASE_URL, YG_TOKEN, YG_ACTUAL_BOARDS (JSON list or CSV),
   *      PG_URL, PG_TABLE, PG_USER, PG_PASSWORD,
@@ -52,12 +53,27 @@ object Main {
     case other :: _ => Left(s"unknown argument '$other'")
   }
 
+  /** The YouGile config `main` runs with, or the variable that makes it
+    * unusable: YG_BASE_URL and YG_TOKEN must be set and non-empty,
+    * YG_BASE_URL must end in `/` (the client appends the method name to
+    * it), and YG_ACTUAL_BOARDS must name a board (with none, brd_clmn
+    * keeps no column and the run fetches every listing to load 0 rows).
+    */
+  def checkConfig(env: Map[String, String]): Either[String, YouGileConfig] = {
+    val cfg = YouGileConfig.fromEnv(env)
+    if (cfg.baseUrl.isEmpty) Left("YG_BASE_URL is unset or empty")
+    else if (!cfg.baseUrl.endsWith("/")) Left(s"YG_BASE_URL must end in '/', not '${cfg.baseUrl}'")
+    else if (cfg.token.isEmpty) Left("YG_TOKEN is unset or empty")
+    else if (cfg.allowedBoards.forall(_.trim.isEmpty)) Left("YG_ACTUAL_BOARDS names no board")
+    else Right(cfg)
+  }
+
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args.toList)
       .fold(err => { System.err.println(s"$err\n$Usage"); sys.exit(2) }, identity)
     val runTs = opts.getOrElse("--run-ts", LocalDateTime.now(ZoneOffset.UTC).format(RunTsFormat))
     val env = sys.env
-    val cfg = YouGileConfig.fromEnv(env)
+    val cfg = checkConfig(env).fold(err => { System.err.println(err); sys.exit(2) }, identity)
 
     val alerter: Alerter = (env.get("TG_BOT_TOKEN"), env.get("TG_CHAT_ID")) match {
       case (Some(tok), Some(chat)) => new TelegramAlerter(tok, chat)

@@ -49,20 +49,15 @@ import graft.functions.{KmvNdv, NdvSketch}
   * untouched; the function's type/nullability (LongType, non-null,
   * empty group → 0) match `Count`'s.
   *
-  * Batch-order honesty: registered through BOTH routes like the other
-  * rules. Under [[graft.functions.GraftExtensions]]
-  * (`injectOptimizerRule`) it runs inside the operator-optimization
-  * batch — BEFORE `RewriteDistinctAggregates` — so multi-distinct
-  * aggregates rewrite before the Expand is ever planned. Under the
-  * runtime route (`experimental.extraOptimizations`, the only hook for
-  * sessions the library did not build) user rules run LAST, after
-  * Spark has already expanded multi-distinct shapes — there the rule
-  * catches the single-distinct shape (the common one; physical
-  * planning otherwise turns it into the two-exchange partial-distinct
-  * plan). ApproxDistinctRewriteSpec pins both: the rule applied to a
-  * multi-distinct analyzed plan leaves no distinct aggregate, and the
-  * end-to-end single-distinct path plans ObjectHashAggregate with no
-  * per-value exchange.
+  * Batch-order honesty: like the other rules it is registered through
+  * `experimental.extraOptimizations` ([[GraftRules.install]]), where
+  * user rules run LAST, after Spark has already expanded multi-distinct
+  * shapes. In a session the rule therefore catches the single-distinct
+  * shape (the common one; physical planning otherwise turns it into the
+  * two-exchange partial-distinct plan). ApproxDistinctRewriteSpec pins
+  * both sides: the rule applied to a multi-distinct analyzed plan leaves
+  * no distinct aggregate, and the end-to-end single-distinct path plans
+  * ObjectHashAggregate with no per-value exchange.
   */
 object ApproxDistinctRewrite extends Rule[LogicalPlan] {
 

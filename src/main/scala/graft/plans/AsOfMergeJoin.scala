@@ -189,7 +189,7 @@ object AsOfMerge {
       tieBreak: String,
       payload: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    GraftRules.install(spark, rules = Nil)
+    GraftRules.install(spark)
     val lTsType = left.schema(leftTs).dataType
     require(lTsType == TimestampType || lTsType == LongType,
       s"leftTs must be timestamp/long-backed, got $lTsType")

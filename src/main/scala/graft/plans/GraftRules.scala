@@ -5,10 +5,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkStrategy
 
-/** The one list of graft optimizer rules and planner strategies, read by
-  * both registration routes: [[graft.functions.GraftExtensions]] injects
-  * them at session build (`spark.sql.extensions`); [[install]] appends
-  * them to a session the library did not build (`SparkEntry.configure`).
+/** The one list of graft optimizer rules and planner strategies, and the
+  * one route that registers them: [[install]] appends them to a session.
+  * `SparkEntry.configure` calls it for every gate, bench, dev and product
+  * session (`app.Main` included).
   */
 object GraftRules {
 
@@ -48,10 +48,9 @@ object GraftRules {
   /** Idempotent: appends each listed rule and strategy the session does
     * not already carry, in list order.
     */
-  def install(spark: SparkSession, rules: Seq[Rule[LogicalPlan]] = optimizerRules,
-      strategies: Seq[SparkStrategy] = this.strategies): Unit = {
+  def install(spark: SparkSession): Unit = {
     val x = spark.experimental
-    x.extraOptimizations ++= rules.filterNot(x.extraOptimizations.contains)
+    x.extraOptimizations ++= optimizerRules.filterNot(x.extraOptimizations.contains)
     x.extraStrategies ++= strategies.filterNot(x.extraStrategies.contains)
   }
 }

@@ -32,8 +32,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * Fires only when the threshold is a non-negative foldable integer
   * literal (`< t` needs t ≥ 1 so t − 1 stays a valid threshold; a
   * negative bound is a constant-folding matter, not ours) and the
-  * levenshtein does not already carry a threshold. Registered through
-  * both routes like the other rules; the rewrite is idempotent (the
+  * levenshtein does not already carry a threshold. Registered like
+  * the other rules ([[GraftRules.install]]); the rewrite is idempotent (the
   * produced expression carries a threshold, so the matcher skips it).
   */
 object LevenshteinThresholdRewrite extends Rule[LogicalPlan] {

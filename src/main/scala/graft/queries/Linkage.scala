@@ -278,7 +278,7 @@ object Linkage extends QueryModule {
   /** cdc2's problem written the way users actually write it — the
     * `row_number() = 1` window idiom — relying on the
     * [[graft.plans.RowNumberDedupRewrite]] optimizer rule (installed by
-    * `SparkEntry.configure` / GraftExtensions) to plan it as the min_by
+    * `SparkEntry.configure`) to plan it as the min_by
     * hash aggregate cdc2 hand-writes. The oracle executes the window
     * spelling literally in DuckDB, so the gate hash-proves the REWRITE:
     * any semantic slip in the rule (tie handling, null ordering, payload

@@ -193,26 +193,26 @@ object YouGileQueries extends QueryModule {
   }
 
   // --------------------------------------------------------- yg_dsv2
-  /** The connector's per-column contract read over the fixture pages. */
-  private def dsv2Tasks(s: SparkSession): DataFrame =
-    s.read.format("yougile")
-      .option("entity", "tasks")
-      .option("fixtureDir", Fixtures.jsonDir)
-      .load()
+  /** Every board column's contracts, fetched column by column through
+    * [[YouGileSource.contracts]] — the frame [[Transform.contractsPrepared]]
+    * reads, over all columns rather than the tracked boards' only.
+    */
+  private def allTasks(s: SparkSession): DataFrame = {
+    val src = source(s)
+    val columnIds = src.columns().select("id").collect().map(_.getString(0))
+      .filter(_ != null).distinct.toSeq
+    src.contracts(columnIds)
+  }
 
-  /** The DataSource V2 route into the same API surface
-    * ([[graft.sources.YouGileTableProvider]]): `spark.read.format
-    * ("yougile")` fetches the pages on the driver through the pipeline's
-    * page walk, plans one InputPartition per board column (the S3
-    * workaround), and decodes on the EXECUTORS through Catalyst's
-    * JacksonParser with column-pruning pushdown. Tracked-board filtering
-    * stays a left-semi join against brd_clmn — the allow-list is deploy
-    * config, not a source property. The oracle reads the committed
-    * parquet mirror of the per-column contract fetch, so the hash proves
-    * the connector's pagination, partitioning, and JSON decode.
+  /** The per-column contract fetch, decoded by Spark's json reader against
+    * the §1.4 contract schema. Tracked-board filtering stays a left-semi
+    * join against brd_clmn — the allow-list is deploy config, not a source
+    * property. The oracle reads the committed parquet mirror of the
+    * per-column contract fetch, so the hash proves the pagination and the
+    * JSON decode of the pipeline's own reader.
     */
   private def ygDsv2Tasks(s: SparkSession, dir: String): DataFrame = {
-    val tasks = dsv2Tasks(s)
+    val tasks = allTasks(s)
     val bc = Pipeline.brdClmn(source(s), cfg).select(col("column_id"))
     tasks.join(bc, tasks("columnId") === bc("column_id"), "left_semi")
       .select(col("id"), col("title"), col("timestamp"), col("columnId"),
@@ -230,15 +230,14 @@ object YouGileQueries extends QueryModule {
        |FROM read_parquet('${pq("contracts")}')
        |ORDER BY id NULLS FIRST""".stripMargin
 
-  /** Per-column task census over the connector: COUNT(*) and
-    * null-skipping COUNT(subtasks) per board column, planned as Spark's
-    * partial/final hash aggregate above a scan pruned to `columnId,
-    * subtasks` (SourceV2Spec pins that schema). The oracle restates the
-    * census over the committed parquet mirror of the same fixture
-    * universe.
+  /** Per-column task census over every column's contracts: COUNT(*) and
+    * null-skipping COUNT(subtasks) per board column (PipelineSpec checks
+    * the fixtures hold a null `subtasks`, so the null skip is exercised).
+    * The oracle restates the census over the committed parquet mirror of
+    * the same fixture universe.
     */
   private def ygDsv2Census(s: SparkSession, dir: String): DataFrame = {
-    dsv2Tasks(s)
+    allTasks(s)
       .groupBy("columnId")
       .agg(count(lit(1)).as("n_tasks"), count(col("subtasks")).as("n_with_subtasks"))
       .orderBy(col("columnId").asc_nulls_first)
@@ -251,14 +250,12 @@ object YouGileQueries extends QueryModule {
        |GROUP BY columnId
        |ORDER BY columnId NULLS FIRST""".stripMargin
 
-  /** Per-column timestamp statistics over the connector:
-    * MIN/MAX/SUM(timestamp) and COUNT(*) per board column, planned as
-    * Spark's partial/final hash aggregate above a scan pruned to
-    * `columnId, timestamp`. The oracle restates the stats over the
-    * committed parquet mirror.
+  /** Per-column timestamp statistics over every column's contracts:
+    * MIN/MAX/SUM(timestamp) and COUNT(*) per board column. The oracle
+    * restates the stats over the committed parquet mirror.
     */
   private def ygDsv2Stats(s: SparkSession, dir: String): DataFrame = {
-    dsv2Tasks(s)
+    allTasks(s)
       .groupBy("columnId")
       .agg(min(col("timestamp")).as("min_ts"), max(col("timestamp")).as("max_ts"),
         sum(col("timestamp")).as("sum_ts"), count(lit(1)).as("n_tasks"))

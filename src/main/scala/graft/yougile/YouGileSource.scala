@@ -13,23 +13,27 @@ import graft.yougile.Model._
   * At 100 TB the inputs of this engine are files/tables (Tables.scala),
   * not this API; the YouGile source is inherently small.
   *
-  * [[YouGileSource.entities]] is the one page walk: these readers and the
-  * `yougile` connector (graft.sources) both fetch through it.
+  * Every listing the system reads (ref `:110-147`, `:208`, `:225`) goes
+  * through `read`: one eager page walk ([[Paginator.fetchAll]]) per
+  * listing, or per board column, done before the json read plans.
   */
 class YouGileSource(spark: SparkSession, client: YouGileClient, cfg: YouGileConfig) {
-  import YouGileSource.{View, entities}
 
-  private def read(view: View, columnIds: Seq[Option[String]] = Seq(None)): DataFrame = {
+  /** One API listing (of each of `columnIds` when set), decoded with
+    * `schema`; `pageSize` is the listing's page limit.
+    */
+  private def read(method: String, schema: StructType, pageSize: Int,
+      includeDeleted: Boolean = false, columnIds: Seq[Option[String]] = Seq(None)): DataFrame = {
     import spark.implicits._
-    spark.read.schema(view.schema)
-      .json(spark.createDataset(columnIds.flatMap(c => entities(client, cfg, view, c))))
+    spark.read.schema(schema).json(spark.createDataset(columnIds.flatMap(c =>
+      Paginator.fetchAll(client, method, pageSize, includeDeleted, c))))
   }
 
-  def boards(): DataFrame = read(View.Boards)
+  def boards(): DataFrame = read("boards", boardSchema, cfg.dictPageLimit)
 
-  def columns(): DataFrame = read(View.Columns)
+  def columns(): DataFrame = read("columns", columnSchema, cfg.dictPageLimit)
 
-  def stickers(): DataFrame = read(View.StringStickers)
+  def stickers(): DataFrame = read("string-stickers", stickerSchema, cfg.dictPageLimit)
 
   /** S3: contracts fetched column-by-column — the reference's workaround
     * for a YouGile offset-pagination bug that can drop rows (`:200-217`).
@@ -39,38 +43,11 @@ class YouGileSource(spark: SparkSession, client: YouGileClient, cfg: YouGileConf
     * every portion to the same columns (S5, `:90-94`).
     */
   def contracts(columnIds: Seq[String]): DataFrame =
-    read(View.Contracts, columnIds.map(Some(_)))
+    read("tasks", contractSchema, cfg.contractPageLimit, columnIds = columnIds.map(Some(_)))
 
   /** The global includeDeleted=true fetch whose rows serve as subtasks
     * (lots), ref `:225`.
     */
-  def subtaskObjects(): DataFrame = read(View.SubtaskObjects)
-}
-
-object YouGileSource {
-
-  /** One API listing the system reads, with the schema its entities
-    * decode with and the config field that sets its page size.
-    */
-  final case class View(
-      method: String,
-      schema: StructType,
-      includeDeleted: Boolean,
-      pageSize: YouGileConfig => Int)
-
-  /** The five views (ref `:110-147`, `:208`, `:225`). */
-  object View {
-    val Boards = View("boards", boardSchema, includeDeleted = false, _.dictPageLimit)
-    val Columns = View("columns", columnSchema, includeDeleted = false, _.dictPageLimit)
-    val StringStickers = View("string-stickers", stickerSchema, includeDeleted = false, _.dictPageLimit)
-    val Contracts = View("tasks", contractSchema, includeDeleted = false, _.contractPageLimit)
-    val SubtaskObjects = View("tasks", subtaskSchema, includeDeleted = true, _.objectPageLimit)
-  }
-
-  /** One raw JSON string per entity of `view` (of one board column when
-    * `columnId` is set), every page fetched before it returns.
-    */
-  def entities(client: YouGileClient, cfg: YouGileConfig, view: View,
-      columnId: Option[String] = None): Seq[String] =
-    Paginator.fetchAll(client, view.method, view.pageSize(cfg), view.includeDeleted, columnId)
+  def subtaskObjects(): DataFrame =
+    read("tasks", subtaskSchema, cfg.objectPageLimit, includeDeleted = true)
 }

@@ -80,12 +80,4 @@ object GraftShims {
     */
   def deleteRecursively(f: java.io.File): Unit =
     org.apache.spark.util.Utils.deleteRecursively(f)
-
-  /** Register a catalyst function builder on an already-built session —
-    * the runtime counterpart of SparkSessionExtensions.injectFunction.
-    */
-  def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[catalyst.expressions.Expression] => catalyst.expressions.Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
 }

@@ -17,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * single space, fed to MD5 incrementally (no concatenated string is
   * materialized). Null elements are SKIPPED along with their delimiter —
   * exactly `array_join`'s contract — so the kernel stays hash-identical
-  * to the HOF spelling even for callers other than `split()` (the
-  * function is SQL-registered; inputs with nulls are reachable). Dedup
+  * to the HOF spelling even for callers other than `split()` (any
+  * `array<string>` column reaches it; inputs with nulls are reachable). Dedup
   * preserves first-occurrence order on the hex encoding, matching
   * Spark's `array_distinct`; element count below n yields an empty
   * array (callers filter those rows anyway, as the HOF spelling must

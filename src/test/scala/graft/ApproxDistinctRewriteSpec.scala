@@ -103,9 +103,9 @@ class ApproxDistinctRewriteSpec extends AnyFunSuite {
   }
 
   test("multi-distinct aggregate: the rule leaves no distinct (no Expand to plan)") {
-    // The runtime registration route runs user rules AFTER Spark's
-    // RewriteDistinctAggregates, so drive the rule directly on the
-    // analyzed plan — the extensions route runs it in this position.
+    // The registration route (extraOptimizations) runs user rules AFTER
+    // Spark's RewriteDistinctAggregates, so drive the rule directly on
+    // the analyzed plan, before that expansion.
     withFlag(on = true) { s =>
       val q = Tables(s, dir, "events").groupBy("event_type")
         .agg(countDistinct(col("user_id")).as("n_users"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{In, InSet}
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.{GraftRules, InListToJoinRewrite, RangeBinJoinRewrite}
+import graft.plans.{InListToJoinRewrite, RangeBinJoinRewrite}
 
 /** Chaos pins for the two OPT-IN optimizer rewrites (VERDICT r9 #8):
   * the plan-shape suites run them under AQE-off on tidy inputs; these
@@ -47,7 +47,7 @@ class ChaosRewriteSpec extends AnyFunSuite {
 
   test("range-bin rewrite under AQE skew-join: fires, splits, and matches the nested loop") {
     val s = chaosSession()
-    GraftRules.install(s, Seq(RangeBinJoinRewrite))
+    s.experimental.extraOptimizations = Seq(RangeBinJoinRewrite)
     // points: every sf0.1 lineitem ship event (~600k). intervals: 40
     // sliding windows piled onto ONE month (1995-06) + 15 spread across
     // the rest of 1995 — the June bins go hot on both sides

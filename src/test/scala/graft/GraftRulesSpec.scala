@@ -27,7 +27,7 @@ class GraftRulesSpec extends AnyFunSuite {
 
   test("install appends only what is missing, after what the session already carries") {
     val s = SharedSpark.spark.newSession()
-    GraftRules.install(s, Seq(LevenshteinThresholdRewrite), strategies = Nil)
+    s.experimental.extraOptimizations = Seq(LevenshteinThresholdRewrite)
     GraftRules.install(s)
     assert(s.experimental.extraOptimizations == LevenshteinThresholdRewrite +:
       GraftRules.optimizerRules.filterNot(_ == LevenshteinThresholdRewrite))

@@ -6,7 +6,7 @@ import graft.functions.VectorFunctions
 
 /** The LuhnScan kernel (red2's detect+validate+mask byte pass) against
   * an independent regex+functional model, canonical checksum pins, the
-  * length guards, null safety, and the SQL-name surface.
+  * length guards and null safety.
   */
 class LuhnKernelSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
@@ -97,10 +97,4 @@ class LuhnKernelSpec extends AnyFunSuite {
     assert(Literal("x").dataType === StringType) // anchor the imports
   }
 
-  test("luhn_scan resolves from SQL text after registration") {
-    VectorFunctions.register(spark)
-    val r = spark.sql(
-      "SELECT luhn_scan('n 79927398713', 11, 11, '<X>').masked AS m").head()
-    assert(r.getString(0) === "n <X>")
-  }
 }

@@ -238,7 +238,6 @@ class MvRewriteSpec extends AnyFunSuite {
       .agg(sum(col("v")).as("sum_v"), sum(col("u")).as("sum_u"), count(lit(1)).as("cnt"))
     defn.write.parquet(mvDir)
     graft.plans.MaterializedViewRewrite.registerStar(s, defn, mvDir)
-    graft.plans.GraftRules.install(s, Seq(graft.plans.MaterializedViewRewrite))
     s.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "true")
     val mvName = new java.io.File(mvDir).getName
     val avgU = join(s).groupBy(col("grp")).agg(avg(col("u")).as("a"))
@@ -266,7 +265,6 @@ class MvRewriteSpec extends AnyFunSuite {
     val defn = join(s).groupBy(col("grp")).agg(sum(col("v")).as("sum_v"), count(lit(1)).as("cnt"))
     defn.write.parquet(mvDir)
     graft.plans.MaterializedViewRewrite.registerStar(s, defn, mvDir)
-    graft.plans.GraftRules.install(s, Seq(graft.plans.MaterializedViewRewrite))
     s.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "true")
     def q() = join(s).groupBy(col("grp")).agg(sum(col("v")).as("sv"))
     assert(scans(q()).exists(_.contains(new java.io.File(mvDir).getName)), "must fire when fresh")

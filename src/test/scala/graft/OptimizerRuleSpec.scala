@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => Logical
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.{GraftRules, RowNumberDedupRewrite}
+import graft.plans.RowNumberDedupRewrite
 
 /** Plan-shape and semantics pins for [[graft.plans.RowNumberDedupRewrite]]
   * (the `row_number() = 1` → `min_by` optimizer rule). Each test runs in
@@ -35,7 +35,7 @@ class OptimizerRuleSpec extends AnyFunSuite {
 
   test("rewrites the idiom: no Window in the optimized plan, min_by aggregate instead") {
     val s = spark.newSession()
-    GraftRules.install(s, Seq(RowNumberDedupRewrite))
+    s.experimental.extraOptimizations = Seq(RowNumberDedupRewrite)
     val df = idiom(s)
     val opt = df.queryExecution.optimizedPlan
     assert(!opt.exists(_.isInstanceOf[LogicalWindow]), s"Window survived:\n$opt")
@@ -60,7 +60,7 @@ class OptimizerRuleSpec extends AnyFunSuite {
     val plain = spark.newSession()
     assert(!plain.experimental.extraOptimizations.contains(RowNumberDedupRewrite))
     val ruled = spark.newSession()
-    GraftRules.install(ruled, Seq(RowNumberDedupRewrite))
+    ruled.experimental.extraOptimizations = Seq(RowNumberDedupRewrite)
     assert(hasWindow(idiom(plain)) && !hasWindow(idiom(ruled)))
     def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), Option(r.get(1)).map(_.toString), r.getLong(2), r.getString(3)))
@@ -75,7 +75,7 @@ class OptimizerRuleSpec extends AnyFunSuite {
 
   test("does not fire on rank>1 filters, descending order, or global windows") {
     val s = spark.newSession()
-    GraftRules.install(s, Seq(RowNumberDedupRewrite))
+    s.experimental.extraOptimizations = Seq(RowNumberDedupRewrite)
     val base = s.range(100).selectExpr("id % 10 AS k", "id AS v")
     val byK = Window.partitionBy("k").orderBy(col("v").asc_nulls_first)
     val rn2 = base.withColumn("rn", row_number().over(byK)).filter(col("rn") === 2)

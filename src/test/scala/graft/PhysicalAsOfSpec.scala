@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.AsOfJoin
-import graft.plans.{AsOfMerge, GraftRules}
+import graft.plans.AsOfMerge
 
 /** The custom physical as-of operator (plans/AsOfMergeJoin): the gate
   * hash-proves aj4 against DuckDB; this spec pins what the hash can't —
@@ -51,7 +51,6 @@ class PhysicalAsOfSpec extends AnyFunSuite {
 
   test("edge semantics on a hand-built multi-partition frame") {
     import spark.implicits._
-    GraftRules.install(spark, rules = Nil)
     // left: includes a null key, a null ts, a key with no rights, and
     // two rows at the same (key, ts)
     val left = Seq(
@@ -89,7 +88,6 @@ class PhysicalAsOfSpec extends AnyFunSuite {
 
   test("exec matches the window spelling under forced multi-partition skew") {
     import spark.implicits._
-    GraftRules.install(spark, rules = Nil)
     // 500 lefts over 7 keys (one hot), 200 rights — cross-check whole frame
     val left = (0 until 500).map(i =>
       (i.toLong, (if (i % 10 < 7) 1L else (i % 10).toLong),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Generate
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.{GraftRules, RangeBinJoinRewrite}
+import graft.plans.RangeBinJoinRewrite
 
 /** Plan-shape and semantics pins for [[graft.plans.RangeBinJoinRewrite]]
   * (naive point-in-interval join → binned equi-join). Each test runs in
@@ -17,7 +17,7 @@ class RangeBinRewriteSpec extends AnyFunSuite {
 
   private def ruled(binUs: Long): SparkSession = {
     val s = spark.newSession()
-    GraftRules.install(s, Seq(RangeBinJoinRewrite))
+    s.experimental.extraOptimizations = Seq(RangeBinJoinRewrite)
     s.conf.set(RangeBinJoinRewrite.BinConfKey, binUs.toString)
     s
   }
@@ -121,7 +121,7 @@ class RangeBinRewriteSpec extends AnyFunSuite {
       col("pid") % 3 === col("iid") % 3 && col("ts") >= col("istart") && col("ts") < col("iend"))
     assert(!fired(equi), "must leave keyed range joins to the planner/operator")
     val noConf = spark.newSession()
-    GraftRules.install(noConf, Seq(RangeBinJoinRewrite))
+    noConf.experimental.extraOptimizations = Seq(RangeBinJoinRewrite)
     assert(!fired(naive(noConf)) && hasNestedLoop(naive(noConf)))
     val outer = pointsTs(r).join(intervalsTs(r),
       col("ts") >= col("istart") && col("ts") < col("iend"), "left")

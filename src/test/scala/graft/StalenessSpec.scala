@@ -39,7 +39,6 @@ class StalenessSpec extends AnyFunSuite {
     val mvDf = base.groupBy(col("g")).agg(sum(col("v")).as("sum_v"), count(lit(1)).as("cnt"))
     mvDf.write.parquet(mvDir)
     graft.plans.MaterializedViewRewrite.register(s, base, mvDf, mvDir)
-    graft.plans.GraftRules.install(s, Seq(graft.plans.MaterializedViewRewrite))
     s.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "true")
 
     def q(): DataFrame = // fresh read → fresh listing on every call
@@ -99,7 +98,6 @@ class StalenessSpec extends AnyFunSuite {
     (1 to 50).map(i => (i.toLong % 5, i.toLong)).toDF("fk", "m").write.parquet(factDir)
     (0L to 4L).map(k => (k, s"name$k")).toDF("k", "nm").write.parquet(dimDir)
     assert(graft.plans.TableConstraints.registerUnique(s, s.read.parquet(dimDir), "k"))
-    graft.plans.GraftRules.install(s, Seq(graft.plans.JoinEliminationRewrite))
     s.conf.set(graft.plans.JoinEliminationRewrite.ConfKey, "true")
 
     def q(): DataFrame =

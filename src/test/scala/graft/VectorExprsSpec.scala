@@ -120,7 +120,7 @@ class VectorExprsSpec extends AnyFunSuite {
       .select(VectorFunctions.ngramMd5($"w", 4)).collect()
     assert(short(0).getSeq[String](0).isEmpty)
     // null elements are skipped WITH their delimiter, like array_join:
-    // the function is SQL-registered, so non-split() inputs are reachable
+    // any array<string> column reaches the kernel, not only split()'s
     val withNull = Seq(Tuple1(Seq[String]("a", null, "b"))).toDF("w")
       .select(
         VectorFunctions.ngramMd5($"w", 2).as("kernel"),
@@ -194,13 +194,4 @@ class VectorExprsSpec extends AnyFunSuite {
       s"no codegen'd Project for cdc_segments in:\n$segFmt")
   }
 
-  test("SQL registration makes the kernels resolvable by name") {
-    VectorFunctions.register(spark)
-    df.createOrReplaceTempView("vecs")
-    val rows = spark.sql(
-      "SELECT id, long_dot(a, b) AS d, long_sq_l2(a, b) AS l FROM vecs WHERE a IS NOT NULL ORDER BY id")
-      .collect()
-    assert(rows(0).getLong(1) == 32L)
-    assert(rows(1).getLong(1) == -23L)
-  }
 }

@@ -3,8 +3,8 @@ package graft.app
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `app.Main` honours exactly `--run-ts <yyyy-MM-dd HH:mm:ss>` and
-  * `--out parquet:<path>|jdbc`; anything else is refused before a session
-  * starts.
+  * `--out parquet:<path>|jdbc`, and runs only with a YouGile config that
+  * can load something; anything else is refused before a session starts.
   */
 class MainArgsSpec extends AnyFunSuite {
   import Main.parseArgs
@@ -41,5 +41,38 @@ class MainArgsSpec extends AnyFunSuite {
     val ts = java.time.LocalDateTime.of(2026, 1, 1, 10, 0).format(Main.RunTsFormat)
     assert(ts == "2026-01-01 10:00:00")
     assert(parseArgs(List("--run-ts", ts)).isRight)
+  }
+
+  private val env = Map(
+    "YG_BASE_URL" -> "https://ru.yougile.com/api-v2/",
+    "YG_TOKEN" -> "t",
+    "YG_ACTUAL_BOARDS" -> "[\"Board A\"]")
+
+  private def refusal(env: Map[String, String]): String =
+    Main.checkConfig(env).swap.getOrElse(fail(s"accepted $env"))
+
+  test("a complete YouGile config is accepted") {
+    assert(Main.checkConfig(env).map(_.allowedBoards) == Right(Seq("Board A")))
+  }
+
+  test("a missing or empty YG_BASE_URL is refused, naming it") {
+    assert(refusal(env - "YG_BASE_URL").contains("YG_BASE_URL"))
+    assert(refusal(env + ("YG_BASE_URL" -> "")).contains("YG_BASE_URL"))
+  }
+
+  test("a YG_BASE_URL without its trailing slash is refused") {
+    val r = refusal(env + ("YG_BASE_URL" -> "https://ru.yougile.com/api-v2"))
+    assert(r.contains("YG_BASE_URL") && r.contains("'/'"), r)
+  }
+
+  test("a missing or empty YG_TOKEN is refused, naming it") {
+    assert(refusal(env - "YG_TOKEN").contains("YG_TOKEN"))
+    assert(refusal(env + ("YG_TOKEN" -> "")).contains("YG_TOKEN"))
+  }
+
+  test("an unset or empty board list is refused, naming YG_ACTUAL_BOARDS") {
+    for (boards <- Seq(None, Some("[]"), Some(""), Some(" , "), Some("[\"\"]")))
+      assert(refusal(boards.fold(env - "YG_ACTUAL_BOARDS")(b => env + ("YG_ACTUAL_BOARDS" -> b)))
+        .contains("YG_ACTUAL_BOARDS"), boards)
   }
 }

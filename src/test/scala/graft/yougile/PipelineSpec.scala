@@ -2,7 +2,7 @@ package graft.yougile
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SharedSpark
+import graft.{SharedSpark, SparkEntry}
 
 /** End-to-end over the committed fixture universe (FIXTURES.md §A): JSON
   * pages → paginated client → readers → transform → mart. Asserts the
@@ -18,6 +18,7 @@ class PipelineSpec extends AnyFunSuite {
   private lazy val bc = Pipeline.brdClmn(src, YouGileConfig.fixture)
   private lazy val assembled = Pipeline.assembled(src, bc)
   private lazy val mart = Pipeline.mart(src, YouGileConfig.fixture, Fixtures.runTs)
+  private lazy val allColumns = src.columns().select("id").as[String].collect().toSeq
 
   test("entity readers see the full universe through pagination") {
     assert(src.boards().count() == 4)
@@ -53,5 +54,30 @@ class PipelineSpec extends AnyFunSuite {
     val ts = mart.select("loaded_ts").distinct().as[java.sql.Timestamp].collect()
     assert(ts.toSeq == Seq(java.sql.Timestamp.valueOf(Fixtures.runTs)))
     assert(mart.filter($"board_name".isNull || $"column_name".isNull).count() == 0)
+  }
+
+  test("yg_dsv2_census counts every column's contracts, and some task has null subtasks") {
+    val got = SparkEntry.queries("yg_dsv2_census")(spark, "").collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val expected = src.contracts(allColumns).select("columnId", "subtasks").collect()
+      .groupBy(_.getString(0)).view
+      .mapValues(rs => (rs.length.toLong, rs.count(!_.isNullAt(1)).toLong)).toMap
+    assert(got == expected && got.nonEmpty)
+    assert(got.values.exists { case (n, withSubtasks) => withSubtasks < n },
+      "no null subtasks in the fixtures: the null-skipping count is vacuous")
+  }
+
+  test("the readers fetch every page while they plan; the executors only decode") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("yg_driver_fetch")
+    Files.list(Paths.get(Fixtures.jsonDir)).forEach(f => { Files.copy(f, dir.resolve(f.getFileName)); () })
+    val copy = new YouGileSource(spark, new JsonFixtureClient(dir.toString), YouGileConfig.fixture)
+    val contracts = copy.contracts(allColumns)
+    // the pages are gone before any task runs: a reader that fetched
+    // them inside a task would fail here
+    Files.list(dir).forEach(f => Files.delete(f))
+    Files.delete(dir)
+    val got = contracts.collect().toSeq.sortBy(_.getAs[String]("id"))
+    assert(got.nonEmpty && got == src.contracts(allColumns).collect().toSeq.sortBy(_.getAs[String]("id")))
   }
 }
