@@ -1,7 +1,7 @@
 package graft
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query against
@@ -14,12 +14,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * output column row-by-row with zero I/O, so the measured time is the
   * real transform work.
   *
-  * Each query runs SPARK_GRAFT_BENCH_RUNS times (default 3) and reports
-  * the **median**: single-shot numbers billed one-off JIT/codegen/GC to
-  * whichever query hit them, inflating the slow tail 10–20× over
-  * steady-state (VERDICT r02 "what's wrong" #2). Caches a run registers
-  * (e.g. the LSH signature frames) are dropped between runs, so every
-  * run measures the full plan, not a warm cache.
+  * Each query runs 3 times ([[Runs]], through [[timeRuns]], the loop
+  * `graft.Dev time` shares) and reports the **median**: single-shot
+  * numbers billed one-off JIT/codegen/GC to whichever query hit them,
+  * inflating the slow tail 10–20× over steady-state (VERDICT r02 "what's
+  * wrong" #2). Caches a run registers (e.g. the LSH signature frames)
+  * are dropped between runs, so every run measures the full plan, not a
+  * warm cache. An entry that measures well past its committed recording
+  * is re-timed in a fresh child JVM and gets a verdict (see `main`).
+  *
+  * Settings: SPARK_GRAFT_SF_DIR (scale directory), SPARK_GRAFT_CPUS
+  * (local[n]), SPARK_GRAFT_ONLY (entry filter, [[onlyEntries]]),
+  * SPARK_GRAFT_BENCH_BASELINE (the committed recording adjudication
+  * reads) and SPARK_GRAFT_BENCH_OUT (the artifact path).
   *
   * Failures are never swallowed into the timing: a failed query gets
   * "err" in the per-query map, is excluded from the total, and flips
@@ -70,33 +77,49 @@ object Bench {
     org.apache.spark.sql.GraftShims.dropTopLevelSort(df)
       .write.format("noop").mode("overwrite").save()
 
-  /** Fresh-JVM mover re-run (the SPARK_GRAFT_ADJUDICATE_FORK path):
-    * spawns ONE child JVM running `graft.Dev time` over all names —
-    * same classpath and JVM flags as this one (build.sbt's add-opens,
-    * `-D` and `-Xmx`) — and returns each name's median-of-3 (run 1
-    * absorbs session warmup and memo builds, the median discards it).
-    * stdout is drained BEFORE waitFor (pipe-buffer deadlock otherwise).
-    * Package-visible so BenchAdjudicationSpec can pin the round trip.
+  /** The contract's run count: every entry reports the median of 3. */
+  private[graft] val Runs = 3
+
+  /** The one timing loop (Bench's sweep and `graft.Dev time`): [[Runs]]
+    * runs of `query`, each timed from plan construction through the noop
+    * write, with [[sweepState]] after each so the next run (and the next
+    * entry) measures the full plan under its own memory. Times come back
+    * in run order.
+    */
+  private[graft] def timeRuns(spark: SparkSession, query: => DataFrame): Seq[Double] =
+    Seq.fill(Runs) {
+      val t0 = System.nanoTime()
+      try { noopWrite(query); (System.nanoTime() - t0) / 1e9 }
+      finally sweepState(spark)
+    }
+
+  /** The gate entries `SPARK_GRAFT_ONLY` (a comma list) selects for Bench
+    * and Verify; None when it is unset, which selects every entry. A name
+    * that is not a gate entry, or a list that names none, is refused: it
+    * would select nothing, and a run that measured or checked nothing
+    * would still exit 0. Both mains call this before a session starts.
+    */
+  private[graft] def onlyEntries(env: Map[String, String]): Option[Set[String]] =
+    env.get("SPARK_GRAFT_ONLY").map { raw =>
+      val names = raw.split(',').map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- SparkEntry.queries.keySet
+      require(names.nonEmpty, s"SPARK_GRAFT_ONLY names no entry: '$raw'")
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      names
+    }
+
+  /** Fresh-JVM mover re-run: spawns ONE child JVM running `graft.Dev
+    * time` over all names — same classpath and JVM flags as this one
+    * (build.sbt's add-opens, `-D` and `-Xmx`) — and returns each name's
+    * median-of-3 (run 1 absorbs session warmup and memo builds, the
+    * median discards it). stdout is drained on a daemon thread, so the
+    * timed wait can kill a hung child without deadlocking on a full pipe
+    * buffer; the timeout scales with the name count. Package-visible so
+    * BenchAdjudicationSpec can pin the round trip.
     */
   private[graft] def forkAdjudicate(names: Seq[String], sfDir: String)
-      : Map[String, Either[String, Double]] =
-    forkRuns(names, sfDir).map { case (n, e) => n -> e.map(median) }
-
-  private def median(ts: Seq[Double]): Double = ts(ts.size / 2) // sorted; upper on even n
-
-  private def f3(d: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-
-  /** `"name":[median,lo,hi]` of sorted run times: a `"spread"`/`"fork"` entry. */
-  private def spreadEntry(name: String, ts: Seq[Double]): String =
-    s""""$name":[${f3(median(ts))},${f3(ts.head)},${f3(ts.last)}]"""
-
-  /** Like [[forkAdjudicate]] but returns the SORTED per-entry run times,
-    * so a recording can persist a fresh-JVM [median, lo, hi] spread
-    * (r16 VERDICT #3). Timeout scales with the name count: a full
-    * 320-entry battery at 3 runs each is a ~15 min child, not a hang.
-    */
-  private[graft] def forkRuns(names: Seq[String], sfDir: String)
-      : Map[String, Either[String, Seq[Double]]] = {
+      : Map[String, Either[String, Double]] = {
     val javaBin = new java.io.File(sys.props("java.home"), "bin/java").getAbsolutePath
     val jvmFlags = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toSeq
@@ -105,12 +128,9 @@ object Bench {
     val pb = new ProcessBuilder(cmd: _*)
     pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
     pb.environment().put("SPARK_GRAFT_CPUS", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    pb.environment().put("SPARK_GRAFT_RUNS", "3")
     pb.redirectErrorStream(true)
     try {
       val proc = pb.start()
-      // drain stdout on a daemon thread so the TIMED waitFor below can
-      // kill a hung child without deadlocking on a full pipe buffer
       val out = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       val drainer = new Thread(() => {
         scala.io.Source.fromInputStream(proc.getInputStream).getLines()
@@ -130,10 +150,10 @@ object Bench {
         // a COMPLETE set of runs is required: a child that crashed
         // mid-entry would otherwise hand back run 1 — the warmup-laden
         // measurement the median protocol exists to discard — wearing
-        // a valid Right (review find)
+        // a valid Right
         n -> byName.get(n).map(_.map(_._2).sorted)
-          .filter(ts => ts.size >= 3 && (finished && code == 0))
-          .map(ts => Right(ts): Either[String, Seq[Double]])
+          .filter(ts => ts.size >= Runs && (finished && code == 0))
+          .map(ts => Right(median(ts)): Either[String, Double])
           .getOrElse(Left(
             if (!finished) "fork timeout"
             else if (code != 0) s"fork exit $code"
@@ -141,36 +161,22 @@ object Bench {
       }.toMap
     } catch {
       case e: Exception =>
-        names.map(_ -> (Left(s"fork: ${e.getClass.getSimpleName}"): Either[String, Seq[Double]])).toMap
+        names.map(_ -> (Left(s"fork: ${e.getClass.getSimpleName}"): Either[String, Double])).toMap
     }
   }
 
-  /** The committed recording at `path` as a JSON tree. A missing file
-    * is None quietly (a first recording has no baseline); a file that
-    * is not valid JSON is None with a loud warning naming `consequence`.
-    */
-  private def readRecording(path: String, consequence: String): Option[JsonNode] = {
-    val file = new java.io.File(path)
-    if (!file.isFile) None
-    else try Some(new ObjectMapper().readTree(file))
-    catch { case e: java.io.IOException =>
-      System.err.println(s"[bench] WARNING: baseline $path is not valid JSON " +
-        s"(${e.getClass.getSimpleName}) — $consequence")
-      None
-    }
-  }
+  private def median(ts: Seq[Double]): Double = ts(ts.size / 2) // sorted; upper on even n
 
-  /** name → hi of each `[median, lo, hi]` triple in object `field`. */
-  private def spreadHis(rec: JsonNode, field: String): Map[String, Double] =
-    rec.path(field).properties.asScala.collect {
-      case e if e.getValue.isArray && e.getValue.size == 3 &&
-          e.getValue.elements.asScala.forall(_.isNumber) =>
-        e.getKey -> e.getValue.get(2).asDouble
-    }.toMap
+  private def f3(d: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
+
+  /** `"name":[median,lo,hi]` of sorted run times: a `"spread"` entry. */
+  private def spreadEntry(name: String, ts: Seq[Double]): String =
+    s""""$name":[${f3(median(ts))},${f3(ts.head)},${f3(ts.last)}]"""
 
   /** Committed per-entry baseline (the recording this sweep is graded
     * against), read from the artifact path BEFORE this run overwrites
-    * it. Absent file / entry → no adjudication for that entry.
+    * it. Absent file / entry → no adjudication for that entry; a file
+    * that is not valid JSON → none at all, with a loud warning.
     *
     * Value is (median, hi): `hi` is the committed recording's per-entry
     * max-of-runs from its `"spread"` block when present (r15 VERDICT #7
@@ -184,14 +190,27 @@ object Bench {
     * sweep to a genuine 5× regression on that entry (r16 review #1) —
     * the clamp keeps VERDICT #7's fix without importing the outlier.
     */
-  private[graft] def readBaseline(path: String): Map[String, (Double, Double)] =
-    readRecording(path, "self-adjudication is OFF this sweep").fold(
-      Map.empty[String, (Double, Double)]) { rec =>
+  private[graft] def readBaseline(path: String): Map[String, (Double, Double)] = {
+    val off = "self-adjudication is OFF this sweep"
+    val file = new java.io.File(path)
+    val rec =
+      if (!file.isFile) None
+      else try Some(new ObjectMapper().readTree(file))
+      catch { case e: java.io.IOException =>
+        System.err.println(s"[bench] WARNING: baseline $path is not valid JSON " +
+          s"(${e.getClass.getSimpleName}) — $off")
+        None
+      }
+    rec.fold(Map.empty[String, (Double, Double)]) { rec =>
       // {"queries":{"name":sec,...}} — "err:..." string values carry no
       // baseline; {"spread":{"name":[median,lo,hi],...}} supplies hi
       val medians = rec.path("queries").properties.asScala
         .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }.toMap
-      val his = spreadHis(rec, "spread")
+      val his = rec.path("spread").properties.asScala.collect {
+        case e if e.getValue.isArray && e.getValue.size == 3 &&
+            e.getValue.elements.asScala.forall(_.isNumber) =>
+          e.getKey -> e.getValue.get(2).asDouble
+      }.toMap
       val parsed = medians.map { case (k, med) =>
         k -> (med, his.getOrElse(k, med).max(med).min(2 * med))
       }
@@ -199,10 +218,10 @@ object Bench {
       // whole sweep is exactly the failure mode the adjudication exists
       // to catch — make it loud (r14 ADVICE).
       if (parsed.isEmpty)
-        System.err.println(
-          s"[bench] WARNING: baseline $path exists but yielded 0 entries — self-adjudication is OFF this sweep")
+        System.err.println(s"[bench] WARNING: baseline $path exists but yielded 0 entries — $off")
       parsed
     }
+  }
 
   /** Adjudication trigger (r16 VERDICT #2): ratio gate OR absolute
     * excess. The ratio-only trigger (`> 2×hi`, hi clamped to 2×median)
@@ -218,76 +237,43 @@ object Bench {
     (sweepSec > 2 * committedHi && sweepSec - committedHi > 0.25) ||
       (sweepSec - committedHi > math.max(1.0, committedHi / 2))
 
+  /** Fixed overhead a fresh JVM pays over the long-lived sweep JVM on
+    * one entry: ~0.15 s measured on a 24 ms scan entry (session warmup
+    * absorbs the big pieces, per-query codegen/JIT residue remains).
+    */
+  private val FreshJvmAllowance = 0.5
+
   /** Explicit per-mover verdict (r16 VERDICT #3): the committed
     * recording is sweep-warmed while the forked adjudicator measures a
     * fresh JVM, so raw forked-vs-committed comparison manufactures
     * borderline "regressed" readings on JIT-heavy entries (the judge's
     * quiet-machine fresh-JVM medians for ir1/sw13 sat above committed
-    * hi with unchanged code). Like-for-like reference, in preference
-    * order: the committed recording's own FORKED hi (recorded via
-    * SPARK_GRAFT_RECORD_FORKED — same child-JVM protocol the
-    * adjudicator uses), else committed hi + the 0.5 s fresh-JVM
-    * allowance the sentinel floor was drilled at. The verdict then
-    * applies the SAME mover trigger to the isolated reading: an entry
-    * is "regressed" only if its fresh-JVM time would itself be flagged
-    * against the like-for-like reference.
+    * hi with unchanged code). The reference is committed hi plus the
+    * fresh-JVM allowance, and the verdict applies the SAME mover trigger
+    * to the isolated reading: an entry is "regressed" only if its
+    * fresh-JVM time would itself be flagged against that reference.
     */
-  private[graft] def adjudicationVerdict(isoSec: Double, committedHi: Double,
-      committedForkHi: Option[Double], forked: Boolean): String = {
-    val ref = if (forked) committedForkHi.getOrElse(committedHi + 0.5) else committedHi
-    if (isMover(isoSec, ref)) "regressed" else "cleared"
-  }
+  private[graft] def adjudicationVerdict(isoSec: Double, committedHi: Double): String =
+    if (isMover(isoSec, committedHi + FreshJvmAllowance)) "regressed" else "cleared"
 
-  /** Fresh-JVM spread from the committed recording's `"fork"` block
-    * (written when SPARK_GRAFT_RECORD_FORKED=1): name → hi. Absent
-    * block / entry → None upstream (the +0.5 s allowance path).
+  /** Load-canary verdict for the forked isolated pass. Sustained ambient
+    * load (other work on the machine at round end) forges the "real
+    * regression" signature — isolated ≈ sweep while a quiet re-run later
+    * clears the entry (VERDICT r14 #1: five false signatures, all ≤1.8×
+    * committed when re-measured). The canary: re-measure a known-stable
+    * sub-second sentinel entry FIRST, in the same child; if even the
+    * sentinel — whose code cannot have regressed in a way the committed
+    * recording didn't see — measures >2× its committed value AND more
+    * than the fresh-JVM allowance above it, the window is loaded and
+    * every isolated signature in the block is unusable. The absolute
+    * floor is the allowance because the fresh-JVM overhead alone is >2×
+    * any sub-100 ms sentinel and would otherwise taint every block
+    * vacuously; genuine window load inflates the sentinel well past it
+    * (the forced-load spec measures 7–8× on CPU-bound work). Pure so the
+    * forced-load spec pins it.
     */
-  private[graft] def readForkSpread(path: String): Map[String, Double] = {
-    val consequence = "adjudication verdicts fall back to the fresh-JVM allowance this sweep"
-    readRecording(path, consequence).fold(Map.empty[String, Double]) { rec =>
-      val his = spreadHis(rec, "fork")
-      // An absent block is a pre-fork recording, and an all-Left
-      // recording pass writes "fork":{} (ADVICE r17): nothing recorded,
-      // verdicts fall back to the allowance quietly. A NON-empty block
-      // that yields nothing means the like-for-like verdict reference
-      // was silently lost — the silent-disable failure mode readBaseline
-      // warns about (r17 review #2): make it loud.
-      if (his.isEmpty && rec.path("fork").size > 0)
-        System.err.println(s"[bench] WARNING: baseline $path has a fork block but its " +
-          s"entries match no [lo,med,hi] triple (format drift?) — $consequence")
-      his
-    }
-  }
-
-  /** Load-canary verdict for the self-adjudication isolated pass. The
-    * isolated re-run happens inside the same wall-clock window as the
-    * sweep, so sustained ambient load (the driver's concurrent
-    * round-end work) forges the "real regression" signature — isolated
-    * ≈ sweep while a fresh JVM later clears the entry (VERDICT r14 #1:
-    * five false signatures, all ≤1.8× committed when re-measured). The
-    * canary: re-measure a known-stable sub-second sentinel entry FIRST;
-    * if even the sentinel — whose code cannot have regressed in a way
-    * the committed recording didn't see — measures >2× its committed
-    * value, the window is loaded and every isolated signature in the
-    * block is unusable. Mirrors the movers' own trigger (ratio gate +
-    * a small absolute floor so micro-jitter on a ~50 ms entry cannot
-    * false-taint). Pure so the forced-load spec pins it.
-    *
-    * Fork mode raises the absolute floor to 0.5 s: the sentinel's
-    * committed value was recorded in a long-lived warmed JVM, while the
-    * forked re-run pays fresh-JVM fixed overhead (~0.15 s measured on a
-    * 24 ms scan entry — session warmup absorbs the big pieces but
-    * per-query codegen/JIT residue remains), which is >2× any sub-100ms
-    * sentinel and would taint EVERY forked block vacuously (found by
-    * this round's forced-mover drill). Genuine window load inflates the
-    * sentinel well past the floor — the forced-load spec measured 7–8×
-    * on CPU-bound work, which lands a ~0.15 s fresh-JVM sentinel above
-    * 1 s.
-    */
-  private[graft] def loadTainted(sentinelSec: Double, committedSec: Double,
-      forked: Boolean = false): Boolean =
-    sentinelSec > 2 * committedSec &&
-      sentinelSec - committedSec > (if (forked) 0.5 else 0.1)
+  private[graft] def loadTainted(sentinelSec: Double, committedSec: Double): Boolean =
+    sentinelSec > 2 * committedSec && sentinelSec - committedSec > FreshJvmAllowance
 
   /** Sentinel preference order: small, stable, pure-batch entries whose
     * committed times sat under 0.1 s for multiple rounds. First one
@@ -299,39 +285,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt // brief: local[32], 32 shuffle partitions
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    // Optional entry filter for targeted adjudication runs (comma list).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    val only = onlyEntries(sys.env)
     val spark = LocalSession(cpus)
     warmUp(spark)
-    var failed = List.empty[String]
-    // trackFailure=false for adjudication/sentinel re-runs: a failed
-    // RE-run must not bump the recording's failed count while the
-    // queries map still carries the entry's valid sweep time — the
-    // failed-count vs per-entry-map consistency is graded (r14 ADVICE).
-    // The error still surfaces as "err:..." inside the adjudication
-    // block itself.
-    def timeEntry(name: String, fn: (SparkSession, String) => DataFrame,
-        trackFailure: Boolean = true): Either[String, Seq[Double]] =
-      try {
-        val times = (1 to runs).map { _ =>
-          val t0 = System.nanoTime()
-          noopWrite(fn(spark, sfDir))
-          val sec = (System.nanoTime() - t0) / 1e9
-          // drop caches the run registered so the next run (and the
-          // next query) measures the full plan under its own memory
-          sweepState(spark)
-          sec
-        }.sorted
-        Right(times) // sorted runs: median = ts(n/2), spread = (head, last)
-      } catch {
-        case e: Throwable =>
-          if (trackFailure) failed ::= name
-          sweepState(spark)
-          System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
-          Left(e.getClass.getSimpleName)
-      }
     val entries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     // Shared-view consumer marker (VERDICT r18 #1/#8): an entry whose
@@ -341,69 +297,53 @@ object Bench {
     // memo-hit timing from a plan win. Counter reads sit OUTSIDE the
     // timed loop.
     val sharedViewConsumers = scala.collection.mutable.TreeSet.empty[String]
-    val rawResults = entries.map { case (name, fn) =>
+    val rawResults: Seq[(String, Either[String, Seq[Double]])] = entries.map { case (name, fn) =>
       val a0 = SharedFrames.accesses
-      val r = name -> timeEntry(name, fn)
+      // sorted runs: median = ts(n/2), spread = (head, last)
+      val r = try Right(timeRuns(spark, fn(spark, sfDir)).sorted) catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          Left(e.getClass.getSimpleName)
+      }
       if (SharedFrames.accesses > a0) sharedViewConsumers += name
-      r
+      name -> r
     }
     val results: Seq[(String, Either[String, Double])] =
       rawResults.map { case (n, e) => n -> e.map(median) }
+    val failed = results.count(_._2.isLeft)
     // Self-adjudication (VERDICT r13 #1): any entry that measured >2x its
-    // committed recording gets an isolated second pass at sweep end,
-    // after sweepState has cleared every other entry's residue and the
-    // sweep's positional context is gone. Both numbers go in the JSON so
-    // the >2x gate can tell a code regression (isolated ~= sweep, still
-    // slow) from sweep-positional noise (isolated ~= baseline). Absolute
-    // floor 0.25s so micro-entries' jitter doesn't trigger re-runs.
-    // The trigger reads the committed recording's HI (max-of-runs from
-    // its spread block), not its point median (r15 VERDICT #7): an entry
-    // whose committed median caught its own quiet tail (dd17, 2.19 s
-    // committed vs 3.3–3.4 s steady) re-flagged on every noisy sweep.
-    val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "bench_full.json")
-    val baseline = readBaseline(baselinePath)
-    // committed fresh-JVM spreads, when the recording carried them — the
-    // like-for-like reference for the forked adjudicator's verdicts
-    val forkBaseline = readForkSpread(baselinePath)
+    // committed recording gets an isolated second pass at sweep end.
+    // Both numbers go in the JSON so the >2x gate can tell a code
+    // regression (isolated ~= sweep, still slow) from sweep-positional
+    // noise (isolated ~= baseline). Absolute floor 0.25s so
+    // micro-entries' jitter doesn't trigger re-runs. The trigger reads
+    // the committed recording's HI (max-of-runs from its spread block),
+    // not its point median (r15 VERDICT #7): an entry whose committed
+    // median caught its own quiet tail (dd17, 2.19 s committed vs
+    // 3.3–3.4 s steady) re-flagged on every noisy sweep.
+    val baseline = readBaseline(sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "bench_full.json"))
     val movers = results.collect {
       case (name, Right(sec))
         if baseline.get(name).exists { case (_, hi) => isMover(sec, hi) } => name
     }
-    // Load canary (VERDICT r14 #1): measure the sentinel BEFORE the
-    // movers so the block records whether the isolated window itself was
-    // loaded. (sentinelSec, committed) — None when no mover triggered or
-    // no sentinel is in both the map and the baseline.
-    //
-    // Forked adjudication is the DEFAULT (r15 VERDICT #1): the isolated
-    // pass runs in a FRESH forked JVM (graft.Dev time, median-of-3)
-    // rather than this one. Two rounds in a row the same-JVM isolated
-    // pass forged the "real regression" signature (isolated ≈ sweep)
-    // on entries a fresh JVM cleared — r15's tx10 did it past a CLEAN
-    // sentinel, because the sentinel is a point probe and the whole
-    // in-window pass shares the sweep's wall-clock load. A fresh JVM is
-    // immune to this JVM's heap/GC state AND runs after the sweep's
-    // stragglers drain. The sentinel rides the same forked run, so the
-    // canary guards the fork's own wall-clock window.
-    // SPARK_GRAFT_ADJUDICATE_FORK=0 opts back into the in-JVM pass
-    // (dev loops where the ~30 s child startup matters).
-    val forkMode = !sys.env.get("SPARK_GRAFT_ADJUDICATE_FORK")
-      .exists(v => v == "0" || v.equalsIgnoreCase("false"))
-    var sentinel: Option[(String, Either[String, Double], Double)] = None
-    val adjudication: Seq[(String, (Double, Either[String, Double]))] =
-      if (movers.isEmpty) Nil
+    // The isolated pass runs in a FRESH forked JVM (graft.Dev time,
+    // median-of-3), not this one (r15 VERDICT #1): two rounds in a row a
+    // same-JVM isolated pass forged the "real regression" signature
+    // (isolated ≈ sweep) on entries a fresh JVM cleared, because it
+    // shared the sweep's heap/GC state and wall-clock load. A fresh JVM
+    // runs after the sweep's stragglers drain. Load canary (VERDICT r14
+    // #1): the sentinel is measured FIRST in the same child, so the block
+    // records whether the child's own window was loaded. sentinel is
+    // (name, sec, committed) — None when no mover triggered or no
+    // candidate is in both the map and the baseline.
+    val (adjudication, sentinel) =
+      if (movers.isEmpty) (Nil, None)
       else {
         val sentName = SentinelCandidates
           .find(s => SparkEntry.queries.contains(s) && baseline.contains(s))
-        val names = sentName.toSeq ++ movers
-        val isolated =
-          if (forkMode) forkAdjudicate(names, sfDir)
-          else {
-            System.gc() // settle before the isolated pass
-            names.map(n => n -> timeEntry(n, SparkEntry.queries(n), trackFailure = false)
-              .map(median)).toMap
-          }
-        sentinel = sentName.map(s => (s, isolated(s), baseline(s)._1))
-        movers.map(name => name -> (results.toMap.apply(name).toOption.get -> isolated(name)))
+        val isolated = forkAdjudicate(sentName.toSeq ++ movers, sfDir)
+        (movers.map(name => name -> (results.toMap.apply(name).toOption.get -> isolated(name))),
+          sentName.map(s => (s, isolated(s), baseline(s)._1)))
       }
     // Fail-safe: when movers were adjudicated but NO canary could run
     // (no candidate present in both the query map and the baseline),
@@ -413,60 +353,43 @@ object Bench {
     val tainted = movers.nonEmpty && (sentinel match {
       case None                               => true
       case Some((_, Left(_), _))              => true // sentinel itself failed: trust nothing
-      case Some((_, Right(sec), committed))   => loadTainted(sec, committed, forkMode)
+      case Some((_, Right(sec), committed))   => loadTainted(sec, committed)
     })
     val qs = results.map {
       case (k, Right(sec)) => s"\"$k\":$sec"
       case (k, Left(err))  => s"\"$k\":\"err:$err\""
     }.mkString("{", ",", "}")
     val total = results.collect { case (_, Right(sec)) => sec }.sum
-    // {"entries":{name:[sweep,isolated,committed]},"sentinel":[name,sec,
-    // committed],"load_tainted":bool} — isolated/sentinel sec may be
-    // "err:..." if the re-run failed. load_tainted=true means the
-    // sentinel itself inflated >2x its committed value, so every
-    // isolated≈sweep signature in this block is forged by ambient load
-    // and must not be read as a code regression.
+    // {"entries":{name:[sweep,isolated,committed,verdict]},"sentinel":
+    // [name,sec,committed],"load_tainted":bool,"forked":true} —
+    // isolated/sentinel sec may be "err:..." if the re-run failed.
+    // load_tainted=true means the sentinel itself inflated >2x its
+    // committed value, so every isolated≈sweep signature in this block
+    // is forged by ambient load and must not be read as a code
+    // regression. "forked" is always true: the isolated pass has one
+    // protocol, and recordings since r16 all carry the flag.
     val adjEntries = adjudication.map { case (name, (sweep, iso)) =>
       val isoS = iso.fold(e => s""""err:$e"""", f3)
-      // 4th element: the explicit verdict against the like-for-like
-      // reference (committed fork hi when recorded, else hi + the
-      // fresh-JVM allowance) — "err" if the isolated re-run failed
-      val verdict = iso.fold(_ => "err",
-        sec => adjudicationVerdict(sec, baseline(name)._2, forkBaseline.get(name), forkMode))
+      // 4th element: the explicit verdict against committed hi + the
+      // fresh-JVM allowance — "err" if the isolated re-run failed
+      val verdict = iso.fold(_ => "err", adjudicationVerdict(_, baseline(name)._2))
       s""""$name":[${f3(sweep)},$isoS,${f3(baseline(name)._1)},"$verdict"]"""
     }.mkString("{", ",", "}")
     val sentJson = sentinel.map { case (name, sec, committed) =>
       s""""$name",${sec.fold(e => s""""err:$e"""", f3)},${f3(committed)}"""
     }.fold("null")(s => s"[$s]")
     val adjJson =
-      s"""{"entries":$adjEntries,"sentinel":$sentJson,"load_tainted":$tainted,"forked":$forkMode}"""
+      s"""{"entries":$adjEntries,"sentinel":$sentJson,"load_tainted":$tainted,"forked":true}"""
     // Per-entry error bars (r15 VERDICT #7): the recording already runs
-    // each entry `runs` times; persist [median, lo, hi] alongside the
+    // each entry `Runs` times; persist [median, lo, hi] alongside the
     // median-only queries map (which stays scalar — it is the driver's
     // documented stdout contract). readBaseline feeds `hi` to the next
     // sweep's >2x trigger so quiet-window medians stop re-flagging.
     val spreadJson = rawResults.collect { case (k, Right(ts)) => spreadEntry(k, ts) }
       .mkString("{", ",", "}")
-    // Fresh-JVM recording spread (r16 VERDICT #3): with
-    // SPARK_GRAFT_RECORD_FORKED=1, re-time the whole battery once in a
-    // forked child JVM — the adjudicator's exact measurement protocol —
-    // and persist its [median, lo, hi] per entry as the "fork" block.
-    // Future adjudications then compare fresh-JVM against fresh-JVM
-    // instead of against the sweep-warmed medians, closing the
-    // asymmetry that kept manufacturing borderline flags on JIT-heavy
-    // entries. Opt-in: it costs a second battery pass, paid at
-    // committed-recording time, never on the driver's sweep.
-    val forkJson: Option[String] =
-      if (only.isEmpty && sys.env.get("SPARK_GRAFT_RECORD_FORKED")
-          .exists(v => v == "1" || v.equalsIgnoreCase("true"))) {
-        val all = forkRuns(entries.map(_._1), sfDir)
-        Some(all.toSeq.sortBy(_._1).collect { case (k, Right(ts)) => spreadEntry(k, ts) }
-          .mkString("{", ",", "}"))
-      } else None
-    val forkField = forkJson.fold("")(f => s""","fork":$f""")
     val sharedViewJson = sharedViewConsumers.map(n => s""""$n"""").mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spreadJson$forkField,"shared_view_consumers":$sharedViewJson,"sf":"$sfDir","failed":${failed.distinct.size},"adjudication":$adjJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spreadJson,"shared_view_consumers":$sharedViewJson,"sf":"$sfDir","failed":$failed,"adjudication":$adjJson}"""
     // The driver keeps only the last ~2000 stdout chars, and the full
     // per-query map is ~12 KB at 254 entries — it can NEVER fit, which
     // is why BENCH_r*.json carried "parsed": null for twelve rounds.
@@ -488,7 +411,7 @@ object Bench {
       case Left(err)  => s""""$k":"err:$err""""
     }).mkString("{", ",", "}")
     val shortLine =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"failed":${failed.distinct.size},"sf":"$sfDir","queries":$headQs,"adjudication":$adjJson,"full":"bench_full.json"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"failed":$failed,"sf":"$sfDir","queries":$headQs,"adjudication":$adjJson,"full":"bench_full.json"}"""
     // Persist the complete per-query map as a file artifact: the driver
     // captures a truncated log *tail*, so with 233 entries the printed
     // line can lose the first half of the alphabet (BENCH_r06.json kept
@@ -543,6 +466,6 @@ object Bench {
     println(line)
     println(shortLine)
     System.out.flush()
-    if (failed.nonEmpty) sys.exit(1)
+    if (failed > 0) sys.exit(1)
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * output only.
   *
   * {{{
-  * runMain graft.Dev time    <entry…>  # SPARK_GRAFT_RUNS runs each (default 3), sf0.1, local[SPARK_GRAFT_CPUS=8]
+  * runMain graft.Dev time    <entry…>  # Bench's 3-run loop per entry, sf0.1, local[SPARK_GRAFT_CPUS=8]
   * runMain graft.Dev explain [entry…]  # formatted physical plans (all gate entries without args), sf0.01, local[8]
   * runMain graft.Dev show    <entry…>  # first 50 result rows, sf0.01, local[8]
   * runMain graft.Dev stream  <entry…>  # micro-batch duration split, sf0.1, local[SPARK_GRAFT_CPUS=32]
@@ -39,28 +39,21 @@ object Dev {
     try body(spark) finally spark.stop()
   }
 
-  /** Per-query steady-state timing, no first-run codegen bill. Between
-    * runs it applies Bench's sweep, so a run never measures under
-    * another run's leftover storage. Bench's fresh-JVM adjudication
-    * parses the `<name> run<i> <sec> s` lines.
+  /** Per-query steady-state timing, no first-run codegen bill: each
+    * entry goes through Bench's own timing loop ([[Bench.timeRuns]]:
+    * three runs, Bench's sweep after each), and its runs print in run
+    * order. Bench's fresh-JVM adjudication parses the
+    * `<name> run<i> <sec> s` lines.
     */
   private def time(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
     Bench.warmUp(spark)
     // built once: queries/probeQueries are defs that re-wrap every entry
     // closure per call — inside the timed loop that cost would land in
     // run 1's measurement (review r18)
     val all = SparkEntry.allQueries
     names.foreach { name =>
-      (1 to runs).foreach { i =>
-        // Bench's exact between-run sweep — including the SharedFrames
-        // exemption, so run 1 pays any memo build and run 2+ measures
-        // warm (the r15 warm-memo ledger protocol), and including the
-        // streaming-state unload so sw* entries time cleanly multi-run.
-        Bench.sweepState(spark)
-        val t0 = System.nanoTime()
-        Bench.noopWrite(all(name)(spark, sfDir))
-        println(f"$name run$i ${(System.nanoTime()-t0)/1e9}%.2f s")
+      Bench.timeRuns(spark, all(name)(spark, sfDir)).zipWithIndex.foreach { case (sec, i) =>
+        println(f"$name run${i + 1} $sec%.2f s")
       }
     }
   }

@@ -14,22 +14,14 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the dump (and the oracle
+    // json) to the named entries; a gate run never sets it. An unknown
+    // name is refused before the session starts (Bench.onlyEntries):
+    // check_oracle.py exits 0 on an empty oracle map.
+    val only = Bench.onlyEntries(sys.env)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt // brief: local[32], 32 shuffle partitions
     val spark = LocalSession(cpus)
     new java.io.File(outDir).mkdirs()
-    // Dev loop: SPARK_GRAFT_ONLY=q1,q2 restricts the dump (and the oracle
-    // json) to the named entries. The driver never sets it, so the gate
-    // always runs the full surface. Unknown names are a HARD error: a
-    // typo would otherwise select zero entries, and check_oracle.py
-    // exits 0 on an empty oracle map — a green run that verified
-    // nothing (review r06).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
     def selected(name: String) = only.forall(_.contains(name))
     SparkEntry.queries.filter(e => selected(e._1)).foreach { case (name, fn) =>
       // Pre-delete the query's output dir: a throw below must leave NO

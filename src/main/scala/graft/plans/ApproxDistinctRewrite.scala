@@ -51,13 +51,15 @@ import graft.functions.{KmvNdv, NdvSketch}
   *
   * Batch-order honesty: like the other rules it is registered through
   * `experimental.extraOptimizations` ([[GraftRules.install]]), where
-  * user rules run LAST, after Spark has already expanded multi-distinct
-  * shapes. In a session the rule therefore catches the single-distinct
-  * shape (the common one; physical planning otherwise turns it into the
-  * two-exchange partial-distinct plan). ApproxDistinctRewriteSpec pins
-  * both sides: the rule applied to a multi-distinct analyzed plan leaves
-  * no distinct aggregate, and the end-to-end single-distinct path plans
-  * ObjectHashAggregate with no per-value exchange.
+  * user rules run LAST, after Spark's `RewriteDistinctAggregates` has
+  * already expanded multi-distinct shapes. A session therefore never
+  * rewrites a multi-distinct aggregate (it keeps Spark's Expand plan);
+  * the rule catches the single-distinct shape (the common one; physical
+  * planning otherwise turns it into the two-exchange partial-distinct
+  * plan). ApproxDistinctRewriteSpec's "a configured session rewrites
+  * only the single-distinct shape" pins both on optimized plans; its
+  * multi-distinct test applies the rule to an analyzed plan by hand,
+  * which no session does.
   */
 object ApproxDistinctRewrite extends Rule[LogicalPlan] {
 

@@ -41,10 +41,16 @@ object Pipeline {
     Transform.brdClmn(src.boards(), src.columns(), cfg.allowedBoards)
 
   /** The contract×lot grain before hub enrichment (§3.2's output). The
-    * column-id collect is safe: brd_clmn is bounded dimensional data.
+    * column-id collect is safe: brd_clmn is bounded dimensional data. A
+    * brd_clmn with no column (an allow-list naming no existing board: a
+    * typo, or a board renamed in YouGile) fails here, before any `tasks`
+    * page is requested, instead of loading an empty mart.
     */
   def assembled(src: YouGileSource, brdClmn: DataFrame): DataFrame = {
     val columnIds = brdClmn.select("column_id").collect().map(_.getString(0)).toSeq
+    if (columnIds.isEmpty)
+      throw new IllegalStateException(
+        s"no board column passed the allow-list ${src.cfg.allowedBoards.mkString("[", ", ", "]")}")
     Transform.taskAssembly(
       Transform.contractsPrepared(src.contracts(columnIds)),
       Transform.subtasksPrepared(src.subtaskObjects()))

@@ -17,7 +17,7 @@ import graft.yougile.Model._
   * through `read`: one eager page walk ([[Paginator.fetchAll]]) per
   * listing, or per board column, done before the json read plans.
   */
-class YouGileSource(spark: SparkSession, client: YouGileClient, cfg: YouGileConfig) {
+class YouGileSource(spark: SparkSession, client: YouGileClient, val cfg: YouGileConfig) {
 
   /** One API listing (of each of `columnIds` when set), decoded with
     * `schema`; `pageSize` is the listing's page limit.

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{Expand, LogicalPlan}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -117,6 +117,18 @@ class ApproxDistinctRewriteSpec extends AnyFunSuite {
         .orderBy("event_type").collect().toSeq
       val exact = withFlag(on = false)(_ => q.orderBy("event_type").collect().toSeq)
       assert(got == exact)
+    }
+  }
+
+  test("a configured session rewrites only the single-distinct shape") {
+    withFlag(on = true) { s =>
+      val grouped = Tables(s, dir, "events").groupBy("event_type")
+      val multi = grouped.agg(countDistinct(col("user_id")), countDistinct(col("event_id")))
+        .queryExecution.optimizedPlan
+      assert(multi.exists(_.isInstanceOf[Expand]) && kmvs(multi).isEmpty,
+        s"a session rewrote a multi-distinct aggregate:\n$multi")
+      val single = grouped.agg(countDistinct(col("user_id"))).queryExecution.optimizedPlan
+      assert(kmvs(single).size == 1, s"single-distinct not rewritten once:\n$single")
     }
   }
 

@@ -3,6 +3,7 @@ package graft.yougile
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{SharedSpark, SparkEntry}
+import graft.sinks.{NoopAlerter, ParquetSink}
 
 /** End-to-end over the committed fixture universe (FIXTURES.md §A): JSON
   * pages → paginated client → readers → transform → mart. Asserts the
@@ -65,6 +66,25 @@ class PipelineSpec extends AnyFunSuite {
     assert(got == expected && got.nonEmpty)
     assert(got.values.exists { case (n, withSubtasks) => withSubtasks < n },
       "no null subtasks in the fixtures: the null-skipping count is vacuous")
+  }
+
+  test("an allow-list that matches no board fails the run before any tasks page is requested") {
+    val fixtures = new JsonFixtureClient(Fixtures.jsonDir)
+    val methods = scala.collection.mutable.ArrayBuffer.empty[String]
+    val counting = new YouGileClient {
+      override def fetchPage(method: String, offset: Int, limit: Int,
+          includeDeleted: Boolean, columnId: Option[String]): String = {
+        methods.synchronized { methods += method }
+        fixtures.fetchPage(method, offset, limit, includeDeleted, columnId)
+      }
+    }
+    val out = java.nio.file.Files.createTempDirectory("yg_no_board").resolve("mart")
+    val cfg = YouGileConfig.fixture.copy(allowedBoards = Seq("No Such Board"))
+    val e = intercept[IllegalStateException](
+      Pipeline.run(spark, counting, cfg, Fixtures.runTs, new ParquetSink(out.toString), NoopAlerter))
+    assert(e.getMessage.contains("No Such Board"), e.getMessage)
+    assert(methods.contains("columns") && !methods.contains("tasks"), s"requests: $methods")
+    assert(!java.nio.file.Files.exists(out), "the sink wrote")
   }
 
   test("the readers fetch every page while they plan; the executors only decode") {
