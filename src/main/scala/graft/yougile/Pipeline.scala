@@ -17,7 +17,7 @@ import graft.sinks.{Alerter, MartSink}
   * so nothing is persisted and adaptive execution sizes every stage of
   * the plan (joins, dedup exchange and write) to the data. The lost-lot
   * count on the mart equals [[Transform.lostSubtasks]] on the assembly:
-  * the mart's left broadcast joins drop no assembled row, and the
+  * the mart's dimension lookups add and drop no assembled row, and the
   * full-row dedup keeps at least one copy of each.
   *
   * Because the counters come from the write, the data-loss alert fires
@@ -41,7 +41,8 @@ object Pipeline {
     Transform.brdClmn(src.boards(), src.columns(), cfg.allowedBoards)
 
   /** The contract×lot grain before hub enrichment (§3.2's output). The
-    * column-id collect is safe: brd_clmn is bounded dimensional data. A
+    * column-id collect is safe: brd_clmn is bounded dimensional data, and
+    * over the source's local frames it runs no Spark job. A
     * brd_clmn with no column (an allow-list naming no existing board: a
     * typo, or a board renamed in YouGile) fails here, before any `tasks`
     * page is requested, instead of loading an empty mart.

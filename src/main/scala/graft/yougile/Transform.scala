@@ -5,32 +5,52 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.yougile.Model._
 
-/** The transform half of the pipeline (SURVEY.md §3.2–§3.3), pure
-  * DataFrame → DataFrame so every stage is unit-testable and the whole
-  * chain is one lazy Catalyst plan (lineage replaces the reference's XCom
+/** The transform half of the pipeline (SURVEY.md §3.2–§3.3): every stage
+  * is a function of DataFrames, so each is unit-testable and the fact side
+  * is one lazy Catalyst plan (lineage replaces the reference's XCom
   * hand-offs).
   *
-  * Scale notes: boards/columns/sticker dictionaries/hubs are bounded
-  * dimensional data → broadcast joins, by hint. contracts ⋈ subtasks is
-  * the one fact-fact join (both sides grow with the workspace) → left to
-  * AQE, shuffling on `subtask_id`. The final full-row dropDuplicates is
-  * parity-mandated (ref `:319`) and is the single wide exchange.
+  * Scale notes: boards, columns and the sticker dictionaries are bounded
+  * dimensional data of a few dozen rows. `brdClmn` and `mart` collect them
+  * while they build the plan and apply them as map lookups in a
+  * projection, where the reference merges (`:101-106`, `:249-322`); each
+  * lookup fails on an id bound to two different values, which a left join
+  * would have turned into repeated rows. contracts ⋈ subtasks is the one
+  * fact-fact join (both sides grow with the workspace) → left to the
+  * planner and AQE. The final full-row dropDuplicates is parity-mandated
+  * (ref `:319`) and is the single wide exchange.
   */
 object Transform {
 
-  /** brd_clmn (ref `:109-138`): rename, J1 columns⟕boards (broadcast —
-    * bounded dims), F2 board allow-list filter.
+  /** `pairs` as a lookup map, keyed by the first element; null keys are
+    * dropped, since a null never matches a join key. A left join against
+    * `pairs` repeats a row per match, so a key bound to two different
+    * values fails, naming `what` and the key; an exact repeat is kept once,
+    * as the mart's full-row dedup would.
+    */
+  private def lookupMap[V](what: String, pairs: Seq[(String, V)]): Map[String, V] =
+    pairs.filter(_._1 != null).groupMap(_._1)(_._2).map { case (key, values) =>
+      val distinct = values.distinct
+      require(distinct.size == 1,
+        s"$what id $key maps to ${distinct.size} different values: ${distinct.mkString(", ")}")
+      key -> distinct.head
+    }
+
+  /** brd_clmn (ref `:109-138`): rename, J1 columns⟕boards as a lookup of
+    * the collected boards, F2 board allow-list filter.
     */
   def brdClmn(boards: DataFrame, columns: DataFrame, allowed: Seq[String]): DataFrame = {
-    val b = boards.select(
-      col("title").as("board_name"),
-      col("projectId").as("project_id"),
-      col("id").as("board_id"))
-    val c = columns.select(
-      col("title").as("column_name"),
-      col("boardId").as("board_id"),
-      col("id").as("column_id"))
-    c.join(broadcast(b), Seq("board_id"), "left")
+    val board = element_at(
+      typedLit(lookupMap("board", boards.select("id", "title", "projectId").collect().toSeq
+        .map(r => r.getString(0) -> ((r.getString(1), r.getString(2)))))),
+      col("boardId"))
+    columns
+      .select(
+        col("boardId").as("board_id"),
+        col("title").as("column_name"),
+        col("id").as("column_id"),
+        board.getField("_1").as("board_name"),
+        board.getField("_2").as("project_id"))
       .filter(col("board_name").isin(allowed: _*))
   }
 
@@ -54,16 +74,6 @@ object Transform {
         col("str_sticker_name"),
         col("state.id").as("str_sticker_state_id"),
         col("state.name").as("str_sticker_state_name"))
-
-  /** get_local_hub (ref `:101-106`): F1 equality slice + P2 rename + P1
-    * projection. Hubs are id→name lookups of at most a few dozen rows.
-    */
-  def localHub(states: DataFrame, hubName: String, stateIdCol: String, nameCol: String): DataFrame =
-    states
-      .filter(col("str_sticker_name") === hubName)
-      .select(
-        col("str_sticker_state_id").as(stateIdCol),
-        col("str_sticker_state_name").as(nameCol))
 
   /** Contract prep (ref `:220-222`): P2 rename, sticker-map extraction
     * (`stickers.<uuid>` dotted column in pandas → native map access here),
@@ -123,22 +133,35 @@ object Transform {
   /** The F4 probe's rows (the `yg_dq_lost` gate entry). */
   def lostSubtasks(assembled: DataFrame): DataFrame = assembled.filter(lostLot)
 
-  /** Mart build (ref `prepare_result_df_for_insert`, `:249-322`): 7
-    * chained broadcast left joins (brd_clmn + six hubs), the run-timestamp
-    * stamp (P4, parsed in the session TZ), the C1..C7 scalar block, the
-    * exact 22-column projection, and the parity-mandated full-row dedup.
+  /** Mart build (ref `prepare_result_df_for_insert`, `:249-322`): the
+    * brd_clmn lookup and the six hub lookups (ref `get_local_hub`,
+    * `:101-106`), the run-timestamp stamp (P4, parsed in the session TZ),
+    * the C1..C7 scalar block, the exact 22-column projection, and the
+    * parity-mandated full-row dedup. `brdClmn` and `states` are collected
+    * here, while the plan is built.
     */
   def mart(assembled: DataFrame, brdClmn: DataFrame, states: DataFrame, runTs: String): DataFrame = {
-    val hubs: Seq[(DataFrame, String)] = Seq(
-      localHub(states, HubNames.ContractStatus, "contract_status_state_id", "task_status") -> "contract_status_state_id",
-      localHub(states, HubNames.DeliveryTerm, "delivery_term_state_id", "delivery_term") -> "delivery_term_state_id",
-      localHub(states, HubNames.LotStatus, "lot_status_state_id", "subtask_status") -> "lot_status_state_id",
-      localHub(states, HubNames.LoadingPlace, "loading_place_state_id", "loading_place") -> "loading_place_state_id",
-      localHub(states, HubNames.ProvPaid, "prov_paid_state_id", "prov_paid") -> "prov_paid_state_id",
-      localHub(states, HubNames.FinalPaid, "final_paid_state_id", "final_paid") -> "final_paid_state_id")
+    val column = element_at(
+      typedLit(lookupMap("column",
+        brdClmn.select("column_id", "board_name", "project_id", "column_name").collect().toSeq
+          .map(r => r.getString(0) -> ((r.getString(1), r.getString(2), r.getString(3)))))),
+      col("column_id"))
 
-    val joined = hubs.foldLeft(assembled.join(broadcast(brdClmn), Seq("column_id"), "left")) {
-      case (df, (hub, key)) => df.join(broadcast(hub), Seq(key), "left")
+    // (hub dictionary, state-id column, output column)
+    val hubs = Seq(
+      (HubNames.ContractStatus, "contract_status_state_id", "task_status"),
+      (HubNames.DeliveryTerm, "delivery_term_state_id", "delivery_term"),
+      (HubNames.LotStatus, "lot_status_state_id", "subtask_status"),
+      (HubNames.LoadingPlace, "loading_place_state_id", "loading_place"),
+      (HubNames.ProvPaid, "prov_paid_state_id", "prov_paid"),
+      (HubNames.FinalPaid, "final_paid_state_id", "final_paid"))
+    val hubStates = states
+      .filter(col("str_sticker_name").isin(hubs.map(_._1): _*))
+      .select("str_sticker_name", "str_sticker_state_id", "str_sticker_state_name")
+      .collect().toSeq.groupMap(_.getString(0))(r => r.getString(1) -> r.getString(2))
+    val hubLookups = hubs.map { case (hub, stateId, out) =>
+      out -> element_at(
+        typedLit(lookupMap(s"hub '$hub' state", hubStates.getOrElse(hub, Nil))), col(stateId))
     }
 
     val emptyToDouble: Column => Column = c =>
@@ -146,7 +169,10 @@ object Transform {
 
     val strippedDates = translate(col("loading_dates"), " ", "") // C1
 
-    joined
+    assembled
+      .withColumns((hubLookups ++ Seq(
+        "board_name" -> column.getField("_1"),
+        "column_name" -> column.getField("_3"))).toMap)
       .withColumn("loaded_ts", to_timestamp(lit(runTs))) // P4/C6
       .withColumn("loading_start_date",
         to_date(get(split(strippedDates, "-"), lit(0)), "dd.MM.yyyy")) // C2+C4

@@ -57,9 +57,8 @@ trait YouGileClient {
 
 /** Pagination loop (S1, ref `get_yg_data` :48-76): accumulate `content`
   * elements while `paging.next`, advancing offset by limit. Returns one
-  * raw JSON string per entity — fed straight to
-  * `spark.read.schema(…).json(Dataset[String])`, so the driver never
-  * builds row objects itself.
+  * raw JSON string per entity, which [[YouGileSource]] decodes with
+  * Spark's own JSON parser.
   */
 object Paginator {
   private val om = new ObjectMapper()

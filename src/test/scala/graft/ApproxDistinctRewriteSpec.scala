@@ -73,12 +73,11 @@ class ApproxDistinctRewriteSpec extends AnyFunSuite {
   }
 
   test("null semantics match Count(distinct): nulls skipped, all-null and empty groups -> 0") {
-    import SharedSpark.spark.implicits._
-    val df = Seq[(String, java.lang.Long)](
-      ("a", 1L), ("a", 1L), ("a", 2L), ("a", null),
-      ("b", null), ("b", null)).toDF("g", "v")
     def rows(s: SparkSession) = {
-      df.sparkSession // anchor
+      import s.implicits._
+      val df = Seq[(String, java.lang.Long)](
+        ("a", 1L), ("a", 1L), ("a", 2L), ("a", null),
+        ("b", null), ("b", null)).toDF("g", "v")
       df.groupBy("g").agg(countDistinct(col("v")).as("n")).orderBy("g").collect().toSeq
     }
     val approx = withFlag(on = true)(rows)

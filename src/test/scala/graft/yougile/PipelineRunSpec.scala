@@ -1,7 +1,7 @@
 package graft.yougile
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import scala.collection.mutable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
@@ -27,31 +27,54 @@ class PipelineRunSpec extends AnyFunSuite {
     Pipeline.run(spark, new JsonFixtureClient(Fixtures.jsonDir),
       YouGileConfig.fixture, Fixtures.runTs, sink, alerter)
 
-  /** Task counts of every stage `body` ran. A marker job submitted after
-    * `body` queues behind all of `body`'s events on the listener bus, so
-    * once the listener sees it start, the stage list is complete.
+  /** Records the task count of every stage and the number of jobs that
+    * start while it is registered. `drain()` submits a marker job and
+    * waits for the listener to see it start: the marker queues behind the
+    * events of every job submitted before it, so after `drain()` the
+    * record is complete up to that point. Marker jobs are not counted.
     */
-  private def stageTasks[A](body: => A): (A, Seq[Int]) = {
-    val marker = s"pipeline-run-spec-${System.nanoTime()}"
-    val tasks = mutable.ArrayBuffer.empty[Int]
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        tasks.synchronized { tasks += e.stageInfo.numTasks; () }
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-          drained.countDown()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobDescription(marker)
+  private class WorkRecorder extends SparkListener {
+    private val marker = "pipeline-run-spec-"
+    private val markersSeen = new LinkedBlockingQueue[String]()
+    private val stageTasks = mutable.ArrayBuffer.empty[Int]
+    private var jobCount = 0
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized { stageTasks += e.stageInfo.numTasks; () }
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))) match {
+        case Some(d) if d.startsWith(marker) => markersSeen.put(d)
+        case _ => synchronized { jobCount += 1 }
+      }
+
+    def tasks: List[Int] = synchronized(stageTasks.toList)
+    def jobs: Int = synchronized(jobCount)
+    def reset(): Unit = synchronized { stageTasks.clear(); jobCount = 0 }
+
+    def drain(): Unit = {
+      val sc = spark.sparkContext
+      val id = s"$marker${System.nanoTime()}"
+      sc.setJobDescription(id)
       try sc.parallelize(Seq(1), 1).count()
       finally sc.setJobDescription(null)
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      (out, tasks.synchronized(tasks.toList))
-    } finally sc.removeSparkListener(listener)
+      assert(markersSeen.poll(60, TimeUnit.SECONDS) == id, "listener bus did not drain")
+    }
+  }
+
+  /** `body`, recorded from a drained bus until every event of `body` has
+    * been delivered; events of earlier work are not recorded.
+    */
+  private def recorded[A](body: WorkRecorder => A): (A, WorkRecorder) = {
+    val rec = new WorkRecorder
+    val sc = spark.sparkContext
+    sc.addSparkListener(rec)
+    try {
+      rec.drain()
+      rec.reset()
+      val out = body(rec)
+      rec.drain()
+      (out, rec)
+    } finally sc.removeSparkListener(rec)
   }
 
   test("one write computes the run: nothing cached, no stage at the shuffle-partition count") {
@@ -69,9 +92,10 @@ class PipelineRunSpec extends AnyFunSuite {
       }
     }
     spark.conf.set(key, partitions.toString)
-    val (rows, tasks) =
-      try stageTasks(run(sink, NoopAlerter))
+    val (rows, rec) =
+      try recorded(_ => run(sink, NoopAlerter))
       finally spark.conf.set(key, prev)
+    val tasks = rec.tasks
     assert(tasks.nonEmpty)
     assert(!tasks.contains(partitions),
       s"a stage ran one task per shuffle partition (uncoalesced): $tasks")
@@ -79,6 +103,23 @@ class PipelineRunSpec extends AnyFunSuite {
     assert(spark.sharedState.cacheManager.isEmpty)
     assert(rows == 240L)
     assert(rows == spark.read.parquet(dir).count())
+  }
+
+  test("a run launches at most 4 Spark jobs, at most 1 of them before the sink writes") {
+    val dir = Files.createTempDirectory("graft-run-jobs").toString + "/mart"
+    var jobsAtWrite = -1
+    val (rows, rec) = recorded { rec =>
+      run(new MartSink {
+        override def write(df: DataFrame): Unit = {
+          rec.drain()
+          jobsAtWrite = rec.jobs
+          new ParquetSink(dir).write(df)
+        }
+      }, NoopAlerter)
+    }
+    assert(rows == 240L)
+    assert(rec.jobs <= 4, s"${rec.jobs} Spark jobs in one run")
+    assert(jobsAtWrite <= 1, s"$jobsAtWrite Spark jobs before the sink's write")
   }
 
   test("a sink that never executes the mart fails the run promptly, with no data-loss alert") {

@@ -87,14 +87,14 @@ class PipelineSpec extends AnyFunSuite {
     assert(!java.nio.file.Files.exists(out), "the sink wrote")
   }
 
-  test("the readers fetch every page while they plan; the executors only decode") {
+  test("the readers fetch and decode every page while they plan") {
     import java.nio.file.{Files, Paths}
     val dir = Files.createTempDirectory("yg_driver_fetch")
     Files.list(Paths.get(Fixtures.jsonDir)).forEach(f => { Files.copy(f, dir.resolve(f.getFileName)); () })
     val copy = new YouGileSource(spark, new JsonFixtureClient(dir.toString), YouGileConfig.fixture)
     val contracts = copy.contracts(allColumns)
-    // the pages are gone before any task runs: a reader that fetched
-    // them inside a task would fail here
+    // the pages are gone before any task runs: a reader that fetched or
+    // decoded them inside a task would fail here
     Files.list(dir).forEach(f => Files.delete(f))
     Files.delete(dir)
     val got = contracts.collect().toSeq.sortBy(_.getAs[String]("id"))

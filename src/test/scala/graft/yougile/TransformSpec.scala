@@ -1,5 +1,6 @@
 package graft.yougile
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SharedSpark
@@ -44,7 +45,9 @@ class TransformSpec extends AnyFunSuite {
     TaskObj("l3", "Лот 3", 0L, None, None, None,
       Some(Map(Stickers.LoadingDates1 -> "05.06.2024")), None)) // single date
 
-  private def mart = {
+  private def mart: DataFrame = mart(boards, columns, dicts)
+
+  private def mart(boards: Seq[Board], columns: Seq[BoardColumn], dicts: Seq[StickerDict]): DataFrame = {
     val bc = Transform.brdClmn(boards.toDF(), columns.toDF(), Seq("Доска Трейдинг А"))
     val states = Transform.stickerStates(dicts.toDS().toDF())
     val assembled = Transform.taskAssembly(
@@ -130,5 +133,27 @@ class TransformSpec extends AnyFunSuite {
       Transform.subtasksPrepared(lots.toDS().toDF()))
     val lost = Transform.lostSubtasks(assembled).select("subtask_id").as[String].collect()
     assert(lost.toSeq == Seq("GONE"))
+  }
+
+  test("a hub state id bound to two names fails the mart, naming the hub and the id") {
+    val clash = StickerDict("zz2", HubNames.LotStatus, Seq(StickerState("ls1", "Выгружен")))
+    val e = intercept[IllegalArgumentException](mart(boards, columns, dicts :+ clash))
+    assert(e.getMessage.contains(HubNames.LotStatus) && e.getMessage.contains("ls1"), e.getMessage)
+  }
+
+  test("a board or column id bound to two different rows fails, naming the id") {
+    val board = intercept[IllegalArgumentException](
+      mart(boards :+ Board("b1", "Другое имя", "p1"), columns, dicts))
+    assert(board.getMessage.contains("board id b1"), board.getMessage)
+    val column = intercept[IllegalArgumentException](
+      mart(boards, columns :+ BoardColumn("c1", "Готово", "b1"), dicts))
+    assert(column.getMessage.contains("column id c1"), column.getMessage)
+  }
+
+  test("exact duplicate dimension rows give the same mart as without them") {
+    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val once = sorted(mart)
+    assert(once.length == 2)
+    assert(sorted(mart(boards ++ boards, columns ++ columns, dicts ++ dicts)) == once)
   }
 }
