@@ -3,14 +3,17 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The gate battery's entry points — see SURVEY.md §7.
   *
   * Queries are contributed by modules under graft.queries; each module
   * pairs Spark plans with DuckDB oracle SQL over the same parquet tables.
+  * The registry (`queries`, `oracleSql`, `probeQueries`, `allQueries`) is
+  * built once, on first use: [[configure]], which the product path calls,
+  * installs rules and confs and initializes no module.
   */
 object SparkEntry {
 
-  private val modules: Seq[QueryModule] =
+  private lazy val modules: Seq[QueryModule] =
     Seq(Parity, Mart, Extras, Stats, YouGileQueries, Dedup, Similarity, Text,
       Sampling, MultimodalQueries, Linkage, Graph, StreamingGate, Analytics,
       Retrieval)
@@ -57,7 +60,7 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     configured(modules.flatMap(_.defs))
 
   private def configured(defs: Seq[(String, (SparkSession, String) => DataFrame)]) =
@@ -67,22 +70,21 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a weaker rows-only check. */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     modules.flatMap(_.oracle).toMap
 
   /** Scale-boundary probes (see [[graft.queries.QueryModule.probes]]):
     * NOT part of the gate battery — resolvable by the dev mains only.
     */
-  def probeQueries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val probeQueries: Map[String, (SparkSession, String) => DataFrame] =
     configured(modules.flatMap(_.probes))
 
   /** Gate entries + ladder probes under one name resolution — the dev
-    * tools' (`graft.Dev` explain/show/time/stream) lookup map,
-    * built once per call site instead of re-spelled at each (review
-    * r18). A probe silently shadowing a gate entry would make the dev
-    * loop measure a different plan than the gate ships — fail instead.
+    * tools' (`graft.Dev` explain/show/time/stream) lookup map. A probe
+    * silently shadowing a gate entry would make the dev loop measure a
+    * different plan than the gate ships — fail instead.
     */
-  def allQueries: Map[String, (SparkSession, String) => DataFrame] = {
+  lazy val allQueries: Map[String, (SparkSession, String) => DataFrame] = {
     val (q, p) = (queries, probeQueries)
     val clash = q.keySet.intersect(p.keySet)
     require(clash.isEmpty, s"probe names shadow gate entries: $clash")

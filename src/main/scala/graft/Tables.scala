@@ -15,10 +15,6 @@ import org.apache.spark.sql.types._
   * matching DuckDB's microsecond truncation, so oracle comparisons agree.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
     else normalizeNtz(spark.read.parquet(s"$dir/$name.parquet"))

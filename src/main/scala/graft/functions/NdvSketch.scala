@@ -215,7 +215,7 @@ object NdvSketch {
     * not the bare hashes, must flow: exactness gates on θ = min(θᵢ)).
     * Same k as the inputs, or the merged trim bound is wrong.
     */
-  def ndvMergeSets(sk: Column, k: Int = DefaultK): Column =
+  def ndvMergeSets(sk: Column, k: Int): Column =
     org.apache.spark.sql.GraftShims.column(
       KmvMergeNdv(org.apache.spark.sql.GraftShims.expression(sk), k)
         .toAggregateExpression())

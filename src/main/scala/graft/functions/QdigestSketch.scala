@@ -117,7 +117,7 @@ private[graft] object QdCore {
     // existing nodes → DESC, then linear merge with leaves summing dups
     val na = nodes.filter(_.c > 0).toArray
     java.util.Arrays.sort(na, (a: QdNode, b: QdNode) => java.lang.Long.compare(b.id, a.id))
-    var merged = new ArrayBuffer[QdNode](na.length + leaves.length)
+    val merged = new ArrayBuffer[QdNode](na.length + leaves.length)
     var ai = 0
     var li = 0
     var n = 0L

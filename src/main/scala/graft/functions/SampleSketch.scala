@@ -77,18 +77,16 @@ class SampleMergeAgg(k: Int) extends Aggregator[Seq[SampItem], SampBuf, Seq[Samp
 }
 
 object SampleSketch {
-  val DefaultK = 64
-
   /** Bottom-k sample of (hash, value) rows; `hash` should be a
     * cross-engine-stable string (md5 of the row key, the house
     * convention). Null hash or value rows are skipped.
     */
-  def sampleSet(hash: Column, value: Column, k: Int = DefaultK): Column =
+  def sampleSet(hash: Column, value: Column, k: Int): Column =
     udaf(new SampleAgg(k)).apply(hash, value)
 
   /** Merge already-built samples (the rollup path). Same k as the
     * inputs, or the trim bound differs from a directly-built sample.
     */
-  def sampleMergeSets(sk: Column, k: Int = DefaultK): Column =
+  def sampleMergeSets(sk: Column, k: Int): Column =
     udaf(new SampleMergeAgg(k)).apply(sk)
 }

@@ -7,8 +7,8 @@ package graft.multimodal
   * so demux + [[JpegCodec.parseJpeg]] is a genuine video decode path —
   * container walk, frame extraction, every-Nth frame sampling, and
   * per-frame entropy decode — with zero native dependencies. (What
-  * stays behind the [[Multimodal.NativeDecoder]] seam is INTER-frame
-  * codecs — H.264's motion compensation — which MJPEG doesn't have:
+  * has no decoder here is INTER-frame codecs — H.264's motion
+  * compensation — which MJPEG doesn't have:
   * every frame is independently coded, which is also why it's the
   * classic frame-sampling-friendly format.)
   *

@@ -23,8 +23,7 @@ import graft.Tables
   * rates, dimensions, pixel/sample statistics from the payload bytes);
   * only the patent-laden video/audio codecs (H.264, AAC, MP3) need
   * native libraries this container lacks — progressive JPEG joined the
-  * pure-JVM decoders in r14 — so
-  * `NativeDecoder` stays an explicit `???` seam for those and
+  * pure-JVM decoders in r14 — and no decoder here handles them;
   * `FakeDecoder` produces deterministic features from the raw bytes for
   * fixture payloads. The Spark-side contract — schema, encoders, batch
   * shape, partitioning — is identical across all of them; swapping a
@@ -326,36 +325,6 @@ object Multimodal {
       val frames = if (m.kind == "video") sampleFrames(m.content, 64, 2).size else 1
       MediaFeatures(m.media_id, m.kind, n, mean, hash, frames)
     }
-  }
-
-  /** Remaining-codec seam — deliberately unimplemented in this
-    * environment. A production build binds an FFI/JNI codec here;
-    * everything above this trait is final. The seam has been narrowed
-    * three times and no longer covers "transform/entropy codecs" as a
-    * class: [[RawCodec.RawCodecDecoder]] decodes WAV/BMP,
-    * [[RawCodec.parseRle8Bmp]] BI_RLE8 BMP, [[RawCodec.parseAdpcmWav]]
-    * IMA ADPCM WAV, [[JpegCodec.parseJpeg]] BASELINE SEQUENTIAL
-    * GRAYSCALE JPEG — a real Huffman + dequantize + fixed-point-IDCT
-    * decode, ImageIO-conformance-pinned — [[PngCodec.parsePng]]
-    * 8-bit grayscale PNG (real zlib DEFLATE inflation + all five
-    * filter reconstructions), and [[GifCodec.parseGif]] GIF
-    * (variable-code-width LZW dictionary decompression, interlace
-    * row permutation; mm10–mm14 gate the compressed quintet against
-    * closed-form oracles — transform, LZ77+Huffman, and LZW
-    * families all decoded for real; [[JpegCodec.parseJpegColor]] adds
-    * baseline 4:2:0/4:4:4 YCbCr COLOR — interleaved MCUs, chroma
-    * upsample, fixed-point color convert — gated by mm16;
-    * [[RleVideoCodec]] adds INTER-FRAME video — MS-RLE8 keyframe +
-    * delta frames over a persistent canvas, gated by mm18; and
-    * [[JpegCodec.walkProgressive]] adds PROGRESSIVE JPEG — spectral
-    * selection + successive approximation, all four scan types with
-    * EOB runs — gated by mm19). What genuinely still needs an
-    * external library: the patent-laden video/audio families (H.264,
-    * AAC, MP3) — nothing else.
-    */
-  object NativeDecoder extends MediaDecoder {
-    override def features(m: MediaFile): MediaFeatures =
-      ??? // stub: requires a codec library absent from this environment
   }
 
   /** Batch feature extraction: narrow mapPartitions, decoder shared per

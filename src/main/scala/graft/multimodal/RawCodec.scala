@@ -17,8 +17,8 @@ import graft.multimodal.Multimodal.{MediaDecoder, MediaFeatures, MediaFile}
   *
   * Everything is deterministic per byte content (the [[MediaDecoder]]
   * contract) and allocation-light: parsing walks the buffer once, so a
-  * `mapPartitions` batch streams media at I/O speed. The `???` seam now
-  * covers ONLY compressed codecs ([[Multimodal.NativeDecoder]]).
+  * `mapPartitions` batch streams media at I/O speed. Only the
+  * patent-laden compressed codecs have no decoder here.
   */
 object RawCodec {
 

@@ -48,7 +48,7 @@ object SketchJoin {
     * collision could only merge two candidates' counts (overestimating
     * the top share), with 64-bit birthday odds.
     */
-  def topKeyCount(df: DataFrame, key: Column, mgK: Int = 64): Long = {
+  def topKeyCount(df: DataFrame, key: Column, mgK: Int): Long = {
     val cands = df.select(udaf(new MisraGriesAgg(mgK)).apply(xxhash64(key)).as("c"))
       .collect()(0).getSeq[Long](0)
     if (cands.isEmpty) return 0L
@@ -71,9 +71,8 @@ object SketchJoin {
     *                          at or above which the join is salted
     */
   def planLeftJoin(left: DataFrame, right: DataFrame, key: String,
-      dispersion: String, broadcastRowLimit: Long = 100000L,
-      skewShareMilli: Long = 100L, buckets: Int = 16,
-      mgK: Int = 64): (String, DataFrame) = {
+      dispersion: String, broadcastRowLimit: Long, skewShareMilli: Long,
+      buckets: Int, mgK: Int = 64): (String, DataFrame) = {
     val buildRows = right.count()
     if (buildRows <= broadcastRowLimit)
       ("broadcast", left.join(broadcast(right), Seq(key), "left"))

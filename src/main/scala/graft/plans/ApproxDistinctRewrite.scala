@@ -13,18 +13,25 @@ import graft.functions.{KmvNdv, NdvSketch}
   * [[graft.functions.KmvNdv]] over a masked `xxhash64`.
   *
   * Why: exact per-group distinct planning ships one exchange row per
-  * (group, value) — the partial pass cannot combine — and with SEVERAL
-  * distinct aggregates Spark plans an Expand that replicates every
-  * input row once per distinct group. The sketch is a plain aggregate:
-  * map-side partials combine into ≤ 2k longs per (group × partition),
-  * the Expand disappears entirely, and the answer is EXACT below k
-  * distinct values per group (theta never trims — the kept set IS the
+  * (group, value) — the partial pass cannot combine. The sketch is a
+  * plain aggregate: map-side partials combine into ≤ 2k longs per
+  * (group × partition), and the answer is EXACT below k distinct
+  * values per group (theta never trims — the kept set IS the
   * distinct hash set), degrading to a ±1/sqrt(k-2) estimate above
   * (1.1% at the default k = 8192). That exact-below-k property is what
   * makes the rewrite gate-checkable: on data whose per-group NDV sits
   * under k the rewritten query is hash-IDENTICAL to the exact spelling
   * (modulo 64-bit hash collisions: birthday odds ~3% of losing ONE
   * count at 10^9 distinct — the documented contract).
+  *
+  * In a session the rule reaches the single-distinct shape only.
+  * Spark's `RewriteDistinctAggregates` runs before `extraOptimizations`
+  * and has already turned SEVERAL distinct aggregates into an Expand
+  * (every input row once per distinct group) under two plain aggregates,
+  * leaving no distinct `Count` to match, so such a query keeps Spark's
+  * Expand (ApproxDistinctRewriteSpec pins this). Applied by hand to an
+  * analyzed plan, the same `Count` case rewrites every distinct count
+  * of that shape too.
   *
   * OPT-IN because past k this trades exactness for boundedness — the
   * session must set `spark.graft.approxDistinct=true` (sketch size

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.LeftOuter
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 /** Materialized-view roll-up rewrite (OPT-IN): an `Aggregate` over a
   * registered base table re-plans as a (re-)aggregation of its
@@ -88,8 +88,8 @@ object MaterializedViewRewrite extends Rule[LogicalPlan] {
     * fingerprint makes the audit durable: any data change stands the
     * whole rewrite down until re-registration re-audits.
     */
-  final case class MvDef(basePath: String, baseFingerprint: PlanScans.ScanFingerprint,
-      mvPath: String, groupCols: Seq[String], measures: Seq[Measure],
+  final case class MvDef(baseFingerprint: PlanScans.ScanFingerprint,
+      groupCols: Seq[String], measures: Seq[Measure],
       mvRelation: LogicalRelation, nullFreeSums: Set[String] = Set.empty)
 
   // (applicationId, basePath) -> MvDef; appId-keyed like SharedFrames so a
@@ -171,7 +171,7 @@ object MaterializedViewRewrite extends Rule[LogicalPlan] {
         }
         val ms = ae.collect {
           case Alias(AggregateExpression(fn, _, false, None, _), name) => fn match {
-            case Sum(c, _) => Measure(name, fn.sql, "sum", isCount = false)
+            case Sum(_, _) => Measure(name, fn.sql, "sum", isCount = false)
             case _: Count => Measure(name, fn.sql, "sum", isCount = true)
             case Min(_) => Measure(name, fn.sql, "min", isCount = false)
             case Max(_) => Measure(name, fn.sql, "max", isCount = false)
@@ -188,7 +188,7 @@ object MaterializedViewRewrite extends Rule[LogicalPlan] {
       case lr: LogicalRelation => lr
     }.getOrElse(throw new IllegalStateException(s"MV at $mvPath did not analyze to a scan"))
     catalog.put((spark.sparkContext.applicationId, basePath),
-      MvDef(basePath, baseRef.fingerprint, mvPath, groupCols, measures, mvRelation, nullFree))
+      MvDef(baseRef.fingerprint, groupCols, measures, mvRelation, nullFree))
     ()
   }
 
@@ -211,7 +211,7 @@ object MaterializedViewRewrite extends Rule[LogicalPlan] {
     * summarizes exactly the query's input.
     */
   final case class StarDef(factPath: String, factFp: PlanScans.ScanFingerprint,
-      dims: Seq[DimJoin], mvPath: String, groupCols: Seq[String], measures: Seq[Measure],
+      dims: Seq[DimJoin], groupCols: Seq[String], measures: Seq[Measure],
       mvRelation: LogicalRelation, nullFreeSums: Set[String] = Set.empty)
 
   // (applicationId, canonical star signature) -> StarDef
@@ -360,7 +360,7 @@ object MaterializedViewRewrite extends Rule[LogicalPlan] {
         val sumKids = ae.collect {
           case Alias(AggregateExpression(fn @ Sum(c, _), _, false, None, _), _) => (fn.sql, c)
         }
-        StarDef(factRef.path, factRef.fingerprint, sortedDims(dims), mvPath, groups, ms,
+        StarDef(factRef.path, factRef.fingerprint, sortedDims(dims), groups, ms,
           null, auditNullFree(spark, child, sumKids))
     }.getOrElse(throw new IllegalArgumentException("star MV definition must be an Aggregate"))
     val mvRelation = spark.read.parquet(mvPath).queryExecution.analyzed.collectFirst {
@@ -392,8 +392,7 @@ object MaterializedViewRewrite extends Rule[LogicalPlan] {
       // can only be that leg's column. A query referencing a name the
       // registration never did simply fails to match (missed rewrite).
       out <- tryRewrite(spark, agg, ge, ae, factFilter,
-        MvDef(sd.factPath, sd.factFp, sd.mvPath, sd.groupCols, sd.measures, sd.mvRelation,
-          sd.nullFreeSums))
+        MvDef(sd.factFp, sd.groupCols, sd.measures, sd.mvRelation, sd.nullFreeSums))
     } yield out
 
   /** Strip attribute-only Projects; allow one Filter. Returns the base

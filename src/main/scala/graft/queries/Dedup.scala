@@ -800,23 +800,6 @@ object Dedup extends QueryModule {
     else ngramJaccardPairsUncontracted(c)
   }
 
-  private val ngramJaccardSql =
-    s"""WITH $corpusSql,
-       |$shingledSql,
-       |anchored AS (
-       |  SELECT doc_id, md5(array_to_string(w[1:3], ' ')) AS anchor
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM corpus)
-       |  WHERE len(w) >= 3
-       |  UNION ALL
-       |  SELECT doc_id,
-       |    list_aggregate(list_transform(shingles, s -> md5('b:' || s)), 'min') AS anchor
-       |  FROM sh),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM anchored a JOIN anchored b
-       |    ON a.anchor = b.anchor AND a.doc_id < b.doc_id)
-       |${jaccardVerifySqlTail(NgramJaccardMin)}""".stripMargin
-
   // ---------------------------------------------------------------- cur1
   // The composed curation pass an LLM-data pipeline actually runs:
   // exact-dedup to keepers (semi-join on winning (hash, doc_id) pairs —
@@ -1660,37 +1643,6 @@ object Dedup extends QueryModule {
       .drop("ic")
       .filter(col("containment_ppm") >= ContainmentMinPpm)
   }
-
-  private val containmentPairsSql =
-    s"""WITH $corpusSql,
-       |sh AS (
-       |  SELECT doc_id, list_sort(${shingleListSql(n = 3, hashed = true)}) AS shingles
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM corpus)
-       |  WHERE len(w) >= 3),
-       |pr AS (
-       |  SELECT doc_id AS doc_a, len(shingles) AS na,
-       |    unnest(shingles[1 : len(shingles) // 5 + 1]) AS sh_h,
-       |    generate_subscripts(shingles[1 : len(shingles) // 5 + 1], 1) AS i
-       |  FROM sh),
-       |ix AS (
-       |  SELECT doc_id AS doc_b, len(shingles) AS nb, unnest(shingles) AS sh_h,
-       |    generate_subscripts(shingles, 1) AS j
-       |  FROM sh),
-       |cand AS (
-       |  SELECT DISTINCT doc_a, doc_b FROM pr JOIN ix USING (sh_h)
-       |  WHERE doc_a <> doc_b
-       |    AND 5 * (least(na - i, nb - j) + 1) >= 4 * na)
-       |SELECT doc_a, doc_b,
-       |  CAST(len(sa.shingles) AS BIGINT) AS na,
-       |  CAST(len(sb.shingles) AS BIGINT) AS nb,
-       |  CAST(len(list_intersect(sa.shingles, sb.shingles)) AS BIGINT) * 1000000
-       |    // len(sa.shingles) AS containment_ppm
-       |FROM cand
-       |JOIN sh sa ON cand.doc_a = sa.doc_id
-       |JOIN sh sb ON cand.doc_b = sb.doc_id
-       |WHERE CAST(len(list_intersect(sa.shingles, sb.shingles)) AS BIGINT) * 1000000
-       |    // len(sa.shingles) >= $ContainmentMinPpm
-       |ORDER BY doc_a NULLS FIRST, doc_b NULLS FIRST""".stripMargin
 
   // ---------------------------------------------------------------- dd17
   /** STOP-SHINGLE–capped containment — dd12's documented open-web lever,

@@ -652,9 +652,10 @@ object Extras extends QueryModule {
     * once pairing, strict upper bound, null drops); RangeBinRewriteSpec
     * pins the plan shape. Intervals are 2-hour windows opened at every
     * 97th event; bin = the window span, so each interval replicates to
-    * ≤ 2 bins. The conf is sticky on the session by design — the rule
-    * only ever fires on keyless containment joins, and this entry owns
-    * the only one in the gate.
+    * ≤ 2 bins. The frame is built on a child session (`newSession`:
+    * shared SparkContext and catalog, isolated conf), so the bin width
+    * dies with this entry instead of switching the rewrite on for every
+    * later entry on the caller's session.
     */
   // ---------------------------------------------------------------- opt3
   /** Large literal IN-list REWRITTEN by the engine
@@ -699,9 +700,8 @@ object Extras extends QueryModule {
     * explosion (ApproxDistinctRewriteSpec pins that regime plus the
     * plan shape).
     *
-    * Unlike opt2/opt3's sticky flags (safe there: those rules only
-    * fire on shapes their entries own), approx-distinct would rewrite
-    * OTHER entries' count-distincts, so this entry scopes the flag: it
+    * Approx-distinct would rewrite OTHER entries' count-distincts if
+    * its flag stayed on the caller's session, so this entry scopes it: it
     * optimizes its plan under the flag, pins the REWRITTEN plan into
     * the returned frame, and restores the flag before returning —
     * re-optimization at execution time is a no-op on the already-
@@ -730,7 +730,8 @@ object Extras extends QueryModule {
       |FROM events GROUP BY event_type
       |ORDER BY event_type NULLS FIRST""".stripMargin
 
-  private def rangeBinAuto(s: SparkSession, dir: String): DataFrame = {
+  private def rangeBinAuto(s0: SparkSession, dir: String): DataFrame = {
+    val s = graft.SparkEntry.configure(s0.newSession())
     s.conf.set(graft.plans.RangeBinJoinRewrite.BinConfKey, (2L * 3600 * 1000000).toString)
     val ev = t(s, dir, "events").select("event_id", "user_id", "ts")
     val win = t(s, dir, "events")

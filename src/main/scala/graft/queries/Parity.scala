@@ -29,10 +29,6 @@ object Parity extends QueryModule {
 
   /** Exact 2-decimal value → integer 1e-2 units (see q01 scale note). */
   private def e2(c: Column): Column = round(c * 100).cast(LongType)
-  /** Total order with pinned null position (Spark defaults nulls-first,
-    * DuckDB nulls-last — every oracle ORDER BY carries NULLS FIRST too). */
-  private def sortAsc(df: DataFrame, cols: String*): DataFrame =
-    df.orderBy(cols.map(col(_).asc_nulls_first): _*)
 
   // ---------------------------------------------------------------- q01
   // §2.8 D1 + groupBy aggregation (TPC-H Q1 shape): the engine's headline

@@ -127,4 +127,18 @@ class RangeBinRewriteSpec extends AnyFunSuite {
       col("ts") >= col("istart") && col("ts") < col("iend"), "left")
     assert(!fired(outer), "only INNER joins preserve the drop-null/drop-empty semantics")
   }
+
+  test("opt2 gate entry leaves the caller's bin width as it was") {
+    val s = SparkEntry.configure(spark.newSession())
+    // one event a minute: every 97th opens a 2-hour window over ~120 of them
+    val dir = java.nio.file.Files.createTempDirectory("opt2").toString
+    s.range(2000).selectExpr("id AS event_id", "id % 7 AS user_id",
+      "timestamp_micros(id * 60000000) AS ts").write.parquet(s"$dir/events.parquet")
+    val before = s.conf.getOption(RangeBinJoinRewrite.BinConfKey)
+    val df = SparkEntry.queries("opt2_range_bin_auto")(s, dir)
+    assert(fired(df), "the entry's own plan must still take the range-bin rewrite")
+    assert(df.count() > 0)
+    assert(s.conf.getOption(RangeBinJoinRewrite.BinConfKey) == before,
+      "opt2 switched the range-bin rewrite on for every later entry on this session")
+  }
 }
