@@ -42,6 +42,12 @@ object Bench {
     * execution memory of every later entry (the round-6 regressed
     * cluster sat right after the checkpoint users). Blocking unpersist
     * so the release is visible to the *next* timed run, not eventual.
+    *
+    * Callers pass the entry's session (the returned frame's
+    * `sparkSession`): an entry runs on its own session clone, and the
+    * stream stop and the memory-sink view drop act on that session
+    * only. The cache, the persisted RDDs and the state store are shared
+    * by every session of the context.
     */
   private[graft] def sweepState(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
@@ -80,17 +86,28 @@ object Bench {
   /** The contract's run count: every entry reports the median of 3. */
   private[graft] val Runs = 3
 
+  /** `use` the frame `query` returns, then [[sweepState]] the frame's
+    * session (`spark` when `query` throws): Bench, Verify and
+    * `graft.Dev time|stream` run every entry through this.
+    */
+  private[graft] def swept[A](spark: SparkSession, query: => DataFrame)(use: DataFrame => A): A = {
+    var ran = spark
+    try {
+      val df = query
+      ran = df.sparkSession
+      use(df)
+    } finally sweepState(ran)
+  }
+
   /** The one timing loop (Bench's sweep and `graft.Dev time`): [[Runs]]
     * runs of `query`, each timed from plan construction through the noop
-    * write, with [[sweepState]] after each so the next run (and the next
-    * entry) measures the full plan under its own memory. Times come back
-    * in run order.
+    * write, [[swept]] so the next run (and the next entry) measures the
+    * full plan under its own memory. Times come back in run order.
     */
   private[graft] def timeRuns(spark: SparkSession, query: => DataFrame): Seq[Double] =
     Seq.fill(Runs) {
       val t0 = System.nanoTime()
-      try { noopWrite(query); (System.nanoTime() - t0) / 1e9 }
-      finally sweepState(spark)
+      swept(spark, query) { df => noopWrite(df); (System.nanoTime() - t0) / 1e9 }
     }
 
   /** The gate entries `SPARK_GRAFT_ONLY` (a comma list) selects for Bench

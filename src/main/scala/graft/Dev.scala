@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -88,38 +89,43 @@ object Dev {
   }
 
   /** Decomposition of the streaming gates' micro-batch cost (r16 VERDICT
-    * #6): a JVM-wide [[StreamingQueryListener]] captures every
-    * QueryProgressEvent fired while a named gate entry runs, then prints
-    * per entry: batch count, rows, and the duration split Spark itself
-    * reports (triggerExecution = the whole batch; addBatch = the actual
-    * work; the rest — offset log, commit log, state commit, plan
-    * re-init — is micro-batch LIFECYCLE that exists at any data volume).
+    * #6): a [[SparkListener]] on the context's shared bus captures every
+    * streaming QueryProgressEvent fired while a named gate entry runs,
+    * then prints per entry: batch count, rows, and the duration split
+    * Spark itself reports (triggerExecution = the whole batch; addBatch =
+    * the actual work; the rest — offset log, commit log, state commit,
+    * plan re-init — is micro-batch LIFECYCLE that exists at any data
+    * volume). The bus is the one place that sees them: each entry runs
+    * on its own session clone, and a clone's queries report to the
+    * clone's `streams`, not to this session's.
     */
   private def stream(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
     case class B(qid: java.util.UUID, batchId: Long, rows: Long,
         durations: Map[String, Long])
     val batches = new scala.collection.mutable.ArrayBuffer[B]()
-    // onQueryStarted is delivered SYNCHRONOUSLY inside query start, so
-    // this set is complete by the time an entry's body returns — unlike
-    // progress events, which ride the async bus. Attribution keys on it:
-    // an entry owns exactly the events whose qid started during it, so
-    // a prior query whose progress events ALL arrived late can never be
-    // counted into the next entry (review r18 — the tag-and-drop by
-    // previously-SEEN qids missed the zero-events-seen case).
+    // Attribution keys on the started set: an entry owns exactly the
+    // events whose qid started during it, so a prior query whose
+    // progress events ALL arrived late can never be counted into the
+    // next entry (review r18 — the tag-and-drop by previously-SEEN qids
+    // missed the zero-events-seen case). Started events ride the same
+    // asynchronous bus ahead of their query's progress events, so the
+    // set is read only once settled() has drained the bus.
     val started = scala.collection.mutable.Set[java.util.UUID]()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-        started.synchronized { started += e.id; () }
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-        batches.synchronized {
-          import scala.jdk.CollectionConverters._
-          batches += B(e.progress.id, e.progress.batchId, e.progress.numInputRows,
-            e.progress.durationMs.asScala.map { case (k, v) => k -> v.longValue() }.toMap)
-          ()
-        }
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: StreamingQueryListener.QueryStartedEvent =>
+          started.synchronized { started += s.id; () }
+        case p: StreamingQueryListener.QueryProgressEvent =>
+          batches.synchronized {
+            import scala.jdk.CollectionConverters._
+            batches += B(p.progress.id, p.progress.batchId, p.progress.numInputRows,
+              p.progress.durationMs.asScala.map { case (k, v) => k -> v.longValue() }.toMap)
+            ()
+          }
+        case _ => ()
+      }
     }
-    spark.streams.addListener(listener)
+    spark.sparkContext.addSparkListener(listener)
     // progress events arrive ASYNCHRONOUSLY on the listener bus —
     // awaitTermination returning does not mean the final batch's event
     // was delivered (r17 review #3). Snapshot only once the capture has
@@ -146,11 +152,12 @@ object Dev {
       started.synchronized(started.clear())
       val query = SparkEntry.allQueries(name)
       val t0 = System.nanoTime()
-      Bench.noopWrite(query(spark, sfDir))
-      val wall = (System.nanoTime() - t0) / 1e9
-      Bench.sweepState(spark)
+      val wall = Bench.swept(spark, query(spark, sfDir)) { df =>
+        Bench.noopWrite(df); (System.nanoTime() - t0) / 1e9
+      }
+      val captured = settled()
       val entryQids = started.synchronized(started.toSet)
-      val (own, bleed) = settled().partition(b => entryQids.contains(b.qid))
+      val (own, bleed) = captured.partition(b => entryQids.contains(b.qid))
       if (bleed.nonEmpty)
         println(s"   NOTE: dropped ${bleed.size} straggler event(s) from a prior entry's query")
       val bs = own.sortBy(_.batchId)

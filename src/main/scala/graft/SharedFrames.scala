@@ -63,24 +63,28 @@ object SharedFrames {
     * failure mode (two concurrent Lloyd trainings competing for the
     * same executor memory). If entries ever run in parallel, switch to
     * computeIfAbsent over a per-key lazy holder.
+    *
+    * The frame comes back on `spark`: each gate entry runs on its own
+    * session clone, and a frame left on the clone of the entry that
+    * built it would plan the consumer's query under that entry's confs.
     */
   def memoize(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     accessCount.incrementAndGet()
     val k = (spark.sparkContext.applicationId, key)
     val cur = memo.get(k)
-    if (cur != null && alive(cur)) return cur
-    memo.synchronized {
+    val cp = if (cur != null && alive(cur)) cur else memo.synchronized {
       val again = memo.get(k)
       if (again != null && alive(again)) again
       else {
         val built = build
-        val cp = built.localCheckpoint() // eager: materializes the blocks
+        val fresh = built.localCheckpoint() // eager: materializes the blocks
         built.unpersist()
-        org.apache.spark.sql.GraftShims.checkpointedRdd(cp).foreach(r => ids.add(r.id))
-        memo.put(k, cp)
-        cp
+        org.apache.spark.sql.GraftShims.checkpointedRdd(fresh).foreach(r => ids.add(r.id))
+        memo.put(k, fresh)
+        fresh
       }
     }
+    org.apache.spark.sql.GraftShims.ofRows(spark, cp.queryExecution.logical)
   }
 
   /** Drop every shared frame of this session (end-of-sweep hygiene). */

@@ -9,7 +9,9 @@ import graft.queries._
   * pairs Spark plans with DuckDB oracle SQL over the same parquet tables.
   * The registry (`queries`, `oracleSql`, `probeQueries`, `allQueries`) is
   * built once, on first use: [[configure]], which the product path calls,
-  * installs rules and confs and initializes no module.
+  * installs rules and confs and initializes no module. Every entry call
+  * runs on its own configured clone of the caller's session, so the
+  * entry sees the caller's confs and keeps what it sets to itself.
   */
 object SparkEntry {
 
@@ -65,7 +67,8 @@ object SparkEntry {
 
   private def configured(defs: Seq[(String, (SparkSession, String) => DataFrame)]) =
     defs.toMap.map { case (name, fn) =>
-      name -> ((s: SparkSession, dir: String) => fn(configure(s), dir))
+      name -> ((s: SparkSession, dir: String) =>
+        fn(configure(org.apache.spark.sql.GraftShims.cloneSession(s)), dir))
     }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -22,17 +22,11 @@ object Bucketing {
     // any orphaned location before writing
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     val warehouse = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    deleteRecursively(new java.io.File(warehouse, table))
+    org.apache.spark.sql.GraftShims.deleteRecursively(new java.io.File(warehouse, table))
     df.write
       .mode(SaveMode.Overwrite)
       .bucketBy(buckets, key)
       .sortBy(key)
       .saveAsTable(table)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
-    f.delete()
-    ()
   }
 }

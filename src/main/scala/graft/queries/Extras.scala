@@ -652,10 +652,7 @@ object Extras extends QueryModule {
     * once pairing, strict upper bound, null drops); RangeBinRewriteSpec
     * pins the plan shape. Intervals are 2-hour windows opened at every
     * 97th event; bin = the window span, so each interval replicates to
-    * ≤ 2 bins. The frame is built on a child session (`newSession`:
-    * shared SparkContext and catalog, isolated conf), so the bin width
-    * dies with this entry instead of switching the rewrite on for every
-    * later entry on the caller's session.
+    * ≤ 2 bins.
     */
   // ---------------------------------------------------------------- opt3
   /** Large literal IN-list REWRITTEN by the engine
@@ -699,29 +696,14 @@ object Extras extends QueryModule {
     * degrades to a 1.1%-sigma estimate instead of an exchange
     * explosion (ApproxDistinctRewriteSpec pins that regime plus the
     * plan shape).
-    *
-    * Approx-distinct would rewrite OTHER entries' count-distincts if
-    * its flag stayed on the caller's session, so this entry scopes it: it
-    * optimizes its plan under the flag, pins the REWRITTEN plan into
-    * the returned frame, and restores the flag before returning —
-    * re-optimization at execution time is a no-op on the already-
-    * rewritten aggregate.
     */
   private def approxDistinctAuto(s: SparkSession, dir: String): DataFrame = {
-    val key = graft.plans.ApproxDistinctRewrite.ConfKey
-    val prior = s.conf.getOption(key)
-    s.conf.set(key, "true")
-    try {
-      val df = t(s, dir, "events")
-        .groupBy("event_type")
-        .agg(countDistinct(col("user_id")).as("n_users"),
-          count(lit(1)).as("n_events"))
-        .orderBy(col("event_type").asc_nulls_first)
-      org.apache.spark.sql.GraftShims.ofRows(s, df.queryExecution.optimizedPlan)
-    } finally prior match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.set(key, "false")
-    }
+    s.conf.set(graft.plans.ApproxDistinctRewrite.ConfKey, "true")
+    t(s, dir, "events")
+      .groupBy("event_type")
+      .agg(countDistinct(col("user_id")).as("n_users"),
+        count(lit(1)).as("n_events"))
+      .orderBy(col("event_type").asc_nulls_first)
   }
 
   private val approxDistinctAutoSql =
@@ -730,8 +712,7 @@ object Extras extends QueryModule {
       |FROM events GROUP BY event_type
       |ORDER BY event_type NULLS FIRST""".stripMargin
 
-  private def rangeBinAuto(s0: SparkSession, dir: String): DataFrame = {
-    val s = graft.SparkEntry.configure(s0.newSession())
+  private def rangeBinAuto(s: SparkSession, dir: String): DataFrame = {
     s.conf.set(graft.plans.RangeBinJoinRewrite.BinConfKey, (2L * 3600 * 1000000).toString)
     val ev = t(s, dir, "events").select("event_id", "user_id", "ts")
     val win = t(s, dir, "events")
@@ -1258,9 +1239,7 @@ object Extras extends QueryModule {
     * crosses them (defaults trigger at 256 MB per partition — the
     * production setting; the mechanism, not the threshold, is under
     * test) and broadcast is disabled (the split applies to shuffle
-    * joins). Both would poison every later entry's plans, so the frame
-    * is built on a CHILD session (`newSession`: shared SparkContext and
-    * catalog, isolated conf) — the tuned values die with this entry.
+    * joins).
     *
     * Splittability: AQE's skew split works at MAP-OUTPUT granularity
     * (`PartialReducerPartitionSpec` carves the hot reducer partition
@@ -1273,7 +1252,6 @@ object Extras extends QueryModule {
     * 90%-hot join key spreads evenly across all 8 mappers.
     */
   private def skewJoinGate(s: SparkSession, dir: String): DataFrame = {
-    val s2 = graft.SparkEntry.configure(s.newSession())
     Seq(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
@@ -1285,7 +1263,6 @@ object Extras extends QueryModule {
       // partition, so the split can mathematically never fire — pin 16
       // partitions here so the cold keys spread and the median is honest
       // (the exact trap OperatorsSpec's sibling skew test documents).
-      // Child-session conf: nothing leaks to the caller.
       "spark.sql.shuffle.partitions" -> "16",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       // thresholds are COMPRESSED shuffle bytes: the hot partition is a
@@ -1293,13 +1270,13 @@ object Extras extends QueryModule {
       // keeps the gate firing even at sf0.001 (~5.4k hot rows)
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "2KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB"
-    ).foreach { case (k, v) => s2.conf.set(k, v) }
-    val li = t(s2, dir, "lineitem").select(
+    ).foreach { case (k, v) => s.conf.set(k, v) }
+    val li = t(s, dir, "lineitem").select(
       when(col("l_orderkey") % 10 > 0, lit(1L))
         .otherwise(col("l_suppkey")).as("k"),
       round(col("l_quantity")).cast(LongType).as("qty"))
       .repartition(8, col("l_orderkey")) // ≥2 map tasks: see scaladoc
-    val supp = t(s2, dir, "supplier").select(
+    val supp = t(s, dir, "supplier").select(
       col("s_suppkey").as("k"), col("s_name"))
     li.join(supp, Seq("k"))
       .groupBy(col("k"), col("s_name"))
@@ -1681,13 +1658,7 @@ object Extras extends QueryModule {
 
   private val mvBuilt = scala.collection.mutable.Set.empty[String]
 
-  private def mvRewriteGate(s0: SparkSession, dir: String): DataFrame = {
-    // CHILD session (sj4's hygiene): the rewrite flag would otherwise
-    // stay enabled on the shared sweep session and silently re-plan
-    // every later derivable lineitem aggregate onto the MV — correct,
-    // but a conf leak; the flag dies with this entry. Registration is
-    // appId-keyed, so MvRewriteSpec's own sessions still see the MV.
-    val s = graft.SparkEntry.configure(s0.newSession())
+  private def mvRewriteGate(s: SparkSession, dir: String): DataFrame = {
     // appId-salted root, same isolation story as cmp1 (ADVICE r12)
     val root = new java.io.File(
       sys.props("java.io.tmpdir"),
@@ -1812,10 +1783,9 @@ object Extras extends QueryModule {
     * optimizer then drops the join — the plan never scans orders at all
     * (OptimizerRuleSpec pins that). The DuckDB oracle EXECUTES the full
     * join, so the hash is the end-to-end soundness proof: eliminating
-    * the join changed nothing. Child session, sj4's conf hygiene.
+    * the join changed nothing.
     */
-  private def joinElimGate(s0: SparkSession, dir: String): DataFrame = {
-    val s = graft.SparkEntry.configure(s0.newSession())
+  private def joinElimGate(s: SparkSession, dir: String): DataFrame = {
     require(graft.plans.TableConstraints.registerUnique(s, t(s, dir, "orders"), "o_orderkey"),
       "o_orderkey failed the uniqueness audit — testdata changed?")
     s.conf.set(graft.plans.JoinEliminationRewrite.ConfKey, "true")
@@ -1848,10 +1818,9 @@ object Extras extends QueryModule {
     * that ratio is the whole game for this query family. The DuckDB
     * oracle states the plain single-aggregate query; OptimizerRuleSpec
     * pins that the executed plan really has an Aggregate BELOW the
-    * join. Child session, sj4's conf hygiene.
+    * join.
     */
-  private def eagerAggGate(s0: SparkSession, dir: String): DataFrame = {
-    val s = graft.SparkEntry.configure(s0.newSession())
+  private def eagerAggGate(s: SparkSession, dir: String): DataFrame = {
     require(graft.plans.TableConstraints.registerUnique(s, t(s, dir, "supplier"), "s_suppkey"),
       "s_suppkey failed the uniqueness audit — testdata changed?")
     s.conf.set(graft.plans.EagerAggregationRewrite.ConfKey, "true")
@@ -1889,9 +1858,8 @@ object Extras extends QueryModule {
     * The extra-optimizer batch re-runs rules to fixpoint, so the
     * composition holds regardless of install order.
     */
-  private def ruleCompositionGate(s0: SparkSession, dir: String): DataFrame = {
-    mvRewriteGate(s0, dir) // memoized: MV built + registered for this app
-    val s = graft.SparkEntry.configure(s0.newSession())
+  private def ruleCompositionGate(s: SparkSession, dir: String): DataFrame = {
+    mvRewriteGate(s, dir) // memoized: MV built + registered for this app
     require(graft.plans.TableConstraints.registerUnique(s, t(s, dir, "orders"), "o_orderkey"),
       "o_orderkey failed the uniqueness audit — testdata changed?")
     s.conf.set(graft.plans.JoinEliminationRewrite.ConfKey, "true")
@@ -1952,8 +1920,7 @@ object Extras extends QueryModule {
       .join(supp, li("l_suppkey") === supp("s_suppkey"), "left")
   }
 
-  private def starMvGate(s0: SparkSession, dir: String): DataFrame = {
-    val s = graft.SparkEntry.configure(s0.newSession()) // sj4 conf hygiene
+  private def starMvGate(s: SparkSession, dir: String): DataFrame = {
     val root = new java.io.File(
       sys.props("java.io.tmpdir"),
       "graft_starmv_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
@@ -2011,9 +1978,8 @@ object Extras extends QueryModule {
     * scanned. At 100 TB: the avg dashboard reads kilobytes, not the
     * fact table.
     */
-  private def starAvgGate(s0: SparkSession, dir: String): DataFrame = {
-    starMvGate(s0, dir) // memoized: star MV built + registered for this app
-    val s = graft.SparkEntry.configure(s0.newSession()) // sj4 conf hygiene
+  private def starAvgGate(s: SparkSession, dir: String): DataFrame = {
+    starMvGate(s, dir) // memoized: star MV built + registered for this app
     s.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "true")
     starJoin(s, dir)
       .groupBy(col("o_orderpriority"))
@@ -2049,11 +2015,9 @@ object Extras extends QueryModule {
     * groupBy), not two (OptimizerRuleSpec pins that, plus the null-key
     * and non-key refusals). The DuckDB oracle executes the plain
     * aggregate — sound to state WITHOUT the dedup exactly because the
-    * key is unique, which the audit, not faith, established. Child
-    * session, sj4's conf hygiene.
+    * key is unique, which the audit, not faith, established.
     */
-  private def distinctElimGate(s0: SparkSession, dir: String): DataFrame = {
-    val s = graft.SparkEntry.configure(s0.newSession())
+  private def distinctElimGate(s: SparkSession, dir: String): DataFrame = {
     require(graft.plans.TableConstraints.registerKey(s, t(s, dir, "orders"), "o_orderkey"),
       "o_orderkey failed the primary-key audit — testdata changed?")
     s.conf.set(graft.plans.DistinctEliminationRewrite.ConfKey, "true")
@@ -2091,8 +2055,7 @@ object Extras extends QueryModule {
     * DistinctElimSpec pins the plan shape, the value equality against
     * the rule-off run, and the decimal-sum refusal.
     */
-  private def singletonAggGate(s0: SparkSession, dir: String): DataFrame = {
-    val s = graft.SparkEntry.configure(s0.newSession()) // sj4 conf hygiene
+  private def singletonAggGate(s: SparkSession, dir: String): DataFrame = {
     require(graft.plans.TableConstraints.registerKey(s, t(s, dir, "orders"), "o_orderkey"),
       "o_orderkey failed the primary-key audit — testdata changed?")
     s.conf.set(graft.plans.DistinctEliminationRewrite.ConfKey, "true")
@@ -2163,8 +2126,7 @@ object Extras extends QueryModule {
     */
   private val starMv2Built = scala.collection.mutable.Set.empty[String]
 
-  private def filteredStarGate(s0: SparkSession, dir: String): DataFrame = {
-    val s = graft.SparkEntry.configure(s0.newSession()) // sj4 conf hygiene
+  private def filteredStarGate(s: SparkSession, dir: String): DataFrame = {
     val root = new java.io.File(
       sys.props("java.io.tmpdir"),
       "graft_starmv2_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
@@ -2271,8 +2233,7 @@ object Extras extends QueryModule {
     */
   private val starRefreshBuilt = scala.collection.mutable.Set.empty[String]
 
-  private def starRefreshGate(s0: SparkSession, dir: String): DataFrame = {
-    val s = graft.SparkEntry.configure(s0.newSession()) // sj4 conf hygiene
+  private def starRefreshGate(s: SparkSession, dir: String): DataFrame = {
     def salted(tag: String) = new java.io.File(
       sys.props("java.io.tmpdir"),
       s"graft_starref_${tag}_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +

@@ -1370,11 +1370,6 @@ object Similarity extends QueryModule {
       "graft_ann14_" + dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_m" + stamp).getAbsolutePath
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
-    f.delete(); ()
-  }
-
   private def filteredTopKPruned(s: SparkSession, dir: String): DataFrame = {
     val root = annPartRoot(s, dir)
     annPartBuilt.synchronized {
@@ -1391,7 +1386,7 @@ object Similarity extends QueryModule {
           .filter(f => f.isDirectory && f.getName != live &&
             (f.getName.startsWith("graft_ann14_" + dirKey + "_m") ||
               (f.getName.startsWith("graft_ann14_") && f.getName.endsWith("_" + dirKey))))
-          .foreach(deleteRecursively)
+          .foreach(org.apache.spark.sql.GraftShims.deleteRecursively)
         // _SUCCESS gates reuse: a root left by a crashed writer re-lays
         if (!new java.io.File(root, "_SUCCESS").isFile) {
           t(s, dir, "embeddings").select("vec_id", "label", "embedding")

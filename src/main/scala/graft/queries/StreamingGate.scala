@@ -527,9 +527,7 @@ object StreamingGate extends QueryModule {
     * — bounded by out-of-orderness within the watermark, and held in
     * the RocksDB state store provider (the state-v2 requirement),
     * i.e. spillable off-heap state rather than executor heap — the
-    * 100 TB posture for wide-key stateful streams. The provider conf
-    * is set for this query and restored after (other entries keep the
-    * default HDFS-backed store).
+    * 100 TB posture for wide-key stateful streams.
     */
   // public for janino: the typed pipeline's generated code needs the
   // constructors (sw10's lesson)
@@ -592,16 +590,10 @@ object StreamingGate extends QueryModule {
       .select(timestamp_micros(col("start_us")).as("bucket_hour"),
         col("event_type"), col("n_events"),
         (col("cents").cast(DoubleType) / lit(100.0)).as("sum_value"))
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
+    s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try drain(s, dir, out, "sw11_mem")
+    drain(s, dir, out, "sw11_mem")
       .orderBy(col("bucket_hour").asc_nulls_first, col("event_type").asc_nulls_first)
-    finally prev match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None    => s.conf.unset(providerKey)
-    }
   }
 
   // ---------------------------------------------------------------- sw12

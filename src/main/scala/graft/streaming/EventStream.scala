@@ -55,11 +55,11 @@ object EventStream {
     * CPU-bound operators like sw10's session merge want core-count
     * parallelism at scale, not minimal store count).
     *
-    * NOTE: mutates the session-global `spark.sql.shuffle.partitions`
-    * for the duration of `body` — callers are the single-threaded
-    * gate/bench mains; a query running CONCURRENTLY on the same session
-    * would plan under the temporary value (ADVICE r17). Use a dedicated
-    * session (`s.newSession()`) if concurrent use ever appears.
+    * NOTE: mutates `spark.sql.shuffle.partitions` on `s` for the
+    * duration of `body`. Gate entries run on their own session clone
+    * (`SparkEntry.queries`), so the temporary value reaches no other
+    * entry; the restore scopes it within the entry, whose later batch
+    * steps (the sort over the drained table) plan at the entry's width.
     */
   def withStatePartitions[T](s: org.apache.spark.sql.SparkSession, n: Int)(body: => T): T = {
     if (n <= 0) body

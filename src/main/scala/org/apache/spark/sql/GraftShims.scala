@@ -30,6 +30,13 @@ object GraftShims {
   def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A session that starts from `spark`'s confs, rules and temp views
+    * and keeps whatever it sets to itself (Spark keeps `cloneSession`
+    * private[sql]).
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** Lift a catalyst Expression into the public Column API (the hook
     * custom codegen expressions need; Spark 4 keeps it private[sql]).
     */
@@ -75,8 +82,8 @@ object GraftShims {
       .foreach(cat.dropTempView)
   }
 
-  /** Recursive local-file delete for staging scratch (Spark's own
-    * battle-tested Utils — symlink-safe, unlike a naive walk).
+  /** Recursive local-file delete (Spark's own Utils): follows no
+    * symlink, and throws when the path survives.
     */
   def deleteRecursively(f: java.io.File): Unit =
     org.apache.spark.util.Utils.deleteRecursively(f)

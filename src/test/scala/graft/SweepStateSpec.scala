@@ -29,4 +29,16 @@ class SweepStateSpec extends AnyFunSuite {
     assert(left.forall(id => keep.contains(Int.box(id))), s"unprotected RDDs left: $left")
     assert(shared.count() == 40)
   }
+
+  test("timeRuns sweeps the entry's own session: no memory-sink view, no active stream") {
+    var df: org.apache.spark.sql.DataFrame = null
+    Bench.timeRuns(spark, {
+      df = SparkEntry.queries("sw2_stream_hourly")(spark, "/root/testdata/sf0.001")
+      df
+    })
+    assert(df.sparkSession ne spark)
+    val views = df.sparkSession.catalog.listTables().collect().map(_.name)
+    assert(!views.exists(_.endsWith("_mem")), s"memory-sink views left: ${views.mkString(", ")}")
+    assert(df.sparkSession.streams.active.isEmpty)
+  }
 }
