@@ -26,7 +26,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Settings: SPARK_GRAFT_SF_DIR (scale directory), SPARK_GRAFT_CPUS
   * (local[n]), SPARK_GRAFT_ONLY (entry filter, [[onlyEntries]]),
   * SPARK_GRAFT_BENCH_BASELINE (the committed recording adjudication
-  * reads) and SPARK_GRAFT_BENCH_OUT (the artifact path).
+  * reads) and SPARK_GRAFT_BENCH_OUT (the one artifact path, [[artifactPaths]]).
   *
   * Failures are never swallowed into the timing: a failed query gets
   * "err" in the per-query map, is excluded from the total, and flips
@@ -45,9 +45,12 @@ object Bench {
     *
     * Callers pass the entry's session (the returned frame's
     * `sparkSession`): an entry runs on its own session clone, and the
-    * stream stop and the memory-sink view drop act on that session
-    * only. The cache, the persisted RDDs and the state store are shared
-    * by every session of the context.
+    * memory-sink view drop acts on that session only. The cache, the
+    * persisted RDDs and the state store are shared by every session of
+    * the context. Streams need no stop here: the code that starts a
+    * streaming query stops it, and reading `spark.streams` would build a
+    * query manager on every swept clone, each adding a listener to the
+    * context's bus that nothing removes.
     */
   private[graft] def sweepState(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
@@ -57,9 +60,8 @@ object Bench {
     // right after the sw* block): loaded state-store providers — each
     // holds its partition's full last-version key map until the LAZY
     // maintenance thread unloads it — and the memory-sink buffers pinned
-    // by the sw*_mem temp views. Stop any straggler query, drop the sink
-    // views, unload the providers eagerly.
-    spark.streams.active.foreach(_.stop())
+    // by the sw*_mem temp views. Drop the sink views, unload the
+    // providers eagerly.
     org.apache.spark.sql.GraftShims.dropTempViewsBySuffix(spark, "_mem")
     org.apache.spark.sql.GraftShims.unloadStreamingState()
     // SharedFrames blocks are cross-entry materialized views (the graph
@@ -125,6 +127,31 @@ object Bench {
         s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
       names
     }
+
+  /** The files a sweep writes its result line to. `out`
+    * (`SPARK_GRAFT_BENCH_OUT`) names the one file, so a scratch sweep
+    * writes nowhere else. Otherwise a filtered run writes
+    * `bench_only.json` and a run at any scale but sf0.1 writes
+    * `bench_full_<sf>.json`: neither may clobber the committed
+    * recording. A full sf0.1 run writes that recording,
+    * `bench_full.json` (BASELINE.md; the 2x gate reads it), its
+    * `bench_summary.json` sidecar and a round-stamped copy
+    * `bench_r<N>.json`, N = 1 + the highest `BENCH_r<k>.json` among
+    * `cwdFiles` (VERDICT r14 #7): N stays stable within a round, so
+    * re-recordings overwrite the same stamped file.
+    */
+  private[graft] def artifactPaths(out: Option[String], filtered: Boolean, sfName: String,
+      cwdFiles: Seq[String]): Seq[String] = {
+    val stamp = "BENCH_r(\\d+)\\.json".r
+    out match {
+      case Some(p) => Seq(p)
+      case None if filtered => Seq("bench_only.json")
+      case None if sfName != "sf0.1" => Seq(s"bench_full_$sfName.json")
+      case None =>
+        val maxN = cwdFiles.collect { case stamp(n) => n.toInt }.foldLeft(0)(_ max _)
+        Seq("bench_full.json", "bench_summary.json", s"bench_r${maxN + 1}.json")
+    }
+  }
 
   /** Fresh-JVM mover re-run: spawns ONE child JVM running `graft.Dev
     * time` over all names — same classpath and JVM flags as this one
@@ -433,40 +460,9 @@ object Bench {
     // captures a truncated log *tail*, so with 233 entries the printed
     // line can lose the first half of the alphabet (BENCH_r06.json kept
     // only 63 entries, "parsed": null). The file always has all of them.
-    // bench_full.json is the COMMITTED recorded baseline (BASELINE.md,
-    // sf0.1): a run at any other scale factor defaults to a suffixed
-    // name so a quick smoke at sf0.001 can't silently clobber the
-    // baseline the 2× gate reads. bench_summary.json is the SAME line at
-    // a fixed sidecar path regardless of sf, for any consumer that wants
-    // the summary without stdout framing.
-    val sfName = new java.io.File(sfDir).getName
-    // A filtered run must never clobber the full committed recording.
-    val artifact = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (only.isDefined) "bench_only.json"
-      else if (sfName == "sf0.1") "bench_full.json" else s"bench_full_$sfName.json")
-    // Round-stamped copy (VERDICT r14 #7): the driver overwrites
-    // bench_full.json with ITS OWN sweep at round end, so the project's
-    // committed recording was only reachable as `git show
-    // HEAD:bench_full.json`. A full sf0.1 recording additionally goes to
-    // bench_r<N>.json, N = (max driver BENCH_r<k>.json) + 1 — stable
-    // within a round (the driver stamps BENCH_r<N> only at round end),
-    // so re-recordings in one round overwrite the same stamped file and
-    // the 2x gate's denominator is always a committed, named artifact.
-    val stamped: Option[String] =
-      if (only.isEmpty && sfName == "sf0.1") {
-        val re = "BENCH_r(\\d+)\\.json".r
-        val maxN = Option(new java.io.File(".").list()).toSeq.flatten.collect {
-          case re(n) => n.toInt
-        }.foldLeft(0)(_ max _)
-        Some(s"bench_r${maxN + 1}.json")
-      } else None
-    // bench_summary.json mirrors the COMMITTED recording, so it gets the
-    // same clobber guard as bench_full.json: filtered probes and
-    // off-scale runs write only their own artifact (a committed 2-entry
-    // /tmp-scale probe summary is exactly the drift this prevents).
-    val summary: Option[String] =
-      if (only.isEmpty && sfName == "sf0.1") Some("bench_summary.json") else None
-    (Seq(artifact) ++ summary ++ stamped).foreach { p =>
+    val cwdFiles = Option(new java.io.File(".").list()).toSeq.flatten
+    artifactPaths(sys.env.get("SPARK_GRAFT_BENCH_OUT"), only.isDefined,
+      new java.io.File(sfDir).getName, cwdFiles).foreach { p =>
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(p),
         line.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -27,14 +27,12 @@ object SparkEntry {
   /** Session settings every gate query assumes, applicable to a session we
     * did not create (the driver's). ANSI off = null-on-garbage cast
     * semantics, the SURVEY.md §7.4 decision (pandas parity + availability);
-    * DQ counters, not exceptions, surface bad input.
+    * DQ counters, not exceptions, surface bad input. Only the always-on
+    * rules are installed here: an entry that exercises an opt-in rewrite
+    * installs it on its own session clone.
     */
   def configure(spark: SparkSession): SparkSession = {
     graft.plans.GraftRules.install(spark)
-    // set-if-missing: a session (or spec) that pinned its own threshold
-    // — including 0 = off — keeps it across re-configure
-    if (spark.conf.getOption(graft.plans.InListToJoinRewrite.ThresholdConfKey).isEmpty)
-      spark.conf.set(graft.plans.InListToJoinRewrite.ThresholdConfKey, "256")
     // guide §3.1: prefer shuffled-hash over sort-merge when the planner's
     // size conditions allow — skips the per-partition sort on both sides;
     // AQE's runtime rewrite handles the cases planning-time estimates

@@ -33,11 +33,12 @@ import graft.functions.{KmvNdv, NdvSketch}
   * analyzed plan, the same `Count` case rewrites every distinct count
   * of that shape too.
   *
-  * OPT-IN because past k this trades exactness for boundedness — the
-  * session must set `spark.graft.approxDistinct=true` (sketch size
-  * tunable via `spark.graft.approxDistinct.k`). This is the
-  * "approximate mode" switch every warehouse engine grows; here it is
-  * an optimizer rule, so users keep writing `COUNT(DISTINCT …)`.
+  * OPT-IN because past k this trades exactness for boundedness — a
+  * session carries it only once it installs one with its sketch size
+  * ([[GraftRules.install]]; the opt4 gate entry installs it on its own
+  * session). This is the "approximate mode" switch every warehouse
+  * engine grows; here it is an optimizer rule, so users keep writing
+  * `COUNT(DISTINCT …)`.
   *
   * Fires only on shapes whose semantics the sketch reproduces:
   *   - a batch (non-streaming) `Aggregate` — streaming distinct
@@ -57,9 +58,9 @@ import graft.functions.{KmvNdv, NdvSketch}
   * empty group → 0) match `Count`'s.
   *
   * Batch-order honesty: like the other rules it is registered through
-  * `experimental.extraOptimizations` ([[GraftRules.install]]), where
-  * user rules run LAST, after Spark's `RewriteDistinctAggregates` has
-  * already expanded multi-distinct shapes. A session therefore never
+  * `experimental.extraOptimizations`, where user rules run LAST, after
+  * Spark's `RewriteDistinctAggregates` has already expanded
+  * multi-distinct shapes. A session therefore never
   * rewrites a multi-distinct aggregate (it keeps Spark's Expand plan);
   * the rule catches the single-distinct shape (the common one; physical
   * planning otherwise turns it into the two-exchange partial-distinct
@@ -68,14 +69,11 @@ import graft.functions.{KmvNdv, NdvSketch}
   * multi-distinct test applies the rule to an analyzed plan by hand,
   * which no session does.
   */
-object ApproxDistinctRewrite extends Rule[LogicalPlan] {
+case class ApproxDistinctRewrite(k: Int = NdvSketch.DefaultK) extends Rule[LogicalPlan] {
+  // the (k-1)/R estimate KmvNdv returns past k needs k >= 2
+  require(k >= 2, s"sketch size k must be at least 2, got $k")
 
-  val ConfKey = "spark.graft.approxDistinct"
-  val KConfKey = "spark.graft.approxDistinct.k"
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(ConfKey, "false").toBoolean) return plan
-    val k = conf.getConfString(KConfKey, NdvSketch.DefaultK.toString).toInt
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case agg: Aggregate if !agg.isStreaming =>
         agg.transformExpressions {
@@ -86,7 +84,6 @@ object ApproxDistinctRewrite extends Rule[LogicalPlan] {
               isDistinct = false)
         }
     }
-  }
 
   /** `COUNT(DISTINCT a, b)` skips tuples with ANY null component. */
   private def maskedHash(children: Seq[Expression]): Expression = {

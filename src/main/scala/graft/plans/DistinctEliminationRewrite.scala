@@ -46,11 +46,10 @@ import org.apache.spark.sql.types._
   * row-preserving; uniqueness and null-freeness survive every subset) —
   * the KEY itself must trace to the scan column as a bare, possibly
   * renamed attribute; anything else (joins, unions, generators)
-  * refuses. Enable with `spark.graft.distinctElim.enabled=true`.
+  * refuses. A session carries it once installed
+  * ([[GraftRules.install]]; opt14/opt15 install it on their own session).
   */
 object DistinctEliminationRewrite extends Rule[LogicalPlan] {
-
-  val ConfKey = "spark.graft.distinctElim.enabled"
 
   /** SINGLETON-GROUP COLLAPSE of one aggregate output (opt15 widened
     * this from opt14's `first(attr)`-only shape): over a group proven
@@ -153,7 +152,6 @@ object DistinctEliminationRewrite extends Rule[LogicalPlan] {
     }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(ConfKey, "false").toBoolean) return plan
     val appId = SparkSession.active.sparkContext.applicationId
     plan.transformUp {
       case agg @ Aggregate(ge, ae, child, _) if !child.isStreaming =>

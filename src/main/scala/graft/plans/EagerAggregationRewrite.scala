@@ -36,18 +36,16 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * Idempotence (the extra-optimizer batch runs to fixpoint): a join
   * whose left child is already an Aggregate grouping on the computed
-  * push-down set is skipped. Enable `spark.graft.eagerAgg.enabled`.
+  * push-down set is skipped. A session carries it once installed
+  * ([[GraftRules.install]]; opt8 installs it on its own session).
   */
 object EagerAggregationRewrite extends Rule[LogicalPlan] {
-
-  val ConfKey = "spark.graft.eagerAgg.enabled"
 
   // right-side scan extraction: filters are sound here (an inner join's
   // right predicate only decides WHICH groups survive, never how they
   // aggregate); multi-path scans refuse — see [[PlanScans]].
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(ConfKey, "false").toBoolean) return plan
     val appId = SparkSession.active.sparkContext.applicationId
     plan.transformUp {
       // column pruning interposes an attribute-only Project — look through

@@ -30,41 +30,37 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * Fires on a `Filter` whose condition contains a top-level conjunct of
   * the shape `In(attr, all-literal list)` or the optimizer-folded
-  * `InSet(attr, set)` with at least `spark.graft.inlist.joinThreshold`
-  * (default OFF = 0) distinct values and no null among them; the other
-  * conjuncts stay as a residual filter above the join. Output
+  * `InSet(attr, set)` with at least `threshold` distinct values and no
+  * null among them; the other conjuncts stay as a residual filter above
+  * the join. Output
   * attributes are the child's — untouched — so parent plans never see
   * the rewrite.
   *
-  * Listed in [[GraftRules]] like the other graft rules, and inert until
-  * the session opts in by setting the threshold conf. OptimizerInRuleSpec proves plan shape (semi join, no
-  * giant In/InSet), row equality with the un-rewritten form, and every
-  * guard; the opt3 gate entry hash-proves the rewrite cross-engine
+  * A session carries it only once installed ([[GraftRules.install]]):
+  * the opt3 gate entry installs it on its own session with threshold
+  * 256. OptimizerInRuleSpec proves plan shape (semi join, no giant
+  * In/InSet), row equality with the un-rewritten form, and every guard; the opt3 gate entry hash-proves the rewrite cross-engine
   * against an oracle that executes the literal IN-list SQL.
   */
-object InListToJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
+case class InListToJoinRewrite(threshold: Int) extends Rule[LogicalPlan] with PredicateHelper {
+  require(threshold > 0, s"IN-list join threshold must be positive, got $threshold")
 
-  val ThresholdConfKey = "spark.graft.inlist.joinThreshold"
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val thr = conf.getConfString(ThresholdConfKey, "0").toIntOption.getOrElse(0)
-    if (thr <= 0) plan
-    else plan.transformUp {
-      case f @ Filter(cond, child) => rewrite(cond, child, thr).getOrElse(f)
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformUp {
+      case f @ Filter(cond, child) => rewrite(cond, child).getOrElse(f)
     }
-  }
 
-  private def rewrite(cond: Expression, child: LogicalPlan, thr: Int): Option[LogicalPlan] = {
+  private def rewrite(cond: Expression, child: LogicalPlan): Option[LogicalPlan] = {
     val conjuncts = splitConjunctivePredicates(cond)
     val hit = conjuncts.collectFirst {
       case in @ In(a: AttributeReference, list)
-          if list.size >= thr && list.forall {
+          if list.size >= threshold && list.forall {
             case Literal(v, _) => v != null
             case _             => false
           } && child.outputSet.contains(a) =>
         (in: Expression, a, list.map { case Literal(v, _) => v }.distinct)
       case in @ InSet(a: AttributeReference, hset)
-          if hset.size >= thr && !hset.contains(null) &&
+          if hset.size >= threshold && !hset.contains(null) &&
             child.outputSet.contains(a) =>
         (in: Expression, a, hset.toSeq)
     }

@@ -36,11 +36,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * whose references are all left-side (projection-like parents define
   * their output, so no right attr can leak past them; a Filter parent
   * passes right columns through and is deliberately NOT eligible).
-  * Enable with `spark.graft.joinElim.enabled=true`.
+  * A session carries it once installed ([[GraftRules.install]]; opt7
+  * and opt9 install it on their own session).
   */
 object JoinEliminationRewrite extends Rule[LogicalPlan] {
-
-  val ConfKey = "spark.graft.joinElim.enabled"
 
   /** The right side qualifies iff it is a (possibly filtered) bare
     * SINGLE-ROOT scan of a path whose (path, keyCol) uniqueness was
@@ -70,7 +69,6 @@ object JoinEliminationRewrite extends Rule[LogicalPlan] {
     }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(ConfKey, "false").toBoolean) return plan
     val appId = SparkSession.active.sparkContext.applicationId
     plan.transformUp {
       // projection-like parents only: their output is their expr list,

@@ -56,11 +56,11 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * (joins, windows, non-trivial projections) disqualifies. Output
   * exprIds are preserved by re-aliasing, so parent operators never see
   * the substitution. Catalog entries are keyed by applicationId — no
-  * cross-session leakage; enable with `spark.graft.mv.enabled=true`.
+  * cross-session leakage. A session carries the rule once installed
+  * ([[GraftRules.install]]; the MV gate entries install it on their own
+  * session).
   */
 object MaterializedViewRewrite extends Rule[LogicalPlan] {
-
-  val ConfKey = "spark.graft.mv.enabled"
 
   /** One derivable measure: the MV column holding the partial, the
     * normalized SQL of the base-table aggregate it folds, and how to
@@ -414,7 +414,6 @@ object MaterializedViewRewrite extends Rule[LogicalPlan] {
     }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(ConfKey, "false").toBoolean) return plan
     val spark = SparkSession.active
     val appId = spark.sparkContext.applicationId
     plan.transformUp {

@@ -28,18 +28,15 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, T
   * an upper bound (`p < e` / `p <= e`) on the SAME point expression
   * `p`, where `p` evaluates on one side and both bounds on the other,
   * everything deterministic, and all three are timestamps or all
-  * integrals. Extra conjuncts are preserved untouched. Two guards:
-  *
-  *   - the rule is OPT-IN per session via a positive
-  *     `spark.graft.rangeJoin.binUs` (microseconds per bin — pick ≈ the
-  *     typical interval span; there is no universally right width, which
-  *     is why it is a conf and not a default);
-  *   - it does NOT fire when any conjunct is already an equi predicate
-  *     across the two sides: Spark then already plans a shuffled equi
-  *     join (the keyed case is `RangeJoin.pointInInterval`'s job), and
-  *     the guard also makes the rewrite self-stabilizing — its own
-  *     output contains a bin-equality conjunct, so it can never re-fire
-  *     on what it produced.
+  * integrals. Extra conjuncts are preserved untouched. `binUs` is the
+  * positive bin width in microseconds — pick ≈ the typical interval
+  * span; there is no universally right width, which is why a session
+  * carries the rule only once it installs one ([[GraftRules.install]]).
+  * The rule does NOT fire when any conjunct is already an equi predicate
+  * across the two sides: Spark then already plans a shuffled equi join
+  * (the keyed case is `RangeJoin.pointInInterval`'s job), and the guard
+  * also makes the rewrite self-stabilizing — its own output contains a
+  * bin-equality conjunct, so it can never re-fire on what it produced.
   *
   * Semantics are preserved exactly:
   *
@@ -71,20 +68,15 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, T
   * Gate entry `opt2_range_bin_auto` spells the naive keyless join and
   * hash-matches DuckDB executing the same naive SQL; RangeBinRewriteSpec
   * pins plan shape (no nested-loop/cartesian), rule-off equivalence,
-  * bound inclusivity, orientation, nulls, and the equi/no-conf guards.
-  * Listed in [[GraftRules]].
+  * bound inclusivity, orientation, nulls, and the equi/outer guards.
   */
-object RangeBinJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
+case class RangeBinJoinRewrite(binUs: Long) extends Rule[LogicalPlan] with PredicateHelper {
+  require(binUs > 0, s"range-join bin width must be a positive number of microseconds, got $binUs")
 
-  val BinConfKey = "spark.graft.rangeJoin.binUs"
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val binUs = conf.getConfString(BinConfKey, "0").toLongOption.getOrElse(0L)
-    if (binUs <= 0) plan
-    else plan.transformUp {
-      case j @ Join(_, _, Inner, Some(cond), _) => rewrite(j, cond, binUs).getOrElse(j)
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformUp {
+      case j @ Join(_, _, Inner, Some(cond), _) => rewrite(j, cond).getOrElse(j)
     }
-  }
 
   /** `(point, bound, strict)` readings of one comparison conjunct. */
   private def asLower(c: Expression): Seq[(Expression, Expression, Boolean)] = c match {
@@ -121,7 +113,7 @@ object RangeBinJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     case _ => None
   }
 
-  private def rewrite(j: Join, cond: Expression, binUs: Long): Option[LogicalPlan] = {
+  private def rewrite(j: Join, cond: Expression): Option[LogicalPlan] = {
     val conjuncts = splitConjunctivePredicates(cond)
     if (conjuncts.exists(spansBothSides(_, j))) return None
 

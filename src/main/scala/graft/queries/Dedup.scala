@@ -1136,7 +1136,7 @@ object Dedup extends QueryModule {
         .outputMode(OutputMode.Complete)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+      try q.awaitTermination() finally q.stop()
     }
     s.table("sw13_mem").orderBy(col("doc_id").asc_nulls_first)
   }
@@ -1258,7 +1258,7 @@ object Dedup extends QueryModule {
         .outputMode(OutputMode.Append)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+      try q.awaitTermination() finally q.stop()
     }
     s.table("sw14_mem").orderBy(col("doc_id").asc_nulls_first)
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import graft.Tables
+import graft.plans.GraftRules
 import graft.functions.VectorFunctions
 
 /** Inventory rows from SURVEY.md §2 that round 1 left without a named gate
@@ -666,13 +667,15 @@ object Extras extends QueryModule {
     */
   private val InListKeys: Seq[Long] = 1L to 2000L by 5L
 
-  private def inlistSemiJoin(s: SparkSession, dir: String): DataFrame =
+  private def inlistSemiJoin(s: SparkSession, dir: String): DataFrame = {
+    GraftRules.install(s, graft.plans.InListToJoinRewrite(256))
     t(s, dir, "lineitem")
       .filter(col("l_partkey").isin(InListKeys: _*))
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"),
         sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("rev_c"))
       .orderBy(col("l_returnflag").asc_nulls_first)
+  }
 
   private val inlistSemiJoinSql =
     s"""SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n,
@@ -698,7 +701,7 @@ object Extras extends QueryModule {
     * plan shape).
     */
   private def approxDistinctAuto(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set(graft.plans.ApproxDistinctRewrite.ConfKey, "true")
+    GraftRules.install(s, graft.plans.ApproxDistinctRewrite())
     t(s, dir, "events")
       .groupBy("event_type")
       .agg(countDistinct(col("user_id")).as("n_users"),
@@ -713,7 +716,7 @@ object Extras extends QueryModule {
       |ORDER BY event_type NULLS FIRST""".stripMargin
 
   private def rangeBinAuto(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set(graft.plans.RangeBinJoinRewrite.BinConfKey, (2L * 3600 * 1000000).toString)
+    GraftRules.install(s, graft.plans.RangeBinJoinRewrite(2L * 3600 * 1000000))
     val ev = t(s, dir, "events").select("event_id", "user_id", "ts")
     val win = t(s, dir, "events")
       .filter(col("event_id") % 97 === 0)
@@ -1679,7 +1682,7 @@ object Extras extends QueryModule {
         ()
       }
     }
-    s.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "true")
+    GraftRules.install(s, graft.plans.MaterializedViewRewrite)
     t(s, dir, "lineitem")
       .filter(col("l_linestatus") === "F")
       .groupBy(col("l_returnflag"))
@@ -1779,7 +1782,7 @@ object Extras extends QueryModule {
     * generated-BI shape where a dimension is joined "just in case" and
     * never read. `TableConstraints.registerUnique` first VERIFIES
     * o_orderkey is duplicate-free (one ANALYZE-style aggregate pass,
-    * memoized per app; a false claim is refused); with the flag on, the
+    * memoized per app; a false claim is refused); with the rule installed, the
     * optimizer then drops the join — the plan never scans orders at all
     * (OptimizerRuleSpec pins that). The DuckDB oracle EXECUTES the full
     * join, so the hash is the end-to-end soundness proof: eliminating
@@ -1788,7 +1791,7 @@ object Extras extends QueryModule {
   private def joinElimGate(s: SparkSession, dir: String): DataFrame = {
     require(graft.plans.TableConstraints.registerUnique(s, t(s, dir, "orders"), "o_orderkey"),
       "o_orderkey failed the uniqueness audit — testdata changed?")
-    s.conf.set(graft.plans.JoinEliminationRewrite.ConfKey, "true")
+    GraftRules.install(s, graft.plans.JoinEliminationRewrite)
     val li = t(s, dir, "lineitem")
     val or = t(s, dir, "orders")
     li.join(or, li("l_orderkey") === or("o_orderkey"), "left")
@@ -1823,7 +1826,7 @@ object Extras extends QueryModule {
   private def eagerAggGate(s: SparkSession, dir: String): DataFrame = {
     require(graft.plans.TableConstraints.registerUnique(s, t(s, dir, "supplier"), "s_suppkey"),
       "s_suppkey failed the uniqueness audit — testdata changed?")
-    s.conf.set(graft.plans.EagerAggregationRewrite.ConfKey, "true")
+    GraftRules.install(s, graft.plans.EagerAggregationRewrite)
     val li = t(s, dir, "lineitem")
     val supp = t(s, dir, "supplier")
     li.join(supp, li("l_suppkey") === supp("s_suppkey"), "inner")
@@ -1862,8 +1865,8 @@ object Extras extends QueryModule {
     mvRewriteGate(s, dir) // memoized: MV built + registered for this app
     require(graft.plans.TableConstraints.registerUnique(s, t(s, dir, "orders"), "o_orderkey"),
       "o_orderkey failed the uniqueness audit — testdata changed?")
-    s.conf.set(graft.plans.JoinEliminationRewrite.ConfKey, "true")
-    s.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "true")
+    GraftRules.install(s, graft.plans.MaterializedViewRewrite,
+      graft.plans.JoinEliminationRewrite)
     val li = t(s, dir, "lineitem")
     val or = t(s, dir, "orders")
     li.join(or, li("l_orderkey") === or("o_orderkey"), "left")
@@ -1939,7 +1942,7 @@ object Extras extends QueryModule {
         ()
       }
     }
-    s.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "true")
+    GraftRules.install(s, graft.plans.MaterializedViewRewrite)
     starJoin(s, dir)
       .groupBy(col("o_orderpriority"))
       .agg(
@@ -1980,7 +1983,7 @@ object Extras extends QueryModule {
     */
   private def starAvgGate(s: SparkSession, dir: String): DataFrame = {
     starMvGate(s, dir) // memoized: star MV built + registered for this app
-    s.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "true")
+    GraftRules.install(s, graft.plans.MaterializedViewRewrite)
     starJoin(s, dir)
       .groupBy(col("o_orderpriority"))
       .agg(avg(mvPriceCents).as("avg_price"), count(lit(1)).as("n_lines"))
@@ -2010,7 +2013,7 @@ object Extras extends QueryModule {
     * `TableConstraints.registerKey` first VERIFIES the full PRIMARY KEY
     * contract (o_orderkey unique AND null-free — strictly more than
     * opt7's uniqueness, because dropDuplicates would merge equal NULL
-    * keys); with the flag on, the optimizer collapses the dedup to a
+    * keys); with the rule installed, the optimizer collapses the dedup to a
     * streaming projection and the plan carries ONE aggregate (the
     * groupBy), not two (OptimizerRuleSpec pins that, plus the null-key
     * and non-key refusals). The DuckDB oracle executes the plain
@@ -2020,7 +2023,7 @@ object Extras extends QueryModule {
   private def distinctElimGate(s: SparkSession, dir: String): DataFrame = {
     require(graft.plans.TableConstraints.registerKey(s, t(s, dir, "orders"), "o_orderkey"),
       "o_orderkey failed the primary-key audit — testdata changed?")
-    s.conf.set(graft.plans.DistinctEliminationRewrite.ConfKey, "true")
+    GraftRules.install(s, graft.plans.DistinctEliminationRewrite)
     t(s, dir, "orders")
       .dropDuplicates("o_orderkey")
       .groupBy(col("o_orderpriority"))
@@ -2049,7 +2052,7 @@ object Extras extends QueryModule {
     * shape is the inherited-pipeline classic: an inner "per-order
     * rollup" keyed by the ingest key — vacuous, but only a PRIMARY KEY
     * proof makes removing it sound — feeding a real rollup. With the
-    * flag on the plan carries ONE aggregate (the outer); the DuckDB
+    * rule installed the plan carries ONE aggregate (the outer); the DuckDB
     * oracle states the query WITHOUT the inner rollup, sound exactly
     * because the audited key is unique and null-free.
     * DistinctElimSpec pins the plan shape, the value equality against
@@ -2058,7 +2061,7 @@ object Extras extends QueryModule {
   private def singletonAggGate(s: SparkSession, dir: String): DataFrame = {
     require(graft.plans.TableConstraints.registerKey(s, t(s, dir, "orders"), "o_orderkey"),
       "o_orderkey failed the primary-key audit — testdata changed?")
-    s.conf.set(graft.plans.DistinctEliminationRewrite.ConfKey, "true")
+    GraftRules.install(s, graft.plans.DistinctEliminationRewrite)
     t(s, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"),
@@ -2147,7 +2150,7 @@ object Extras extends QueryModule {
         ()
       }
     }
-    s.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "true")
+    GraftRules.install(s, graft.plans.MaterializedViewRewrite)
     join(s)
       .filter(col("l_returnflag") === "R")
       .groupBy(col("s_nationkey"))
@@ -2277,7 +2280,7 @@ object Extras extends QueryModule {
         ()
       }
     }
-    s.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "true")
+    GraftRules.install(s, graft.plans.MaterializedViewRewrite)
     fold(s.read.parquet(factDir))
       .select(coalesce(col("s_nationkey"), lit(-1L)).as("nation_key"),
         col("sum_price_c"), col("cnt").as("n_lines"))

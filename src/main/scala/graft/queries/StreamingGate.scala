@@ -55,7 +55,7 @@ object StreamingGate extends QueryModule {
         .outputMode(OutputMode.Append)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
+      try q.awaitTermination() finally q.stop()
     }
     s.table(name)
   }
@@ -674,7 +674,7 @@ object StreamingGate extends QueryModule {
             .option("checkpointLocation", ckpt)
             .trigger(Trigger.AvailableNow())
             .start()
-          q.awaitTermination()
+          try q.awaitTermination() finally q.stop()
         }
         eosBuilt += root
         ()

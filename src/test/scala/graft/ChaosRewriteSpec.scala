@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{In, InSet}
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.{InListToJoinRewrite, RangeBinJoinRewrite}
+import graft.plans.{GraftRules, InListToJoinRewrite, RangeBinJoinRewrite}
 
 /** Chaos pins for the two OPT-IN optimizer rewrites (VERDICT r9 #8):
   * the plan-shape suites run them under AQE-off on tidy inputs; these
@@ -47,7 +47,7 @@ class ChaosRewriteSpec extends AnyFunSuite {
 
   test("range-bin rewrite under AQE skew-join: fires, splits, and matches the nested loop") {
     val s = chaosSession()
-    s.experimental.extraOptimizations = Seq(RangeBinJoinRewrite)
+    s.experimental.extraOptimizations = Seq(RangeBinJoinRewrite(7L * 24 * 3600 * 1000000L)) // 7-day bins
     // points: every sf0.1 lineitem ship event (~600k). intervals: 40
     // sliding windows piled onto ONE month (1995-06) + 15 spread across
     // the rest of 1995 — the June bins go hot on both sides
@@ -66,7 +66,6 @@ class ChaosRewriteSpec extends AnyFunSuite {
     def joined(sess: SparkSession) = points(sess).join(intervals(sess),
       col("ts") >= col("istart") && col("ts") < col("iend"))
 
-    s.conf.set(RangeBinJoinRewrite.BinConfKey, (7L * 24 * 3600 * 1000000L).toString) // 7-day bins
     val rewritten = joined(s)
     // the rewrite fired: bin replication shows as a Generate (explode of
     // the interval's bin sequence) in the OPTIMIZED logical plan —
@@ -95,7 +94,7 @@ class ChaosRewriteSpec extends AnyFunSuite {
         .select(col("l_orderkey").as("a"),
           expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("b"))
 
-    s.conf.set(InListToJoinRewrite.ThresholdConfKey, "256")
+    GraftRules.install(s, InListToJoinRewrite(256))
     val rewritten = filtered(s)
     val opt = rewritten.queryExecution.optimizedPlan
     assert(opt.collect { case j: Join => j }.nonEmpty, "in-list rewrite did not fire under AQE")
@@ -104,9 +103,7 @@ class ChaosRewriteSpec extends AnyFunSuite {
       case i: InSet if i.hset.size >= 256 => i
     }).isEmpty, "giant literal list survived in the plan")
     val got = fingerprint(rewritten, "a", "b")
-    val base = chaosSession()
-    base.conf.set(InListToJoinRewrite.ThresholdConfKey, "0") // rule inert
-    val want = fingerprint(filtered(SparkEntry.configure(base)), "a", "b")
+    val want = fingerprint(filtered(SparkEntry.configure(chaosSession())), "a", "b")
     assert(got == want, s"rewritten=$got literal=$want")
     assert(got.head.asInstanceOf[Long] > 30L, "skew amplification missing — vacuous chaos")
   }
@@ -129,10 +126,8 @@ class ChaosRewriteSpec extends AnyFunSuite {
     SparkEntry.queries("opt5_mv_rewrite")(s, dir).collect()
     assert(TableConstraints.registerUnique(s, Tables(s, dir, "orders"), "o_orderkey"))
     assert(TableConstraints.registerUnique(s, Tables(s, dir, "supplier"), "s_suppkey"))
-    s.conf.set(MaterializedViewRewrite.ConfKey, "true")
-    s.conf.set(JoinEliminationRewrite.ConfKey, "true")
-    s.conf.set(EagerAggregationRewrite.ConfKey, "true")
-    val off = SparkEntry.configure(chaosSession()) // all three flags default off
+    GraftRules.install(s, MaterializedViewRewrite, JoinEliminationRewrite, EagerAggregationRewrite)
+    val off = SparkEntry.configure(chaosSession()) // carries none of the three rules
 
     // the opt9 composed shape, adaptive execution live the whole way
     def composed(sess: SparkSession) = {

@@ -24,7 +24,7 @@ class DistinctElimSpec extends AnyFunSuite {
   private def keySession(): SparkSession = {
     val s = SparkEntry.configure(spark.newSession())
     assert(TableConstraints.registerKey(s, Tables(s, dir, "orders"), "o_orderkey"))
-    s.conf.set(DistinctEliminationRewrite.ConfKey, "true")
+    graft.plans.GraftRules.install(s, DistinctEliminationRewrite)
     s
   }
 
@@ -33,7 +33,6 @@ class DistinctElimSpec extends AnyFunSuite {
     val df = SparkEntry.queries("opt14_distinct_elim")(s, dir)
     assert(nAggs(df) == 1, s"dedup aggregate survived:\n${df.queryExecution.optimizedPlan}")
     val off = SparkEntry.configure(spark.newSession())
-    off.conf.set(DistinctEliminationRewrite.ConfKey, "false")
     val full = Tables(off, dir, "orders")
       .dropDuplicates("o_orderkey")
       .groupBy(col("o_orderpriority"))
@@ -55,7 +54,6 @@ class DistinctElimSpec extends AnyFunSuite {
       .select(col("o_orderstatus")).orderBy(col("o_orderstatus").asc_nulls_first)
     assert(nAggs(sub) == 0, "dropDuplicates(pk) must eliminate")
     val off = SparkEntry.configure(spark.newSession())
-    off.conf.set(DistinctEliminationRewrite.ConfKey, "false")
     val ctl = Tables(off, dir, "orders").dropDuplicates("o_orderkey")
       .select(col("o_orderstatus")).orderBy(col("o_orderstatus").asc_nulls_first)
     assert(ctl.queryExecution.optimizedPlan.collect { case a: Aggregate => a }.nonEmpty)
@@ -83,7 +81,7 @@ class DistinctElimSpec extends AnyFunSuite {
     val filtered = Tables(s, dir, "orders").filter(col("o_totalprice") > 1000)
       .dropDuplicates("o_orderkey")
     assert(nAggs(filtered) == 0, "filtered scan must still eliminate")
-    // conf off on a fresh session: nothing fires even though the
+    // a fresh session without the rule: nothing fires even though the
     // constraint is registered app-wide
     val off = SparkEntry.configure(spark.newSession())
     assert(nAggs(Tables(off, dir, "orders").dropDuplicates("o_orderkey")) == 1)
@@ -92,7 +90,7 @@ class DistinctElimSpec extends AnyFunSuite {
   test("composes with join elimination: dedup AND never-read dim join both vanish") {
     val s = keySession()
     assert(TableConstraints.registerUnique(s, Tables(s, dir, "customer"), "c_custkey"))
-    s.conf.set(graft.plans.JoinEliminationRewrite.ConfKey, "true")
+    graft.plans.GraftRules.install(s, graft.plans.JoinEliminationRewrite)
     val or = Tables(s, dir, "orders")
     val cu = Tables(s, dir, "customer")
     val q = or.dropDuplicates("o_orderkey")
@@ -138,7 +136,6 @@ class DistinctElimSpec extends AnyFunSuite {
     val on = q(s)
     assert(nAggs(on) == 0, s"singleton aggregate survived:\n${on.queryExecution.optimizedPlan}")
     val off = SparkEntry.configure(spark.newSession())
-    off.conf.set(DistinctEliminationRewrite.ConfKey, "false")
     val ctl = q(off)
     assert(nAggs(ctl) == 1, "control must execute the aggregate")
     // types must survive the collapse exactly (sum→LONG, avg→DOUBLE,
@@ -172,7 +169,6 @@ class DistinctElimSpec extends AnyFunSuite {
     val df = SparkEntry.queries("opt15_singleton_agg")(s, dir)
     assert(nAggs(df) == 1, s"inner singleton rollup survived:\n${df.queryExecution.optimizedPlan}")
     val off = SparkEntry.configure(spark.newSession())
-    off.conf.set(DistinctEliminationRewrite.ConfKey, "false")
     // rule-off control of the same two-level query
     val full = Tables(off, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"),

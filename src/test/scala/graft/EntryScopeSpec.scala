@@ -3,9 +3,11 @@ package graft
 import org.apache.spark.sql.GraftShims
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans._
+
 /** Each `SparkEntry.queries` call runs on its own configured clone of the
-  * caller's session: the entry starts from the caller's confs and keeps
-  * what it sets to itself.
+  * caller's session: the entry starts from the caller's confs and rules
+  * and keeps what it sets and installs to itself.
   */
 class EntryScopeSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
@@ -30,5 +32,22 @@ class EntryScopeSpec extends AnyFunSuite {
     }
     assert(sessions("sj4_skew_join").conf.get(Aqe) == "true")
     sessions.values.foreach(Bench.sweepState)
+  }
+
+  test("opt-in rewrites ride with their entry: the caller's rules stay, the entry's follow them") {
+    val caller = GraftShims.cloneSession(SharedSpark.spark)
+    val before = caller.experimental.extraOptimizations
+    val own = Seq(
+      "opt2_range_bin_auto" -> Seq(RangeBinJoinRewrite(2L * 3600 * 1000000)),
+      "opt3_inlist_semijoin" -> Seq(InListToJoinRewrite(256)),
+      "opt4_approx_distinct" -> Seq(ApproxDistinctRewrite()),
+      "opt5_mv_rewrite" -> Seq(MaterializedViewRewrite),
+      "opt7_join_elim" -> Seq(JoinEliminationRewrite))
+    own.foreach { case (name, rules) =>
+      val entry = SparkEntry.queries(name)(caller, dir).sparkSession
+      assert(entry.experimental.extraOptimizations == before ++ rules, name)
+      assert(caller.experimental.extraOptimizations == before, s"$name changed the caller's rules")
+      Bench.sweepState(entry)
+    }
   }
 }

@@ -5,30 +5,29 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.plans._
 
 /** `SparkEntry.configure` is the one setup call on sessions the library
-  * did not build (e.g. the benchmark's). Re-running it must neither
-  * duplicate a rule nor reset a setting a session pinned.
+  * did not build (e.g. the benchmark's): it installs the always-on rules
+  * and nothing else, and re-running it must neither duplicate a rule nor
+  * reset a setting a session pinned. Opt-in rewrites are installed by
+  * the entries that exercise them, with their parameters checked at
+  * construction.
   */
 class GraftRulesSpec extends AnyFunSuite {
 
-  test("configure twice installs each rule once, in order, and keeps a pinned threshold") {
+  test("configure installs only the always-on rules, once, and sets no spark.graft conf") {
     val s = SharedSpark.spark.newSession()
     SparkEntry.configure(s)
-    assert(s.conf.get(InListToJoinRewrite.ThresholdConfKey) == "256")
-    s.conf.set(InListToJoinRewrite.ThresholdConfKey, "0")
     SparkEntry.configure(s)
-    assert(s.experimental.extraOptimizations == Seq(
-      RowNumberDedupRewrite, RangeBinJoinRewrite, InListToJoinRewrite,
-      ApproxDistinctRewrite, MaterializedViewRewrite, JoinEliminationRewrite,
-      EagerAggregationRewrite, DistinctEliminationRewrite, LevenshteinThresholdRewrite))
+    assert(s.experimental.extraOptimizations ==
+      Seq(RowNumberDedupRewrite, LevenshteinThresholdRewrite))
     assert(s.experimental.extraOptimizations == GraftRules.optimizerRules)
     assert(s.experimental.extraStrategies == Seq(AsOfJoinStrategy))
-    assert(s.conf.get(InListToJoinRewrite.ThresholdConfKey) == "0")
+    val graftConfs = s.conf.getAll.keys.filter(_.startsWith("spark.graft."))
+    assert(graftConfs.isEmpty, s"configure set $graftConfs")
   }
 
   test("configure is idempotent: a second call, and a call on a clone, change nothing") {
     val s = SharedSpark.spark.newSession()
     SparkEntry.configure(s)
-    s.conf.set(InListToJoinRewrite.ThresholdConfKey, "0")
     val (conf, rules, strategies) =
       (s.conf.getAll, s.experimental.extraOptimizations, s.experimental.extraStrategies)
     SparkEntry.configure(s)
@@ -36,7 +35,6 @@ class GraftRulesSpec extends AnyFunSuite {
     assert(s.experimental.extraOptimizations == rules)
     assert(rules.distinct == rules, s"duplicate rules: $rules")
     assert(s.experimental.extraStrategies == strategies)
-    assert(s.conf.get(InListToJoinRewrite.ThresholdConfKey) == "0")
 
     val clone = org.apache.spark.sql.GraftShims.cloneSession(s)
     assert(clone.conf.getAll == conf, "the clone did not start from the caller's confs")
@@ -53,5 +51,24 @@ class GraftRulesSpec extends AnyFunSuite {
     assert(s.experimental.extraOptimizations == LevenshteinThresholdRewrite +:
       GraftRules.optimizerRules.filterNot(_ == LevenshteinThresholdRewrite))
     assert(s.experimental.extraStrategies == GraftRules.strategies)
+    val always = s.experimental.extraOptimizations
+    GraftRules.install(s, MaterializedViewRewrite, JoinEliminationRewrite)
+    GraftRules.install(s, JoinEliminationRewrite, InListToJoinRewrite(256))
+    GraftRules.install(s, InListToJoinRewrite(256))
+    assert(s.experimental.extraOptimizations == always ++
+      Seq(MaterializedViewRewrite, JoinEliminationRewrite, InListToJoinRewrite(256)))
+    assert(s.experimental.extraStrategies == GraftRules.strategies)
+  }
+
+  test("rule parameters are checked at construction") {
+    val refusals = Seq(
+      "bin width" -> (() => RangeBinJoinRewrite(0L)),
+      "threshold" -> (() => InListToJoinRewrite(-1)),
+      "sketch size" -> (() => ApproxDistinctRewrite(1)))
+    refusals.foreach { case (what, build) =>
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains(what), s"$what: ${e.getMessage}")
+    }
+    assert(ApproxDistinctRewrite().k == graft.functions.NdvSketch.DefaultK)
   }
 }

@@ -30,7 +30,7 @@ class JoinElimSpec extends AnyFunSuite {
   private def elimSession(): SparkSession = {
     val s = SparkEntry.configure(spark.newSession())
     assert(TableConstraints.registerUnique(s, Tables(s, dir, "orders"), "o_orderkey"))
-    s.conf.set(JoinEliminationRewrite.ConfKey, "true")
+    graft.plans.GraftRules.install(s, JoinEliminationRewrite)
     s
   }
 
@@ -40,7 +40,6 @@ class JoinElimSpec extends AnyFunSuite {
     assert(!scansOrders(df), s"orders still scanned: ${scans(df)}")
     assert(scans(df).exists(_.contains("lineitem")))
     val off = SparkEntry.configure(spark.newSession())
-    off.conf.set(JoinEliminationRewrite.ConfKey, "false")
     val li = Tables(off, dir, "lineitem")
     val or = Tables(off, dir, "orders")
     val full = li.join(or, li("l_orderkey") === or("o_orderkey"), "left")
@@ -110,7 +109,7 @@ class JoinElimSpec extends AnyFunSuite {
   private def eagerSession(): SparkSession = {
     val s = SparkEntry.configure(spark.newSession())
     assert(TableConstraints.registerUnique(s, Tables(s, dir, "supplier"), "s_suppkey"))
-    s.conf.set(EagerAggregationRewrite.ConfKey, "true")
+    graft.plans.GraftRules.install(s, EagerAggregationRewrite)
     s
   }
 
@@ -120,7 +119,6 @@ class JoinElimSpec extends AnyFunSuite {
     assert(aggBelowJoin(df), "no aggregate below the join:\n" +
       df.queryExecution.optimizedPlan.treeString)
     val off = SparkEntry.configure(spark.newSession())
-    off.conf.set(EagerAggregationRewrite.ConfKey, "false")
     val li = Tables(off, dir, "lineitem")
     val supp = Tables(off, dir, "supplier")
     val plain = li.join(supp, li("l_suppkey") === supp("s_suppkey"), "inner")

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * prove the rewrite actually FIRES (the summary is scanned, the fact
   * table is not), that it round-trips semantics, and that every
   * exactness guard refuses correctly. Per-test `newSession()` keeps the
-  * session-scoped conf/rule installs isolated.
+  * session-scoped rule installs isolated.
   */
 class MvRewriteSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
@@ -23,7 +23,7 @@ class MvRewriteSpec extends AnyFunSuite {
   private def mvSession(): SparkSession = {
     val s = SparkEntry.configure(spark.newSession())
     SparkEntry.queries("opt5_mv_rewrite")(s, dir).collect() // build + register
-    s.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "true")
+    graft.plans.GraftRules.install(s, graft.plans.MaterializedViewRewrite)
     s
   }
 
@@ -61,7 +61,6 @@ class MvRewriteSpec extends AnyFunSuite {
     def g(sess: SparkSession): DataFrame =
       graft.Tables(sess, dir, "lineitem").agg(sum(qtyCents).as("sq"), count(lit(1)).as("n"))
     val off = SparkEntry.configure(spark.newSession())
-    off.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "false")
     assert(scansMv(q(s)) && !scansFact(q(s)))
     assert(scansMv(g(s)), "global aggregate should roll up too")
     assert(q(s).collect().toSeq == q(off).collect().toSeq)
@@ -135,14 +134,14 @@ class MvRewriteSpec extends AnyFunSuite {
   test("opt10: star MV fires — only the summary scanned; refusals keep the join") {
     val s = SparkEntry.configure(spark.newSession())
     val df = SparkEntry.queries("opt10_star_mv")(s, dir)
-    s.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "true") // entry enabled its CHILD only
+    // the entry installs the rule on its own clone; the queries below run on s
+    graft.plans.GraftRules.install(s, graft.plans.MaterializedViewRewrite)
     val paths = scans(df)
     assert(paths.exists(_.contains("graft_starmv_")), s"summary not scanned: $paths")
     assert(!paths.exists(p => p.contains("lineitem") || p.contains("orders") ||
       p.contains("supplier")), s"star legs still scanned: $paths")
     // values equal the rule-off raw join
     val off = SparkEntry.configure(spark.newSession())
-    off.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "false")
     def q(sess: SparkSession): DataFrame = {
       val li = graft.Tables(sess, dir, "lineitem")
       val or = graft.Tables(sess, dir, "orders")
@@ -179,17 +178,16 @@ class MvRewriteSpec extends AnyFunSuite {
   test("opt13: avg derives from sum+count partials; distinct and nullable children refuse") {
     val s = SparkEntry.configure(spark.newSession())
     val df = SparkEntry.queries("opt13_star_mv_avg")(s, dir)
-    s.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "true")
+    graft.plans.GraftRules.install(s, graft.plans.MaterializedViewRewrite)
     val paths = scans(df)
     assert(paths.exists(_.contains("graft_starmv_")), s"summary not scanned: $paths")
     assert(!paths.exists(p => p.contains("lineitem") || p.contains("orders") ||
       p.contains("supplier")), s"avg query still scans the star legs: $paths")
     // values equal the rule-off raw join (exact-total division ≡ Average).
-    // Built DIRECTLY against the off session — the entry force-enables
-    // the rewrite on its own child session, so calling the entry with an
+    // Built DIRECTLY against the off session — the entry installs the
+    // rewrite on its own session clone, so calling the entry with an
     // off parent would compare the rewrite to itself (r15 review).
     val off = SparkEntry.configure(spark.newSession())
-    off.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "false")
     def rawAvg(sess: SparkSession): DataFrame = {
       val li0 = graft.Tables(sess, dir, "lineitem")
       val or0 = graft.Tables(sess, dir, "orders")
@@ -238,7 +236,7 @@ class MvRewriteSpec extends AnyFunSuite {
       .agg(sum(col("v")).as("sum_v"), sum(col("u")).as("sum_u"), count(lit(1)).as("cnt"))
     defn.write.parquet(mvDir)
     graft.plans.MaterializedViewRewrite.registerStar(s, defn, mvDir)
-    s.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "true")
+    graft.plans.GraftRules.install(s, graft.plans.MaterializedViewRewrite)
     val mvName = new java.io.File(mvDir).getName
     val avgU = join(s).groupBy(col("grp")).agg(avg(col("u")).as("a"))
     assert(scans(avgU).exists(_.contains(mvName)), "audited null-free avg must derive")
@@ -265,7 +263,7 @@ class MvRewriteSpec extends AnyFunSuite {
     val defn = join(s).groupBy(col("grp")).agg(sum(col("v")).as("sum_v"), count(lit(1)).as("cnt"))
     defn.write.parquet(mvDir)
     graft.plans.MaterializedViewRewrite.registerStar(s, defn, mvDir)
-    s.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "true")
+    graft.plans.GraftRules.install(s, graft.plans.MaterializedViewRewrite)
     def q() = join(s).groupBy(col("grp")).agg(sum(col("v")).as("sv"))
     assert(scans(q()).exists(_.contains(new java.io.File(mvDir).getName)), "must fire when fresh")
     Seq((0L, "g1")).toDF("k", "grp").write.mode("append").parquet(dimDir) // dim grows (dup key!)
@@ -281,7 +279,7 @@ class MvRewriteSpec extends AnyFunSuite {
   test("opt12: filtered star query re-plans onto the summary; non-grouping filters refuse") {
     val s = SparkEntry.configure(spark.newSession())
     val df = SparkEntry.queries("opt12_filtered_star_mv")(s, dir)
-    s.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "true")
+    graft.plans.GraftRules.install(s, graft.plans.MaterializedViewRewrite)
     val paths = scans(df)
     assert(paths.exists(_.contains("graft_starmv2_")), s"summary not scanned: $paths")
     assert(!paths.exists(p => p.contains("lineitem") || p.contains("supplier")),
@@ -299,7 +297,6 @@ class MvRewriteSpec extends AnyFunSuite {
     val qDim = join().filter(col("s_nationkey") === 3)
       .groupBy(col("l_returnflag")).agg(count(lit(1)).as("n"))
     val off = SparkEntry.configure(spark.newSession())
-    off.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "false")
     def qDimOf(sess: SparkSession): DataFrame = {
       val li = graft.Tables(sess, dir, "lineitem")
       val supp = graft.Tables(sess, dir, "supplier")

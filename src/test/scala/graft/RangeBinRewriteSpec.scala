@@ -8,17 +8,16 @@ import graft.plans.RangeBinJoinRewrite
 
 /** Plan-shape and semantics pins for [[graft.plans.RangeBinJoinRewrite]]
   * (naive point-in-interval join → binned equi-join). Each test runs in
-  * its own `newSession()` — both the rule installation and the
-  * `spark.graft.rangeJoin.binUs` conf are session state, so nothing here
-  * leaks into the other suites sharing the SparkContext.
+  * its own `newSession()` — the rule installation, bin width included,
+  * is session state, so nothing here leaks into the other suites sharing
+  * the SparkContext.
   */
 class RangeBinRewriteSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
 
   private def ruled(binUs: Long): SparkSession = {
     val s = spark.newSession()
-    s.experimental.extraOptimizations = Seq(RangeBinJoinRewrite)
-    s.conf.set(RangeBinJoinRewrite.BinConfKey, binUs.toString)
+    s.experimental.extraOptimizations = Seq(RangeBinJoinRewrite(binUs))
     s
   }
 
@@ -115,30 +114,27 @@ class RangeBinRewriteSpec extends AnyFunSuite {
     assert(pairs(df(r)) == pairs(df(plain)))
   }
 
-  test("guards: equi conjunct present, conf unset, or non-inner join → no rewrite") {
+  test("guards: equi conjunct present or non-inner join → no rewrite") {
     val r = ruled(8000000L)
     val equi = pointsTs(r).join(intervalsTs(r),
       col("pid") % 3 === col("iid") % 3 && col("ts") >= col("istart") && col("ts") < col("iend"))
     assert(!fired(equi), "must leave keyed range joins to the planner/operator")
-    val noConf = spark.newSession()
-    noConf.experimental.extraOptimizations = Seq(RangeBinJoinRewrite)
-    assert(!fired(naive(noConf)) && hasNestedLoop(naive(noConf)))
     val outer = pointsTs(r).join(intervalsTs(r),
       col("ts") >= col("istart") && col("ts") < col("iend"), "left")
     assert(!fired(outer), "only INNER joins preserve the drop-null/drop-empty semantics")
   }
 
-  test("opt2 gate entry leaves the caller's bin width as it was") {
+  test("opt2 gate entry leaves the caller's rules as they were") {
     val s = SparkEntry.configure(spark.newSession())
     // one event a minute: every 97th opens a 2-hour window over ~120 of them
     val dir = java.nio.file.Files.createTempDirectory("opt2").toString
     s.range(2000).selectExpr("id AS event_id", "id % 7 AS user_id",
       "timestamp_micros(id * 60000000) AS ts").write.parquet(s"$dir/events.parquet")
-    val before = s.conf.getOption(RangeBinJoinRewrite.BinConfKey)
+    val before = s.experimental.extraOptimizations
     val df = SparkEntry.queries("opt2_range_bin_auto")(s, dir)
     assert(fired(df), "the entry's own plan must still take the range-bin rewrite")
     assert(df.count() > 0)
-    assert(s.conf.getOption(RangeBinJoinRewrite.BinConfKey) == before,
+    assert(s.experimental.extraOptimizations == before,
       "opt2 switched the range-bin rewrite on for every later entry on this session")
   }
 }

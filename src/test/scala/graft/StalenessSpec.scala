@@ -39,7 +39,7 @@ class StalenessSpec extends AnyFunSuite {
     val mvDf = base.groupBy(col("g")).agg(sum(col("v")).as("sum_v"), count(lit(1)).as("cnt"))
     mvDf.write.parquet(mvDir)
     graft.plans.MaterializedViewRewrite.register(s, base, mvDf, mvDir)
-    s.conf.set(graft.plans.MaterializedViewRewrite.ConfKey, "true")
+    graft.plans.GraftRules.install(s, graft.plans.MaterializedViewRewrite)
 
     def q(): DataFrame = // fresh read → fresh listing on every call
       s.read.parquet(baseDir).groupBy(col("g")).agg(sum(col("v")).as("sv"))
@@ -98,7 +98,7 @@ class StalenessSpec extends AnyFunSuite {
     (1 to 50).map(i => (i.toLong % 5, i.toLong)).toDF("fk", "m").write.parquet(factDir)
     (0L to 4L).map(k => (k, s"name$k")).toDF("k", "nm").write.parquet(dimDir)
     assert(graft.plans.TableConstraints.registerUnique(s, s.read.parquet(dimDir), "k"))
-    s.conf.set(graft.plans.JoinEliminationRewrite.ConfKey, "true")
+    graft.plans.GraftRules.install(s, graft.plans.JoinEliminationRewrite)
 
     def q(): DataFrame =
       s.read.parquet(factDir).join(s.read.parquet(dimDir), col("fk") === col("k"), "left")
@@ -112,7 +112,6 @@ class StalenessSpec extends AnyFunSuite {
       "constraint must not be trusted against a grown listing")
     // and the kept join is the correct (duplicating) answer
     val noRule = SparkEntry.configure(spark.newSession())
-    noRule.conf.set(graft.plans.JoinEliminationRewrite.ConfKey, "false")
     val expect = noRule.read.parquet(factDir)
       .join(noRule.read.parquet(dimDir), col("fk") === col("k"), "left")
       .groupBy(col("fk")).agg(sum(col("m")).as("sm"))

@@ -41,4 +41,12 @@ class SweepStateSpec extends AnyFunSuite {
     assert(!views.exists(_.endsWith("_mem")), s"memory-sink views left: ${views.mkString(", ")}")
     assert(df.sparkSession.streams.active.isEmpty)
   }
+
+  test("timeRuns over a non-streaming entry adds no streaming listener to the context's bus") {
+    val sc = spark.sparkContext
+    def buses = org.apache.spark.ListenerBusProbe.streamingListenerBuses(sc)
+    val before = buses
+    Bench.timeRuns(spark, SparkEntry.queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001"))
+    assert(buses == before, s"${buses - before} streaming listener buses added")
+  }
 }
