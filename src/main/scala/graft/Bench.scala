@@ -153,6 +153,28 @@ object Bench {
     }
   }
 
+  /** Bench's last stdout line: the sweep's meta fields, a fixed headline
+    * subset of queries (the flagship mart, the TPC-H opener, and one
+    * representative per major family) in 3-decimal seconds, and `full`,
+    * the file holding the complete line (the first of [[artifactPaths]]).
+    */
+  private[graft] def shortLine(results: Seq[(String, Either[String, Double])], total: Double,
+      sfDir: String, adjJson: String, full: String): String = {
+    val headline = Seq(
+      "mart_flagship", "mart_flagship_narrow", "q01_pricing_summary",
+      "q07_shipping_priority", "dd2_minhash_lsh_pairs", "ann1_topk_exact",
+      "ann9_topk_ivfpq", "tx10_tfidf", "tok1_bpe_merges", "sw5_stream_join",
+      "pr1_pagerank", "g5_kcore", "mm12_jpeg_decode", "cdc4_scd2_merge",
+      "dq12_join_cardinality")
+    val byName = results.toMap
+    val headQs = headline.flatMap(k => byName.get(k).map {
+      case Right(sec) => s""""$k":${f3(sec)}"""
+      case Left(err)  => s""""$k":"err:$err""""
+    }).mkString("{", ",", "}")
+    val failed = results.count(_._2.isLeft)
+    s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"failed":$failed,"sf":"$sfDir","queries":$headQs,"adjudication":$adjJson,"full":"$full"}"""
+  }
+
   /** Fresh-JVM mover re-run: spawns ONE child JVM running `graft.Dev
     * time` over all names — same classpath and JVM flags as this one
     * (build.sbt's add-opens, `-D` and `-Xmx`) — and returns each name's
@@ -436,33 +458,14 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spreadJson,"shared_view_consumers":$sharedViewJson,"sf":"$sfDir","failed":$failed,"adjudication":$adjJson}"""
     // The driver keeps only the last ~2000 stdout chars, and the full
     // per-query map is ~12 KB at 254 entries — it can NEVER fit, which
-    // is why BENCH_r*.json carried "parsed": null for twelve rounds.
-    // Print a SHORT summary as the true last line: the meta fields plus
-    // a fixed headline subset of queries (the flagship mart, the TPC-H
-    // opener, and one representative per major family), 3-decimal
-    // seconds. The complete map lives in bench_full.json/
-    // bench_summary.json (written below) for any consumer that wants
-    // all entries.
-    val headline = Seq(
-      "mart_flagship", "mart_flagship_narrow", "q01_pricing_summary",
-      "q07_shipping_priority", "dd2_minhash_lsh_pairs", "ann1_topk_exact",
-      "ann9_topk_ivfpq", "tx10_tfidf", "tok1_bpe_merges", "sw5_stream_join",
-      "pr1_pagerank", "g5_kcore", "mm12_jpeg_decode", "cdc4_scd2_merge",
-      "dq12_join_cardinality")
-    val byName = results.toMap
-    val headQs = headline.flatMap(k => byName.get(k).map {
-      case Right(sec) => s""""$k":${f3(sec)}"""
-      case Left(err)  => s""""$k":"err:$err""""
-    }).mkString("{", ",", "}")
-    val shortLine =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"failed":$failed,"sf":"$sfDir","queries":$headQs,"adjudication":$adjJson,"full":"bench_full.json"}"""
-    // Persist the complete per-query map as a file artifact: the driver
-    // captures a truncated log *tail*, so with 233 entries the printed
-    // line can lose the first half of the alphabet (BENCH_r06.json kept
-    // only 63 entries, "parsed": null). The file always has all of them.
+    // is why BENCH_r*.json carried "parsed": null for twelve rounds
+    // (BENCH_r06.json kept only 63 entries). So the complete line goes
+    // to the artifact files, which always hold every entry, and stdout
+    // ends with the SHORT summary ([[shortLine]]) naming the first one.
     val cwdFiles = Option(new java.io.File(".").list()).toSeq.flatten
-    artifactPaths(sys.env.get("SPARK_GRAFT_BENCH_OUT"), only.isDefined,
-      new java.io.File(sfDir).getName, cwdFiles).foreach { p =>
+    val written = artifactPaths(sys.env.get("SPARK_GRAFT_BENCH_OUT"), only.isDefined,
+      new java.io.File(sfDir).getName, cwdFiles)
+    written.foreach { p =>
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(p),
         line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -477,7 +480,7 @@ object Bench {
     SharedFrames.releaseAll(spark)
     spark.stop()
     println(line)
-    println(shortLine)
+    println(shortLine(results, total, sfDir, adjJson, written.head))
     System.out.flush()
     if (failed > 0) sys.exit(1)
   }

@@ -60,15 +60,14 @@ object Dev {
   }
 
   /** Formatted physical plans for the per-round plan review — pushdown
-    * reaching the scan, broadcast choices, codegen spans.
+    * reaching the scan, broadcast choices, codegen spans. Each plan is the
+    * one the gate runs: an entry whose plan depends on a measurement (the
+    * graph family's set-size probes and edge-count gates, per-sweep
+    * checkpoints, emb8/emb9's driver-side power iteration, iterative
+    * fixpoints such as ConnectedComponents) runs those jobs while its
+    * plan is built.
     */
   private def explain(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
-    // plan-only: measured gates (graph probe/count jobs) take their
-    // primary path instead of executing at plan-construction time, so
-    // explain stays execution-free for the graph family (iterative
-    // fixpoints like ConnectedComponents still execute — their plan IS
-    // data-dependent)
-    spark.conf.set("spark.graft.planOnly", "true")
     val all = if (names.nonEmpty) names else SparkEntry.queries.keys.toSeq.sorted
     all.foreach { n =>
       println(s"\n========== $n ==========")

@@ -14,17 +14,17 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   */
 object Bucketing {
 
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit = {
-    val spark = df.sparkSession
-    // idempotent rewrite: a managed location can survive from a previous
-    // session whose (in-memory) catalog is gone, and saveAsTable then
-    // refuses with LOCATION_ALREADY_EXISTS — drop both catalog entry and
-    // any orphaned location before writing
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    org.apache.spark.sql.GraftShims.deleteRecursively(new java.io.File(warehouse, table))
+  /** Writes `df` bucketed by `key` as the external table `table` at
+    * `path`, replacing any table of that name: the catalog holds the
+    * bucket spec, `path` holds the files, so the data lives wherever its
+    * caller's scratch does (never in the session's warehouse dir).
+    */
+  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int,
+      path: String): Unit = {
+    df.sparkSession.sql(s"DROP TABLE IF EXISTS `$table`")
     df.write
       .mode(SaveMode.Overwrite)
+      .option("path", path)
       .bucketBy(buckets, key)
       .sortBy(key)
       .saveAsTable(table)

@@ -1034,13 +1034,14 @@ object Dedup extends QueryModule {
   /** Driver-side Bloom bytes over [[benchmarkShingles]], memoized per
     * corpus dir like the contraction census (r17 ADVICE posture): dd9,
     * sw13, and sw14 each sized and filled an identical filter per run.
-    * Keyed on (applicationId, dir) so a restarted session rebuilds.
+    * Keyed on the context's scratch root for the dir ([[graft.Scratch]]),
+    * so a new context rebuilds.
     */
   private val benchBloomMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Array[Byte]]()
+    new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
 
   private def benchBloomBytes(s: SparkSession, dir: String): Array[Byte] =
-    benchBloomMemo.computeIfAbsent((s.sparkContext.applicationId, dir),
+    benchBloomMemo.computeIfAbsent(graft.Scratch.root(s, "bench_bloom", dir),
       _ => VectorFunctions.bloomBytesOf(benchmarkShingles(s, dir), "shingle", BloomFpp))
 
   private def decontaminate(s: SparkSession, dir: String): DataFrame = {
@@ -1154,6 +1155,14 @@ object Dedup extends QueryModule {
        |ORDER BY doc_id NULLS FIRST""".stripMargin
 
   // --------------------------------------------------------------- sw14
+  /** Synthetic ingest time: epoch + (doc_id mod 4) minutes; the
+    * sentinel (doc_id < 0) lands at epoch + 5 min, one full window +
+    * watermark delay past the last real bucket.
+    */
+  private[graft] val sw14Ts: Column = expr(
+    "timestamp'2026-03-01 00:00:00' + make_interval(0, 0, 0, 0, 0, " +
+      "CASE WHEN doc_id < 0 THEN 5 ELSE CAST(pmod(doc_id, 4) AS INT) END, 0)")
+
   /** sw13 in its PRODUCTION posture (VERDICT r14 #6): watermarked
     * APPEND output instead of Complete. Complete mode holds every
     * per-doc count in state forever — fine for the bounded gate corpus,
@@ -1179,66 +1188,46 @@ object Dedup extends QueryModule {
     * batch: a window evicted early, the tail never flushed, or a doc
     * split across windows all shift a count.
     */
-  private val sw14Staged = scala.collection.mutable.Set.empty[String]
-
-  /** Synthetic ingest time: epoch + (doc_id mod 4) minutes; the
-    * sentinel (doc_id < 0) lands at epoch + 5 min, one full window +
-    * watermark delay past the last real bucket.
-    */
-  private[graft] val sw14Ts: Column = expr(
-    "timestamp'2026-03-01 00:00:00' + make_interval(0, 0, 0, 0, 0, " +
-      "CASE WHEN doc_id < 0 THEN 5 ELSE CAST(pmod(doc_id, 4) AS INT) END, 0)")
-
-  private[graft] def sw14Stage(s: SparkSession, dir: String): String = {
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_sw14_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
-    sw14Staged.synchronized {
-      if (!sw14Staged.contains(root)) {
-        val rootF = new java.io.File(root); rootF.mkdirs()
-        val tmp = new java.io.File(rootF, "_stage_tmp")
-        val t0 = System.currentTimeMillis()
-        def writeOne(df: DataFrame, name: String, mtime: Long): Unit = {
-          df.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
-          val part = tmp.listFiles()
-            .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .getOrElse(throw new IllegalStateException(s"no part file staged in $tmp"))
-          val dest = new java.io.File(rootF, name)
-          java.nio.file.Files.move(part.toPath, dest.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dest.setLastModified(mtime); ()
-        }
-        val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        // 2 s mtime spacing: distinct even at 1 s filesystem granularity,
-        // so the file source's oldest-first order is the bucket order.
-        // r19 opt (VERDICT r18 #4): buckets staged as TWO files ({0,1},
-        // {2,3}) instead of four — each file is one micro-batch under
-        // maxFilesPerTrigger=1, and the per-batch lifecycle (planning,
-        // state-store load/commit, sink epoch) was the entry's dominant
-        // term at gate scale. Event times are a pure function of doc_id
-        // (sw14Ts), NOT of file placement, so windows, watermark
-        // advancement at batch boundaries, eviction, and the emitted
-        // counts are unchanged. Eviction stays MID-STREAM: the
-        // watermark reaches 2:50 after batch 2, so windows [0,1) and
-        // [1,2) evict while the sentinel DATA batch processes —
-        // before the trailing no-data batch (StreamingSpec pins
-        // continuous eviction + empty final state + streamed ≡ batch);
-        // the oracle is untouched. A/B at sf0.1: 4-file ~3.0 s vs
-        // 2-file ~2.15 s steady (ledger, OPTIMIZATION_r19.md).
-        for ((lo, name, i) <- Seq((0, "b01_docs.parquet", 0), (2, "b23_docs.parquet", 1)))
-          writeOne(docs.filter(pmod(col("doc_id"), lit(4)).isin(lo, lo + 1)),
-            name, t0 + i * 2000L)
-        import s.implicits._
-        writeOne(Seq((-1L, "sw14 sentinel advances past the final window"))
-          .toDF("doc_id", "text"), "z_sentinel.parquet", t0 + 8000L)
-        org.apache.spark.sql.GraftShims.deleteRecursively(tmp)
-        sw14Staged += root
-        ()
+  private[graft] def sw14Stage(s: SparkSession, dir: String): String =
+    graft.Scratch.once(s, "sw14", dir) { root =>
+      val rootF = new java.io.File(root); rootF.mkdirs()
+      val tmp = new java.io.File(rootF, "_stage_tmp")
+      val t0 = System.currentTimeMillis()
+      def writeOne(df: DataFrame, name: String, mtime: Long): Unit = {
+        df.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
+        val part = tmp.listFiles()
+          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+          .getOrElse(throw new IllegalStateException(s"no part file staged in $tmp"))
+        val dest = new java.io.File(rootF, name)
+        java.nio.file.Files.move(part.toPath, dest.toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        dest.setLastModified(mtime); ()
       }
+      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      // 2 s mtime spacing: distinct even at 1 s filesystem granularity,
+      // so the file source's oldest-first order is the bucket order.
+      // r19 opt (VERDICT r18 #4): buckets staged as TWO files ({0,1},
+      // {2,3}) instead of four — each file is one micro-batch under
+      // maxFilesPerTrigger=1, and the per-batch lifecycle (planning,
+      // state-store load/commit, sink epoch) was the entry's dominant
+      // term at gate scale. Event times are a pure function of doc_id
+      // (sw14Ts), NOT of file placement, so windows, watermark
+      // advancement at batch boundaries, eviction, and the emitted
+      // counts are unchanged. Eviction stays MID-STREAM: the
+      // watermark reaches 2:50 after batch 2, so windows [0,1) and
+      // [1,2) evict while the sentinel DATA batch processes —
+      // before the trailing no-data batch (StreamingSpec pins
+      // continuous eviction + empty final state + streamed ≡ batch);
+      // the oracle is untouched. A/B at sf0.1: 4-file ~3.0 s vs
+      // 2-file ~2.15 s steady (ledger, OPTIMIZATION_r19.md).
+      for ((lo, name, i) <- Seq((0, "b01_docs.parquet", 0), (2, "b23_docs.parquet", 1)))
+        writeOne(docs.filter(pmod(col("doc_id"), lit(4)).isin(lo, lo + 1)),
+          name, t0 + i * 2000L)
+      import s.implicits._
+      writeOne(Seq((-1L, "sw14 sentinel advances past the final window"))
+        .toDF("doc_id", "text"), "z_sentinel.parquet", t0 + 8000L)
+      org.apache.spark.sql.GraftShims.deleteRecursively(tmp)
     }
-    root
-  }
 
   private def streamDecontaminateAppend(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -1341,8 +1330,8 @@ object Dedup extends QueryModule {
   private[graft] val Dd10CorpusTable = "graft_dd10_corpus_bands"
 
   private def incrementalNearDup(s: SparkSession, dir: String): DataFrame = {
-    graft.operators.Bucketing.writeBucketed(
-      corpusBandsWithShingles(s, dir), Dd10CorpusTable, "bkey", 8)
+    graft.operators.Bucketing.writeBucketed(corpusBandsWithShingles(s, dir),
+      Dd10CorpusTable, "bkey", 8, graft.Scratch.root(s, "dd10_corpus_bands", dir))
     incrementalMatches(plantedBatch(s, dir), s.table(Dd10CorpusTable), minJ = 0.5)
       .orderBy(col("doc_a").asc_nulls_first, col("doc_b").asc_nulls_first)
   }

@@ -1454,6 +1454,20 @@ object Extras extends QueryModule {
        |ORDER BY c_custkey NULLS FIRST""".stripMargin
 
   // ---------------------------------------------------------------- bkt1
+  /** Ingest-time semantics made literal: the bucketed layout is written
+    * once per (context, corpus dir) and reused after that — the first
+    * call pays the layout job, repeat calls measure the amortized
+    * co-located query, which is the posture the entry exists to show.
+    * The table name carries the dir, so a name never points at another
+    * dir's layout (a sf0.001 spec and the sf0.01 gate in one JVM).
+    */
+  private def bucketed(df: DataFrame, tag: String, key: String, dir: String): DataFrame = {
+    val s = df.sparkSession
+    val table = s"graft_${tag}_" + dir.replaceAll("[^A-Za-z0-9_]", "_")
+    graft.Scratch.once(s, tag, dir)(graft.operators.Bucketing.writeBucketed(df, table, key, 8, _))
+    s.table(table)
+  }
+
   /** Bucketed co-located fact-fact join + aggregation as a GATE entry
     * (previously only spec-pinned in OperatorsSpec): lineitem and orders
     * are laid out once as same-bucketed catalog tables on the order key,
@@ -1471,32 +1485,11 @@ object Extras extends QueryModule {
     * must be invisible in the result, which is the property worth
     * hash-proving (same contract as sj1's salting invisibility).
     */
-  private[graft] val Bkt1OrdersTable = "graft_bkt1_orders"
-  private[graft] val Bkt1LineitemTable = "graft_bkt1_lineitem"
-
-  /** Ingest-time semantics made literal: the bucketed layout is written
-    * once per (table, corpus dir) per JVM and reused after that — the
-    * first call pays the layout job, repeat calls measure the amortized
-    * co-located query, which is the posture the entry exists to show.
-    * A dir change (sf0.001 spec vs sf0.01 gate) forces a rewrite.
-    */
-  private val bktWritten = scala.collection.mutable.Map.empty[String, String]
-
-  private def ensureBucketed(df: DataFrame, table: String, key: String, dir: String): Unit =
-    bktWritten.synchronized {
-      val s = df.sparkSession
-      if (!bktWritten.get(table).contains(dir) || !s.catalog.tableExists(table)) {
-        graft.operators.Bucketing.writeBucketed(df, table, key, 8)
-        bktWritten(table) = dir
-      }
-    }
-
   private def bucketedJoinGate(s: SparkSession, dir: String): DataFrame = {
-    ensureBucketed(t(s, dir, "orders"), Bkt1OrdersTable, "o_orderkey", dir)
-    ensureBucketed(t(s, dir, "lineitem").withColumnRenamed("l_orderkey", "o_orderkey"),
-      Bkt1LineitemTable, "o_orderkey", dir)
-    s.table(Bkt1LineitemTable)
-      .join(s.table(Bkt1OrdersTable), Seq("o_orderkey"))
+    val orders = bucketed(t(s, dir, "orders"), "bkt1_orders", "o_orderkey", dir)
+    bucketed(t(s, dir, "lineitem").withColumnRenamed("l_orderkey", "o_orderkey"),
+      "bkt1_lineitem", "o_orderkey", dir)
+      .join(orders, Seq("o_orderkey"))
       .groupBy(col("o_orderkey"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n_lines"), sum(Stats.revenueE4).as("revenue_e4"))
       .orderBy(col("o_orderkey").asc_nulls_first,
@@ -1535,23 +1528,14 @@ object Extras extends QueryModule {
     * scanning a month and scanning a decade. The partition column is a
     * string month so partition-value inference round-trips exactly.
     */
-  private val dppBuilt = scala.collection.mutable.Set.empty[String]
-
-  private[graft] def dppRoot(s: SparkSession, dir: String): String = new java.io.File(
-    sys.props("java.io.tmpdir"),
-    "graft_dpp1_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
-      "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+  private[graft] def dppRoot(s: SparkSession, dir: String): String =
+    graft.Scratch.root(s, "dpp1", dir)
 
   private def partitionPrunedJoin(s: SparkSession, dir: String): DataFrame = {
-    val root = dppRoot(s, dir)
-    dppBuilt.synchronized {
-      if (!dppBuilt.contains(root)) {
-        t(s, dir, "orders")
-          .withColumn("om", date_format(col("o_orderdate"), "yyyy-MM"))
-          .write.mode("overwrite").partitionBy("om").parquet(root)
-        dppBuilt += root
-        ()
-      }
+    val root = graft.Scratch.once(s, "dpp1", dir) { root =>
+      t(s, dir, "orders")
+        .withColumn("om", date_format(col("o_orderdate"), "yyyy-MM"))
+        .write.mode("overwrite").partitionBy("om").parquet(root)
     }
     val fact = s.read.parquet(root)
     val dim = t(s, dir, "orders")
@@ -1582,7 +1566,7 @@ object Extras extends QueryModule {
   // ---------------------------------------------------------------- cmp1
   /** Compaction-invisibility gate — the [[graft.sinks.Compactor]] was
     * the one r11 operator with no CORRECTNESS row (spec-only; VERDICT
-    * r11 #8). bkt1's pattern: the first call per (JVM, corpus dir)
+    * r11 #8). bkt1's pattern: the first call per (context, corpus dir)
     * builds a deliberately FRAGMENTED copy of `documents` (32-way
     * repartition — one small file per task, the per-ingest storm
     * compaction exists to fix) as a [[graft.sinks.VersionedTable]],
@@ -1595,33 +1579,14 @@ object Extras extends QueryModule {
     * contract). Non-vacuity (files genuinely merged, crash-between-
     * phases reader isolation) is pinned by SinksOpsSpec.
     */
-  private val cmpBuilt = scala.collection.mutable.Set.empty[String]
-
   private def compactedTableGate(s: SparkSession, dir: String): DataFrame = {
-    // root salted with the applicationId: the per-JVM memo (cmpBuilt)
-    // cannot see ANOTHER process's lifecycle, so a fixed path would let
-    // two concurrent runs (bench + correctness) race drop/publish
-    // against read, and a long-lived JVM would serve stale contents
-    // after the corpus under `dir` is regenerated (ADVICE r12). The
-    // applicationId is unique per SparkContext, so each process gets a
-    // private root — same isolation a production job gets from a
-    // run-scoped staging prefix.
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_cmp1_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
-    cmpBuilt.synchronized {
-      if (!cmpBuilt.contains(root)) {
-        // fresh bootstrap per (app, corpus dir): a leftover root from a
-        // crashed run of the SAME app id (impossible in practice, cheap
-        // to guard) would otherwise accumulate versions
-        graft.sinks.VersionedTable.drop(s, root)
-        graft.sinks.VersionedTable.publish(s, root,
-          t(s, dir, "documents").repartition(32))
-        graft.sinks.Compactor.compactVersioned(s, root, 256L * 1024 * 1024)
-        cmpBuilt += root
-        ()
-      }
+    val root = graft.Scratch.once(s, "cmp1", dir) { root =>
+      // a build that threw part-way left versions behind: start clean
+      graft.sinks.VersionedTable.drop(s, root)
+      graft.sinks.VersionedTable.publish(s, root,
+        t(s, dir, "documents").repartition(32))
+      graft.sinks.Compactor.compactVersioned(s, root, 256L * 1024 * 1024)
+      ()
     }
     graft.sinks.VersionedTable.read(s, root)
       .groupBy(col("lang"))
@@ -1640,7 +1605,7 @@ object Extras extends QueryModule {
     * query-rewrite half of the MV posture
     * ([[graft.plans.MaterializedViewRewrite]] scaladoc has the full
     * derivability contract). The entry builds a (returnflag, linestatus)
-    * summary of lineitem ONCE per (session, corpus) — sum-of-cents
+    * summary of lineitem ONCE per (context, corpus) — sum-of-cents
     * measures per the money convention, exact BIGINT partials — then
     * runs a FILTERED ROLL-UP against the BASE table: group by
     * l_returnflag only, restricted to linestatus 'F'. With the rule
@@ -1659,28 +1624,17 @@ object Extras extends QueryModule {
   private def mvQtyCents: org.apache.spark.sql.Column = expr("CAST(round(l_quantity * 100) AS BIGINT)")
   private def mvPriceCents: org.apache.spark.sql.Column = expr("CAST(round(l_extendedprice * 100) AS BIGINT)")
 
-  private val mvBuilt = scala.collection.mutable.Set.empty[String]
-
   private def mvRewriteGate(s: SparkSession, dir: String): DataFrame = {
-    // appId-salted root, same isolation story as cmp1 (ADVICE r12)
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_mv_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
-    mvBuilt.synchronized {
-      if (!mvBuilt.contains(root)) {
-        val base = t(s, dir, "lineitem")
-        val defn = base
-          .groupBy(col("l_returnflag"), col("l_linestatus"))
-          .agg(
-            sum(mvQtyCents).as("sum_qty_c"),
-            sum(mvPriceCents).as("sum_price_c"),
-            count(lit(1)).as("cnt"))
-        defn.write.mode("overwrite").parquet(root)
-        graft.plans.MaterializedViewRewrite.register(s, base, defn, root)
-        mvBuilt += root
-        ()
-      }
+    graft.Scratch.once(s, "mv", dir) { root =>
+      val base = t(s, dir, "lineitem")
+      val defn = base
+        .groupBy(col("l_returnflag"), col("l_linestatus"))
+        .agg(
+          sum(mvQtyCents).as("sum_qty_c"),
+          sum(mvPriceCents).as("sum_price_c"),
+          count(lit(1)).as("cnt"))
+      defn.write.mode("overwrite").parquet(root)
+      graft.plans.MaterializedViewRewrite.register(s, base, defn, root)
     }
     GraftRules.install(s, graft.plans.MaterializedViewRewrite)
     t(s, dir, "lineitem")
@@ -1728,13 +1682,8 @@ object Extras extends QueryModule {
     * "batches" are filters over one parquet; on a partitioned fact
     * table the delta filter is partition pruning.
     */
-  private val mvRefreshBuilt = scala.collection.mutable.Set.empty[String]
-
-  private def mvRefreshRoot(s: SparkSession, dir: String): String =
-    new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_mvref_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+  private[graft] def mvRefreshRoot(s: SparkSession, dir: String): String =
+    graft.Scratch.root(s, "mvref", dir)
 
   /** The MV grain shared by v1, the delta fold, and the oracle. */
   private def mvRefreshSummary(df: DataFrame): DataFrame =
@@ -1748,29 +1697,25 @@ object Extras extends QueryModule {
 
   private def mvRefreshGate(s: SparkSession, dir: String): DataFrame = {
     import graft.sinks.VersionedTable
-    val root = mvRefreshRoot(s, dir)
-    mvRefreshBuilt.synchronized {
-      if (!mvRefreshBuilt.contains(root)) {
-        VersionedTable.drop(s, root)
-        val li = t(s, dir, "lineitem")
-        VersionedTable.publish(s, root,
-          mvRefreshSummary(li.filter(col("l_orderkey") % 7 =!= 0)))
-        // refresh: committed summary (few rows) + delta fold, re-merged
-        val merged = VersionedTable.read(s, root)
-          .unionByName(mvRefreshSummary(li.filter(col("l_orderkey") % 7 === 0)))
-          .groupBy(col("l_returnflag"), col("l_linestatus"))
-          .agg(
-            sum(col("sum_qty_c")).as("sum_qty_c"),
-            sum(col("sum_price_c")).as("sum_price_c"),
-            sum(col("cnt")).as("cnt"),
-            min(col("min_ship")).as("min_ship"),
-            max(col("max_ship")).as("max_ship"))
-        VersionedTable.publish(s, root, merged)
-        mvRefreshBuilt += root
-        ()
-      }
+    val root = graft.Scratch.once(s, "mvref", dir) { root =>
+      VersionedTable.drop(s, root)
+      val li = t(s, dir, "lineitem")
+      VersionedTable.publish(s, root,
+        mvRefreshSummary(li.filter(col("l_orderkey") % 7 =!= 0)))
+      // refresh: committed summary (few rows) + delta fold, re-merged
+      val merged = VersionedTable.read(s, root)
+        .unionByName(mvRefreshSummary(li.filter(col("l_orderkey") % 7 === 0)))
+        .groupBy(col("l_returnflag"), col("l_linestatus"))
+        .agg(
+          sum(col("sum_qty_c")).as("sum_qty_c"),
+          sum(col("sum_price_c")).as("sum_price_c"),
+          sum(col("cnt")).as("cnt"),
+          min(col("min_ship")).as("min_ship"),
+          max(col("max_ship")).as("max_ship"))
+      VersionedTable.publish(s, root, merged)
+      ()
     }
-    graft.sinks.VersionedTable.read(s, root)
+    VersionedTable.read(s, root)
       .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
   }
 
@@ -1905,7 +1850,7 @@ object Extras extends QueryModule {
     * no uniqueness constraint: equal listings make the query's join
     * bag-identical to the join the MV summarized. The entry builds a
     * (o_orderpriority, s_nationkey) summary of lineitem ⟕ orders ⟕
-    * supplier once per (session, corpus), then runs the coarser
+    * supplier once per (context, corpus), then runs the coarser
     * "revenue by order priority" roll-up; the DuckDB oracle EXECUTES
     * the full two-dim join + aggregate, so the hash proves
     * star-MV-path ≡ raw-join-path. MvRewriteSpec pins that the
@@ -1913,8 +1858,6 @@ object Extras extends QueryModule {
     * supplier. At 100 TB this is the difference between a dashboard
     * refresh that re-joins the fact table and one that reads kilobytes.
     */
-  private val starMvBuilt = scala.collection.mutable.Set.empty[String]
-
   private def starJoin(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem")
     val or = t(s, dir, "orders")
@@ -1924,23 +1867,15 @@ object Extras extends QueryModule {
   }
 
   private def starMvGate(s: SparkSession, dir: String): DataFrame = {
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_starmv_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
-    starMvBuilt.synchronized {
-      if (!starMvBuilt.contains(root)) {
-        val defn = starJoin(s, dir)
-          .groupBy(col("o_orderpriority"), col("s_nationkey"))
-          .agg(
-            sum(mvPriceCents).as("sum_price_c"),
-            sum(mvQtyCents).as("sum_qty_c"),
-            count(lit(1)).as("cnt"))
-        defn.write.mode("overwrite").parquet(root)
-        graft.plans.MaterializedViewRewrite.registerStar(s, defn, root)
-        starMvBuilt += root
-        ()
-      }
+    graft.Scratch.once(s, "starmv", dir) { root =>
+      val defn = starJoin(s, dir)
+        .groupBy(col("o_orderpriority"), col("s_nationkey"))
+        .agg(
+          sum(mvPriceCents).as("sum_price_c"),
+          sum(mvQtyCents).as("sum_qty_c"),
+          count(lit(1)).as("cnt"))
+      defn.write.mode("overwrite").parquet(root)
+      graft.plans.MaterializedViewRewrite.registerStar(s, defn, root)
     }
     GraftRules.install(s, graft.plans.MaterializedViewRewrite)
     starJoin(s, dir)
@@ -2127,28 +2062,18 @@ object Extras extends QueryModule {
     * the raw filtered join; MvRewriteSpec pins that only the summary is
     * scanned and that non-grouping-column filters refuse.
     */
-  private val starMv2Built = scala.collection.mutable.Set.empty[String]
-
   private def filteredStarGate(s: SparkSession, dir: String): DataFrame = {
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_starmv2_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
     def join(sess: SparkSession): DataFrame = {
       val li = t(sess, dir, "lineitem")
       val supp = t(sess, dir, "supplier")
       li.join(supp, li("l_suppkey") === supp("s_suppkey"), "left")
     }
-    starMv2Built.synchronized {
-      if (!starMv2Built.contains(root)) {
-        val defn = join(s)
-          .groupBy(col("l_returnflag"), col("s_nationkey"))
-          .agg(sum(mvPriceCents).as("sum_price_c"), count(lit(1)).as("cnt"))
-        defn.write.mode("overwrite").parquet(root)
-        graft.plans.MaterializedViewRewrite.registerStar(s, defn, root)
-        starMv2Built += root
-        ()
-      }
+    graft.Scratch.once(s, "starmv2", dir) { root =>
+      val defn = join(s)
+        .groupBy(col("l_returnflag"), col("s_nationkey"))
+        .agg(sum(mvPriceCents).as("sum_price_c"), count(lit(1)).as("cnt"))
+      defn.write.mode("overwrite").parquet(root)
+      graft.plans.MaterializedViewRewrite.registerStar(s, defn, root)
     }
     GraftRules.install(s, graft.plans.MaterializedViewRewrite)
     join(s)
@@ -2234,51 +2159,40 @@ object Extras extends QueryModule {
     * plan states (fires fresh → stands down stale → fires again after
     * re-registration).
     */
-  private val starRefreshBuilt = scala.collection.mutable.Set.empty[String]
-
   private def starRefreshGate(s: SparkSession, dir: String): DataFrame = {
-    def salted(tag: String) = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_starref_${tag}_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
-    val factDir = salted("fact")
-    val mvV1 = salted("mv1")
-    val mvV2 = salted("mv2")
+    val mvV1 = graft.Scratch.root(s, "starref_mv1", dir)
+    val mvV2 = graft.Scratch.root(s, "starref_mv2", dir)
     def fold(df: DataFrame): DataFrame =
       df.join(t(s, dir, "supplier"), df("l_suppkey") === col("s_suppkey"), "left")
         .groupBy(col("s_nationkey"))
         .agg(sum(mvPriceCents).as("sum_price_c"), count(lit(1)).as("cnt"))
-    starRefreshBuilt.synchronized {
-      if (!starRefreshBuilt.contains(factDir)) {
-        val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-        Seq(factDir, mvV1, mvV2).foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
-        val li = t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_suppkey"), col("l_extendedprice"))
-        // day 0: the initial fact slice lands; its star summary publishes
-        li.filter(col("l_orderkey") % 9 =!= 0).write.parquet(factDir)
-        fold(s.read.parquet(factDir)).write.parquet(mvV1)
-        val defn1 = fold(s.read.parquet(factDir))
-        graft.plans.MaterializedViewRewrite.registerStar(s, defn1, mvV1)
-        // day 1: a late batch APPENDS to the fact path — the v1
-        // registration is now stale (its fingerprint no longer matches)
-        // and the rewrite stands down until the refresh below
-        val delta = li.filter(col("l_orderkey") % 9 === 0)
-        delta.write.mode("append").parquet(factDir)
-        // incremental refresh: committed summary + delta fold, merged —
-        // the delta joins the dim; the v1 base rows are never re-read
-        val refreshed = s.read.parquet(mvV1)
-          .unionByName(fold(delta))
-          .groupBy(col("s_nationkey"))
-          .agg(sum(col("sum_price_c")).as("sum_price_c"), sum(col("cnt")).as("cnt"))
-        refreshed.write.parquet(mvV2)
-        // re-register: the definition is the canonical full-fact star
-        // (over the GROWN listing); the data under mvV2 was produced
-        // incrementally — if the merge were wrong, the rewritten query
-        // below would answer wrong values and the oracle hash fails
-        graft.plans.MaterializedViewRewrite.registerStar(s, fold(s.read.parquet(factDir)), mvV2)
-        starRefreshBuilt += factDir
-        ()
-      }
+    val factDir = graft.Scratch.once(s, "starref_fact", dir) { factDir =>
+      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
+      Seq(factDir, mvV1, mvV2).foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
+      val li = t(s, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_suppkey"), col("l_extendedprice"))
+      // day 0: the initial fact slice lands; its star summary publishes
+      li.filter(col("l_orderkey") % 9 =!= 0).write.parquet(factDir)
+      fold(s.read.parquet(factDir)).write.parquet(mvV1)
+      val defn1 = fold(s.read.parquet(factDir))
+      graft.plans.MaterializedViewRewrite.registerStar(s, defn1, mvV1)
+      // day 1: a late batch APPENDS to the fact path — the v1
+      // registration is now stale (its fingerprint no longer matches)
+      // and the rewrite stands down until the refresh below
+      val delta = li.filter(col("l_orderkey") % 9 === 0)
+      delta.write.mode("append").parquet(factDir)
+      // incremental refresh: committed summary + delta fold, merged —
+      // the delta joins the dim; the v1 base rows are never re-read
+      val refreshed = s.read.parquet(mvV1)
+        .unionByName(fold(delta))
+        .groupBy(col("s_nationkey"))
+        .agg(sum(col("sum_price_c")).as("sum_price_c"), sum(col("cnt")).as("cnt"))
+      refreshed.write.parquet(mvV2)
+      // re-register: the definition is the canonical full-fact star
+      // (over the GROWN listing); the data under mvV2 was produced
+      // incrementally — if the merge were wrong, the rewritten query
+      // below would answer wrong values and the oracle hash fails
+      graft.plans.MaterializedViewRewrite.registerStar(s, fold(s.read.parquet(factDir)), mvV2)
     }
     GraftRules.install(s, graft.plans.MaterializedViewRewrite)
     fold(s.read.parquet(factDir))
@@ -2310,38 +2224,29 @@ object Extras extends QueryModule {
     * DuckDB oracle aggregates the SURVIVING raw rows, so the hash
     * proves retraction-merge ≡ recompute-after-delete.
     */
-  private val inc4Built = scala.collection.mutable.Set.empty[String]
-
-  private def inc4Root(s: SparkSession, dir: String): String =
-    new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_inc4_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+  private[graft] def inc4Root(s: SparkSession, dir: String): String =
+    graft.Scratch.root(s, "inc4", dir)
 
   private def deleteIvm(s: SparkSession, dir: String): DataFrame = {
     import graft.sinks.VersionedTable
-    val root = inc4Root(s, dir)
     def fold(df: DataFrame, sign: Int): DataFrame =
       df.groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg((sum(mvQtyCents) * sign).as("sum_qty_c"),
           (count(lit(1)) * sign).as("cnt"))
-    inc4Built.synchronized {
-      if (!inc4Built.contains(root)) {
-        VersionedTable.drop(s, root)
-        val li = t(s, dir, "lineitem")
-        VersionedTable.publish(s, root, fold(li, 1)) // v1: the full summary
-        // a delete batch retracts the %11 slice: negate its fold, merge
-        val refreshed = VersionedTable.read(s, root)
-          .unionByName(fold(li.filter(col("l_orderkey") % 11 === 0), -1))
-          .groupBy(col("l_returnflag"), col("l_linestatus"))
-          .agg(sum(col("sum_qty_c")).as("sum_qty_c"), sum(col("cnt")).as("cnt"))
-          .filter(col("cnt") > 0) // fully-retracted groups vanish
-        VersionedTable.publish(s, root, refreshed) // v2: never re-reads survivors
-        inc4Built += root
-        ()
-      }
+    val root = graft.Scratch.once(s, "inc4", dir) { root =>
+      VersionedTable.drop(s, root)
+      val li = t(s, dir, "lineitem")
+      VersionedTable.publish(s, root, fold(li, 1)) // v1: the full summary
+      // a delete batch retracts the %11 slice: negate its fold, merge
+      val refreshed = VersionedTable.read(s, root)
+        .unionByName(fold(li.filter(col("l_orderkey") % 11 === 0), -1))
+        .groupBy(col("l_returnflag"), col("l_linestatus"))
+        .agg(sum(col("sum_qty_c")).as("sum_qty_c"), sum(col("cnt")).as("cnt"))
+        .filter(col("cnt") > 0) // fully-retracted groups vanish
+      VersionedTable.publish(s, root, refreshed) // v2: never re-reads survivors
+      ()
     }
-    graft.sinks.VersionedTable.read(s, root)
+    VersionedTable.read(s, root)
       .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
   }
 
@@ -2374,14 +2279,6 @@ object Extras extends QueryModule {
     * surviving raw rows: the hash proves retract+targeted-rescan ≡
     * recompute-after-delete.
     */
-  private val inc5Built = scala.collection.mutable.Set.empty[String]
-
-  private def inc5Root(s: SparkSession, dir: String): String =
-    new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_inc5_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
-
   /** The refresh algebra, shared with IncMinMaxSpec: returns the
     * refreshed summary plus the LAZY audit frames (affected keys,
     * groups-with-deletes, all groups) the spec counts for its
@@ -2426,17 +2323,13 @@ object Extras extends QueryModule {
 
   private def minMaxIvm(s: SparkSession, dir: String): DataFrame = {
     import graft.sinks.VersionedTable
-    val root = inc5Root(s, dir)
-    inc5Built.synchronized {
-      if (!inc5Built.contains(root)) {
-        VersionedTable.drop(s, root)
-        val (refreshed, _, _, _) = minMaxRefresh(s, dir) // audit frames stay lazy here
-        VersionedTable.publish(s, root, refreshed)
-        inc5Built += root
-        ()
-      }
+    val root = graft.Scratch.once(s, "inc5", dir) { root =>
+      VersionedTable.drop(s, root)
+      val (refreshed, _, _, _) = minMaxRefresh(s, dir) // audit frames stay lazy here
+      VersionedTable.publish(s, root, refreshed)
+      ()
     }
-    graft.sinks.VersionedTable.read(s, root)
+    VersionedTable.read(s, root)
       .orderBy(col("grp").asc_nulls_first)
   }
 
@@ -2468,40 +2361,31 @@ object Extras extends QueryModule {
     * that has them). At gate scale the "batches" are residue filters
     * over one parquet; the algebra is the artifact under test.
     */
-  private val ivmBuilt = scala.collection.mutable.Set.empty[String]
-
-  private def ivmRoot(s: SparkSession, dir: String): String =
-    new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_inc3_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+  private[graft] def ivmRoot(s: SparkSession, dir: String): String =
+    graft.Scratch.root(s, "inc3", dir)
 
   private def joinIvm(s: SparkSession, dir: String): DataFrame = {
     import graft.sinks.VersionedTable
-    val root = ivmRoot(s, dir)
-    ivmBuilt.synchronized {
-      if (!ivmBuilt.contains(root)) {
-        VersionedTable.drop(s, root)
-        def li(p: Column => Column) = t(s, dir, "lineitem").filter(p(col("l_orderkey")))
-          .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-            mvQtyCents.as("qty_c"))
-        def or(p: Column => Column) = t(s, dir, "orders").filter(p(col("o_orderkey")))
-          .select(col("o_orderkey"), col("o_orderstatus"))
-        def j(l: DataFrame, r: DataFrame) =
-          l.join(r, col("l_orderkey") === col("o_orderkey"), "inner")
-        val r0 = li(k => k % 5 =!= 0); val dR = li(k => k % 5 === 0)
-        val s0 = or(k => k % 7 =!= 0); val dS = or(k => k % 7 === 0)
-        VersionedTable.publish(s, root, j(r0, s0)) // v1: the pre-delta view
-        val refreshed = VersionedTable.read(s, root)
-          .unionByName(j(dR, s0)) // ΔR ⋈ S₀
-          .unionByName(j(r0, dS)) // R₀ ⋈ ΔS
-          .unionByName(j(dR, dS)) // ΔR ⋈ ΔS
-        VersionedTable.publish(s, root, refreshed) // v2: never base⋈base
-        ivmBuilt += root
-        ()
-      }
+    val root = graft.Scratch.once(s, "inc3", dir) { root =>
+      VersionedTable.drop(s, root)
+      def li(p: Column => Column) = t(s, dir, "lineitem").filter(p(col("l_orderkey")))
+        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
+          mvQtyCents.as("qty_c"))
+      def or(p: Column => Column) = t(s, dir, "orders").filter(p(col("o_orderkey")))
+        .select(col("o_orderkey"), col("o_orderstatus"))
+      def j(l: DataFrame, r: DataFrame) =
+        l.join(r, col("l_orderkey") === col("o_orderkey"), "inner")
+      val r0 = li(k => k % 5 =!= 0); val dR = li(k => k % 5 === 0)
+      val s0 = or(k => k % 7 =!= 0); val dS = or(k => k % 7 === 0)
+      VersionedTable.publish(s, root, j(r0, s0)) // v1: the pre-delta view
+      val refreshed = VersionedTable.read(s, root)
+        .unionByName(j(dR, s0)) // ΔR ⋈ S₀
+        .unionByName(j(r0, dS)) // R₀ ⋈ ΔS
+        .unionByName(j(dR, dS)) // ΔR ⋈ ΔS
+      VersionedTable.publish(s, root, refreshed) // v2: never base⋈base
+      ()
     }
-    graft.sinks.VersionedTable.read(s, root)
+    VersionedTable.read(s, root)
       .groupBy(col("o_orderstatus"), col("l_returnflag"))
       .agg(count(lit(1)).as("n_rows"), sum(col("qty_c")).as("sum_qty_c"))
       .orderBy(col("o_orderstatus").asc_nulls_first, col("l_returnflag").asc_nulls_first)

@@ -16,16 +16,6 @@ object Graph extends QueryModule {
 
   private def t(s: SparkSession, dir: String, n: String) = Tables.wide(s, dir, n)
 
-  /** Plan-only mode (`spark.graft.planOnly=true`, set by `graft.Dev explain`):
-    * skip the measured probe/materialization jobs that normally run at
-    * PLAN CONSTRUCTION time (set-size probe, edge-count gates) and take
-    * each entry's primary path, so `explain` is execution-free. Never set
-    * by Verify/Bench — gate and bench plans stay measured (VERDICT r07/r08
-    * optional-polish item).
-    */
-  private def planOnly(s: SparkSession): Boolean =
-    s.conf.getOption("spark.graft.planOnly").contains("true")
-
   // ---------------------------------------------------------------- tri1
   /** Oriented (u < v) distinct co-purchase edges, persisted: each graph
     * entry fans out over this frame several times (tri1: the edge
@@ -50,8 +40,7 @@ object Graph extends QueryModule {
     * Sized variants stay un-memoized so LinkageSpec can force fallbacks.
     */
   private def orientedEdges(s: SparkSession, dir: String): DataFrame =
-    if (planOnly(s)) orientedEdgesSized(s, dir, MaxOrderSetSize) // no checkpoint job
-    else graft.SharedFrames.memoize(s, s"graph.orientedEdges:$dir")(
+    graft.SharedFrames.memoize(s, s"graph.orientedEdges:$dir")(
       orientedEdgesSized(s, dir, MaxOrderSetSize))
 
   /** NOTE: like [[triangleCensusSized]], CONSTRUCTING this plan runs a
@@ -68,17 +57,14 @@ object Graph extends QueryModule {
     // tri1 6.7 → 5.4 s, g2 3.8 → 3.3 s at sf0.1). sort_array makes
     // u < v by construction. The sets frame is persisted so the size
     // probe and the pair build share one lineitem scan + shuffle.
-    val dry = planOnly(s)
-    val sets0 = t(s, dir, "lineitem")
+    val sets = t(s, dir, "lineitem")
       .groupBy(col("l_orderkey"))
       .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-    val sets = if (dry) sets0 else sets0.persist(StorageLevel.MEMORY_AND_DISK)
-    val maxSz =
-      if (dry) 0 // plan-only: primary (flatten) path, no probe job
-      else {
-        val probed = sets.agg(max(size(col("ps")))).head()
-        if (probed.isNullAt(0)) 0 else probed.getInt(0)
-      }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val maxSz = {
+      val probed = sets.agg(max(size(col("ps")))).head()
+      if (probed.isNullAt(0)) 0 else probed.getInt(0)
+    }
     val edges =
       if (maxSz <= maxSetSize)
         sets.select(explode(expr(
@@ -103,17 +89,14 @@ object Graph extends QueryModule {
     // MEMORY_AND_DISK frames for its whole lifetime (the cross-entry
     // storage squeeze this round's Bench fix diagnosed). tri1's edge
     // count reads this warm cache, so the job is not wasted work.
-    if (!dry) {
-      edges.persist(StorageLevel.MEMORY_AND_DISK)
-      edges.count()
-      sets.unpersist()
-    }
+    edges.persist(StorageLevel.MEMORY_AND_DISK)
+    edges.count()
+    sets.unpersist()
     edges
   }
 
   private def directedEdges(s: SparkSession, dir: String): DataFrame =
-    if (planOnly(s)) directedEdgesSized(s, dir, MaxOrderSetSize) // no checkpoint job
-    else graft.SharedFrames.memoize(s, s"graph.directedEdges:$dir")(
+    graft.SharedFrames.memoize(s, s"graph.directedEdges:$dir")(
       directedEdgesSized(s, dir, MaxOrderSetSize))
 
   /** Both-direction edge frame for the Pregel-style entries (pr1/g2),
@@ -130,17 +113,14 @@ object Graph extends QueryModule {
     */
   private[graft] def directedEdgesSized(
       s: SparkSession, dir: String, maxSetSize: Int): DataFrame = {
-    val dry = planOnly(s)
-    val sets0 = t(s, dir, "lineitem")
+    val sets = t(s, dir, "lineitem")
       .groupBy(col("l_orderkey"))
       .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-    val sets = if (dry) sets0 else sets0.persist(StorageLevel.MEMORY_AND_DISK)
-    val maxSz =
-      if (dry) 0 // plan-only: primary (flatten) path, no probe job
-      else {
-        val probed = sets.agg(max(size(col("ps")))).head()
-        if (probed.isNullAt(0)) 0 else probed.getInt(0)
-      }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val maxSz = {
+      val probed = sets.agg(max(size(col("ps")))).head()
+      if (probed.isNullAt(0)) 0 else probed.getInt(0)
+    }
     val edges =
       if (maxSz <= maxSetSize)
         sets.select(explode(expr(
@@ -156,11 +136,9 @@ object Graph extends QueryModule {
             col("a.l_orderkey") === col("b.l_orderkey") && col("a.p") =!= col("b.p"))
           .select(col("a.p").as("src"), col("b.p").as("dst")).distinct()
       }
-    if (!dry) {
-      edges.persist(StorageLevel.MEMORY_AND_DISK)
-      edges.count()
-      sets.unpersist()
-    }
+    edges.persist(StorageLevel.MEMORY_AND_DISK)
+    edges.count()
+    sets.unpersist()
     edges
   }
 
@@ -192,10 +170,10 @@ object Graph extends QueryModule {
 
   /** NOTE: CONSTRUCTING this plan runs a Spark job — the size gate
     * counts the persisted edge frame before choosing the probe
-    * strategy, so plan-only tools (`graft.Dev explain`, map iteration) pay
-    * the edge build here. Inherent to a measured pre-AQE strategy
-    * choice; the count doubles as the n_edges output column and the
-    * built edges stay persisted for the probes that follow.
+    * strategy, so `graft.Dev explain` pays the edge build here.
+    * Inherent to a measured pre-AQE strategy choice; the count doubles
+    * as the n_edges output column and the built edges stay persisted
+    * for the probes that follow.
     */
   private[graft] def triangleCensusSized(
       s: SparkSession, dir: String, maxBroadcastEdges: Long): DataFrame = {
@@ -203,8 +181,7 @@ object Graph extends QueryModule {
     // Size gate (VERDICT r05 #1): one driver-side count over the
     // persisted edge frame picks the probe strategy — measured, not
     // assumed from SF — and doubles as the n_edges output column.
-    // Plan-only mode takes the broadcast path with a placeholder count.
-    val edgeCount = if (planOnly(s)) 0L else edges.count()
+    val edgeCount = edges.count()
 
     val wedges = edges.select(col("v").as("node"), lit(1L).as("ins"), lit(0L).as("outs"))
       .unionAll(edges.select(col("u").as("node"), lit(0L).as("ins"), lit(1L).as("outs")))
@@ -369,11 +346,11 @@ object Graph extends QueryModule {
     val edges = directedEdges(s, dir)
     // measured state-broadcast gate; the count reads the cache the
     // directedEdges build just materialized, so it is metadata-cheap
-    val broadcastState = planOnly(s) || edges.count() <= maxBroadcastEdges
+    val broadcastState = edges.count() <= maxBroadcastEdges
     val deg = edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val checkpointed = iters > PrIters && !planOnly(s)
+    val checkpointed = iters > PrIters
 
     var masses = deg.select(col("node"), initMass(col("node")).as("mass"), col("deg"))
     var prevBlocks: Option[org.apache.spark.rdd.RDD[_]] = None
@@ -483,8 +460,7 @@ object Graph extends QueryModule {
     * is paid once per session ([[graft.SharedFrames]], same posture as
     * the edge frames). */
   private def lpaLabels(s: SparkSession, dir: String): DataFrame =
-    if (planOnly(s)) lpaLabelsBuild(s, dir)
-    else graft.SharedFrames.memoize(s, s"graph.lpaLabels:$dir")(lpaLabelsBuild(s, dir))
+    graft.SharedFrames.memoize(s, s"graph.lpaLabels:$dir")(lpaLabelsBuild(s, dir))
 
   private def lpaLabelsBuild(s: SparkSession, dir: String): DataFrame = {
     val edges = directedEdges(s, dir) // (src, dst), both directions
@@ -679,7 +655,7 @@ object Graph extends QueryModule {
     // (node, d) frame is node-bounded, so at catalog scale each sweep's
     // relaxation probes it map-side against the persisted edge cache
     // instead of re-exchanging the edge frame every sweep
-    val broadcastState = planOnly(s) || edges.count() <= maxBroadcastEdges
+    val broadcastState = edges.count() <= maxBroadcastEdges
     val sources = edges.select(col("src").as("node")).distinct()
       .orderBy(col("node").asc_nulls_first).limit(BfsSources)
     var dist = sources.select(col("node"), lit(0L).as("d"))
@@ -698,13 +674,9 @@ object Graph extends QueryModule {
       // the small-frame shuffle DAG, measured 30 s vs 3 s at sf0.1 for
       // N=4. localCheckpoint is eager: each sweep materializes the
       // (node, d) frame once and the next plans against the blocks.
-      // (Plan-only mode keeps the nested lineage — display only, N=4.)
-      if (planOnly(s)) dist = relaxed
-      else {
-        dist = relaxed.localCheckpoint()
-        prevBlocks.foreach(_.unpersist(blocking = false))
-        prevBlocks = org.apache.spark.sql.GraftShims.checkpointedRdd(dist)
-      }
+      dist = relaxed.localCheckpoint()
+      prevBlocks.foreach(_.unpersist(blocking = false))
+      prevBlocks = org.apache.spark.sql.GraftShims.checkpointedRdd(dist)
     }
     dist.groupBy("d")
       .agg(count(lit(1)).as("n_nodes"),
@@ -739,10 +711,10 @@ object Graph extends QueryModule {
     val base = directedEdges(s, dir)
     val edges = base.select(col("src"), col("dst"),
       (lit(1L) + (col("src") * 7L + col("dst") * 3L) % 5L).as("w"))
-    val broadcastState = planOnly(s) || base.count() <= maxBroadcastEdges
+    val broadcastState = base.count() <= maxBroadcastEdges
     val sources = edges.select(col("src").as("node")).distinct()
       .orderBy(col("node").asc_nulls_first).limit(SsspSources)
-    ssspDistances(s, edges, sources, iters, broadcastState)
+    ssspDistances(edges, sources, iters, broadcastState)
       .groupBy("d")
       .agg(count(lit(1)).as("n_nodes"),
         min(col("node")).as("min_node"), max(col("node")).as("max_node"))
@@ -754,7 +726,7 @@ object Graph extends QueryModule {
     * cheap-two-hop-beats-expensive-direct-edge graph and pin that the
     * weights (not the hop count) drive the result.
     */
-  private[graft] def ssspDistances(s: SparkSession, edges: DataFrame,
+  private[graft] def ssspDistances(edges: DataFrame,
       sources: DataFrame, iters: Int, broadcastState: Boolean): DataFrame = {
     var dist = sources.select(col("node"), lit(0L).as("d"))
     var prevBlocks: Option[org.apache.spark.rdd.RDD[_]] = None
@@ -766,12 +738,9 @@ object Graph extends QueryModule {
         .unionAll(dist)
         .groupBy("node")
         .agg(min(col("d")).as("d"))
-      if (planOnly(s)) dist = relaxed
-      else {
-        dist = relaxed.localCheckpoint()
-        prevBlocks.foreach(_.unpersist(blocking = false))
-        prevBlocks = org.apache.spark.sql.GraftShims.checkpointedRdd(dist)
-      }
+      dist = relaxed.localCheckpoint()
+      prevBlocks.foreach(_.unpersist(blocking = false))
+      prevBlocks = org.apache.spark.sql.GraftShims.checkpointedRdd(dist)
     }
     dist
   }
@@ -901,14 +870,14 @@ object Graph extends QueryModule {
     clusteringCoeffSized(s, dir, CcBroadcastMaxDirected)
 
   /** NOTE: like tri1, CONSTRUCTING this plan runs a Spark job (the
-    * broadcast gate counts the persisted directed edge frame);
-    * plan-only mode skips it. Package-visible so LinkageSpec can force
-    * the shuffled path and prove both paths identical.
+    * broadcast gate counts the persisted directed edge frame).
+    * Package-visible so LinkageSpec can force the shuffled path and
+    * prove both paths identical.
     */
   private[graft] def clusteringCoeffSized(
       s: SparkSession, dir: String, maxBroadcastDirected: Long): DataFrame = {
     val f = directedEdges(s, dir)
-    val dirCount = if (planOnly(s)) 0L else f.count()
+    val dirCount = f.count()
     val useBroadcast = dirCount <= maxBroadcastDirected
     val edges = orientedEdges(s, dir) // u < v, memoized, persisted
     val deg = f.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))

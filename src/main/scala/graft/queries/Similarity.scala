@@ -1329,7 +1329,7 @@ object Similarity extends QueryModule {
   // ---------------------------------------------------------------- ann14
   /** ann8's documented scale path, gated (r15 VERDICT #5): the SAME
     * filtered retrieval, but over the corpus written LABEL-PARTITIONED
-    * (dpp1's bootstrap pattern — first call per (JVM, corpus dir) lays
+    * (dpp1's bootstrap pattern — first call per (context, corpus dir) lays
     * the table out `partitionBy("label")`), so the label predicate is
     * answered by the STORAGE LAYOUT: the query labels arrive only at
     * runtime (they are read off the query vectors' own rows), Spark
@@ -1342,59 +1342,18 @@ object Similarity extends QueryModule {
     * (fewer partitions read than exist) is pinned in NewShapePinsSpec.
     * Inside a pruned label, scoring is ann8's exact kernel; ann15 gates
     * the per-label IVF composition (its own oracle — single-probe
-    * semantics differ). The bootstrap root is applicationId-keyed, the
-    * dpp1/cmp1 precedent: each driver stage runs a fresh JVM, so a
-    * mid-round testdata regeneration can never serve a stale layout
-    * (the new JVM re-lays it out), at the accepted cost of one
-    * tmp-dir copy per JVM that touches the entry — the same trade the
-    * other bootstrap gates make, bounded by JVM count per round.
+    * semantics differ). The layout lives in the context's
+    * [[graft.Scratch]]: a new context (each Verify or Bench run starts
+    * a fresh JVM) lays it out afresh, so a regenerated corpus is never
+    * served stale.
     */
-  private val annPartBuilt = scala.collection.mutable.Set.empty[String]
-
-  /** Layout root keyed by CORPUS CONTENT (source dir + max mtime of the
-    * embeddings parquet), not applicationId (r16 ADVICE): appIds never
-    * repeat, so the appId key leaked one full corpus copy into
-    * java.io.tmpdir per JVM that touched the entry, across rounds. The
-    * mtime key keeps the staleness guarantee the appId key existed for
-    * — a mid-round testdata regeneration bumps the mtime, so a new JVM
-    * can never serve the old layout — while re-runs over unchanged data
-    * REUSE the one copy instead of accumulating. Stale siblings (same
-    * corpus dir, older mtime key, or legacy appId-keyed roots) are
-    * deleted at bootstrap, bounding disk to one layout per corpus dir.
-    */
-  private[graft] def annPartRoot(s: SparkSession, dir: String): String = {
-    val src = new java.io.File(dir, "embeddings.parquet")
-    val stamp = (src.lastModified() +:
-      Option(src.listFiles()).toSeq.flatten.map(_.lastModified())).max
-    new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_ann14_" + dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_m" + stamp).getAbsolutePath
-  }
+  private[graft] def annPartRoot(s: SparkSession, dir: String): String =
+    graft.Scratch.root(s, "ann14", dir)
 
   private def filteredTopKPruned(s: SparkSession, dir: String): DataFrame = {
-    val root = annPartRoot(s, dir)
-    annPartBuilt.synchronized {
-      if (!annPartBuilt.contains(root)) {
-        // evict stale layouts of THIS corpus dir first: older-mtime
-        // siblings and pre-fix appId-keyed roots both embed the
-        // sanitized dir string, the live root's exact name is spared
-        val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-        val dirKey = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val live = new java.io.File(root).getName
-        // anchored name matches only — a bare contains() would let the
-        // sf1 key ("_tmp_sf1") sweep away the sf10 layout
-        Option(tmp.listFiles()).toSeq.flatten
-          .filter(f => f.isDirectory && f.getName != live &&
-            (f.getName.startsWith("graft_ann14_" + dirKey + "_m") ||
-              (f.getName.startsWith("graft_ann14_") && f.getName.endsWith("_" + dirKey))))
-          .foreach(org.apache.spark.sql.GraftShims.deleteRecursively)
-        // _SUCCESS gates reuse: a root left by a crashed writer re-lays
-        if (!new java.io.File(root, "_SUCCESS").isFile) {
-          t(s, dir, "embeddings").select("vec_id", "label", "embedding")
-            .write.mode("overwrite").partitionBy("label").parquet(root)
-        }
-        annPartBuilt += root
-        ()
-      }
+    val root = graft.Scratch.once(s, "ann14", dir) { root =>
+      t(s, dir, "embeddings").select("vec_id", "label", "embedding")
+        .write.mode("overwrite").partitionBy("label").parquet(root)
     }
     val emb = s.read.parquet(root).select(col("vec_id"), col("label"), quantExpr.as("q"))
     val queries = emb.filter(col("vec_id").isin(QueryIds: _*))
@@ -1888,16 +1847,12 @@ object Similarity extends QueryModule {
     */
   private val PowerIters = 4
 
-  private def planOnly(s: SparkSession): Boolean =
-    s.conf.getOption("spark.graft.planOnly").contains("true")
-
   /** Covariance block memoized per (session, dir): emb6 returns it,
     * emb8/emb9's driver solve reads it — one corpus pass serves all
     * three (the codebook-sharing posture applied to the Gram matrix).
     */
   private def covarianceShared(s: SparkSession, dir: String): DataFrame =
-    if (planOnly(s)) covarianceBlock(s, dir)
-    else graft.SharedFrames.memoize(s, s"emb.cov:$dir")(covarianceBlock(s, dir))
+    graft.SharedFrames.memoize(s, s"emb.cov:$dir")(covarianceBlock(s, dir))
 
   /** DRIVER-side power iteration: (v_milli per dim, lambda_ppm,
     * trace_ppm). The covariance matrix is D×D = [[CovBlockDims]]² rows
@@ -1911,7 +1866,6 @@ object Similarity extends QueryModule {
     * and the Rayleigh quotient floors once over BigInt sums.
     */
   private def powerSolve(s: SparkSession, dir: String): (Array[Long], Long, Long) = {
-    if (planOnly(s)) return (Array.fill(CovBlockDims)(0L), 0L, 1L) // plan-shape only
     val d = CovBlockDims
     val c = Array.ofDim[Long](d, d)
     var trace = 0L

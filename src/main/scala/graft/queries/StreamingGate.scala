@@ -620,13 +620,8 @@ object StreamingGate extends QueryModule {
     * replay window Structured Streaming needs (only the LAST epoch can
     * replay); deeper history is vacuum policy.
     */
-  private val eosBuilt = scala.collection.mutable.Set.empty[String]
-
   private[graft] def eosRoot(s: SparkSession, dir: String): String =
-    new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_sw12_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+    graft.Scratch.root(s, "sw12", dir)
 
   /** The idempotent per-batch apply: skip if this batchId's tag is
     * already in the retained markers, else merge-and-publish with the
@@ -652,32 +647,27 @@ object StreamingGate extends QueryModule {
 
   private def streamExactlyOnce(s: SparkSession, dir: String): DataFrame = {
     import graft.sinks.VersionedTable
-    val root = eosRoot(s, dir)
-    eosBuilt.synchronized {
-      if (!eosBuilt.contains(root)) {
-        VersionedTable.drop(s, root)
-        val staging = root + "_staging"
-        val ckpt = root + "_ckpt"
-        graft.Tables(s, dir, "events")
-          .select(col("event_id"), col("event_type"), col("value"))
-          .repartition(4)
-          .write.mode("overwrite").parquet(staging)
-        val schema = s.read.parquet(staging).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(staging)
-        // the override covers the per-batch aggregates eosApply runs:
-        // 32 partitions for a 1/4-corpus batch is pure task overhead
-        graft.streaming.EventStream.withStatePartitions(
-          s, graft.streaming.EventStream.statePartitionsFor(s, dir, "events")) {
-          val q = stream.writeStream
-            .foreachBatch((df: DataFrame, id: Long) => eosApply(s, root)(df, id))
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination() finally q.stop()
-        }
-        eosBuilt += root
-        ()
+    val root = graft.Scratch.once(s, "sw12", dir) { root =>
+      VersionedTable.drop(s, root)
+      val staging = root + "_staging"
+      val ckpt = root + "_ckpt"
+      graft.Tables(s, dir, "events")
+        .select(col("event_id"), col("event_type"), col("value"))
+        .repartition(4)
+        .write.mode("overwrite").parquet(staging)
+      val schema = s.read.parquet(staging).schema
+      val stream = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(staging)
+      // the override covers the per-batch aggregates eosApply runs:
+      // 32 partitions for a 1/4-corpus batch is pure task overhead
+      graft.streaming.EventStream.withStatePartitions(
+        s, graft.streaming.EventStream.statePartitionsFor(s, dir, "events")) {
+        val q = stream.writeStream
+          .foreachBatch((df: DataFrame, id: Long) => eosApply(s, root)(df, id))
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        try q.awaitTermination() finally q.stop()
       }
     }
     VersionedTable.read(s, root).orderBy(col("event_type").asc_nulls_first)

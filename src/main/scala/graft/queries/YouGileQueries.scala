@@ -287,7 +287,7 @@ object YouGileQueries extends QueryModule {
     * 100 TB deployment reads the warehouse table directly, it does not
     * re-read through the driver).
     */
-  /** One in-memory Derby database SHELL per (applicationId): Derby's
+  /** One in-memory Derby database SHELL per context: Derby's
     * database bootstrap (catalog creation, lock manager, log setup) is
     * a ~0.3–0.5 s fixed driver-side cost that the per-call UUID
     * database paid on EVERY run (r19 opt, VERDICT r18 #6). The shell
@@ -295,12 +295,13 @@ object YouGileQueries extends QueryModule {
     * reads its own uniquely-named TABLE and drops it after the
     * read-back is pinned, so every run still computes the mart from
     * the fixtures, pushes every row through JDBC, and reads every row
-    * back. Keyed on applicationId: a restarted session boots afresh.
+    * back. Keyed on the context's scratch root ([[graft.Scratch]]): a
+    * new context boots afresh.
     */
   private val jdbcShellDb = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def ygJdbcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val db = jdbcShellDb.computeIfAbsent(s.sparkContext.applicationId,
+    val db = jdbcShellDb.computeIfAbsent(graft.Scratch.root(s, "yg_jdbc", ""),
       _ => s"memory:graftgate${java.util.UUID.randomUUID().toString.replace("-", "")}")
     val url = s"jdbc:derby:$db;create=true"
     val table = s"cdm_tasks_${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"

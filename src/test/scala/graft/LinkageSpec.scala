@@ -443,13 +443,12 @@ class LinkageSpec extends AnyFunSuite {
 
   test("g6: weights drive the distances — a cheap two-hop beats an expensive direct edge") {
     import spark.implicits._
-    val s = SparkEntry.configure(spark)
     // 1 -> 2 costs 10 directly, but 1 -> 3 -> 2 costs 2
     val edges = Seq((1L, 2L, 10L), (1L, 3L, 1L), (3L, 2L, 1L))
       .toDF("src", "dst", "w")
     val sources = Seq(1L).toDF("node")
     def distances(iters: Int): Map[Long, Long] =
-      graft.queries.Graph.ssspDistances(s, edges, sources, iters, broadcastState = true)
+      graft.queries.Graph.ssspDistances(edges, sources, iters, broadcastState = true)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // one sweep: only direct edges relaxed — node 2 still carries the 10
     assert(distances(1) == Map(1L -> 0L, 2L -> 10L, 3L -> 1L))

@@ -24,8 +24,7 @@ class LmSurpriseSpec extends AnyFunSuite {
   test("tx19: hand-computed add-1 conditional surprise on a 3-doc corpus") {
     val s = SparkEntry.configure(spark.newSession())
     import s.implicits._
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      "graft_tx19_pin_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
+    val dir = Scratch.root(s, "tx19_pin", java.util.UUID.randomUUID().toString.take(8))
     // V = {a,b,c} = 3; bigram counts: "a b"->3, "a c"->1, "b a"->1;
     // history counts: a->4, b->1.
     // costs: "a b" = (4+3)*1000 DIV 4 = 1750; "a c" = 7000 DIV 2 = 3500;

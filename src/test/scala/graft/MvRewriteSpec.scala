@@ -99,10 +99,7 @@ class MvRewriteSpec extends AnyFunSuite {
     import graft.sinks.VersionedTable
     val s = SparkEntry.configure(spark.newSession())
     val out = SparkEntry.queries("opt6_mv_refresh")(s, dir).collect().toSet
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_mvref_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+    val root = graft.queries.Extras.mvRefreshRoot(s, dir)
     // two-phase publish ran twice; retention keeps BOTH committed versions
     assert(VersionedTable.committedVersion(s, root).contains(2L))
     def summarize(df: org.apache.spark.sql.DataFrame) =
@@ -224,8 +221,8 @@ class MvRewriteSpec extends AnyFunSuite {
     // nulls in. This is the branch the registration-time audit guards.
     val s = SparkEntry.configure(spark.newSession())
     import s.implicits._
-    def salt(tag: String) = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_avgaudit_${tag}_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
+    def salt(tag: String) =
+      Scratch.root(s, s"avgaudit_$tag", java.util.UUID.randomUUID().toString.take(8))
     val factDir = salt("fact"); val dimDir = salt("dim"); val mvDir = salt("mv")
     (1 to 60).map(i => (i.toLong % 6, if (i % 5 == 0) None else Some(i.toLong), i.toLong * 2))
       .toDF("fk", "v", "u").write.parquet(factDir)
@@ -253,8 +250,8 @@ class MvRewriteSpec extends AnyFunSuite {
   test("opt10 staleness: a part-file on a DIM leg stands the star rewrite down") {
     val s = SparkEntry.configure(spark.newSession())
     import s.implicits._
-    def salt(tag: String) = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_starstale_${tag}_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
+    def salt(tag: String) =
+      Scratch.root(s, s"starstale_$tag", java.util.UUID.randomUUID().toString.take(8))
     val factDir = salt("fact"); val dimDir = salt("dim"); val mvDir = salt("mv")
     (1 to 60).map(i => (i.toLong % 6, i.toLong)).toDF("fk", "v").write.parquet(factDir)
     (0L to 5L).map(k => (k, s"g${k % 2}")).toDF("k", "grp").write.parquet(dimDir)
@@ -348,10 +345,7 @@ class MvRewriteSpec extends AnyFunSuite {
     import graft.sinks.VersionedTable
     val s = SparkEntry.configure(spark.newSession())
     SparkEntry.queries("inc4_delete_ivm")(s, dir).collect()
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_inc4_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+    val root = graft.queries.Extras.inc4Root(s, dir)
     assert(VersionedTable.committedVersion(s, root).contains(2L))
     val li = Tables(s, dir, "lineitem")
     def summarize(df: DataFrame) =
@@ -369,10 +363,7 @@ class MvRewriteSpec extends AnyFunSuite {
     import graft.sinks.VersionedTable
     val s = SparkEntry.configure(spark.newSession())
     SparkEntry.queries("inc3_join_ivm")(s, dir).collect()
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_inc3_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+    val root = graft.queries.Extras.ivmRoot(s, dir)
     assert(VersionedTable.committedVersion(s, root).contains(2L))
     val li = Tables(s, dir, "lineitem")
     val or = Tables(s, dir, "orders")
@@ -391,10 +382,7 @@ class MvRewriteSpec extends AnyFunSuite {
     import graft.sinks.VersionedTable
     val s = SparkEntry.configure(spark.newSession())
     SparkEntry.queries("opt6_mv_refresh")(s, dir).collect()
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      "graft_mvref_" + s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9._-]", "_") +
-        "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+    val root = graft.queries.Extras.mvRefreshRoot(s, dir)
     assert(VersionedTable.readVersion(s, root, 1L).count() > 0)
     assert(VersionedTable.readVersion(s, root, 2L).count() > 0)
     intercept[IllegalStateException](VersionedTable.readVersion(s, root, 9L))

@@ -92,8 +92,10 @@ class OperatorsSpec extends AnyFunSuite {
     val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     val lineitem = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .withColumnRenamed("l_orderkey", "o_orderkey")
-    graft.operators.Bucketing.writeBucketed(orders, "orders_b", "o_orderkey", 4)
-    graft.operators.Bucketing.writeBucketed(lineitem, "lineitem_b", "o_orderkey", 4)
+    graft.operators.Bucketing.writeBucketed(orders, "orders_b", "o_orderkey", 4,
+      Scratch.root(spark, "orders_b", "spec"))
+    graft.operators.Bucketing.writeBucketed(lineitem, "lineitem_b", "o_orderkey", 4,
+      Scratch.root(spark, "lineitem_b", "spec"))
     val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ

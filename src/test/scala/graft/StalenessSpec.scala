@@ -14,9 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class StalenessSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
 
+  /** A fresh dir in the shared session's scratch, deleted at JVM exit. */
   private def tmp(tag: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_stale_${tag}_" + java.util.UUID.randomUUID().toString.take(8)).getAbsolutePath
+    Scratch.root(spark, s"stale_$tag", java.util.UUID.randomUUID().toString.take(8))
 
   private def scans(df: DataFrame): Seq[String] =
     df.queryExecution.optimizedPlan.collect {
