@@ -35,13 +35,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** Release ALL executor-side state a query registered, so the next
     * entry measures under its own memory. `cacheManager.clearCache()`
-    * alone is not enough: `localCheckpoint` materializes plain
-    * persistent RDD blocks (graph fixpoints in g2/dd7/pr1) that the SQL
-    * cache manager never sees, so without the RDD sweep those blocks
+    * alone is not enough: the graph fixpoints (g2/dd7/pr1) checkpoint
+    * into plain persistent RDD blocks that the SQL cache manager never
+    * sees, so without the RDD sweep those blocks
     * accumulate across the alphabetical sweep and squeeze the storage/
     * execution memory of every later entry (the round-6 regressed
-    * cluster sat right after the checkpoint users). Blocking unpersist
-    * so the release is visible to the *next* timed run, not eventual.
+    * cluster sat right after the checkpoint users). Every persistent RDD
+    * goes: a view shared across entries is a table on disk
+    * ([[Scratch.shared]]), not blocks. Blocking unpersist so the release
+    * is visible to the *next* timed run, not eventual.
     *
     * Callers pass the entry's session (the returned frame's
     * `sparkSession`): an entry runs on its own session clone, and the
@@ -64,15 +66,7 @@ object Bench {
     // providers eagerly.
     org.apache.spark.sql.GraftShims.dropTempViewsBySuffix(spark, "_mem")
     org.apache.spark.sql.GraftShims.unloadStreamingState()
-    // SharedFrames blocks are cross-entry materialized views (the graph
-    // edge frames, the MinHash pair table) — built once per sweep by
-    // design; dropping them here would force every consumer entry to
-    // rebuild the identical frame (VERDICT r08 #4). They live outside
-    // the SQL cache precisely so this sweep can exempt them.
-    val keep = SharedFrames.protectedRddIds
-    spark.sparkContext.getPersistentRDDs.values
-      .filterNot(r => keep.contains(Int.box(r.id)))
-      .foreach(_.unpersist(blocking = true))
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 
   /** Absorbs session warmup (codegen compiler, noop sink classloading,
@@ -356,22 +350,24 @@ object Bench {
     warmUp(spark)
     val entries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // Shared-view consumer marker (VERDICT r18 #1/#8): an entry whose
-    // runs touched a SharedFrames materialization — as builder OR
-    // reader — carries its name in the recording's
-    // "shared_view_consumers" list, so adjudication can tell a
-    // memo-hit timing from a plan win. Counter reads sit OUTSIDE the
-    // timed loop.
+    // Shared-view markers (VERDICT r18 #1/#8): an entry whose runs read
+    // a Scratch.shared view carries its name in the recording's
+    // "shared_view_consumers" list, and one whose runs built one also in
+    // "shared_view_builders", so adjudication can tell a memo-hit timing
+    // from a plan win and the entry that paid a build from its readers.
+    // Counter reads sit OUTSIDE the timed loop.
     val sharedViewConsumers = scala.collection.mutable.TreeSet.empty[String]
+    val sharedViewBuilders = scala.collection.mutable.TreeSet.empty[String]
     val rawResults: Seq[(String, Either[String, Seq[Double]])] = entries.map { case (name, fn) =>
-      val a0 = SharedFrames.accesses
+      val (a0, b0) = (Scratch.accesses, Scratch.builds)
       // sorted runs: median = ts(n/2), spread = (head, last)
       val r = try Right(timeRuns(spark, fn(spark, sfDir)).sorted) catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
           Left(e.getClass.getSimpleName)
       }
-      if (SharedFrames.accesses > a0) sharedViewConsumers += name
+      if (Scratch.accesses > a0) sharedViewConsumers += name
+      if (Scratch.builds > b0) sharedViewBuilders += name
       name -> r
     }
     val results: Seq[(String, Either[String, Double])] =
@@ -453,9 +449,9 @@ object Bench {
     // sweep's >2x trigger so quiet-window medians stop re-flagging.
     val spreadJson = rawResults.collect { case (k, Right(ts)) => spreadEntry(k, ts) }
       .mkString("{", ",", "}")
-    val sharedViewJson = sharedViewConsumers.map(n => s""""$n"""").mkString("[", ",", "]")
+    def names(ns: Iterable[String]) = ns.map(n => s""""$n"""").mkString("[", ",", "]")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spreadJson,"shared_view_consumers":$sharedViewJson,"sf":"$sfDir","failed":$failed,"adjudication":$adjJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spreadJson,"shared_view_consumers":${names(sharedViewConsumers)},"shared_view_builders":${names(sharedViewBuilders)},"sf":"$sfDir","failed":$failed,"adjudication":$adjJson}"""
     // The driver keeps only the last ~2000 stdout chars, and the full
     // per-query map is ~12 KB at 254 entries — it can NEVER fit, which
     // is why BENCH_r*.json carried "parsed": null for twelve rounds
@@ -477,7 +473,6 @@ object Bench {
     // stop Spark FIRST, and only then print. The full line goes first
     // (useful in saved logs), the short driver-parsable line goes LAST.
     spark.sparkContext.setLogLevel("OFF")
-    SharedFrames.releaseAll(spark)
     spark.stop()
     println(line)
     println(shortLine(results, total, sfDir, adjJson, written.head))

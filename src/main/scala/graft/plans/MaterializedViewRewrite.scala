@@ -22,7 +22,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
   * 10^6× scan reduction the OPTIMIZER applies, so users keep writing
   * queries against the base table and old notebooks speed up without
   * edits. This is the query-rewrite half of the project's MV posture
-  * ([[graft.SharedFrames]] is the build-once half; `cmp1`'s
+  * ([[graft.Scratch.shared]] is the build-once half; `cmp1`'s
   * VersionedTable is where a production MV would live so refreshes
   * publish atomically).
   *
@@ -92,7 +92,7 @@ object MaterializedViewRewrite extends Rule[LogicalPlan] {
       groupCols: Seq[String], measures: Seq[Measure],
       mvRelation: LogicalRelation, nullFreeSums: Set[String] = Set.empty)
 
-  // (applicationId, basePath) -> MvDef; appId-keyed like SharedFrames so a
+  // (applicationId, basePath) -> MvDef; appId-keyed so a
   // restarted session can never see a stale registration.
   private val catalog = new ConcurrentHashMap[(String, String), MvDef]()
 

@@ -248,7 +248,7 @@ object Dedup extends QueryModule {
     * entries each ran it as an eager collect() at frame-build time —
     * a full corpus scan + md5 per entry per sweep. The corpus at a dir
     * is immutable for a JVM's lifetime (driver-generated testdata), so
-    * one census serves all channels, SharedFrames-style. Frame-driven
+    * one census serves all channels, like a shared view. Frame-driven
     * callers (specs, synthetic corpora) keep the uncached entry point.
     */
   private val dupMultiplierMemo =
@@ -341,7 +341,7 @@ object Dedup extends QueryModule {
     * the real pipeline.
     */
   private def minhashPairsShared(s: SparkSession, dir: String): DataFrame =
-    graft.SharedFrames.memoize(s, s"dedup.minhashPairs:$dir")(minhashPairs(s, dir))
+    graft.Scratch.shared(s, "dedup_minhash_pairs", dir)(minhashPairs(s, dir))
 
   private def minhashPairs(s: SparkSession, dir: String): DataFrame = {
     val c = corpus(s, dir)
@@ -1019,14 +1019,14 @@ object Dedup extends QueryModule {
   }
 
   /** Benchmark-suite shingles: the doc_id % 97 slice of the raw table.
-    * SharedFrames-memoized (r18 opt): FOUR gate entries (dd8, dd9, sw13,
+    * A shared view (r18 opt): FOUR gate entries (dd8, dd9, sw13,
     * sw14) derive the identical benchmark shingle set per sweep — the
     * materialized-view posture a real decontamination deployment takes
     * (the eval-suite shingle table is maintained once, not recomputed
     * per ingest query).
     */
   private[graft] def benchmarkShingles(s: SparkSession, dir: String): DataFrame =
-    graft.SharedFrames.memoize(s, s"dedup.benchShingles:$dir") {
+    graft.Scratch.shared(s, "dedup_bench_shingles", dir) {
       shingled4(t(s, dir, "documents").filter(col("doc_id") % 97 === 0))
         .select(explode(col("shingles")).as("shingle")).distinct()
     }
@@ -1090,7 +1090,7 @@ object Dedup extends QueryModule {
   private val BloomFpp = 0.01
 
   private def bloomDecontaminate(s: SparkSession, dir: String): DataFrame = {
-    val bench = benchmarkShingles(s, dir) // memoized checkpoint blocks
+    val bench = benchmarkShingles(s, dir) // shared view
     val bytes = benchBloomBytes(s, dir)
     val corp = corpus(s, dir)
       .filter(!(col("doc_id") < 1000000L && col("doc_id") % 97 === 0))
@@ -1127,7 +1127,7 @@ object Dedup extends QueryModule {
 
   private def streamDecontaminate(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val bench = benchmarkShingles(s, dir) // memoized checkpoint blocks
+    val bench = benchmarkShingles(s, dir) // shared view
     val bytes = benchBloomBytes(s, dir)
     val counts = contaminationCounts(docStream(s, dir), bench,
       shinglePrefilter = VectorFunctions.bloomMightContain(_, bytes))
@@ -1232,7 +1232,7 @@ object Dedup extends QueryModule {
   private def streamDecontaminateAppend(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val stage = sw14Stage(s, dir)
-    val bench = benchmarkShingles(s, dir) // memoized checkpoint blocks
+    val bench = benchmarkShingles(s, dir) // shared view
     val bytes = benchBloomBytes(s, dir)
     val fileSchema = s.read.parquet(stage).schema
     val stream = s.readStream.schema(fileSchema)
@@ -1693,14 +1693,14 @@ object Dedup extends QueryModule {
   }
 
   private def cappedShingles(s: SparkSession, dir: String): DataFrame =
-    // SharedFrames memo (r18 opt, the minhashPairsShared posture): dd17
+    // shared view (r18 opt, the minhashPairsShared posture): dd17
     // and dd18 consume the IDENTICAL capped-shingle frame — boilerplate
     // header, posting explode, df census, keep-join, per-doc re-collect
-    // — and each entry used to rebuild it from parquet. One sweep-scoped
-    // materialization serves both (the materialized-view stance the
+    // — and each entry used to rebuild it from parquet. One shared
+    // table serves both (the materialized-view stance the
     // 100 TB deployment takes: the stop-shingle vocabulary and capped
     // sets are a maintained table, not a per-query recomputation).
-    graft.SharedFrames.memoize(s, s"dedup.cappedShingles:$dir") {
+    graft.Scratch.shared(s, "dedup_capped_shingles", dir) {
       // persisted: feeds BOTH the df aggregate and the keep-join below —
       // unpersisted, the corpus n-gram md5 pass would run twice (r15
       // review; dd12 persists its shingled frame for the same reason)
@@ -1712,25 +1712,25 @@ object Dedup extends QueryModule {
       val sh = posts.join(keep, Seq("sh_h"))
         .groupBy("doc_id").agg(sort_array(collect_list(col("sh_h"))).as("shingles"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      // materialize sh while posts is still cached, then release posts —
-      // memoize() localCheckpoints the RESULT only, and an un-dropped
-      // posts cache would sit in executor memory for the whole sweep
+      // materialize sh while posts is still cached, then release posts:
+      // only the result goes into the shared table, and an un-dropped
+      // posts cache would hold executor memory through the consumer's run
       sh.count()
       posts.unpersist()
       sh
     }
 
-  /** The VERIFIED capped containment pair stream, SharedFrames-memoized
+  /** The VERIFIED capped containment pair stream, a shared view
     * (r18 opt) for DOWNSTREAM consumers only: dd18 aggregates the same
     * `ver` stream dd17 reports (the oracle shares the CTE verbatim —
-    * [[cappedVerifiedCte]]), so dd18 reads one sweep-scoped
-    * materialization instead of re-running the prefix-probe/verify
+    * [[cappedVerifiedCte]]), so dd18 reads one shared
+    * table instead of re-running the prefix-probe/verify
     * pipeline. dd17 itself stays UN-memoized — the dd2 precedent: the
     * entry that IS the pipeline keeps measuring it; only report levers
     * downstream ride the materialized view.
     */
   private def cappedVerifiedShared(s: SparkSession, dir: String): DataFrame =
-    graft.SharedFrames.memoize(s, s"dedup.cappedVerified:$dir") {
+    graft.Scratch.shared(s, "dedup_capped_verified", dir) {
       containmentVerified(cappedShingles(s, dir))
     }
 
@@ -1843,7 +1843,7 @@ object Dedup extends QueryModule {
     * Scale posture: both channels are the family's bucketed/blocked
     * pipelines (no all-pairs anywhere); the audit join runs over the
     * two verified PAIR tables, which are tiny next to the corpus, and
-    * the LSH side reuses the memoized SharedFrames pair table the
+    * the LSH side reuses the shared pair table the
     * cluster entries already build.
     */
   private def lshQuality(s: SparkSession, dir: String): DataFrame = {

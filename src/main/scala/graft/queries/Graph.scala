@@ -34,13 +34,13 @@ object Graph extends QueryModule {
     */
   private[graft] val MaxOrderSetSize = 2000
 
-  /** Memoized via [[graft.SharedFrames]]: tri1 and the directed variant's
+  /** A [[graft.Scratch.shared]] view: tri1 and the directed variant's
     * three consumers (pr1/g2/g3) each need the identical co-purchase edge
     * frame, and the r8 sweep paid the build 4× (VERDICT r08 #4). The
     * Sized variants stay un-memoized so LinkageSpec can force fallbacks.
     */
   private def orientedEdges(s: SparkSession, dir: String): DataFrame =
-    graft.SharedFrames.memoize(s, s"graph.orientedEdges:$dir")(
+    graft.Scratch.shared(s, "graph_oriented_edges", dir)(
       orientedEdgesSized(s, dir, MaxOrderSetSize))
 
   /** NOTE: like [[triangleCensusSized]], CONSTRUCTING this plan runs a
@@ -96,7 +96,7 @@ object Graph extends QueryModule {
   }
 
   private def directedEdges(s: SparkSession, dir: String): DataFrame =
-    graft.SharedFrames.memoize(s, s"graph.directedEdges:$dir")(
+    graft.Scratch.shared(s, "graph_directed_edges", dir)(
       directedEdgesSized(s, dir, MaxOrderSetSize))
 
   /** Both-direction edge frame for the Pregel-style entries (pr1/g2),
@@ -457,10 +457,10 @@ object Graph extends QueryModule {
 
   /** Final (node, label) frame after [[LpaSweeps]] synchronous sweeps —
     * shared by g7's census and g8's modularity audit, so the sweep cost
-    * is paid once per session ([[graft.SharedFrames]], same posture as
+    * is paid once per context ([[graft.Scratch.shared]], same posture as
     * the edge frames). */
   private def lpaLabels(s: SparkSession, dir: String): DataFrame =
-    graft.SharedFrames.memoize(s, s"graph.lpaLabels:$dir")(lpaLabelsBuild(s, dir))
+    graft.Scratch.shared(s, "graph_lpa_labels", dir)(lpaLabelsBuild(s, dir))
 
   private def lpaLabelsBuild(s: SparkSession, dir: String): DataFrame = {
     val edges = directedEdges(s, dir) // (src, dst), both directions
@@ -879,7 +879,7 @@ object Graph extends QueryModule {
     val f = directedEdges(s, dir)
     val dirCount = f.count()
     val useBroadcast = dirCount <= maxBroadcastDirected
-    val edges = orientedEdges(s, dir) // u < v, memoized, persisted
+    val edges = orientedEdges(s, dir) // u < v, shared view
     val deg = f.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     // Corner attribution is ORIENTATION-independent (the closing vertex
     // ids come out of the kernel), so past the broadcast ceiling the
@@ -974,7 +974,7 @@ object Graph extends QueryModule {
 
   private def kCore(s: SparkSession, dir: String): DataFrame = {
     // repeat-pair sparsification: pairs KEEP their multiplicity and only
-    // w >= 2 survive — a different edge set than the SharedFrames graphs,
+    // w >= 2 survive — a different edge set than the shared edge views,
     // built with the same per-order SET EXPLOSION as orientedEdgesSized
     // (map-side pair generation off one groupBy; the equi-self-join
     // spelling paid an extra exchange and measured 5.8 s vs ~3 s at

@@ -137,8 +137,8 @@ object Similarity extends QueryModule {
     }
   }
 
-  /** The trained C-row IVF codebook — ONE Lloyd training per (session,
-    * sf-dir), published through [[graft.SharedFrames]] so every consumer
+  /** The trained C-row IVF codebook — ONE Lloyd training per (context,
+    * sf-dir), published through [[graft.Scratch.shared]] so every consumer
     * entry (ann2/ann6/ann9/ann11, dd4/dd13/dd14, emb3/emb4) reads the
     * same materialized frame instead of re-paying the k-means fixpoint
     * per entry (~2–3.5 s each; VERDICT r11 #2). This is the 100 TB
@@ -147,7 +147,7 @@ object Similarity extends QueryModule {
     * retraining per consumer is the anti-pattern.
     */
   private def sharedCents(s: SparkSession, dir: String): DataFrame =
-    graft.SharedFrames.memoize(s, s"ivf:cents:$dir")(
+    graft.Scratch.shared(s, "ivf_cents", dir)(
       trainCentroids(quantized(s, dir)))
 
   /** The corpus-wide IVF assignment over [[sharedCents]] — likewise a
@@ -156,7 +156,7 @@ object Similarity extends QueryModule {
     * and its lineage embeds the whole Lloyd training.
     */
   private def assignedBuckets(s: SparkSession, dir: String): DataFrame =
-    graft.SharedFrames.memoize(s, s"ivf:assigned:$dir")(
+    graft.Scratch.shared(s, "ivf_assigned", dir)(
       assignTo(quantized(s, dir), sharedCents(s, dir)))
 
   private def ivfTopK(s: SparkSession, dir: String): DataFrame = {
@@ -293,7 +293,7 @@ object Similarity extends QueryModule {
   // --------------------------------------------------------------- ann13
   /** INCREMENTAL IVF ingest — the index-maintenance path every vector
     * store lives on: the codebook is trained ONCE on the base corpus
-    * (vec_id % 13 ≠ 0, its own SharedFrames memo), and the ingest
+    * (vec_id % 13 ≠ 0, its own shared view), and the ingest
     * delta (% 13 = 0) is ASSIGNED to the existing centroids — never
     * retrained — before queries run over the merged index. This is the
     * 100 TB posture for a growing corpus: ingest cost is one
@@ -311,7 +311,7 @@ object Similarity extends QueryModule {
     quantized(s, dir).filter(col("vec_id") % 13 =!= 0)
 
   private def incIvfCents(s: SparkSession, dir: String): DataFrame =
-    graft.SharedFrames.memoize(s, s"ivf:cents-inc:$dir")(
+    graft.Scratch.shared(s, "ivf_cents_inc", dir)(
       trainCentroids(baseQuantized(s, dir)))
 
   private def incIvfTopK(s: SparkSession, dir: String): DataFrame = {
@@ -480,7 +480,7 @@ object Similarity extends QueryModule {
     import org.apache.spark.sql.expressions.Window
     val emb = quantized(s, dir)
     // shared codebook + assignment (ann6's never-train-twice rule, now
-    // session-wide): both frames come from SharedFrames, so the k-means
+    // session-wide): both frames are shared views, so the k-means
     // fixpoint behind them is paid once per sweep, not per entry
     val cents = sharedCents(s, dir)
     val assigned = assignedBuckets(s, dir)
@@ -932,14 +932,14 @@ object Similarity extends QueryModule {
   }
 
   /** Shared (vec, subspace) split + trained PQ codebook — built once per
-    * (session, dir) and read by both ann5 and emb7 (identical codebook by
-    * construction; now also identical materialization).
+    * (context, dir) and read by both ann5 and emb7 (identical codebook by
+    * construction; now also one table).
     */
   private def sharedSub(s: SparkSession, dir: String): DataFrame =
-    graft.SharedFrames.memoize(s, s"pq:sub:$dir")(subspaced(quantized(s, dir)))
+    graft.Scratch.shared(s, "pq_sub", dir)(subspaced(quantized(s, dir)))
 
   private def sharedPqCents(s: SparkSession, dir: String): DataFrame =
-    graft.SharedFrames.memoize(s, s"pq:cents:$dir")(pqCodebook(sharedSub(s, dir)))
+    graft.Scratch.shared(s, "pq_cents", dir)(pqCodebook(sharedSub(s, dir)))
 
   private def pqTopK(s: SparkSession, dir: String): DataFrame = {
     val sub = sharedSub(s, dir)
@@ -1057,11 +1057,11 @@ object Similarity extends QueryModule {
     import org.apache.spark.sql.expressions.Window
     val emb = quantized(s, dir)
     // shared coarse codebook + assignment (ann6's never-train-twice
-    // rule, session-wide via SharedFrames); the residual-subvector frame
+    // rule, session-wide via shared views); the residual-subvector frame
     // and residual codebook are likewise published once — they feed
     // codebook init, the Lloyd update, encoding, AND future sweeps
     val cents = sharedCents(s, dir)
-    val rsub = graft.SharedFrames.memoize(s, s"ivfpq:rsub:$dir") {
+    val rsub = graft.Scratch.shared(s, "ivfpq_rsub", dir) {
       assignedBuckets(s, dir).join(broadcast(cents), Seq("centroid_id"))
         .select(col("vec_id"), col("centroid_id"),
           zip_with(col("q"), col("cv"), (a, b) => a - b).as("r"))
@@ -1071,7 +1071,7 @@ object Similarity extends QueryModule {
           expr(s"slice(r, m * (size(r) div $PqM) + 1, size(r) div $PqM)").as("sq"))
     }
     // one Lloyd pass per residual-subspace codebook (ann5's update)
-    val pqCents = graft.SharedFrames.memoize(s, s"ivfpq:cents:$dir") {
+    val pqCents = graft.Scratch.shared(s, "ivfpq_cents", dir) {
       val init = rsub.filter(col("vec_id") < PqKs)
         .select(col("m"), col("vec_id").as("code"), col("sq").as("cv"))
       rpqAssign(rsub, init)
@@ -1406,7 +1406,7 @@ object Similarity extends QueryModule {
   }
 
   private[graft] def labelAssigned(s: SparkSession, dir: String): DataFrame =
-    graft.SharedFrames.memoize(s, s"ivf:label-assigned:$dir") {
+    graft.Scratch.shared(s, "ivf_label_assigned", dir) {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"), quantExpr.as("q"))
       val bk = udaf(new graft.functions.BottomKAgg(AnnLabelC))
@@ -1839,7 +1839,7 @@ object Similarity extends QueryModule {
     * technique (ann2) applied to spectral math.
     *
     * Scale posture: ONE corpus pass builds the D×D covariance (emb6's
-    * bounded 36-group aggregate, [[SharedFrames]]-memoized across
+    * bounded 36-group aggregate, a [[graft.Scratch.shared]] view across
     * emb6/emb8/emb9); the iteration itself runs on the DRIVER over the
     * collected D² planning scalars ([[powerSolve]]) — the matrix is
     * tiny at any corpus size, which is exactly why power iteration is
@@ -1847,12 +1847,12 @@ object Similarity extends QueryModule {
     */
   private val PowerIters = 4
 
-  /** Covariance block memoized per (session, dir): emb6 returns it,
+  /** Covariance block shared per (context, dir): emb6 returns it,
     * emb8/emb9's driver solve reads it — one corpus pass serves all
     * three (the codebook-sharing posture applied to the Gram matrix).
     */
   private def covarianceShared(s: SparkSession, dir: String): DataFrame =
-    graft.SharedFrames.memoize(s, s"emb.cov:$dir")(covarianceBlock(s, dir))
+    graft.Scratch.shared(s, "emb_cov", dir)(covarianceBlock(s, dir))
 
   /** DRIVER-side power iteration: (v_milli per dim, lambda_ppm,
     * trace_ppm). The covariance matrix is D×D = [[CovBlockDims]]² rows
@@ -2113,12 +2113,12 @@ object Similarity extends QueryModule {
     * table is read back for only R candidates per query (a broadcast
     * semi-restriction, never a second full scan as the probe side).
     * Per-dim stats are one broadcast row; stats + codes build once per
-    * (session, corpus) via [[graft.SharedFrames]] — the index-build-once
+    * (context, corpus) via [[graft.Scratch.shared]] — the index-build-once
     * posture. Both rankings are bounded TopKAgg aggregates (k rows per
     * group × partition through each exchange, no global window).
     */
   private def sq8Stats(s: SparkSession, dir: String): DataFrame =
-    graft.SharedFrames.memoize(s, s"sq8:stats:$dir")(
+    graft.Scratch.shared(s, "sq8_stats", dir)(
       quantized(s, dir)
         .select(posexplode(col("q")).as(Seq("pos", "v")))
         .groupBy("pos")
@@ -2132,7 +2132,7 @@ object Similarity extends QueryModule {
     * genuinely ByteType (the 8× memory claim, not a BIGINT stand-in).
     */
   private[graft] def sq8Index(s: SparkSession, dir: String): DataFrame =
-    graft.SharedFrames.memoize(s, s"sq8:index:$dir")(
+    graft.Scratch.shared(s, "sq8_index", dir)(
       quantized(s, dir).crossJoin(broadcast(sq8Stats(s, dir)))
         .select(col("vec_id"),
           expr("""transform(

@@ -1405,7 +1405,7 @@ object Text extends QueryModule {
       .orderBy(col("merge_rank").asc_nulls_first)
 
   /** The trained merge-rules frame, memoized per (dir, split) via
-    * [[graft.SharedFrames]]: tok1 emits it, tok2 prices the corpus with
+    * [[graft.Scratch.shared]]: tok1 emits it, tok2 prices the corpus with
     * it, tok3 evaluates the even-split variant — and each retraining is
     * 5 chained vocabulary jobs (~1/3 of the tok trio's sweep cost,
     * VERDICT r10 perf). The trained rules are a 5-row frame — exactly
@@ -1415,7 +1415,7 @@ object Text extends QueryModule {
     * shared away.
     */
   private def trainedMerges(s: SparkSession, dir: String, evenOnly: Boolean): DataFrame =
-    graft.SharedFrames.memoize(s, s"bpe-merges:$dir:${if (evenOnly) "even" else "full"}") {
+    graft.Scratch.shared(s, if (evenOnly) "bpe_merges_even" else "bpe_merges_full", dir) {
       val docs = t(s, dir, "documents")
       bpeMergesOver(
         if (evenOnly) docs.filter(col("doc_id") % 2 === 0) else docs, BpeMergeCount)

@@ -46,12 +46,13 @@ object GraftShims {
   def expression(c: Column): catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
-  /** The RDD backing a (local)checkpointed Dataset, so iterative
-    * operators can RELEASE a superseded sweep's blocks explicitly
-    * (ADVICE r05: checkpoint blocks otherwise accumulate in executor
-    * storage until ContextCleaner GC catches up). Only safe once no
-    * later plan references the frame — an unpersisted localCheckpoint
-    * is unrecoverable by design.
+  /** The RDD backing a (local)checkpointed Dataset, so the iterative
+    * graph operators (Graph, ConnectedComponents) can RELEASE a
+    * superseded iteration's blocks while the entry still runs (ADVICE
+    * r05: they otherwise accumulate in executor storage until
+    * ContextCleaner GC or the between-entry [[graft.Bench.sweepState]]
+    * catches up). Only safe once no later plan references the frame — an
+    * unpersisted localCheckpoint is unrecoverable by design.
     */
   def checkpointedRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collectFirst {

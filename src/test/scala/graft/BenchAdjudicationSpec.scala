@@ -136,32 +136,32 @@ class BenchAdjudicationSpec extends AnyFunSuite {
     // (c) a spread hi below the median (impossible from sorted runs,
     // but a hand-edited file could carry one) is clamped up to median.
     val f = java.nio.file.Files.createTempFile("bench_base", ".json")
-    val txt = """{"metric":"total","value":9.9,"unit":"sec",""" +
-      """"queries":{"a_fast":0.10,"b_noisy":2.19,"c_err":"err:Boom"},""" +
-      """"spread":{"a_fast":[0.10,0.09,0.12],"b_noisy":[2.19,2.10,3.40],"weird":[1.0,0.5,0.4]},""" +
-      """"sf":"/x","failed":0}"""
-    java.nio.file.Files.write(f, txt.getBytes("UTF-8"))
-    val base = Bench.readBaseline(f.toString)
-    assert(base("a_fast") == (0.10, 0.12))
-    assert(base("b_noisy") == (2.19, 3.40)) // hi absorbs the honest tail
-    assert(!base.contains("c_err")) // err entries carry no baseline
-    // (d) a load-spike outlier in the recording window must not blind
-    // the trigger: hi clamps to 2x median (r16 review #1 — ann11's
-    // committed [0.45, 0.42, 2.62] would otherwise set the trigger at
-    // 5.8x median)
     val h = java.nio.file.Files.createTempFile("bench_spike", ".json")
-    java.nio.file.Files.write(h,
-      ("""{"metric":"total","queries":{"spiky":0.453},""" +
-        """"spread":{"spiky":[0.453,0.420,2.615]},"sf":"/x"}""").getBytes("UTF-8"))
-    assert(Bench.readBaseline(h.toString)("spiky") == (0.453, 0.906))
-    java.nio.file.Files.delete(h)
-    // legacy format (no spread block): hi = median
     val g = java.nio.file.Files.createTempFile("bench_legacy", ".json")
-    java.nio.file.Files.write(g,
-      """{"metric":"total","queries":{"a":1.5,"b":0.2},"sf":"/x"}""".getBytes("UTF-8"))
-    val legacy = Bench.readBaseline(g.toString)
-    assert(legacy("a") == (1.5, 1.5) && legacy("b") == (0.2, 0.2))
-    java.nio.file.Files.delete(f); java.nio.file.Files.delete(g)
+    try {
+      val txt = """{"metric":"total","value":9.9,"unit":"sec",""" +
+        """"queries":{"a_fast":0.10,"b_noisy":2.19,"c_err":"err:Boom"},""" +
+        """"spread":{"a_fast":[0.10,0.09,0.12],"b_noisy":[2.19,2.10,3.40],"weird":[1.0,0.5,0.4]},""" +
+        """"sf":"/x","failed":0}"""
+      java.nio.file.Files.write(f, txt.getBytes("UTF-8"))
+      val base = Bench.readBaseline(f.toString)
+      assert(base("a_fast") == (0.10, 0.12))
+      assert(base("b_noisy") == (2.19, 3.40)) // hi absorbs the honest tail
+      assert(!base.contains("c_err")) // err entries carry no baseline
+      // (d) a load-spike outlier in the recording window must not blind
+      // the trigger: hi clamps to 2x median (r16 review #1 — ann11's
+      // committed [0.45, 0.42, 2.62] would otherwise set the trigger at
+      // 5.8x median)
+      java.nio.file.Files.write(h,
+        ("""{"metric":"total","queries":{"spiky":0.453},""" +
+          """"spread":{"spiky":[0.453,0.420,2.615]},"sf":"/x"}""").getBytes("UTF-8"))
+      assert(Bench.readBaseline(h.toString)("spiky") == (0.453, 0.906))
+      // legacy format (no spread block): hi = median
+      java.nio.file.Files.write(g,
+        """{"metric":"total","queries":{"a":1.5,"b":0.2},"sf":"/x"}""".getBytes("UTF-8"))
+      val legacy = Bench.readBaseline(g.toString)
+      assert(legacy("a") == (1.5, 1.5) && legacy("b") == (0.2, 0.2))
+    } finally Seq(f, h, g).foreach(p => org.apache.spark.sql.GraftShims.deleteRecursively(p.toFile))
   }
 
   test("forkAdjudicate round-trips a real entry through a fresh JVM") {

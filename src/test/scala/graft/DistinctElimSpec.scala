@@ -186,7 +186,7 @@ class DistinctElimSpec extends AnyFunSuite {
 
   test("a unique-but-nullable column is refused the key contract (null-merge soundness)") {
     val s = keySession()
-    val path = java.nio.file.Files.createTempDirectory("distinct_elim_nulls").toString
+    val path = SharedSpark.scratchDir("distinct_elim_nulls")
     import s.implicits._
     Seq[(java.lang.Long, String)]((1L, "a"), (2L, "b"), (null, "c"), (null, "d"))
       .toDF("id", "v").write.mode("overwrite").parquet(path)

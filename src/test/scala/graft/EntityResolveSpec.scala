@@ -40,7 +40,7 @@ class EntityResolveSpec extends AnyFunSuite {
     // ONLY there — so both corrupted twins are the same string, each at
     // distance 1 from BOTH originals: a perfect tie. The argmin must
     // resolve both to clean id 0, making exactly one resolution correct.
-    val tmp = java.nio.file.Files.createTempDirectory("er1_tie").toString
+    val tmp = SharedSpark.scratchDir("er1_tie")
     Seq(
       (0L, "AAAAAAAAAAZAAAAAAA", 1, 500.25, "T"),
       (8L, "AAAAAAAAAAYAAAAAAA", 1, 500.75, "T"))
@@ -77,7 +77,7 @@ class EntityResolveSpec extends AnyFunSuite {
   test("er2: two ambiguous registry twins merge into one 6-cluster electing the min id") {
     val s = SparkEntry.configure(spark.newSession())
     import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("er2_merge").toString
+    val tmp = SharedSpark.scratchDir("er2_merge")
     // same block, names within distance 1 of each other — all six
     // source rows (2 registry + 4 corrupted) glue into ONE component
     Seq(

@@ -40,23 +40,25 @@ class EntryFilterSpec extends AnyFunSuite {
     */
   private def runMain(main: String, args: Path => Seq[String], only: String): (Int, String, Boolean) = {
     val dir = Files.createTempDirectory("entry_filter")
-    val marker = dir.resolve("session-started")
-    val log = dir.resolve("out.log")
-    val javaBin = Path.of(sys.props("java.home"), "bin", "java").toString
-    val flags = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
-    val pb = new ProcessBuilder((Seq(javaBin) ++ flags ++ Seq(
-      s"-Dspark.extraListeners=${classOf[SessionStartMarker].getName}",
-      s"-Dgraft.sessionMarker=$marker",
-      "-cp", sys.props("java.class.path"), main) ++ args(dir)): _*)
-    pb.environment().put("SPARK_GRAFT_ONLY", only)
-    pb.environment().put("SPARK_GRAFT_SF_DIR", dir.toString)
-    pb.environment().put("SPARK_GRAFT_BENCH_OUT", dir.resolve("bench.json").toString)
-    pb.environment().put("SPARK_GRAFT_CPUS", "2")
-    pb.redirectErrorStream(true).redirectOutput(log.toFile)
-    val p = pb.start()
-    val done = p.waitFor(3, TimeUnit.MINUTES)
-    if (!done) p.destroyForcibly().waitFor()
-    (if (done) p.exitValue() else -1, Files.readString(log), Files.exists(marker))
+    try {
+      val marker = dir.resolve("session-started")
+      val log = dir.resolve("out.log")
+      val javaBin = Path.of(sys.props("java.home"), "bin", "java").toString
+      val flags = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
+      val pb = new ProcessBuilder((Seq(javaBin) ++ flags ++ Seq(
+        s"-Dspark.extraListeners=${classOf[SessionStartMarker].getName}",
+        s"-Dgraft.sessionMarker=$marker",
+        "-cp", sys.props("java.class.path"), main) ++ args(dir)): _*)
+      pb.environment().put("SPARK_GRAFT_ONLY", only)
+      pb.environment().put("SPARK_GRAFT_SF_DIR", dir.toString)
+      pb.environment().put("SPARK_GRAFT_BENCH_OUT", dir.resolve("bench.json").toString)
+      pb.environment().put("SPARK_GRAFT_CPUS", "2")
+      pb.redirectErrorStream(true).redirectOutput(log.toFile)
+      val p = pb.start()
+      val done = p.waitFor(3, TimeUnit.MINUTES)
+      if (!done) p.destroyForcibly().waitFor()
+      (if (done) p.exitValue() else -1, Files.readString(log), Files.exists(marker))
+    } finally org.apache.spark.sql.GraftShims.deleteRecursively(dir.toFile)
   }
 
   test("Bench and Verify refuse an unknown entry, naming it, before a session starts") {

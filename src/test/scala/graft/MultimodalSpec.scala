@@ -355,7 +355,8 @@ class MultimodalSpec extends AnyFunSuite {
     import graft.multimodal.RawCodec
     import Multimodal.{MediaFile, MediaMeta}
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_media_").toFile
+    val tmp = new java.io.File(SharedSpark.scratchDir("media"))
+    tmp.mkdirs()
     try {
       val specs = Seq(3L -> "bmp", 4L -> "wav", 9L -> "bmp", 10L -> "wav")
       specs.foreach { case (id, kind) =>

@@ -30,7 +30,7 @@ class PrivacyAuditSpec extends AnyFunSuite {
   test("the k_anonymous flag flips on a registry where every group reaches k") {
     val s = SparkEntry.configure(spark.newSession())
     import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("priv1_anon").toString
+    val tmp = SharedSpark.scratchDir("priv1_anon")
     // one QI group of 5 identical-QI rows (nat 1, seg T, balances all in
     // the same kilodollar bucket but with 5 DISTINCT cents values), plus
     // a second segment with a singleton group for the negative branch
@@ -52,7 +52,7 @@ class PrivacyAuditSpec extends AnyFunSuite {
   test("priv2 ladder picks the least-general fixing level; hopeless segments suppress") {
     val s = SparkEntry.configure(spark.newSession())
     import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("priv2_ladder").toString
+    val tmp = SharedSpark.scratchDir("priv2_ladder")
     // seg A: five rows sharing the FULL level-0 QI (same nation, same
     // kilodollar bucket) — level 0 already reaches k, so generalizing
     // further would be pure information loss; seg B: three rows total,

@@ -127,7 +127,7 @@ class RangeBinRewriteSpec extends AnyFunSuite {
   test("opt2 gate entry leaves the caller's rules as they were") {
     val s = SparkEntry.configure(spark.newSession())
     // one event a minute: every 97th opens a 2-hour window over ~120 of them
-    val dir = java.nio.file.Files.createTempDirectory("opt2").toString
+    val dir = SharedSpark.scratchDir("opt2")
     s.range(2000).selectExpr("id AS event_id", "id % 7 AS user_id",
       "timestamp_micros(id * 60000000) AS ts").write.parquet(s"$dir/events.parquet")
     val before = s.experimental.extraOptimizations

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Gate scratch goes with the run: a child JVM (fresh `java.io.tmpdir`,
   * `SPARK_LOCAL_DIRS` and working directory) runs `graft.Verify` over
-  * every entry that writes a table to disk, and after it exits none of
-  * the three holds a `graft_*` path.
+  * every entry that writes a table to disk, plus one reader of each
+  * family's shared views ([[Scratch.shared]]: graph, IVF, near-dup, BPE),
+  * and after it exits none of the three holds a `graft_*` path.
   */
 class ScratchLeakSpec extends AnyFunSuite {
   private val Entries = Seq(
@@ -17,7 +18,8 @@ class ScratchLeakSpec extends AnyFunSuite {
     "opt6_mv_refresh", "opt10_star_mv", "opt11_star_mv_refresh",
     "opt12_filtered_star_mv", "inc3_join_ivm", "inc4_delete_ivm", "inc5_minmax_ivm",
     "sw12_exactly_once_sink", "sw14_stream_decontam_append", "ann14_topk_pruned",
-    "bkt1_bucketed_join", "dd10_incremental_neardup")
+    "bkt1_bucketed_join", "dd10_incremental_neardup",
+    "g3_degree_census", "ann2_topk_ivf", "dd7_dup_clusters", "tok1_bpe_merges")
 
   /** `graft_*` paths under `dir`, not descending into a match. */
   private def graftPaths(dir: File): Seq[File] =

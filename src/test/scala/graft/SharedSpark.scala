@@ -8,4 +8,10 @@ import org.apache.spark.sql.SparkSession
   */
 object SharedSpark {
   lazy val spark: SparkSession = SparkEntry.configure(LocalSession(2))
+
+  /** A fresh path in [[spark]]'s scratch ([[Scratch.root]]): it goes when
+    * the JVM exits, with the context's temp dir.
+    */
+  def scratchDir(tag: String): String =
+    Scratch.root(spark, tag, java.util.UUID.randomUUID().toString.take(8))
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Retry
@@ -88,7 +87,7 @@ class SinksOpsSpec extends AnyFunSuite {
 
   test("dynamic partition overwrite replaces only the written partitions") {
     import org.apache.spark.sql.functions.{col, lit}
-    val dir = Files.createTempDirectory("graft-dyn").toString + "/docs"
+    val dir = SharedSpark.scratchDir("dyn") + "/docs"
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs.write.partitionBy("lang").parquet(dir)
     val before = spark.read.parquet(dir).filter(col("lang") =!= "de").count()
@@ -112,7 +111,7 @@ class SinksOpsSpec extends AnyFunSuite {
   test("Compactor: merges a 64-file table to the byte-derived count, content identical") {
     import org.apache.spark.sql.functions.col
     import graft.sinks.{Compactor, VersionedTable}
-    val root = Files.createTempDirectory("graft-compact").toString + "/docs"
+    val root = SharedSpark.scratchDir("compact") + "/docs"
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val v1 = VersionedTable.publish(spark, root, docs.repartition(64))
     val before = docs.orderBy(col("doc_id")).collect().toSeq
@@ -132,7 +131,7 @@ class SinksOpsSpec extends AnyFunSuite {
   test("VersionedTable: two-phase commit — readers never see a partial table") {
     import org.apache.spark.sql.functions.col
     import graft.sinks.{Compactor, VersionedTable}
-    val root = Files.createTempDirectory("graft-vtable").toString + "/docs"
+    val root = SharedSpark.scratchDir("vtable") + "/docs"
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val want = docs.orderBy(col("doc_id")).collect().toSeq
 
@@ -191,7 +190,7 @@ class SinksOpsSpec extends AnyFunSuite {
   test("VersionedTable: concurrent publishers — claims make version numbers CAS") {
     import org.apache.spark.sql.functions.col
     import graft.sinks.VersionedTable
-    val root = Files.createTempDirectory("graft-vtable-cas").toString + "/docs"
+    val root = SharedSpark.scratchDir("vtable_cas") + "/docs"
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     VersionedTable.publish(spark, root, docs.limit(10))
 
@@ -226,7 +225,7 @@ class SinksOpsSpec extends AnyFunSuite {
   }
 
   test("ParquetSink round-trips the mart") {
-    val dir = Files.createTempDirectory("graft-sink").toString + "/mart"
+    val dir = SharedSpark.scratchDir("sink") + "/mart"
     val sink = new graft.sinks.ParquetSink(dir)
     Pipeline.run(spark, new JsonFixtureClient(Fixtures.jsonDir),
       YouGileConfig.fixture, Fixtures.runTs, sink, graft.sinks.NoopAlerter)
@@ -238,7 +237,7 @@ class SinksOpsSpec extends AnyFunSuite {
     // h1's frame: simple BIGINT columns every text format can carry
     val src = SparkEntry.queries("h1_histogram")(spark, "/root/testdata/sf0.001")
     val expected = src.collect().map(_.toSeq).toSet
-    val base = Files.createTempDirectory("graft_fmt").toString
+    val base = SharedSpark.scratchDir("fmt")
     val schema = src.schema
     def reread(fmt: String, write: String => Unit): Unit = {
       val p = s"$base/$fmt"

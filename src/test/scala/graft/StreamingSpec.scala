@@ -222,7 +222,7 @@ class StreamingSpec extends AnyFunSuite {
   test("file-source stream picks up parquet drops incrementally") {
     // a Spark-written DIRECTORY table: the layout streamSource must glob
     // inside rather than beside
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-src").toString
+    val dir = SharedSpark.scratchDir("stream_src")
     def drop(evs: Seq[Ev]): Unit =
       evs.toDF("ts", "user_id", "event_type", "value")
         .withColumn("event_id", org.apache.spark.sql.functions.col("value").cast("long"))
@@ -242,8 +242,8 @@ class StreamingSpec extends AnyFunSuite {
   }
   test("checkpointed restart recovers aggregation state without reprocessing") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = SharedSpark.scratchDir("ckpt_src")
+    val ckpt = SharedSpark.scratchDir("ckpt")
     def drop(evs: Seq[Ev]): Unit =
       evs.toDF("ts", "user_id", "event_type", "value")
         .withColumn("event_id", col("value").cast("long"))

@@ -3,31 +3,32 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Bench.sweepState` is the between-entry release Bench, Verify and
-  * `graft.Dev time|stream` share: everything an entry registered goes,
-  * except the SharedFrames blocks other entries read.
+  * `graft.Dev time|stream` share: everything an entry registered in
+  * executor storage goes, with no exemption. A view other entries read
+  * is a table ([[Scratch.shared]]) and survives it.
   */
 class SweepStateSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
 
-  test("sweepState keeps only SharedFrames blocks and empties the cache manager") {
-    val shared = SharedFrames.memoize(spark, "spec.sweep")(spark.range(40).toDF("v"))
-    val sharedRdd = org.apache.spark.sql.GraftShims.checkpointedRdd(shared).get.id
+  test("sweepState drops every persisted RDD and empties the cache manager") {
+    val dir = java.util.UUID.randomUUID().toString.take(8)
+    val shared = Scratch.shared(spark, "spec_sweep", dir)(spark.range(40).toDF("v"))
     val persisted = spark.range(20).toDF("v").persist()
     persisted.count()
     val checkpointed = spark.range(30).toDF("v").localCheckpoint()
     val checkpointRdd = org.apache.spark.sql.GraftShims.checkpointedRdd(checkpointed).get.id
     assert(!spark.sharedState.cacheManager.isEmpty)
     assert(spark.sparkContext.getPersistentRDDs.contains(checkpointRdd))
+    val builds = Scratch.builds
 
     Bench.sweepState(spark)
 
     assert(spark.sharedState.cacheManager.isEmpty, "a persisted frame survived the sweep")
     val left = spark.sparkContext.getPersistentRDDs.keySet
-    assert(!left.contains(checkpointRdd), "a localCheckpoint block survived the sweep")
-    assert(left.contains(sharedRdd), "the sweep dropped a SharedFrames block")
-    val keep = SharedFrames.protectedRddIds
-    assert(left.forall(id => keep.contains(Int.box(id))), s"unprotected RDDs left: $left")
+    assert(left.isEmpty, s"persisted RDDs left: $left")
     assert(shared.count() == 40)
+    assert(Scratch.shared(spark, "spec_sweep", dir)(spark.range(0).toDF("v")).count() == 40)
+    assert(Scratch.builds == builds, "the sweep forced a shared view to rebuild")
   }
 
   test("timeRuns sweeps the entry's own session: no memory-sink view, no active stream") {

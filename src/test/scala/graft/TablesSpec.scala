@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,11 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class TablesSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
 
-  private def tmpDir(): String = {
-    val d = Files.createTempDirectory("tables_spec").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def tmpDir(): String = SharedSpark.scratchDir("tables_spec")
 
   test("events loader: us-UTC encoding loads as TIMESTAMP with exact micros") {
     val dir = tmpDir()

@@ -423,7 +423,7 @@ class TextQualitySpec extends AnyFunSuite {
       "already é normalized",   // isNormalized fast path
       "à grave",               // a + U+0300 -> à
       "ﬁ ligature untouched by NFC") // NFC keeps U+FB01; NFKC folds to "fi"
-    val tmp = java.nio.file.Files.createTempDirectory("tx18spec").toString
+    val tmp = SharedSpark.scratchDir("tx18spec")
     cases.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t")
       .write.mode("overwrite").parquet(tmp)
     val back = s.read.parquet(tmp)

@@ -1,6 +1,5 @@
 package graft.yougile
 
-import java.nio.file.Files
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import scala.collection.mutable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
@@ -83,7 +82,7 @@ class PipelineRunSpec extends AnyFunSuite {
     val prev = spark.conf.get(key)
     // frames other suites cached are not this run's
     spark.catalog.clearCache()
-    val dir = Files.createTempDirectory("graft-run").toString + "/mart"
+    val dir = SharedSpark.scratchDir("run") + "/mart"
     var cachedAtWrite: Option[Boolean] = None
     val sink = new MartSink {
       override def write(df: DataFrame): Unit = {
@@ -106,7 +105,7 @@ class PipelineRunSpec extends AnyFunSuite {
   }
 
   test("a run launches at most 4 Spark jobs, at most 1 of them before the sink writes") {
-    val dir = Files.createTempDirectory("graft-run-jobs").toString + "/mart"
+    val dir = SharedSpark.scratchDir("run_jobs") + "/mart"
     var jobsAtWrite = -1
     val (rows, rec) = recorded { rec =>
       run(new MartSink {

@@ -78,7 +78,7 @@ class PipelineSpec extends AnyFunSuite {
         fixtures.fetchPage(method, offset, limit, includeDeleted, columnId)
       }
     }
-    val out = java.nio.file.Files.createTempDirectory("yg_no_board").resolve("mart")
+    val out = java.nio.file.Paths.get(SharedSpark.scratchDir("yg_no_board"), "mart")
     val cfg = YouGileConfig.fixture.copy(allowedBoards = Seq("No Such Board"))
     val e = intercept[IllegalStateException](
       Pipeline.run(spark, counting, cfg, Fixtures.runTs, new ParquetSink(out.toString), NoopAlerter))
@@ -89,7 +89,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("the readers fetch and decode every page while they plan") {
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("yg_driver_fetch")
+    val dir = Files.createDirectories(Paths.get(SharedSpark.scratchDir("yg_driver_fetch")))
     Files.list(Paths.get(Fixtures.jsonDir)).forEach(f => { Files.copy(f, dir.resolve(f.getFileName)); () })
     val copy = new YouGileSource(spark, new JsonFixtureClient(dir.toString), YouGileConfig.fixture)
     val contracts = copy.contracts(allColumns)
